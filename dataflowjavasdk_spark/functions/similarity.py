@@ -316,7 +316,8 @@ def simhash64_udf():
                     h = int(md5(t.encode("utf-8")).hexdigest()[:16], 16)
                     memo[t] = h
                 ap(h)
-            hs = np.array(vals, dtype=np.uint64)
+            # little-endian bytes on any host (a no-copy view on x86/ARM)
+            hs = np.array(vals, dtype=np.uint64).astype("<u8", copy=False)
             bits = np.unpackbits(hs.view(np.uint8)).reshape(-1, 64)
             ones = bits.sum(axis=0, dtype=np.int64)
             majority = (2 * ones) > len(vals)

@@ -33,6 +33,21 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+_UNIT_MS = {
+    "millisecond": 1, "milliseconds": 1,
+    "second": 1000, "seconds": 1000,
+    "minute": 60_000, "minutes": 60_000,
+    "hour": 3_600_000, "hours": 3_600_000,
+    "day": 86_400_000, "days": 86_400_000,
+}
+
+
+def duration_ms(spec: str) -> int:
+    """Milliseconds in a duration spec such as "30 seconds" or "1.5 hours"."""
+    qty, unit = spec.split()
+    return round(float(qty) * _UNIT_MS[unit])
 
 
 def read_stream_dropdir(
@@ -349,20 +364,9 @@ class SourceWatermarkTracker:
         if isinstance(delays, str):
             delays = {name: delays for name in source_dirs}
         self.delay_s = {
-            name: self._duration_s(delays.get(name, "0 seconds"))
+            name: duration_ms(delays.get(name, "0 seconds")) / 1000
             for name in source_dirs
         }
-
-    @staticmethod
-    def _duration_s(spec: str) -> float:
-        n, unit = spec.split()
-        mult = {
-            "millisecond": 0.001, "milliseconds": 0.001,
-            "second": 1.0, "seconds": 1.0,
-            "minute": 60.0, "minutes": 60.0,
-            "hour": 3600.0, "hours": 3600.0,
-        }[unit]
-        return float(n) * mult
 
     def per_source(self) -> dict:
         """name -> per-source watermark (datetime, delay already
@@ -581,6 +585,33 @@ def _write_parquet_micros(df: DataFrame, path: str) -> None:
             spark.conf.set(key, prev)
 
 
+def _land(staging: str, suffix: str, input_dir: str, i: int) -> None:
+    """Copy a staged writer output's `suffix` files into a drop-dir as
+    micro-batch `i`."""
+    for f in os.listdir(staging):
+        if f.endswith(suffix):
+            shutil.copy(os.path.join(staging, f), os.path.join(input_dir, f"batch_{i}_{f}"))
+
+
+def _drain(result: DataFrame, output_mode: str, checkpoint: str) -> tuple[list, StreamingQuery]:
+    """Run `result` as one availableNow round against `checkpoint` and
+    return (rows the sink received, the finished StreamingQuery)."""
+    collected: list = []
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        collected.extend(batch_df.collect())
+
+    q = (
+        result.writeStream.foreachBatch(sink)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return collected, q
+
+
 class MicroBatchHarness:
     """Controlled-replay streaming harness (the ReduceFnTester analog).
 
@@ -632,12 +663,7 @@ class MicroBatchHarness:
 
             write_avro(one, staging)
             suffix = ".avro"
-        for f in os.listdir(staging):
-            if f.endswith(suffix):
-                shutil.copy(
-                    os.path.join(staging, f),
-                    os.path.join(self.input_dir, f"batch_{self._feed_i}_{f}"),
-                )
+        _land(staging, suffix, self.input_dir, self._feed_i)
         self._feed_i += 1
 
     def _source(self) -> DataFrame:
@@ -660,20 +686,7 @@ class MicroBatchHarness:
         Also records `self.state_rows` — total stateful-operator rows at
         the round's final micro-batch (from query progress) — so soak
         tests can assert state stays bounded by the lateness horizon."""
-        result = build(self._source())
-        collected: list = []
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            collected.extend(batch_df.collect())
-
-        q = (
-            result.writeStream.foreachBatch(sink)
-            .outputMode(output_mode)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        collected, q = _drain(build(self._source()), output_mode, self.checkpoint)
         self.state_rows = None
         for prog in reversed(q.recentProgress):
             ops = prog.get("stateOperators") or []
@@ -711,12 +724,7 @@ class MultiStreamHarness:
     def feed(self, name: str, df: DataFrame) -> None:
         staging = os.path.join(self.root, f"staging_{self._feed_i}")
         _write_parquet_micros(df.coalesce(1), staging)
-        for f in os.listdir(staging):
-            if f.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(staging, f),
-                    os.path.join(self.input_dirs[name], f"batch_{self._feed_i}_{f}"),
-                )
+        _land(staging, ".parquet", self.input_dirs[name], self._feed_i)
         self._feed_i += 1
 
     def run_round(
@@ -730,21 +738,7 @@ class MultiStreamHarness:
             )
             for name, d in self.input_dirs.items()
         }
-        result = build(sources)
-        collected: list = []
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            collected.extend(batch_df.collect())
-
-        q = (
-            result.writeStream.foreachBatch(sink)
-            .outputMode(output_mode)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return collected
+        return _drain(build(sources), output_mode, self.checkpoint)[0]
 
     def close(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)

@@ -2,19 +2,9 @@
 
 The reference's stateful DoFn surface — `@StateId` ValueState / BagState /
 CombiningState, `@TimerId` event-time timers, scoped per key — recreated on
-two interchangeable substrates selected by a runtime capability probe
-(`tws_available`):
-
-- `transformWithStateInPandas` (Spark 4 TWS) when its Python runner's
-  `google.protobuf` dependency is importable — the preferred path on a
-  normally-provisioned cluster (per-key timers, finer state API);
-- `applyInPandasWithState` (GroupState kernel) otherwise — the substrate
-  that works in this container, where protobuf is absent (measured, not
-  assumed — SURVEY §2.9).
-
-Both run the SAME user `fn` with the SAME `KeyedState` handle; all named
-state cells serialize into one state blob as JSON, and the single
-event-time timer maps to EventTimeTimeout / registerTimer respectively.
+Structured Streaming's stateful operator (`applyInPandasWithState`, the
+GroupState kernel): all named state cells serialize into one JSON state
+blob, and the single event-time timer maps to EventTimeTimeout.
 
 Usage (the Beam idiom, vectorized):
 
@@ -39,7 +29,6 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 class KeyedState:
@@ -77,23 +66,6 @@ class KeyedState:
         self.removed = True
 
 
-def tws_available() -> bool:
-    """Runtime capability probe for the transformWithStateInPandas path.
-
-    Its Python worker imports google.protobuf (state-server wire format);
-    this container ships pyspark without it, so the probe — not an
-    assumption — decides the substrate. Cheap enough to call per plan
-    build; import failures are cached by the interpreter anyway."""
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-    except ImportError:
-        return False
-    return True
-
-
 def stateful_par_do(
     df: DataFrame,
     keys: list[str],
@@ -101,37 +73,13 @@ def stateful_par_do(
     output_schema: str,
     ts_col: str = "ts",
     watermark_delay: str = "0 seconds",
-    engine: str = "auto",
 ) -> DataFrame:
     """ParDo with per-key state & event-time timer over a keyed stream.
 
     `fn(key_tuple, rows_pandas, state)` runs once per key per micro-batch
     (rows_pandas may be empty when only the timer fired) and returns rows
     to emit or None. State mutations persist across batches; `clear_all`
-    drops the key's state (Beam's state GC).
-
-    `engine`: "auto" probes and prefers TWS, "tws" forces
-    transformWithStateInPandas, "kernel" forces applyInPandasWithState."""
-    if engine not in ("auto", "tws", "kernel"):
-        raise ValueError(f"engine must be auto|tws|kernel, got {engine!r}")
-    if engine == "tws" or (engine == "auto" and tws_available()):
-        return _stateful_par_do_tws(
-            df, keys, fn, output_schema, ts_col, watermark_delay
-        )
-    return _stateful_par_do_kernel(
-        df, keys, fn, output_schema, ts_col, watermark_delay
-    )
-
-
-def _stateful_par_do_kernel(
-    df: DataFrame,
-    keys: list[str],
-    fn: Callable[[tuple, pd.DataFrame, KeyedState], pd.DataFrame | None],
-    output_schema: str,
-    ts_col: str,
-    watermark_delay: str,
-) -> DataFrame:
-    """applyInPandasWithState substrate (works everywhere; GroupState blob)."""
+    drops the key's state (Beam's state GC)."""
 
     def process(key: tuple, pdfs: Iterator[pd.DataFrame], group_state) -> Iterator[pd.DataFrame]:
         cells = json.loads(group_state.get[0]) if group_state.exists else {}
@@ -141,12 +89,10 @@ def _stateful_par_do_kernel(
         # re-set — so the pending expiry is carried in the state blob
         # (reserved "t:pending" slot, invisible to value()/bag()) and
         # re-armed here. Without this, a data batch arriving between
-        # set_timer and expiry would silently cancel the timer — and
-        # diverge from the TWS substrate, where registered timers
-        # survive unrelated invocations.
-        pending = None if fired else cells.pop("t:pending", None)
+        # set_timer and expiry would silently cancel the timer.
+        pending = cells.pop("t:pending", None)
         if fired:
-            cells.pop("t:pending", None)
+            pending = None  # the timer is spent
         st = KeyedState(cells, timer_fired=fired)
         batches = [p for p in pdfs if len(p)]
         rows = pd.concat(batches) if batches else pd.DataFrame()
@@ -174,88 +120,5 @@ def _stateful_par_do_kernel(
             stateStructType="cells string",
             outputMode="update",
             timeoutConf="EventTimeTimeout",
-        )
-    )
-
-
-def _stateful_par_do_tws(
-    df: DataFrame,
-    keys: list[str],
-    fn: Callable[[tuple, pd.DataFrame, KeyedState], pd.DataFrame | None],
-    output_schema: str,
-    ts_col: str,
-    watermark_delay: str,
-) -> DataFrame:
-    """transformWithStateInPandas substrate (Spark 4 TWS; needs protobuf).
-
-    Same contract as the kernel: the JSON cell blob lives in one
-    ValueState("cells"), the single Beam-style event-time timer maps to
-    registerTimer, and expiry re-invokes `fn` with an empty batch and
-    `timer_fired=True`. Exercised on clusters where `tws_available()` is
-    True; in protobuf-less containers the dispatch test mocks this path
-    so it cannot rot silently (tests/test_stateful.py)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _CellsProcessor(StatefulProcessor):
-        """KeyedState on TWS, preserving the kernel's SINGLE-timer
-        contract: registerTimer ADDS a timer per call (unlike the
-        kernel's setTimeoutTimestamp, which replaces), so the currently
-        registered expiry is tracked in its own ValueState and the stale
-        timer is deleted before a new one registers; the expired timer is
-        deleted on expiry, and clear_all cancels any pending timer so a
-        GC'd key is never re-invoked by a zombie timer."""
-
-        def init(self, handle) -> None:
-            self._handle = handle
-            self._cells = handle.getValueState("cells", "cells string")
-            self._timer = handle.getValueState("timer_ms", "timer_ms long")
-
-        def _cancel_timer(self) -> None:
-            if self._timer.exists():
-                self._handle.deleteTimer(self._timer.get()[0])
-                self._timer.clear()
-
-        def _run(self, key, pdf: pd.DataFrame, fired: bool, timer_values):
-            cells = json.loads(self._cells.get()[0]) if self._cells.exists() else {}
-            st = KeyedState(cells, timer_fired=fired)
-            out = fn(tuple(key), pdf, st)
-            if st.removed:
-                self._cells.clear()
-                self._cancel_timer()
-            else:
-                self._cells.update((json.dumps(st._cells),))
-                if st._timer_ms is not None:
-                    wm = timer_values.getCurrentWatermarkInMs()
-                    target = max(st._timer_ms, wm + 1)
-                    self._cancel_timer()
-                    self._handle.registerTimer(target)
-                    self._timer.update((target,))
-            if out is not None and len(out):
-                yield out
-
-        def handleInputRows(self, key, rows, timerValues):
-            batches = [p for p in rows if len(p)]
-            pdf = pd.concat(batches) if batches else pd.DataFrame()
-            yield from self._run(key, pdf, False, timerValues)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # the fired timer is spent: delete it and drop our record of
-            # it (Spark's own TWS examples deleteTimer on expiry)
-            self._handle.deleteTimer(expiredTimerInfo.getExpiryTimeInMs())
-            if self._timer.exists():
-                self._timer.clear()
-            yield from self._run(key, pd.DataFrame(), True, timerValues)
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.withWatermark(ts_col, watermark_delay)
-        .groupBy(*keys)
-        .transformWithStateInPandas(
-            _CellsProcessor(),
-            outputStructType=output_schema,
-            outputMode="Update",
-            timeMode="EventTime",
         )
     )

@@ -17,13 +17,19 @@ Model implemented per (key, window):
   beyond it state is garbage-collected and stragglers are dropped
   (identical to the reference's lateness contract)
 
-Execution: one stateful shuffle on (key, window-start); per micro-batch
-each key-group gets its new rows (Arrow batches) + its GroupState;
-event-time timeouts fire when the watermark passes window end (on-time
-pane) and window end + lateness (cleanup). Scale: state is per
-(key,window) and bounded by lateness GC — the same bound Windmill
-enforces; swap the state store to RocksDB for large key spaces
-(session.py note).
+One pane state machine, `fire_panes`, runs this lifecycle for one window
+cell per step; the two window front-ends call it:
+- `triggered_window_aggregate` (fixed and sliding windows): one stateful
+  shuffle on (key, window); per micro-batch each key-group gets its new
+  rows (Arrow batches) + its GroupState, a tuple converted to and from
+  the cell;
+- `triggered_session_aggregate` (merging windows): one shuffle on the
+  key; the key's open sessions live in one JSON state value and are
+  merged with the new elements' proto-sessions before each step.
+Event-time timeouts fire when the watermark passes window end (on-time
+pane) and window end + lateness (cleanup). Scale: state is per window
+and bounded by lateness GC — the same bound Windmill enforces; swap the
+state store to RocksDB for large key spaces (session.py note).
 
 Semantic deviations (documented, SURVEY.md §7.2):
 - processing-time triggers evaluate at micro-batch boundaries, not
@@ -37,13 +43,16 @@ Semantic deviations (documented, SURVEY.md §7.2):
 from __future__ import annotations
 
 import json
-from collections.abc import Iterable, Iterator
-from dataclasses import dataclass, field
+from collections.abc import Iterator
+from dataclasses import dataclass
 from time import time as _now
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dataflowjavasdk_spark.streaming.core import duration_ms
 
 # --------------------------------------------------------------------------
 # Trigger grammar (static config objects; per-key dynamic state is a JSON
@@ -252,6 +261,11 @@ _STATE_SCHEMA = (
     # over all accumulated elements and over the current pane only.
     "acc_min_ts long, acc_max_ts long, pane_min_ts long, pane_max_ts long"
 )
+# _STATE_SCHEMA's fields, in order, as window-cell keys (see new_cell)
+_STATE_FIELDS = (
+    "acc_n", "acc_sum", "pane_n", "pane_sum", "pane_idx", "on_time_fired",
+    "dyn", "acc_min", "acc_max", "pane_min", "pane_max",
+)
 
 # OutputTimeFn policies (historical sdk/transforms/windowing/OutputTimeFn.java)
 OUTPUT_END_OF_WINDOW = "end_of_window"
@@ -266,6 +280,171 @@ OUTPUT_LATEST = "latest"
 # window-closed signal.
 CLOSING_FIRE_IF_NON_EMPTY = "fire_if_non_empty"
 CLOSING_FIRE_ALWAYS = "fire_always"
+
+
+@dataclass(frozen=True)
+class PaneConfig:
+    """The static half of the pane lifecycle: the transform's trigger,
+    accumulation mode, allowed lateness, OutputTimeFn and ClosingBehavior."""
+
+    trigger: AfterWatermark
+    accumulation: str = ACCUMULATING
+    lateness_ms: int = 0
+    output_time: str | None = None
+    closing_behavior: str = CLOSING_FIRE_IF_NON_EMPTY
+
+
+class Fired(NamedTuple):
+    """What one step of a window's pane lifecycle produced."""
+
+    panes: list[dict]  # pane columns: n, total, pane_index, ... [, emit_ts]
+    cell: dict | None  # the advanced cell; None once the window is GC'd
+    timeout_ms: int | None  # next wake-up on Spark's (delayed) watermark clock
+
+
+def new_cell(start_ms: int, end_ms: int, n: int = 0, total: float = 0.0,
+             lo: int = -1, hi: int = -1) -> dict:
+    """A window cell [start_ms, end_ms) holding `n` unfired elements that
+    sum to `total`, with input timestamps in [lo, hi] (-1 = unset).
+
+    The cell is the per-window state of the pane lifecycle: accumulated
+    (acc_*) and current-pane (pane_*) count, sum and min/max input
+    timestamp, the next pane index, whether the ON_TIME pane fired, and
+    the trigger's dynamic state `dyn`."""
+    return dict(
+        start=start_ms, end=end_ms, acc_n=n, acc_sum=total, pane_n=n,
+        pane_sum=total, pane_idx=0, on_time_fired=False, dyn={},
+        acc_min=lo, acc_max=hi, pane_min=lo, pane_max=hi,
+    )
+
+
+def merge_cells(m: dict, s: dict) -> None:
+    """Fold cell `s` into `m` in place — Beam's onMerge: the window spans
+    both, counts and sums add, the pane index continues from the max, the
+    ON_TIME pane stays fired if either part fired, min/max input
+    timestamps merge, and trigger counters add. Folding a batch of new
+    elements into a window's cell is the same merge."""
+    m["end"] = max(m["end"], s["end"])
+    for k in ("acc_n", "acc_sum", "pane_n", "pane_sum"):
+        m[k] += s[k]
+    m["pane_idx"] = max(m["pane_idx"], s["pane_idx"])
+    m["on_time_fired"] = m["on_time_fired"] or s["on_time_fired"]
+    for k in ("acc_min", "pane_min"):
+        a, b = m[k], s[k]
+        m[k] = b if a < 0 else (a if b < 0 else min(a, b))
+    for k in ("acc_max", "pane_max"):
+        m[k] = max(m[k], s[k])
+    for dk, dv in s["dyn"].items():
+        if isinstance(dv, (int, float)):
+            m["dyn"][dk] = m["dyn"].get(dk, 0) + dv
+        else:
+            m["dyn"].setdefault(dk, dv)
+
+
+def fire_panes(cell: dict, new_n: int, watermark_ms: int, now_ms: int,
+               cfg: PaneConfig) -> Fired:
+    """One step of a window's pane lifecycle — the ReduceFnRunner,
+    TriggerRunner and PaneInfoTracker of one window, shared by every
+    window front-end.
+
+    `cell` (see `new_cell`) already holds the step's elements, `new_n` of
+    which arrived in this step; `watermark_ms` is the Beam-true watermark.
+    Before the window's end, the early trigger may fire an EARLY pane.
+    Once the watermark passes the end, the ON_TIME pane fires; later data
+    within the allowed lateness fires LATE panes through the late trigger.
+    At end + lateness the window closes: a final pane fires under
+    FIRE_ALWAYS, or under FIRE_IF_NON_EMPTY when the pane holds data no
+    earlier firing emitted, and the cell is garbage-collected. The input
+    cell is left unchanged."""
+    cell = dict(cell, dyn=dict(cell["dyn"]))
+    trig, lateness, end = cfg.trigger, cfg.lateness_ms, cell["end"]
+    shown = "acc_" if cfg.accumulation == ACCUMULATING else "pane_"
+    panes: list[dict] = []
+
+    def emit(timing: str, is_last: bool) -> None:
+        idx = cell["pane_idx"]
+        pane = dict(
+            n=cell[shown + "n"], total=cell[shown + "sum"], pane_index=idx,
+            pane_timing=timing, is_first=idx == 0, is_last=is_last,
+        )
+        if cfg.output_time is not None:
+            # END_OF_WINDOW is Beam's maxTimestamp (end − 1 ms); EARLIEST /
+            # LATEST span the shown pane's contents.
+            if cfg.output_time == OUTPUT_END_OF_WINDOW:
+                ms = end - 1
+            else:
+                ms = cell[shown + ("min" if cfg.output_time == OUTPUT_EARLIEST else "max")]
+            pane["emit_ts"] = pd.Timestamp(ms, unit="ms") if ms >= 0 else pd.NaT
+        panes.append(pane)
+        cell.update(pane_idx=idx + 1, pane_n=0, pane_sum=0.0, pane_min=-1, pane_max=-1)
+
+    def ready(sub: Trigger, path: str) -> bool:
+        sub.on_elements(cell["dyn"], path, new_n, now_ms)
+        if not sub.should_fire(cell["dyn"], path, now_ms):
+            return False
+        sub.on_fire(cell["dyn"], path)
+        return True
+
+    if watermark_ms < end:
+        if trig.early is not None and new_n and ready(trig.early, "e"):
+            emit("EARLY", is_last=False)
+    else:
+        final = watermark_ms >= end + lateness
+        if not cell["on_time_fired"]:
+            emit("ON_TIME", is_last=final)
+            cell["on_time_fired"] = True
+        elif new_n and (trig.late is None or ready(trig.late, "l")):
+            emit("LATE", is_last=final)
+        if final:
+            # unless this step's ON_TIME/LATE pane already carried is_last
+            if not panes and (
+                cfg.closing_behavior == CLOSING_FIRE_ALWAYS or cell["pane_n"]
+            ):
+                # The closing pane. FIRE_ALWAYS: the guaranteed is_last
+                # window-closed signal, empty under DISCARDING. Default
+                # FIRE_IF_NON_EMPTY: e.g. a late element buffered by an
+                # unready late trigger — Beam fires the final pane whenever
+                # there is new data since the last firing.
+                emit("LATE", is_last=True)
+            return Fired(panes, None, None)
+    # Wake when the true watermark passes the window end, then at the GC
+    # horizon end + lateness; on Spark's clock (true − lateness) those are
+    # end − lateness and end, both past Spark's current watermark.
+    return Fired(panes, cell, end if cell["on_time_fired"] else end - lateness)
+
+
+def _pane_setup(df: DataFrame, keys: list[str], ts_col: str, trigger: AfterWatermark,
+                accumulation: str, allowed_lateness: str, watermark_delay: str,
+                output_time: str | None, closing_behavior: str):
+    """The prologue both kernels share: validate the options and return the
+    watermarked input, the output schema and the pane config."""
+    if output_time not in (None, OUTPUT_END_OF_WINDOW, OUTPUT_EARLIEST, OUTPUT_LATEST):
+        raise ValueError(f"unknown output_time {output_time!r}")
+    if closing_behavior not in (CLOSING_FIRE_IF_NON_EMPTY, CLOSING_FIRE_ALWAYS):
+        raise ValueError(f"unknown closing_behavior {closing_behavior!r}")
+    key_fields = ", ".join(f"{k} {dict(df.dtypes)[k]}" for k in keys)
+    out_schema = (
+        f"{key_fields}, window_start timestamp, window_end timestamp, "
+        "n long, total double, pane_index long, pane_timing string, "
+        "is_first boolean, is_last boolean"
+    ) + (", emit_ts timestamp" if output_time is not None else "")
+    lateness_ms = duration_ms(allowed_lateness)
+    # Spark's stateful operator drops input rows behind ITS watermark, but
+    # Beam accepts data up to `allowed_lateness` behind the true watermark.
+    # Reconciliation: declare watermark_delay + lateness to Spark, so
+    #   spark_wm = true_wm - lateness.
+    # Rows later than lateness are then dropped by Spark itself (exactly
+    # Beam's drop rule); the kernels convert back via
+    #   true_wm = spark_wm + lateness
+    # for all pane timing decisions.
+    spark_delay_ms = duration_ms(watermark_delay) + lateness_ms
+    watermarked = df.withWatermark(ts_col, f"{spark_delay_ms} milliseconds")
+    cfg = PaneConfig(trigger, accumulation, lateness_ms, output_time, closing_behavior)
+    return watermarked, out_schema, cfg
+
+
+def _ms(ts) -> int:
+    return int(pd.Timestamp(ts).timestamp() * 1000)
 
 
 def triggered_window_aggregate(
@@ -300,28 +479,11 @@ def triggered_window_aggregate(
     only the new ones under DISCARDING) — the reference's
     OutputTimeFn.outputAtEarliest/LatestInputTimestamp.
     """
-    lateness_ms = _duration_ms(allowed_lateness)
-    # Spark's stateful operator drops input rows behind ITS watermark, but
-    # Beam accepts data up to `allowed_lateness` behind the true watermark.
-    # Reconciliation: declare watermark_delay + lateness to Spark, so
-    #   spark_wm = true_wm - lateness.
-    # Rows later than lateness are then dropped by Spark itself (exactly
-    # Beam's drop rule); the kernel converts back via
-    #   true_wm = spark_wm + lateness
-    # for all pane timing decisions.
-    spark_delay_ms = _duration_ms(watermark_delay) + lateness_ms
-    key_fields = ", ".join(f"{k} {dict(df.dtypes)[k]}" for k in keys)
-    out_schema = (
-        f"{key_fields}, window_start timestamp, window_end timestamp, "
-        "n long, total double, pane_index long, pane_timing string, "
-        "is_first boolean, is_last boolean"
+    watermarked, out_schema, cfg = _pane_setup(
+        df, keys, ts_col, trigger, accumulation, allowed_lateness,
+        watermark_delay, output_time, closing_behavior,
     )
-    if output_time is not None:
-        if output_time not in (OUTPUT_END_OF_WINDOW, OUTPUT_EARLIEST, OUTPUT_LATEST):
-            raise ValueError(f"unknown output_time {output_time!r}")
-        out_schema += ", emit_ts timestamp"
-    if closing_behavior not in (CLOSING_FIRE_IF_NON_EMPTY, CLOSING_FIRE_ALWAYS):
-        raise ValueError(f"unknown closing_behavior {closing_behavior!r}")
+    lateness_ms = cfg.lateness_ms
 
     # Window assignment: fixed (default) or sliding when window_period is
     # given (SlidingWindows.of(size).every(period)). Sliding uses Spark's
@@ -334,7 +496,7 @@ def triggered_window_aggregate(
         else F.window(ts_col, window_size, window_period)
     )
     windowed = (
-        df.withWatermark(ts_col, f"{spark_delay_ms} milliseconds")
+        watermarked
         .withColumn("__w__", window_expr)
         .select(
             *keys,
@@ -351,21 +513,8 @@ def triggered_window_aggregate(
 
     def process(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         *user_key, w_start, w_end = key
-        w_end_ms = int(pd.Timestamp(w_end).timestamp() * 1000)
-        spark_wm = state.getCurrentWatermarkMs()
-        watermark_ms = spark_wm + lateness_ms  # the Beam-true watermark
-        now_ms = int(_now() * 1000)
-
-        if state.exists:
-            (acc_n, acc_sum, pane_n, pane_sum, pane_idx, on_time_fired, dyn_json,
-             acc_min, acc_max, pane_min, pane_max) = state.get
-            dyn = json.loads(dyn_json)
-        else:
-            acc_n = pane_n = pane_idx = 0
-            acc_sum = pane_sum = 0.0
-            on_time_fired = False
-            dyn = {}
-            acc_min = pane_min = acc_max = pane_max = -1
+        start_ms, end_ms = _ms(w_start), _ms(w_end)
+        watermark_ms = state.getCurrentWatermarkMs() + lateness_ms  # Beam-true
 
         new_n, new_sum = 0, 0.0
         new_min, new_max = -1, -1
@@ -373,122 +522,30 @@ def triggered_window_aggregate(
             if len(pdf):
                 new_n += len(pdf)
                 new_sum += float(pdf["__v__"].sum())
-                lo = int(pd.Timestamp(pdf[ts_col].min()).timestamp() * 1000)
-                hi = int(pd.Timestamp(pdf[ts_col].max()).timestamp() * 1000)
+                lo, hi = _ms(pdf[ts_col].min()), _ms(pdf[ts_col].max())
                 new_min = lo if new_min < 0 else min(new_min, lo)
                 new_max = max(new_max, hi)
 
         # GC horizon: stragglers beyond window_end + lateness are dropped —
         # do not resurrect state the cleanup timeout already removed.
-        if watermark_ms >= w_end_ms + lateness_ms and not state.exists:
+        if watermark_ms >= end_ms + lateness_ms and not state.exists:
             return
 
-        acc_n += new_n
-        acc_sum += new_sum
-        pane_n += new_n
-        pane_sum += new_sum
-        if new_n:
-            acc_min = new_min if acc_min < 0 else min(acc_min, new_min)
-            acc_max = max(acc_max, new_max)
-            pane_min = new_min if pane_min < 0 else min(pane_min, new_min)
-            pane_max = max(pane_max, new_max)
-
-        panes: list[dict] = []
-
-        def _emit_ts(lo: int, hi: int):
-            if output_time == OUTPUT_END_OF_WINDOW:
-                ms = w_end_ms - 1
-            elif output_time == OUTPUT_EARLIEST:
-                ms = lo
-            else:
-                ms = hi
-            return pd.Timestamp(ms, unit="ms") if ms >= 0 else pd.NaT
-
-        def emit(timing: str, is_last: bool) -> None:
-            nonlocal pane_idx, pane_n, pane_sum, pane_min, pane_max
-            n, total = (acc_n, acc_sum) if accumulation == ACCUMULATING else (pane_n, pane_sum)
-            pane = dict(
-                zip(keys, user_key),
-                window_start=w_start,
-                window_end=w_end,
-                n=n,
-                total=total,
-                pane_index=pane_idx,
-                pane_timing=timing,
-                is_first=pane_idx == 0,
-                is_last=is_last,
-            )
-            if output_time is not None:
-                lo, hi = (
-                    (acc_min, acc_max)
-                    if accumulation == ACCUMULATING
-                    else (pane_min, pane_max)
-                )
-                pane["emit_ts"] = _emit_ts(lo, hi)
-            panes.append(pane)
-            pane_idx += 1
-            pane_n, pane_sum = 0, 0.0
-            pane_min, pane_max = -1, -1
-
-        before_end_of_window = watermark_ms < w_end_ms
-
-        if before_end_of_window:
-            # speculative EARLY panes
-            if trigger.early is not None and new_n:
-                trigger.early.on_elements(dyn, "e", new_n, now_ms)
-                if trigger.early.should_fire(dyn, "e", now_ms):
-                    trigger.early.on_fire(dyn, "e")
-                    emit("EARLY", is_last=False)
-            state.update((acc_n, acc_sum, pane_n, pane_sum, pane_idx, False,
-                          json.dumps(dyn), acc_min, acc_max, pane_min, pane_max))
-            # wake when the TRUE watermark passes the end of the window,
-            # i.e. when the Spark watermark reaches w_end - lateness
-            state.setTimeoutTimestamp(max(w_end_ms - lateness_ms, spark_wm + 1))
+        cell = new_cell(start_ms, end_ms)
+        if state.exists:
+            cell.update(zip(_STATE_FIELDS, state.get))
+            cell["dyn"] = json.loads(cell["dyn"])
+        merge_cells(cell, new_cell(start_ms, end_ms, new_n, new_sum, new_min, new_max))
+        fired = fire_panes(cell, new_n, watermark_ms, int(_now() * 1000), cfg)
+        if fired.cell is None:
+            state.remove()
         else:
-            final_horizon = watermark_ms >= w_end_ms + lateness_ms
-            emitted_closing = False
-            if not on_time_fired:
-                # ON_TIME: the watermark crossed window end (timeout or a
-                # batch carrying late-ish rows observed after crossing)
-                emit("ON_TIME", is_last=final_horizon)
-                on_time_fired = True
-                emitted_closing = final_horizon
-            elif new_n:
-                # refinements within the lateness horizon
-                fire_late = True
-                if trigger.late is not None:
-                    trigger.late.on_elements(dyn, "l", new_n, now_ms)
-                    fire_late = trigger.late.should_fire(dyn, "l", now_ms)
-                    if fire_late:
-                        trigger.late.on_fire(dyn, "l")
-                if fire_late:
-                    emit("LATE", is_last=final_horizon)
-                    emitted_closing = final_horizon
-            if final_horizon:
-                if not emitted_closing and (
-                    closing_behavior == CLOSING_FIRE_ALWAYS or pane_n
-                ):
-                    # Closing pane at the lateness horizon. FIRE_ALWAYS:
-                    # emit even though nothing new arrived since the last
-                    # firing (empty under DISCARDING, the running totals
-                    # under ACCUMULATING) — the guaranteed is_last
-                    # window-closed signal. Default FIRE_IF_NON_EMPTY:
-                    # emit iff the pane holds data not yet fired — e.g. a
-                    # late element buffered by an unready late trigger
-                    # (AfterCount(2) with one arrival); Beam fires the
-                    # final pane whenever there is new data since the
-                    # last firing, so dropping it here would lose the
-                    # element's contribution forever.
-                    emit("LATE", is_last=True)
-                state.remove()
-            else:
-                state.update((acc_n, acc_sum, pane_n, pane_sum, pane_idx, True,
-                              json.dumps(dyn), acc_min, acc_max, pane_min, pane_max))
-                # GC when true_wm reaches w_end + lateness ⟺ spark_wm reaches w_end
-                state.setTimeoutTimestamp(max(w_end_ms, spark_wm + 1))
-
-        if panes:
-            yield pd.DataFrame(panes)
+            c = dict(fired.cell, dyn=json.dumps(fired.cell["dyn"]))
+            state.update(tuple(c[f] for f in _STATE_FIELDS))
+            state.setTimeoutTimestamp(fired.timeout_ms)
+        if fired.panes:
+            head = dict(zip(keys, user_key), window_start=w_start, window_end=w_end)
+            yield pd.DataFrame([{**head, **p} for p in fired.panes])
 
     return windowed.groupBy(*keys, "window_start", "window_end").applyInPandasWithState(
         process,
@@ -497,18 +554,6 @@ def triggered_window_aggregate(
         outputMode="update",
         timeoutConf="EventTimeTimeout",
     )
-
-
-def _duration_ms(s: str) -> int:
-    qty, unit = s.split()
-    unit_ms = {
-        "millisecond": 1, "milliseconds": 1,
-        "second": 1000, "seconds": 1000,
-        "minute": 60_000, "minutes": 60_000,
-        "hour": 3_600_000, "hours": 3_600_000,
-        "day": 86_400_000, "days": 86_400_000,
-    }[unit]
-    return int(qty) * unit_ms
 
 
 def triggered_session_aggregate(
@@ -547,181 +592,61 @@ def triggered_session_aggregate(
     session's CURRENT end (end − 1 ms) at firing time, and
     EARLIEST/LATEST merge across fused sessions (onMerge takes min/max).
     """
-    gap_ms = _duration_ms(gap)
-    lateness_ms = _duration_ms(allowed_lateness)
-    spark_delay_ms = _duration_ms(watermark_delay) + lateness_ms
-    key_fields = ", ".join(f"{k} {dict(df.dtypes)[k]}" for k in keys)
-    out_schema = (
-        f"{key_fields}, window_start timestamp, window_end timestamp, "
-        "n long, total double, pane_index long, pane_timing string, "
-        "is_first boolean, is_last boolean"
+    gap_ms = duration_ms(gap)
+    watermarked, out_schema, cfg = _pane_setup(
+        df, keys, ts_col, trigger, accumulation, allowed_lateness,
+        watermark_delay, output_time, closing_behavior,
     )
-    if output_time is not None:
-        if output_time not in (OUTPUT_END_OF_WINDOW, OUTPUT_EARLIEST, OUTPUT_LATEST):
-            raise ValueError(f"unknown output_time {output_time!r}")
-        out_schema += ", emit_ts timestamp"
-    if closing_behavior not in (CLOSING_FIRE_IF_NON_EMPTY, CLOSING_FIRE_ALWAYS):
-        raise ValueError(f"unknown closing_behavior {closing_behavior!r}")
-
-    windowed = df.withWatermark(ts_col, f"{spark_delay_ms} milliseconds").select(
-        *keys, F.col(value_col).alias("__v__"), F.col(ts_col)
-    )
+    windowed = watermarked.select(*keys, F.col(value_col).alias("__v__"), F.col(ts_col))
 
     def process(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        user_key = key
-        spark_wm = state.getCurrentWatermarkMs()
-        watermark_ms = spark_wm + lateness_ms  # Beam-true watermark
+        watermark_ms = state.getCurrentWatermarkMs() + cfg.lateness_ms  # Beam-true
         now_ms = int(_now() * 1000)
 
-        sessions: list[dict] = (
-            json.loads(state.get[0])["sessions"] if state.exists else []
-        )
-
-        # 1. fold new elements in as proto-sessions
-        new_protos: list[dict] = []
+        # 1. the open sessions, each with no new elements, plus one
+        # proto-session per new element (Spark's watermark already culled
+        # rows beyond the lateness horizon)
+        cells = [(s, 0) for s in (json.loads(state.get[0])["sessions"] if state.exists else [])]
         for pdf in pdfs:
             for ts_v, v in zip(pdf[ts_col], pdf["__v__"]):
                 t_ms = int(pd.Timestamp(ts_v).value // 1_000_000)
-                # Beam drop rule: data later than the lateness horizon
-                # relative to ITS OWN session end can't resurrect GC'd
-                # state; Spark's watermark already culled older rows.
-                new_protos.append(
-                    dict(start=t_ms, end=t_ms + gap_ms, acc_n=1,
-                         acc_sum=float(v), pane_n=1, pane_sum=float(v),
-                         pane_idx=0, on_time_fired=False, dyn={},
-                         new_n=1,
-                         acc_min=t_ms, acc_max=t_ms,
-                         pane_min=t_ms, pane_max=t_ms)
-                )
+                cells.append((new_cell(t_ms, t_ms + gap_ms, 1, float(v), t_ms, t_ms), 1))
 
-        # 2. merge: sort all intervals, union overlapping ones, merging
-        # accumulators and trigger state (onMerge: counts add, pane index
-        # continues from the max, on_time stays fired if any part fired).
-        for p in new_protos:
-            sessions.append(p)
-        sessions.sort(key=lambda s: (s["start"], s["end"]))
-        merged: list[dict] = []
-        for s in sessions:
-            if merged and s["start"] < merged[-1]["end"]:
-                m = merged[-1]
-                m["end"] = max(m["end"], s["end"])
-                m["acc_n"] += s["acc_n"]
-                m["acc_sum"] += s["acc_sum"]
-                m["pane_n"] += s["pane_n"]
-                m["pane_sum"] += s["pane_sum"]
-                m["pane_idx"] = max(m["pane_idx"], s["pane_idx"])
-                m["on_time_fired"] = m["on_time_fired"] or s["on_time_fired"]
-                m["new_n"] = m.get("new_n", 0) + s.get("new_n", 0)
-                # onMerge for OutputTimeFn holds: min/max across parts
-                # (-1 = unset pane accumulator after a discarding emit)
-                for lo_k in ("acc_min", "pane_min"):
-                    a, b = m.get(lo_k, -1), s.get(lo_k, -1)
-                    m[lo_k] = b if a < 0 else (a if b < 0 else min(a, b))
-                for hi_k in ("acc_max", "pane_max"):
-                    m[hi_k] = max(m.get(hi_k, -1), s.get(hi_k, -1))
-                # merge trigger dynamic state by summing counters
-                for dk, dv in s.get("dyn", {}).items():
-                    if isinstance(dv, (int, float)):
-                        m["dyn"][dk] = m["dyn"].get(dk, 0) + dv
-                    else:
-                        m["dyn"].setdefault(dk, dv)
+        # 2. merge: sort all intervals, union overlapping ones
+        cells.sort(key=lambda c: (c[0]["start"], c[0]["end"]))
+        sessions: list[dict] = []
+        fresh: list[int] = []  # new elements per merged session
+        for s, n in cells:
+            if sessions and s["start"] < sessions[-1]["end"]:
+                merge_cells(sessions[-1], s)
+                fresh[-1] += n
             else:
-                merged.append(s)
-        sessions = merged
+                sessions.append(s)
+                fresh.append(n)
 
-        panes: list[dict] = []
-
-        def emit(s: dict, timing: str, is_last: bool) -> None:
-            n, total = (
-                (s["acc_n"], s["acc_sum"])
-                if accumulation == ACCUMULATING
-                else (s["pane_n"], s["pane_sum"])
-            )
-            pane = dict(
-                zip(keys, user_key),
-                window_start=pd.Timestamp(s["start"], unit="ms"),
-                window_end=pd.Timestamp(s["end"], unit="ms"),
-                n=n,
-                total=total,
-                pane_index=s["pane_idx"],
-                pane_timing=timing,
-                is_first=s["pane_idx"] == 0,
-                is_last=is_last,
-            )
-            if output_time is not None:
-                if output_time == OUTPUT_END_OF_WINDOW:
-                    ms = s["end"] - 1
-                elif output_time == OUTPUT_EARLIEST:
-                    ms = (s.get("acc_min", -1) if accumulation == ACCUMULATING
-                          else s.get("pane_min", -1))
-                else:
-                    ms = (s.get("acc_max", -1) if accumulation == ACCUMULATING
-                          else s.get("pane_max", -1))
-                pane["emit_ts"] = pd.Timestamp(ms, unit="ms") if ms >= 0 else pd.NaT
-            panes.append(pane)
-            s["pane_idx"] += 1
-            s["pane_n"], s["pane_sum"] = 0, 0.0
-            s["pane_min"], s["pane_max"] = -1, -1
-
-        # 3. run the trigger per session
+        # 3. run the pane lifecycle per session
+        rows: list[dict] = []
         keep: list[dict] = []
-        for s in sessions:
-            new_n = s.pop("new_n", 0)
-            final_horizon = watermark_ms >= s["end"] + lateness_ms
-            if watermark_ms < s["end"]:
-                if trigger.early is not None and new_n:
-                    trigger.early.on_elements(s["dyn"], "e", new_n, now_ms)
-                    if trigger.early.should_fire(s["dyn"], "e", now_ms):
-                        trigger.early.on_fire(s["dyn"], "e")
-                        emit(s, "EARLY", is_last=False)
-                keep.append(s)
-            else:
-                emitted_closing = False
-                if not s["on_time_fired"]:
-                    emit(s, "ON_TIME", is_last=final_horizon)
-                    s["on_time_fired"] = True
-                    emitted_closing = final_horizon
-                elif new_n:
-                    fire_late = True
-                    if trigger.late is not None:
-                        trigger.late.on_elements(s["dyn"], "l", new_n, now_ms)
-                        fire_late = trigger.late.should_fire(s["dyn"], "l", now_ms)
-                        if fire_late:
-                            trigger.late.on_fire(s["dyn"], "l")
-                    if fire_late:
-                        emit(s, "LATE", is_last=final_horizon)
-                        emitted_closing = final_horizon
-                if final_horizon:
-                    # Closing pane over merging windows: FIRE_ALWAYS
-                    # guarantees the session's final is_last pane at the
-                    # lateness horizon even when nothing new arrived;
-                    # default FIRE_IF_NON_EMPTY still fires when the pane
-                    # holds data no earlier firing emitted (late element
-                    # buffered by an unready late trigger) — Beam's
-                    # "final pane if there is new data since the last
-                    # firing" contract.
-                    if not emitted_closing and (
-                        closing_behavior == CLOSING_FIRE_ALWAYS or s["pane_n"]
-                    ):
-                        emit(s, "LATE", is_last=True)
-                else:
-                    keep.append(s)  # still refinable within lateness
+        timeouts: list[int] = []
+        for s, n in zip(sessions, fresh):
+            fired = fire_panes(s, n, watermark_ms, now_ms, cfg)
+            if fired.panes:
+                head = dict(zip(keys, key), window_start=pd.Timestamp(s["start"], unit="ms"),
+                            window_end=pd.Timestamp(s["end"], unit="ms"))
+                rows += [{**head, **p} for p in fired.panes]
+            if fired.cell is not None:  # still refinable within lateness
+                keep.append(fired.cell)
+                timeouts.append(fired.timeout_ms)
 
         # 4. persist / GC / wake-up
         if keep:
             state.update((json.dumps({"sessions": keep}),))
-            targets = []
-            for s in keep:
-                if not s["on_time_fired"]:
-                    targets.append(s["end"] - lateness_ms)  # spark clock
-                else:
-                    targets.append(s["end"])  # GC point on spark clock
-            state.setTimeoutTimestamp(max(min(targets), spark_wm + 1))
+            state.setTimeoutTimestamp(min(timeouts))
         elif state.exists:
             state.remove()
 
-        if panes:
-            yield pd.DataFrame(panes)
+        if rows:
+            yield pd.DataFrame(rows)
 
     return windowed.groupBy(*keys).applyInPandasWithState(
         process,

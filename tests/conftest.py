@@ -112,6 +112,8 @@ _SLOW_TESTS = {
     ("test_multimodal.py", "test_audio_features_empty_clip_last_in_batch"),  # 10s
     ("test_properties.py", "test_parquet_round_trip_full_coder_table"),  # 10s
     ("test_streaming.py", "test_streaming_session_windows_merge_and_close"),  # 10s
+    ("test_trigger_kernel.py", "test_session_kernel_stragglers_beyond_lateness_are_dropped"),  # 10s
+    ("test_trigger_kernel.py", "test_session_kernel_late_data_within_lateness_fires_late_pane"),  # 9s
     ("test_properties.py", "test_parquet_round_trip"),  # 10s
     ("test_queries_vs_oracle.py", "test_query_matches_oracle[ann_recall_report]"),  # 10s
     ("test_avro_io.py", "test_logical_types_round_trip_property"),  # 10s

@@ -383,61 +383,6 @@ def test_stateful_par_do_timer_fires_and_clears(spark, harness):
     assert out3 == [("a", 1, False)]
 
 
-def test_tws_probe_picks_kernel_in_this_container(monkeypatch):
-    """The capability probe must report False here (google.protobuf is
-    absent — measured, SURVEY §2.9) so stateful_par_do routes through the
-    applyInPandasWithState kernel, and True routing must reach the TWS
-    builder — the preferred path on a normally-provisioned cluster —
-    so that code cannot rot as an unreachable branch."""
-    from dataflowjavasdk_spark.streaming import state as S
-
-    assert S.tws_available() is False
-
-    calls = []
-    monkeypatch.setattr(S, "_stateful_par_do_kernel", lambda *a: calls.append("kernel"))
-    monkeypatch.setattr(S, "_stateful_par_do_tws", lambda *a: calls.append("tws"))
-    S.stateful_par_do(None, ["k"], lambda *a: None, "k string")
-    assert calls == ["kernel"]  # auto + no protobuf -> kernel
-
-    monkeypatch.setattr(S, "tws_available", lambda: True)
-    S.stateful_par_do(None, ["k"], lambda *a: None, "k string")
-    S.stateful_par_do(None, ["k"], lambda *a: None, "k string", engine="kernel")
-    S.stateful_par_do(None, ["k"], lambda *a: None, "k string", engine="tws")
-    assert calls == ["kernel", "tws", "kernel", "tws"]
-
-    with pytest.raises(ValueError):
-        S.stateful_par_do(None, ["k"], lambda *a: None, "k string", engine="bogus")
-
-
-@pytest.mark.skipif(
-    not __import__("dataflowjavasdk_spark.streaming.state", fromlist=["tws_available"]).tws_available(),
-    reason="transformWithStateInPandas needs google.protobuf (absent in this container)",
-)
-def test_stateful_par_do_tws_end_to_end(spark, harness):
-    """On protobuf-provisioned clusters, the SAME fn/state contract must
-    hold on the TWS substrate (mirror of the kernel ValueState test)."""
-    import pandas as pd
-
-    from dataflowjavasdk_spark.streaming.state import stateful_par_do
-
-    def fn(key, rows, state):
-        if len(rows) == 0:
-            return None
-        total = state.value("count", 0) + len(rows)
-        state.set("count", total)
-        return pd.DataFrame({"key": [key[0]], "n": [total]})
-
-    def build(stream):
-        return stateful_par_do(
-            stream, keys=["key"], fn=fn,
-            output_schema="key string, n long", engine="tws",
-        )
-
-    harness.feed(_batch(spark, _rows(spark, (1, 10, "a", 1), (2, 20, "a", 1))))
-    out = {r["key"]: r["n"] for r in harness.run_round(build, "update")}
-    assert out == {"a": 2}
-
-
 def test_leaderboard_end_to_end_pane_sequence(spark, harness):
     """LeaderBoard acceptance (historical examples/complete/game/
     LeaderBoard.java): team scores per fixed window under
@@ -814,8 +759,7 @@ def test_stateful_par_do_timer_survives_unrelated_batch(spark, harness):
     GroupState cancels its timeout on every invocation unless re-set, so
     the kernel re-arms the pending expiry from the state blob. Without
     that, round 2 below would silently cancel the timer and the final
-    pane would never fire — and the kernel would diverge from the TWS
-    substrate, where registered timers survive unrelated invocations."""
+    pane would never fire."""
     import pandas as pd
 
     from dataflowjavasdk_spark.streaming.state import stateful_par_do

@@ -386,6 +386,52 @@ def test_session_kernel_separate_sessions_beyond_gap(spark, harness):
     assert on_time["2024-01-01 00:05:00"] == (1, "2024-01-01 00:06:00")
 
 
+def _session_panes(rows, key="a"):
+    return [
+        (str(r["window_start"]), str(r["window_end"]), r["pane_timing"], r["pane_index"],
+         r["n"], r["total"], r["is_first"], r["is_last"])
+        for r in sorted(rows, key=lambda r: (r["window_start"], r["pane_index"]))
+        if r["key"] == key
+    ]
+
+
+def test_session_kernel_late_data_within_lateness_fires_late_pane(spark, harness):
+    """Session twin of test_late_data_within_lateness_fires_late_pane: a
+    late element within allowed lateness merges into the closed session
+    and refines it with a LATE pane (the pane index continues, the
+    session grows)."""
+    build = _build_sess(AfterWatermark(), ACCUMULATING, lateness="600 seconds")
+
+    # session [10, 70) for a; the zz row moves the watermark to 120 > 70
+    harness.feed(_batch(spark, [(1, 10, "a", 1)]))
+    harness.feed(_batch(spark, [(2, 120, "zz", 0)]))
+    out1 = _session_panes(harness.run_round(build, output_mode="update"))
+    assert out1 == [("2024-01-01 00:00:10", "2024-01-01 00:01:10", "ON_TIME", 0, 1, 1.0, True, False)]
+
+    # late element at 30 (watermark 120 < 70 + 600): its proto-session
+    # [30, 90) merges into [10, 70) -> one LATE refinement of [10, 90)
+    harness.feed(_batch(spark, [(3, 30, "a", 5)]))
+    out2 = _session_panes(harness.run_round(build, output_mode="update"))
+    assert out2 == [("2024-01-01 00:00:10", "2024-01-01 00:01:30", "LATE", 1, 2, 6.0, False, False)]
+
+
+def test_session_kernel_stragglers_beyond_lateness_are_dropped(spark, harness):
+    """Session twin of test_stragglers_beyond_lateness_are_dropped: once a
+    session is past end + lateness its state is gone, and a straggler
+    for it is dropped — no pane, no resurrected session."""
+    build = _build_sess(AfterWatermark(), ACCUMULATING, lateness="0 seconds")
+
+    harness.feed(_batch(spark, [(1, 10, "a", 1)]))
+    harness.feed(_batch(spark, [(2, 500, "zz", 0)]))  # closes + GCs [10, 70)
+    out1 = _session_panes(harness.run_round(build, output_mode="update"))
+    assert out1 == [("2024-01-01 00:00:10", "2024-01-01 00:01:10", "ON_TIME", 0, 1, 1.0, True, True)]
+
+    # straggler for the GC'd session: no pane, and only zz keeps state
+    harness.feed(_batch(spark, [(3, 20, "a", 9), (4, 600, "zz", 0)]))
+    assert _session_panes(harness.run_round(build, output_mode="update")) == []
+    assert harness.state_rows == 1
+
+
 def test_session_kernel_early_firing_then_merge(spark, harness):
     """An early pane fires by element count inside an open session; a
     bridging element then MERGES two open sessions — the merged session's
