@@ -333,7 +333,7 @@ def main() -> None:
     # root, so a truncated console capture can never lose the round's perf
     # signal again (round 3's BENCH_r03 was `parsed: null` because the
     # driver's tail window clipped the 4.5 KB stdout line).
-    with open(os.path.join(_REPO_ROOT, "BENCH.json"), "w") as fh:
+    with open(durable_path(), "w") as fh:
         json.dump(payload, fh)
         fh.write("\n")
     # Console contract line LAST and PROVABLY narrow: the driver's tail
@@ -349,6 +349,17 @@ def main() -> None:
         "2,000 — shorten keys/values (see contract_line)"
     )
     print(line, flush=True)
+
+
+def durable_path(cpus: str | None = None) -> str:
+    """Where the durable payload goes: BENCH.json for a run on every core
+    (SPARK_GRAFT_CPUS unset, `*`, or the host's core count as `nproc`
+    reports it), else BENCH_c{N}.json — so a control run at fewer cores
+    never overwrites the full run's offsets and sentinels."""
+    if cpus is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    full = cpus in ("*", str(len(os.sched_getaffinity(0))))
+    return os.path.join(_REPO_ROOT, "BENCH.json" if full else f"BENCH_c{cpus}.json")
 
 
 def short_keys(names: list[str], width: int = 7) -> dict[str, str]:

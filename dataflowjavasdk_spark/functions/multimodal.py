@@ -20,6 +20,18 @@ Design (the part that matters at 100 TB):
   partitioning, UDF signatures, batch shapes) stays testable.
   `extract_image_features` dispatches on container magic bytes to the
   REAL decoders — there is no pseudo-feature image path left.
+- One runner, `_map_payloads`, is the only place a payload column
+  crosses the Python boundary (the Dataflow split: per-element code in
+  the kernel, bundling in the runner). It owns the projection, the one
+  mapInPandas call and its batch loop, the pass-through id columns
+  (`media_id`; `media_type` too for curate_media_features), columnar
+  assembly and the zero-row frame. Every extractor, the dead-letter
+  wrapper and the curation core hand it a kernel of one of three kinds:
+  a per-payload kernel `kernel(bytes) -> tuple` of one row's feature
+  values (`_per_payload`), a per-chunk kernel over iter_wav_chunks
+  `kernel(ids, rates, nchs, lens, starts, mono) -> tuple` of column
+  arrays (`_per_wav_chunk`), or a frame-exploding one that emits its own
+  media_id column and any number of rows per payload.
 """
 
 from __future__ import annotations
@@ -118,42 +130,86 @@ def _ahash_any_dims(luma: np.ndarray) -> int:
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-def extract_image_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """REAL decode + feature-extract via mapInPandas: per Arrow batch,
-    sniff each payload's container magic, decode with the matching real
-    codec (BMP/PNG/baseline JPEG), emit dims, Rec.601 mean luma, and a
-    64-bit average-hash over the luma plane. Iterator of bounded batches
-    in/out; the payload column is dropped from the output so blobs never
-    travel past the decode stage."""
+def _map_payloads(
+    df: DataFrame,
+    decode,
+    schema: str,
+    payload_col: str = "payload",
+    keep: tuple[str, ...] = ("media_id",),
+) -> DataFrame:
+    """The media family's one Python-boundary runner: project media_id,
+    the payload and the other `keep` columns, run ONE mapInPandas pass,
+    and per Arrow batch call `decode(payloads, media_ids)` for the
+    feature columns. Output rows are the `keep` columns passed through
+    followed by decode's columns, named in `schema` order; a column may
+    be any 1-D sequence (a per-chunk array, a tuple of per-payload
+    values — a None in it becomes SQL NULL). Frame-exploding decodes
+    pass keep=() and return their own media_id column. A zero-row batch
+    yields a zero-row frame with every schema column named (a bare
+    pd.DataFrame([]) would have none) without calling decode. Payloads
+    stream through in bounded batches and are dropped from the output,
+    so blobs never travel past the decode stage."""
+    names = [field.split()[0] for field in schema.split(",")]
+    others = [c for c in keep if c != "media_id"]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            n_rows = len(batch)
-            width = np.empty(n_rows, np.int64)
-            height = np.empty(n_rows, np.int64)
-            mean_luma = np.empty(n_rows, np.float64)
-            phash = np.empty(n_rows, np.int64)
-            for i, payload in enumerate(batch[payload_col]):
-                img = _decode_image(bytes(payload))
-                luma = _luma_plane(img)
-                width[i] = img.shape[1]
-                height[i] = img.shape[0]
-                mean_luma[i] = luma.mean()
-                phash[i] = _ahash_any_dims(luma)
-            # columnar assembly (round 11, guide §4.2); decode + luma
-            # math unchanged
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "width": width,
-                    "height": height,
-                    "mean_luma": mean_luma,
-                    "phash": phash,
-                }
-            )
+            if not len(batch):
+                yield pd.DataFrame({name: [] for name in names})
+                continue
+            cols = [batch[c].to_numpy() for c in keep]
+            cols += decode(batch[payload_col], batch["media_id"].to_numpy())
+            yield pd.DataFrame(dict(zip(names, map(np.asarray, cols))))
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=IMAGE_FEATURES_SCHEMA
+    return df.select("media_id", payload_col, *others).mapInPandas(
+        run, schema=schema
+    )
+
+
+def _per_payload(kernel):
+    """Batch decode for `_map_payloads` from a per-payload kernel:
+    `kernel(bytes)` returns one tuple of feature values, and the batch's
+    tuples are transposed into columns once."""
+
+    def decode(payloads, _ids):
+        return zip(*[kernel(bytes(p)) for p in payloads])
+
+    return decode
+
+
+def _per_wav_chunk(kernel):
+    """Batch decode for `_map_payloads` from a per-chunk kernel over
+    iter_wav_chunks: `kernel(ids, rates, nchs, lens, starts, mono)`
+    (ids = the chunk's media_id slice) returns a tuple of column arrays,
+    concatenated across the batch's chunks. It must not return a view of
+    `mono` or of any other pooled buffer: the next chunk overwrites
+    them before the concatenation."""
+
+    def decode(payloads, ids):
+        parts = [
+            kernel(ids[off : off + len(lens)], rates, nchs, lens, starts, mono)
+            for off, rates, nchs, lens, starts, mono in iter_wav_chunks(payloads)
+        ]
+        return [np.concatenate(col) for col in zip(*parts)]
+
+    return decode
+
+
+def _image_features(payload: bytes) -> tuple:
+    """The image kernel: sniff + real decode, then dims, Rec.601 mean
+    luma and the 64-bit average-hash over the luma plane."""
+    img = _decode_image(payload)
+    luma = _luma_plane(img)
+    return img.shape[1], img.shape[0], luma.mean(), _ahash_any_dims(luma)
+
+
+def extract_image_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """REAL decode + feature-extract: per payload, sniff the container
+    magic, decode with the matching real codec (BMP/PNG/baseline JPEG),
+    emit dims, Rec.601 mean luma, and a 64-bit average-hash over the
+    luma plane."""
+    return _map_payloads(
+        df, _per_payload(_image_features), IMAGE_FEATURES_SCHEMA, payload_col
     )
 
 
@@ -500,71 +556,47 @@ def extract_audio_features(df: DataFrame, payload_col: str = "payload") -> DataF
     image path: Arrow-batched, one pass, payload dropped from the
     output."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            cols: list[list[np.ndarray]] = [[], [], [], [], []]
-            for _off, rates, nchs, n, starts, mono in iter_wav_chunks(
-                batch[payload_col]
-            ):
-                # clip-local sequential sum of squares (see _segment_sums
-                # on why not a global cumsum); same operands as the
-                # per-row np.mean(mono**2) up to within-clip summation
-                # order, which the query layer's round(..., 9) absorbs
-                # (and the fixture's dyadic squares sum exactly under ANY
-                # order). Squares land in a pooled chunk-scale buffer
-                # (same elementwise op, same bits).
-                sq = _POOL.f64("mono_sq", mono.size)
-                np.multiply(mono, mono, out=sq)
-                rms = np.sqrt(_segment_sums(sq, starts, n) / np.maximum(n, 1))
-                # zero crossings: integer diff of the sign bits — exact
-                # under a cumsum, with each clip's count read off as a
-                # prefix-difference that excludes the clip-boundary diffs
-                # (so per-chunk cumsums cannot change any clip's count).
-                if mono.size > 1:
-                    d = np.abs(np.diff(np.signbit(mono).astype(np.int8)))
-                    ics = _POOL.i64("ics", d.size + 1)
-                    ics[0] = 0
-                    np.cumsum(d, dtype=np.int64, out=ics[1:])
-                    ends = starts + n
-                    # Clamp both gather indices to d.size (ics's last
-                    # valid index): a ZERO-LENGTH clip at the END of the
-                    # chunk has starts == mono.size, one past ics — the
-                    # clamped values are discarded anyway by the n > 1
-                    # mask below (ADVICE r10 repro: empty data chunk as
-                    # the chunk's last row crashed with IndexError).
-                    hi = np.minimum(np.maximum(ends - 1, starts), d.size)
-                    num = ics[hi] - ics[np.minimum(starts, d.size)]
-                else:
-                    num = np.zeros(len(n), dtype=np.int64)
-                zcr = np.where(n > 1, num / np.maximum(n - 1, 1), 0.0)
-                cols[0].append(rates)
-                cols[1].append(nchs)
-                cols[2].append(n)
-                cols[3].append(np.where(n > 0, rms, 0.0))
-                cols[4].append(zcr)
+    def kernel(_ids, rates, nchs, n, starts, mono):
+        # clip-local sequential sum of squares (see _segment_sums on why
+        # not a global cumsum); same operands as the per-row
+        # np.mean(mono**2) up to within-clip summation order, which the
+        # query layer's round(..., 9) absorbs (and the fixture's dyadic
+        # squares sum exactly under ANY order). Squares land in a pooled
+        # chunk-scale buffer (same elementwise op, same bits).
+        sq = _POOL.f64("mono_sq", mono.size)
+        np.multiply(mono, mono, out=sq)
+        rms = np.sqrt(_segment_sums(sq, starts, n) / np.maximum(n, 1))
+        # zero crossings: integer diff of the sign bits — exact under a
+        # cumsum, with each clip's count read off as a prefix-difference
+        # that excludes the clip-boundary diffs (so per-chunk cumsums
+        # cannot change any clip's count).
+        if mono.size > 1:
+            d = np.abs(np.diff(np.signbit(mono).astype(np.int8)))
+            ics = _POOL.i64("ics", d.size + 1)
+            ics[0] = 0
+            np.cumsum(d, dtype=np.int64, out=ics[1:])
+            ends = starts + n
+            # Clamp both gather indices to d.size (ics's last valid
+            # index): a ZERO-LENGTH clip at the END of the chunk has
+            # starts == mono.size, one past ics — the clamped values are
+            # discarded anyway by the n > 1 mask below (ADVICE r10 repro:
+            # empty data chunk as the chunk's last row crashed with
+            # IndexError).
+            hi = np.minimum(np.maximum(ends - 1, starts), d.size)
+            num = ics[hi] - ics[np.minimum(starts, d.size)]
+        else:
+            num = np.zeros(len(n), dtype=np.int64)
+        return (
+            rates,
+            nchs,
+            n,
+            np.where(rates > 0, n / np.maximum(rates, 1), 0.0),
+            np.where(n > 0, rms, 0.0),
+            np.where(n > 1, num / np.maximum(n - 1, 1), 0.0),
+        )
 
-            def cat(parts, dtype):
-                return (
-                    np.concatenate(parts) if parts else np.empty(0, dtype=dtype)
-                )
-
-            rates = cat(cols[0], np.int64)
-            n = cat(cols[2], np.int64)
-            # explicit columns: a zero-row batch must still match the schema
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "sample_rate": rates,
-                    "n_channels": cat(cols[1], np.int64),
-                    "n_samples": n,
-                    "duration_s": np.where(rates > 0, n / np.maximum(rates, 1), 0.0),
-                    "rms": cat(cols[3], np.float64),
-                    "zero_crossing_rate": cat(cols[4], np.float64),
-                }
-            )
-
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=AUDIO_FEATURES_SCHEMA
+    return _map_payloads(
+        df, _per_wav_chunk(kernel), AUDIO_FEATURES_SCHEMA, payload_col
     )
 
 
@@ -632,43 +664,41 @@ def encode_bmp(pixels: np.ndarray, top_down: bool = False) -> bytes:
     return header + dib + body
 
 
+def encode_wav(pcm: np.ndarray, rate: int) -> bytes:
+    """Minimal RIFF/PCM writer (stdlib `wave`) — decode_wav's twin for
+    every synth fixture: `pcm` holds integer samples, shape (n_frames,)
+    for mono or (n_frames, n_channels) interleaved, and the sample width
+    is the dtype's item size. The wave module writes native-order
+    samples little-endian, so samples are handed to it in native order
+    whatever the dtype's declared order."""
+    import io
+    import wave
+
+    arr = np.asarray(pcm)
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wv:
+        wv.setnchannels(1 if arr.ndim == 1 else arr.shape[1])
+        wv.setsampwidth(arr.dtype.itemsize)
+        wv.setframerate(rate)
+        wv.writeframes(arr.astype(arr.dtype.newbyteorder("=")).tobytes())
+    return buf.getvalue()
+
+
 def extract_bmp_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Real image feature extraction for BMP payloads (decode_bmp):
     dimensions, per-channel means, Rec.601 luma."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            n_rows = len(batch)
-            width = np.empty(n_rows, np.int64)
-            height = np.empty(n_rows, np.int64)
-            means = np.empty((n_rows, 3), np.float64)
-            for i, payload in enumerate(batch[payload_col]):
-                img = decode_bmp(bytes(payload))
-                # Round 11 (guide §4.2): channel means as exact integer
-                # sums / n_pixels — the sums are < 2^53 so the old
-                # pairwise float64 mean computed the same exact integer;
-                # one correctly-rounded division each, bit-identical.
-                # Columnar assembly replaces the per-row list of dicts.
-                sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                means[i] = sums / (img.shape[0] * img.shape[1])
-                width[i] = img.shape[1]
-                height[i] = img.shape[0]
-            luma = 0.299 * means[:, 0] + 0.587 * means[:, 1] + 0.114 * means[:, 2]
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "width": width,
-                    "height": height,
-                    "mean_r": means[:, 0],
-                    "mean_g": means[:, 1],
-                    "mean_b": means[:, 2],
-                    "mean_luma": luma,
-                }
-            )
+    def kernel(payload: bytes) -> tuple:
+        img = decode_bmp(payload)
+        # Round 11 (guide §4.2): channel means as exact integer sums /
+        # n_pixels — the sums are < 2^53 so the old pairwise float64 mean
+        # computed the same exact integer; one correctly-rounded division
+        # each, bit-identical.
+        sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+        r, g, b = sums / (img.shape[0] * img.shape[1])
+        return img.shape[1], img.shape[0], r, g, b, 0.299 * r + 0.587 * g + 0.114 * b
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=BMP_FEATURES_SCHEMA
-    )
+    return _map_payloads(df, _per_payload(kernel), BMP_FEATURES_SCHEMA, payload_col)
 
 
 RESIZED_FEATURES_SCHEMA = (
@@ -715,55 +745,34 @@ def extract_resized_features(
     antialiased one). Emitting both from one decode pass is the
     production shape — decode cost dominates, kernels are cheap."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            n_rows = len(batch)
-            ow = np.empty(n_rows, np.int64)
-            oh = np.empty(n_rows, np.int64)
-            nnr = np.empty(n_rows, np.float64)
-            boxr = np.empty(n_rows, np.float64)
-            mg = np.empty(n_rows, np.float64)
-            if factor < 1:  # resize_nearest/resize_box contract
-                raise ValueError(f"factor must be >= 1, got {factor}")
-            for i, payload in enumerate(batch[payload_col]):
-                img = decode_bmp(bytes(payload))
-                h, w = img.shape[:2]
-                if h % factor or w % factor:  # resize_box contract
-                    raise ValueError(
-                        f"dims {w}x{h} not divisible by factor {factor}"
-                    )
-                # Round 11 (guide §4.2): both kernels reduce to channel
-                # MEANS, so neither downscaled image needs materializing.
-                # nn mean = mean over the stride-sampled pixels; box mean
-                # = mean over ALL pixels (each factor x factor block
-                # contributes its exact block mean, and every block has
-                # equal weight — resize_box enforces divisibility).
-                # Bit-identical: all sums are exact integers < 2^53, the
-                # old pairwise float64 means summed those same integers
-                # exactly, and fl(S/4)/nblocks == fl(S/(h*w)) because
-                # S/4 is an exact dyadic intermediate. Verified bit-equal
-                # on the full fixture corpus + pinned by test.
-                nn = img[::factor, ::factor]
-                ow[i] = nn.shape[1]
-                oh[i] = nn.shape[0]
-                nnr[i] = int(nn[..., 0].sum(dtype=np.int64)) / (
-                    nn.shape[0] * nn.shape[1]
-                )
-                boxr[i] = int(img[..., 0].sum(dtype=np.int64)) / (h * w)
-                mg[i] = int(img[..., 1].sum(dtype=np.int64)) / (h * w)
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "out_width": ow,
-                    "out_height": oh,
-                    "nn_mean_r": nnr,
-                    "box_mean_r": boxr,
-                    "mean_g": mg,
-                }
-            )
+    def kernel(payload: bytes) -> tuple:
+        if factor < 1:  # resize_nearest/resize_box contract
+            raise ValueError(f"factor must be >= 1, got {factor}")
+        img = decode_bmp(payload)
+        h, w = img.shape[:2]
+        if h % factor or w % factor:  # resize_box contract
+            raise ValueError(f"dims {w}x{h} not divisible by factor {factor}")
+        # Round 11 (guide §4.2): both kernels reduce to channel MEANS, so
+        # neither downscaled image needs materializing. nn mean = mean
+        # over the stride-sampled pixels; box mean = mean over ALL pixels
+        # (each factor x factor block contributes its exact block mean,
+        # and every block has equal weight — resize_box enforces
+        # divisibility). Bit-identical: all sums are exact integers
+        # < 2^53, the old pairwise float64 means summed those same
+        # integers exactly, and fl(S/4)/nblocks == fl(S/(h*w)) because
+        # S/4 is an exact dyadic intermediate. Verified bit-equal on the
+        # full fixture corpus + pinned by test.
+        nn = img[::factor, ::factor]
+        return (
+            nn.shape[1],
+            nn.shape[0],
+            int(nn[..., 0].sum(dtype=np.int64)) / (nn.shape[0] * nn.shape[1]),
+            int(img[..., 0].sum(dtype=np.int64)) / (h * w),
+            int(img[..., 1].sum(dtype=np.int64)) / (h * w),
+        )
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=RESIZED_FEATURES_SCHEMA
+    return _map_payloads(
+        df, _per_payload(kernel), RESIZED_FEATURES_SCHEMA, payload_col
     )
 
 
@@ -801,25 +810,10 @@ def extract_image_ahash(df: DataFrame, payload_col: str = "payload") -> DataFram
     fingerprint stage of image near-dup detection (the image twin of
     simhash_fingerprints)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            n_rows = len(batch)
-            hh = np.empty(n_rows, np.int64)
-            hl = np.empty(n_rows, np.int64)
-            for i, payload in enumerate(batch[payload_col]):
-                hh[i], hl[i] = ahash64(decode_bmp(bytes(payload)))
-            # columnar assembly (round 11, guide §4.2); hash math unchanged
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "hash_hi": hh,
-                    "hash_lo": hl,
-                }
-            )
+    def kernel(payload: bytes) -> tuple:
+        return ahash64(decode_bmp(payload))
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=AHASH_SCHEMA
-    )
+    return _map_payloads(df, _per_payload(kernel), AHASH_SCHEMA, payload_col)
 
 
 def decode_png(payload: bytes) -> np.ndarray:
@@ -953,45 +947,18 @@ def extract_png_features(df: DataFrame, payload_col: str = "payload") -> DataFra
     dimensions, channel count, per-channel means (gray reported in all
     three channels)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            n_rows = len(batch)
-            width = np.empty(n_rows, np.int64)
-            height = np.empty(n_rows, np.int64)
-            nchs = np.empty(n_rows, np.int64)
-            means = np.empty((n_rows, 3), np.float64)
-            for i, payload in enumerate(batch[payload_col]):
-                img = decode_png(bytes(payload))
-                npix = img.shape[0] * img.shape[1]
-                # exact-integer channel sums / one division — bit-equal
-                # to the old pairwise float64 means (sums < 2^53);
-                # columnar assembly (round 11, guide §4.2)
-                if img.ndim == 2:
-                    means[i] = int(img.sum(dtype=np.int64)) / npix
-                    nchs[i] = 1
-                else:
-                    sums = img.reshape(-1, img.shape[2]).sum(
-                        axis=0, dtype=np.int64
-                    )
-                    means[i] = sums[:3] / npix
-                    nchs[i] = img.shape[2]
-                width[i] = img.shape[1]
-                height[i] = img.shape[0]
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "width": width,
-                    "height": height,
-                    "n_channels": nchs,
-                    "mean_r": means[:, 0],
-                    "mean_g": means[:, 1],
-                    "mean_b": means[:, 2],
-                }
-            )
+    def kernel(payload: bytes) -> tuple:
+        img = decode_png(payload)
+        h, w = img.shape[:2]
+        # exact-integer channel sums / one division — bit-equal to the
+        # old pairwise float64 means (sums < 2^53)
+        if img.ndim == 2:
+            m = int(img.sum(dtype=np.int64)) / (h * w)
+            return w, h, 1, m, m, m
+        sums = img.reshape(-1, img.shape[2]).sum(axis=0, dtype=np.int64)
+        return (w, h, img.shape[2], *(sums[:3] / (h * w)))
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=PNG_FEATURES_SCHEMA
-    )
+    return _map_payloads(df, _per_payload(kernel), PNG_FEATURES_SCHEMA, payload_col)
 
 
 JPEG_FEATURES_SCHEMA = (
@@ -1009,48 +976,18 @@ def extract_jpeg_features(df: DataFrame, payload_col: str = "payload") -> DataFr
     Arrow-batched, one pass, payloads never shuffled."""
     from dataflowjavasdk_spark.functions.jpeg import decode_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            n_rows = len(batch)
-            width = np.empty(n_rows, np.int64)
-            height = np.empty(n_rows, np.int64)
-            ncomp = np.empty(n_rows, np.int64)
-            mean_y = np.empty(n_rows, np.float64)
-            # chroma means stay OBJECT lists: grayscale rows are SQL
-            # NULL, and a float64 column would turn None into NaN
-            mean_cb: list = [None] * n_rows
-            mean_cr: list = [None] * n_rows
-            for i, payload in enumerate(batch[payload_col]):
-                img = decode_jpeg(bytes(payload))
-                npix = img.shape[0] * img.shape[1]
-                width[i] = img.shape[1]
-                height[i] = img.shape[0]
-                # exact-integer plane sums / one division — bit-equal to
-                # the old pairwise float64 means (sums < 2^53); columnar
-                # assembly (round 11, guide §4.2)
-                if img.ndim == 2:
-                    ncomp[i] = 1
-                    mean_y[i] = int(img.sum(dtype=np.int64)) / npix
-                else:
-                    ncomp[i] = 3
-                    sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                    mean_y[i] = sums[0] / npix
-                    mean_cb[i] = sums[1] / npix
-                    mean_cr[i] = sums[2] / npix
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "width": width,
-                    "height": height,
-                    "n_components": ncomp,
-                    "mean_y": mean_y,
-                    "mean_cb": pd.Series(mean_cb, dtype=object),
-                    "mean_cr": pd.Series(mean_cr, dtype=object),
-                }
-            )
+    def kernel(payload: bytes) -> tuple:
+        img = decode_jpeg(payload)
+        h, w = img.shape[:2]
+        # exact-integer plane sums / one division — bit-equal to the old
+        # pairwise float64 means (sums < 2^53); grayscale chroma is NULL
+        if img.ndim == 2:
+            return w, h, 1, int(img.sum(dtype=np.int64)) / (h * w), None, None
+        sums = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+        return (w, h, 3, *(sums / (h * w)))
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=JPEG_FEATURES_SCHEMA
+    return _map_payloads(
+        df, _per_payload(kernel), JPEG_FEATURES_SCHEMA, payload_col
     )
 
 
@@ -1073,58 +1010,32 @@ def extract_audio_frame_energy(
     per-frame reduction per clip, Arrow-batched, payloads never
     shuffled."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            cols: list[list[np.ndarray]] = [[], [], [], []]
-            for _off, _rates, _nchs, lens, starts, mono in iter_wav_chunks(
-                batch[payload_col]
-            ):
-                nf = lens // frame
-                fm = _gather_framed(mono, starts, nf, frame)
-                # per-frame rms: same (frame,)-axis reduction as the
-                # per-row path, so every frame's value is bit-identical.
-                # The per-CLIP mean below (_segment_sums / nf) is a
-                # sequential reduceat accumulation where the per-row
-                # path used np.mean's pairwise sum — equal after the
-                # query layer's round(..., 9), not bit-equal in general
-                # (ADVICE r10); every oracle comparison on these columns
-                # goes through that rounding discipline. Squares land in
-                # a pooled chunk-scale buffer.
-                sq = _POOL.f64("framed_sq", fm.size).reshape(fm.shape)
-                np.multiply(fm, fm, out=sq)
-                frms = np.sqrt(sq.mean(axis=1))
-                fstarts = np.concatenate(([0], np.cumsum(nf)))[:-1]
-                ics = np.concatenate(
-                    ([0], np.cumsum((frms < 1e-9).astype(np.int64)))
-                )
-                cols[0].append(nf)
-                cols[1].append(ics[fstarts + nf] - ics[fstarts])
-                cols[2].append(
-                    np.where(
-                        nf > 0,
-                        _segment_sums(frms, fstarts, nf) / np.maximum(nf, 1),
-                        0.0,
-                    )
-                )
-                cols[3].append(_segment_max(frms, fstarts, nf))
+    def kernel(_ids, _rates, _nchs, lens, starts, mono):
+        nf = lens // frame
+        fm = _gather_framed(mono, starts, nf, frame)
+        # per-frame rms: same (frame,)-axis reduction as the per-row path,
+        # so every frame's value is bit-identical. The per-CLIP mean below
+        # (_segment_sums / nf) is a sequential reduceat accumulation where
+        # the per-row path used np.mean's pairwise sum — equal after the
+        # query layer's round(..., 9), not bit-equal in general (ADVICE
+        # r10); every oracle comparison on these columns goes through that
+        # rounding discipline. Squares land in a pooled chunk-scale buffer.
+        sq = _POOL.f64("framed_sq", fm.size).reshape(fm.shape)
+        np.multiply(fm, fm, out=sq)
+        frms = np.sqrt(sq.mean(axis=1))
+        fstarts = np.concatenate(([0], np.cumsum(nf)))[:-1]
+        ics = np.concatenate(([0], np.cumsum((frms < 1e-9).astype(np.int64))))
+        return (
+            nf,
+            ics[fstarts + nf] - ics[fstarts],
+            np.where(
+                nf > 0, _segment_sums(frms, fstarts, nf) / np.maximum(nf, 1), 0.0
+            ),
+            _segment_max(frms, fstarts, nf),
+        )
 
-            def cat(parts, dtype):
-                return (
-                    np.concatenate(parts) if parts else np.empty(0, dtype=dtype)
-                )
-
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "n_frames": cat(cols[0], np.int64),
-                    "n_silent": cat(cols[1], np.int64),
-                    "mean_frame_rms": cat(cols[2], np.float64),
-                    "max_frame_rms": cat(cols[3], np.float64),
-                }
-            )
-
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=AUDIO_FRAMES_SCHEMA
+    return _map_payloads(
+        df, _per_wav_chunk(kernel), AUDIO_FRAMES_SCHEMA, payload_col
     )
 
 
@@ -1148,84 +1059,54 @@ def extract_tone_detection(
     a tone ON a probe frequency) as bin index and frequency. Integer
     outputs only, so the query layer can value-hash exactly; the float
     power spectrum never leaves the extractor."""
+    bank = np.asarray(freqs_hz, dtype=np.float64)
+    freq_arr = np.asarray(freqs_hz, dtype=np.int64)
+    n_probes = len(freqs_hz)
+    # (n, 2*n_probes) REAL [cos | sin] bases, memoized per (n, rate): clips
+    # in a corpus overwhelmingly share a duration/rate profile, so the
+    # basis builds once per task and the whole group runs as ONE
+    # (clips x n) @ (n x 2*n_probes) dgemm (round 10; the per-clip GEMV
+    # spent more time in dispatch than in the 800x8 product). The split
+    # into |.|^2 = (x·cosθ)^2 + (x·sinθ)^2 is deliberate: numpy's REAL @
+    # COMPLEX matmul takes a non-BLAS mixed-dtype path that costs
+    # 0.8-2.9 s on its FIRST call in a worker process (measured; steady
+    # state 10-20 ms), and Spark's Python workers pay that cliff per task
+    # — the all-real dgemm is 0.3 ms from the first call. BLAS may
+    # accumulate in a different order than the complex kernel, but the
+    # outputs are integer argmaxes with the probe-tone margin many orders
+    # above one ulp, so the emitted rows cannot move.
+    bases: dict[tuple[int, int], np.ndarray] = {}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bank = np.asarray(freqs_hz, dtype=np.float64)
-        freq_arr = np.asarray(freqs_hz, dtype=np.int64)
-        n_probes = len(freqs_hz)
-        # (n, 2*n_probes) REAL [cos | sin] bases, memoized per (n, rate):
-        # clips in a corpus overwhelmingly share a duration/rate profile,
-        # so the basis builds once per partition and the whole group runs
-        # as ONE (clips x n) @ (n x 2*n_probes) dgemm (round 10; the
-        # per-clip GEMV spent more time in dispatch than in the 800x8
-        # product). The split into |.|^2 = (x·cosθ)^2 + (x·sinθ)^2 is
-        # deliberate: numpy's REAL @ COMPLEX matmul takes a non-BLAS
-        # mixed-dtype path that costs 0.8-2.9 s on its FIRST call in a
-        # worker process (measured; steady state 10-20 ms), and Spark's
-        # Python workers pay that cliff per task — the all-real dgemm is
-        # 0.3 ms from the first call. BLAS may accumulate in a different
-        # order than the complex kernel, but the outputs are integer
-        # argmaxes with the probe-tone margin many orders above one ulp,
-        # so the emitted rows cannot move.
-        bases: dict[tuple[int, int], np.ndarray] = {}
-        for batch in batches:
-            len_parts: list[np.ndarray] = []
-            best_parts: list[np.ndarray] = []
-            for _off, rates, _nchs, lens, starts, mono in iter_wav_chunks(
-                batch[payload_col]
-            ):
-                n_rows = len(lens)
-                best = np.zeros(n_rows, dtype=np.int64)
-                groups: dict[tuple[int, int], list[int]] = {}
-                for i in range(n_rows):
-                    groups.setdefault((int(lens[i]), int(rates[i])), []).append(i)
-                for (n, rate), idxs in groups.items():
-                    if n == 0:
-                        continue  # empty clip: keep bin 0, the argmax of all-zero power
-                    basis = bases.get((n, rate))
-                    if basis is None:
-                        theta = (
-                            -2.0 * np.pi * np.outer(np.arange(n), bank) / float(rate)
-                        )
-                        basis = np.concatenate(
-                            [np.cos(theta), np.sin(theta)], axis=1
-                        )
-                        bases[(n, rate)] = basis
-                    rows = np.asarray(idxs, dtype=np.intp)
-                    if len(rows) == n_rows:
-                        # homogeneous chunk (the common case): mono IS the
-                        # row-major (clips x n) matrix — reshape, no copies
-                        gathered = mono.reshape(n_rows, n)
-                    else:
-                        gathered = mono[
-                            (starts[rows, None] + np.arange(n)[None, :]).ravel()
-                        ].reshape(len(rows), n)
-                    proj = gathered @ basis
-                    power = proj[:, :n_probes] ** 2 + proj[:, n_probes:] ** 2
-                    best[rows] = np.argmax(power, axis=1)
-                len_parts.append(lens)
-                best_parts.append(best)
-            lens = (
-                np.concatenate(len_parts)
-                if len_parts
-                else np.empty(0, dtype=np.int64)
-            )
-            best = (
-                np.concatenate(best_parts)
-                if best_parts
-                else np.empty(0, dtype=np.int64)
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "n_samples": lens,
-                    "dominant_bin": best,
-                    "dominant_freq_hz": freq_arr[best],
-                }
-            )
+    def kernel(_ids, rates, _nchs, lens, starts, mono):
+        n_rows = len(lens)
+        best = np.zeros(n_rows, dtype=np.int64)
+        groups: dict[tuple[int, int], list[int]] = {}
+        for i in range(n_rows):
+            groups.setdefault((int(lens[i]), int(rates[i])), []).append(i)
+        for (n, rate), idxs in groups.items():
+            if n == 0:
+                continue  # empty clip: keep bin 0, the argmax of all-zero power
+            basis = bases.get((n, rate))
+            if basis is None:
+                theta = -2.0 * np.pi * np.outer(np.arange(n), bank) / float(rate)
+                basis = np.concatenate([np.cos(theta), np.sin(theta)], axis=1)
+                bases[(n, rate)] = basis
+            rows = np.asarray(idxs, dtype=np.intp)
+            if len(rows) == n_rows:
+                # homogeneous chunk (the common case): mono IS the
+                # row-major (clips x n) matrix — reshape, no copies
+                gathered = mono.reshape(n_rows, n)
+            else:
+                gathered = mono[
+                    (starts[rows, None] + np.arange(n)[None, :]).ravel()
+                ].reshape(len(rows), n)
+            proj = gathered @ basis
+            power = proj[:, :n_probes] ** 2 + proj[:, n_probes:] ** 2
+            best[rows] = np.argmax(power, axis=1)
+        return lens, best, freq_arr[best]
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=TONE_FEATURES_SCHEMA
+    return _map_payloads(
+        df, _per_wav_chunk(kernel), TONE_FEATURES_SCHEMA, payload_col
     )
 
 
@@ -1248,45 +1129,19 @@ def extract_mjpeg_features(
     from dataflowjavasdk_spark.functions.jpeg import decode_jpeg
     from dataflowjavasdk_spark.functions.video import extract_mjpeg_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            n_rows = len(batch)
-            nf = np.empty(n_rows, np.int64)
-            ns = np.empty(n_rows, np.int64)
-            width = np.empty(n_rows, np.int64)
-            height = np.empty(n_rows, np.int64)
-            luma = np.empty(n_rows, np.float64)
-            for i, payload in enumerate(batch[payload_col]):
-                raw = extract_mjpeg_frames(bytes(payload))
-                if not raw:
-                    # mirror decode_avi_mjpeg's clean rejection: a parseable
-                    # but frameless AVI is a decode error, not an IndexError
-                    raise ValueError("AVI contains no video frames")
-                sampled = [decode_jpeg(f) for f in raw[::every_nth]]
-                lumas = [
-                    (fr if fr.ndim == 2 else fr[..., 0]).mean() for fr in sampled
-                ]
-                first = sampled[0]
-                nf[i] = len(raw)
-                ns[i] = len(sampled)
-                width[i] = first.shape[1]
-                height[i] = first.shape[0]
-                luma[i] = np.mean(lumas)
-            # columnar assembly (round 11, guide §4.2); the per-frame
-            # decode + mean math is unchanged
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "n_frames": nf,
-                    "n_sampled": ns,
-                    "width": width,
-                    "height": height,
-                    "mean_luma": luma,
-                }
-            )
+    def kernel(payload: bytes) -> tuple:
+        raw = extract_mjpeg_frames(payload)
+        if not raw:
+            # mirror decode_avi_mjpeg's clean rejection: a parseable but
+            # frameless AVI is a decode error, not an IndexError
+            raise ValueError("AVI contains no video frames")
+        sampled = [decode_jpeg(f) for f in raw[::every_nth]]
+        lumas = [(fr if fr.ndim == 2 else fr[..., 0]).mean() for fr in sampled]
+        first = sampled[0]
+        return len(raw), len(sampled), first.shape[1], first.shape[0], np.mean(lumas)
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=VIDEO_FEATURES_SCHEMA
+    return _map_payloads(
+        df, _per_payload(kernel), VIDEO_FEATURES_SCHEMA, payload_col
     )
 
 
@@ -1309,51 +1164,27 @@ def extract_gif_features(df: DataFrame, payload_col: str = "payload") -> DataFra
     it. Bit-identical, not approximately: every channel sum is an exact
     integer below 2^53, so the float64 pairwise sum the old np.mean
     computed equals the exact histogram dot product, and the single
-    division is correctly rounded in both. Output assembly is columnar
-    (preallocated arrays), not a per-row list of dicts. Verified
-    bit-equal on the full 5,000-payload fixture corpus and pinned by
-    test against the old formulation on random GIFs."""
+    division is correctly rounded in both. Verified bit-equal on the full
+    5,000-payload fixture corpus and pinned by test against the old
+    formulation on random GIFs."""
     from dataflowjavasdk_spark.functions.video import decode_gif
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            n_rows = len(batch)
-            n_frames = np.empty(n_rows, np.int64)
-            pal_size = np.empty(n_rows, np.int64)
-            width = np.empty(n_rows, np.int64)
-            height = np.empty(n_rows, np.int64)
-            means = np.empty((n_rows, 3), np.float64)
-            for i, payload in enumerate(batch[payload_col]):
-                palette, frames = decode_gif(bytes(payload))
-                f0 = frames[0]
-                idx = (
-                    np.concatenate([f.ravel() for f in frames])
-                    if len(frames) > 1
-                    else f0.ravel()
-                )
-                counts = np.bincount(idx, minlength=palette.shape[0])
-                sums = counts @ palette.astype(np.int64)  # exact int64
-                means[i] = sums / idx.size
-                n_frames[i] = len(frames)
-                pal_size[i] = palette.shape[0]
-                width[i] = f0.shape[1]
-                height[i] = f0.shape[0]
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].to_numpy(),
-                    "n_frames": n_frames,
-                    "palette_size": pal_size,
-                    "width": width,
-                    "height": height,
-                    "mean_r": means[:, 0],
-                    "mean_g": means[:, 1],
-                    "mean_b": means[:, 2],
-                }
-            )
+    def kernel(payload: bytes) -> tuple:
+        palette, frames = decode_gif(payload)
+        f0 = frames[0]
+        idx = (
+            np.concatenate([f.ravel() for f in frames])
+            if len(frames) > 1
+            else f0.ravel()
+        )
+        counts = np.bincount(idx, minlength=palette.shape[0])
+        sums = counts @ palette.astype(np.int64)  # exact int64
+        return (
+            len(frames), palette.shape[0], f0.shape[1], f0.shape[0],
+            *(sums / idx.size),
+        )
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=GIF_FEATURES_SCHEMA
-    )
+    return _map_payloads(df, _per_payload(kernel), GIF_FEATURES_SCHEMA, payload_col)
 
 
 CURATION_FEATURES_SCHEMA = (
@@ -1372,69 +1203,29 @@ def curate_media_features(sniffed: DataFrame) -> DataFrame:
     Callers aggregate (batch: plain groupBy; streaming: update-mode
     groupBy) — aggregation stays outside so the composition itself has
     NO shuffle and blobs never leave their input partition."""
-    from collections.abc import Iterator as _Iterator
 
-    def decode_images(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        from dataflowjavasdk_spark.functions.jpeg import decode_jpeg
+    def image_units(payload: bytes) -> tuple:
+        img = _decode_image(payload)
+        # np.mean on the uint8 array accumulates in float64 already —
+        # same exact integer sum as astype("float64").mean() without the
+        # full-image copy (round 11)
+        return img.shape[0] * img.shape[1], img.mean(), None
 
-        for pdf in batches:
-            out = []
-            for media_id, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                raw = bytes(payload)
-                if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                    img = decode_png(raw)
-                elif raw[:2] == b"BM":
-                    img = decode_bmp(raw)
-                else:
-                    img = decode_jpeg(raw)
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "media_type": mtype,
-                        "units": int(img.shape[0] * img.shape[1]),
-                        # np.mean on the uint8 array accumulates in
-                        # float64 already — same exact integer sum as
-                        # the old astype("float64").mean() without the
-                        # full-image copy (round 11)
-                        "mean_pix": float(img.mean()),
-                        "rate": None,
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "media_type", "units", "mean_pix", "rate"],
-            )
+    def audio_units(payload: bytes) -> tuple:
+        rate, _nch, pcm = decode_wav(payload)
+        return pcm.shape[0], None, rate
 
-    def decode_audio(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                rate, _nch, pcm = decode_wav(bytes(payload))
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "media_type": mtype,
-                        "units": int(pcm.shape[0]),
-                        "mean_pix": None,
-                        "rate": int(rate),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "media_type", "units", "mean_pix", "rate"],
-            )
+    def branch(route, kernel) -> DataFrame:
+        return _map_payloads(
+            sniffed.filter(route),
+            _per_payload(kernel),
+            CURATION_FEATURES_SCHEMA,
+            keep=("media_id", "media_type"),
+        )
 
-    images = sniffed.filter(
-        F.col("media_type").startswith("image/")
-    ).mapInPandas(decode_images, schema=CURATION_FEATURES_SCHEMA)
-    audio = sniffed.filter(F.col("media_type") == "audio/wav").mapInPandas(
-        decode_audio, schema=CURATION_FEATURES_SCHEMA
+    feats = branch(F.col("media_type").startswith("image/"), image_units).unionByName(
+        branch(F.col("media_type") == "audio/wav", audio_units)
     )
-    feats = images.unionByName(audio)
     kept = F.when(
         F.col("media_type").startswith("image/"), F.col("units") >= 8
     ).otherwise((F.col("units") > 0) & (F.col("rate") >= 8100))
@@ -1449,43 +1240,35 @@ def extract_features_deadletter(
 ) -> DataFrame:
     """Dead-letter wrapper for any per-payload decode (the
     ParDo.withOutputTags idiom applied to the multimodal decode budget):
-    per Arrow batch, run `per_payload(bytes) -> dict` on each row;
-    ValueErrors become DLQ rows (`error` set, feature columns NULL)
-    instead of task failures. Corrupt media in a 100 TB crawl is
-    routine — one bad GIF must cost one row, not a stage retry.
-    Output schema: media_id + `feature_schema` fields + error string."""
+    the same runner as every extractor, with `per_payload(bytes) -> dict`
+    as the kernel and ValueErrors turned into DLQ rows (`error` set,
+    feature columns NULL) instead of task failures. Corrupt media in a
+    100 TB crawl is routine — one bad GIF must cost one row, not a stage
+    retry. Output schema: media_id + `feature_schema` fields + error
+    string."""
     names = [c.split()[0] for c in feature_schema.split(",")]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", *names, "error"]
-        for batch in batches:
-            out = []
-            for media_id, payload in zip(batch["media_id"], batch[payload_col]):
-                row = {"media_id": media_id, "error": None}
-                row.update(dict.fromkeys(names))
-                try:
-                    row.update(per_payload(bytes(payload)))
-                except ValueError as exc:
-                    row["error"] = str(exc)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
+    def kernel(payload: bytes) -> tuple:
+        try:
+            feats = per_payload(payload)
+        except ValueError as exc:
+            return (*[None] * len(names), str(exc))
+        return (*[feats.get(n) for n in names], None)
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=f"media_id long, {feature_schema}, error string"
+    return _map_payloads(
+        df,
+        _per_payload(kernel),
+        f"media_id long, {feature_schema}, error string",
+        payload_col,
     )
 
 
 def image_features_payload(payload: bytes) -> dict:
-    """Per-payload twin of extract_image_features for the dead-letter
+    """extract_image_features' kernel as a dict, for the dead-letter
     wrapper: sniff + real decode + dims/luma/ahash."""
-    img = _decode_image(payload)
-    luma = _luma_plane(img)
-    return {
-        "width": img.shape[1],
-        "height": img.shape[0],
-        "mean_luma": float(luma.mean()),
-        "phash": _ahash_any_dims(luma),
-    }
+    return dict(
+        zip(("width", "height", "mean_luma", "phash"), _image_features(payload))
+    )
 
 
 def _le_int(payload_col: str, offset: int, nbytes: int):
@@ -1596,23 +1379,22 @@ def extract_video_frame_lumas(
     decode task."""
     from dataflowjavasdk_spark.functions.video import decode_avi_mjpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, idxs, lumas = [], [], []
-            for media_id, payload in zip(batch["media_id"], batch[payload_col]):
-                frames = decode_avi_mjpeg(bytes(payload))
-                for i, fr in enumerate(frames):
-                    luma = fr if fr.ndim == 2 else fr[..., 0]
-                    ids.append(media_id)
-                    idxs.append(i)
-                    lumas.append(float(luma.mean()))
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "mean_luma": lumas}
-            )
+    def frames(payloads, ids):
+        lumas = [
+            [
+                float((fr if fr.ndim == 2 else fr[..., 0]).mean())
+                for fr in decode_avi_mjpeg(bytes(p))
+            ]
+            for p in payloads
+        ]
+        counts = [len(clip) for clip in lumas]
+        return (
+            np.repeat(ids, counts),
+            np.concatenate([np.arange(c) for c in counts]),
+            np.concatenate(lumas),
+        )
 
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=VIDEO_FRAME_LUMA_SCHEMA
-    )
+    return _map_payloads(df, frames, VIDEO_FRAME_LUMA_SCHEMA, payload_col, keep=())
 
 
 AUDIO_FRAME_RMS_SCHEMA = "media_id bigint, frame_idx int, rms double"
@@ -1629,39 +1411,18 @@ def extract_audio_frame_rms(
     pipeline runs). Trailing samples short of a full frame are dropped,
     matching extract_audio_frame_energy."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = batch["media_id"].to_numpy()
-            id_parts: list[np.ndarray] = []
-            idx_parts: list[np.ndarray] = []
-            rms_parts: list[np.ndarray] = []
-            for off, _rates, _nchs, lens, starts, mono in iter_wav_chunks(
-                batch[payload_col]
-            ):
-                nf = lens // frame
-                fm = _gather_framed(mono, starts, nf, frame)
-                sq = _POOL.f64("framed_sq", fm.size).reshape(fm.shape)
-                np.multiply(fm, fm, out=sq)
-                frms = np.sqrt(sq.mean(axis=1))
-                total_f = int(nf.sum())
-                fstarts = np.concatenate(([0], np.cumsum(nf)))[:-1]
-                id_parts.append(np.repeat(ids[off : off + len(lens)], nf))
-                idx_parts.append(np.arange(total_f) - np.repeat(fstarts, nf))
-                rms_parts.append(frms)
+    def kernel(ids, _rates, _nchs, lens, starts, mono):
+        nf = lens // frame
+        fm = _gather_framed(mono, starts, nf, frame)
+        sq = _POOL.f64("framed_sq", fm.size).reshape(fm.shape)
+        np.multiply(fm, fm, out=sq)
+        fstarts = np.concatenate(([0], np.cumsum(nf)))[:-1]
+        return (
+            np.repeat(ids, nf),
+            np.arange(int(nf.sum())) - np.repeat(fstarts, nf),
+            np.sqrt(sq.mean(axis=1)),
+        )
 
-            def cat(parts, dtype):
-                return (
-                    np.concatenate(parts) if parts else np.empty(0, dtype=dtype)
-                )
-
-            yield pd.DataFrame(
-                {
-                    "media_id": cat(id_parts, np.int64),
-                    "frame_idx": cat(idx_parts, np.int64),
-                    "rms": cat(rms_parts, np.float64),
-                }
-            )
-
-    return df.select("media_id", payload_col).mapInPandas(
-        run, schema=AUDIO_FRAME_RMS_SCHEMA
+    return _map_payloads(
+        df, _per_wav_chunk(kernel), AUDIO_FRAME_RMS_SCHEMA, payload_col, keep=()
     )

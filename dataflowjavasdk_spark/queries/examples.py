@@ -456,6 +456,46 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _media_corpus(
+    spark: SparkSession,
+    sf_dir: str,
+    encode,
+    cols: tuple[str, ...] = ("doc_id", "n_chars"),
+    rows_per_task: int = 2048,
+) -> DataFrame:
+    """The synthesized media corpora's one shape: `documents` projected
+    to `cols`, fanned out for the Python stage (decode_fanout, default
+    2048 rows per task; the JPEG-bearing corpora pass 512 — the tiny
+    metadata relation shuffles, the payloads never do), ONE mapInPandas
+    where `encode(*row) -> bytes` writes each document's payload from
+    its `cols` values (Python ints), then a lazy localCheckpoint pin: in
+    production these payloads are STORED — re-reading them is a scan,
+    not a re-synthesis — so steady-state timings measure the DECODE pass
+    and first_run pays the one-time corpus build (the minhash signature
+    pattern, SCALE.md principle 7). Output: media_id (= doc_id),
+    payload."""
+    from collections.abc import Iterator as _Iterator
+
+    import pandas as _pd
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select(*cols)
+        .repartition(decode_fanout(spark, sf_dir, rows_per_task=rows_per_task))
+    )
+
+    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
+        for pdf in batches:
+            rows = zip(*(pdf[c].tolist() for c in cols))
+            yield _pd.DataFrame(
+                {"media_id": pdf["doc_id"], "payload": [encode(*r) for r in rows]}
+            )
+
+    return docs.mapInPandas(
+        synth, schema="media_id long, payload binary"
+    ).localCheckpoint(eager=False)
+
+
 @query(
     "audio_frame_energy",
     oracle="""
@@ -479,48 +519,24 @@ def audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact, rounded at 9 dp for the one sqrt ulp). This is the VAD /
     silence-trim primitive; a framing or crop defect shifts the silent
     count, an energy defect shifts the rms columns."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
+    import numpy as np
 
     from dataflowjavasdk_spark.functions.multimodal import (
+        encode_wav,
         extract_audio_frame_energy,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(decode_fanout(spark, sf_dir))
+    def encode(doc_id: int) -> bytes:
+        k = 1 + doc_id % 4
+        a = 1000 * (1 + doc_id % 9)
+        sig = np.zeros(320 * k, dtype="<i2")
+        sig[: 160 * k : 2] = a
+        sig[1 : 160 * k : 2] = -a
+        return encode_wav(sig, 8000)
+
+    feats = extract_audio_frame_energy(
+        _media_corpus(spark, sf_dir, encode, ("doc_id",))
     )
-
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = 1 + doc_id % 4
-                a = 1000 * (1 + doc_id % 9)
-                sig = np.zeros(320 * k, dtype="<i2")
-                sig[: 160 * k : 2] = a
-                sig[1 : 160 * k : 2] = -a
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wv:
-                    wv.setnchannels(1)
-                    wv.setsampwidth(2)
-                    wv.setframerate(8000)
-                    wv.writeframes(sig.tobytes())
-                payloads.append(buf.getvalue())
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    feats = extract_audio_frame_energy(media)
     return feats.select(
         "media_id",
         "n_frames",
@@ -562,45 +578,20 @@ def audio_tone_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesized once and pinned, one Arrow-batched mapInPandas, the
     probe-bank matrix is (800 x 8) built per batch, only 4 integer
     columns ever shuffle."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
+    import numpy as np
 
     from dataflowjavasdk_spark.functions.multimodal import (
+        encode_wav,
         extract_tone_detection,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(decode_fanout(spark, sf_dir))
-    )
+    def encode(doc_id: int) -> bytes:
+        f = 400 * (1 + doc_id % 8)
+        t = np.arange(800, dtype=np.float64) / 8000.0
+        sig = np.round(12000.0 * np.sin(2 * np.pi * f * t)).astype("<i2")
+        return encode_wav(sig, 8000)
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                f = 400 * (1 + int(doc_id) % 8)
-                t = np.arange(800, dtype=np.float64) / 8000.0
-                sig = np.round(12000.0 * np.sin(2 * np.pi * f * t)).astype("<i2")
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wv:
-                    wv.setnchannels(1)
-                    wv.setsampwidth(2)
-                    wv.setframerate(8000)
-                    wv.writeframes(sig.tobytes())
-                payloads.append(buf.getvalue())
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    return extract_tone_detection(media)
+    return extract_tone_detection(_media_corpus(spark, sf_dir, encode, ("doc_id",)))
 
 
 @query(
@@ -1649,54 +1640,20 @@ def audio_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized-Python path, like the Avro codec) — synth+decode per
     batch, payloads never shuffled; output is one thin feature row per
     media item."""
-    from collections.abc import Iterator as _Iterator
+    import numpy as np
 
-    import pandas as _pd
-
-    from dataflowjavasdk_spark.functions.multimodal import extract_audio_features
-
-    # decode-parallelism fan-out before the Python stage (see
-    # jpeg_image_features): the tiny 2-column relation shuffles, the
-    # synthesized payloads never do
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(decode_fanout(spark, sf_dir))
+    from dataflowjavasdk_spark.functions.multimodal import (
+        encode_wav,
+        extract_audio_features,
     )
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import io
-        import wave
+    def encode(doc_id: int, n_chars: int) -> bytes:
+        amp = 1000 * (doc_id % 9 + 1)
+        pcm = np.full(100 + n_chars % 400, amp, dtype="<i2")
+        pcm[1::2] = -amp  # strict alternation: zcr == 1.0
+        return encode_wav(pcm, 8000)
 
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = 100 + int(n_chars) % 400
-                amp = 1000 * (int(doc_id) % 9 + 1)
-                pcm = np.full(n, amp, dtype="<i2")
-                pcm[1::2] = -amp  # strict alternation: zcr == 1.0
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(8000)
-                    w.writeframes(pcm.tobytes())
-                payloads.append(buf.getvalue())
-            yield _pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    # Pin the synthesized corpus (lazy localCheckpoint): in production
-    # these payloads are STORED — re-reading them is a scan, not a
-    # re-synthesis — so steady-state timings measure the DECODE pass and
-    # first_run pays the one-time corpus build (the minhash signature
-    # pattern, SCALE.md principle 7).
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    feats = extract_audio_features(media)
+    feats = extract_audio_features(_media_corpus(spark, sf_dir, encode))
     return feats.select(
         "media_id",
         "sample_rate",
@@ -1731,47 +1688,20 @@ def bmp_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-up rows, padding), and reduced to channel means the DuckDB
     twin derives in closed form. A decode defect in any of those steps
     shifts a mean and breaks the hash."""
-    from collections.abc import Iterator as _Iterator
+    import numpy as np
 
-    import pandas as _pd
-
-    from dataflowjavasdk_spark.functions.multimodal import extract_bmp_features
-
-    # decode-parallelism fan-out before the Python stage (see
-    # jpeg_image_features): the tiny 2-column relation shuffles, the
-    # synthesized payloads never do
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(decode_fanout(spark, sf_dir))
+    from dataflowjavasdk_spark.functions.multimodal import (
+        encode_bmp,
+        extract_bmp_features,
     )
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import numpy as np
+    def encode(doc_id: int, n_chars: int) -> bytes:
+        img = np.empty((1 + n_chars % 12, 1 + doc_id % 16, 3), np.uint8)
+        img[..., 0], img[..., 1] = doc_id % 256, n_chars % 256
+        img[..., 2] = (doc_id + n_chars) % 256
+        return encode_bmp(img)
 
-        from dataflowjavasdk_spark.functions.multimodal import encode_bmp
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = 1 + int(doc_id) % 16
-                h = 1 + int(n_chars) % 12
-                r, g = int(doc_id) % 256, int(n_chars) % 256
-                b = (int(doc_id) + int(n_chars)) % 256
-                img = np.empty((h, w, 3), np.uint8)
-                img[..., 0], img[..., 1], img[..., 2] = r, g, b
-                payloads.append(encode_bmp(img))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    # Pin the synthesized corpus (lazy localCheckpoint): in production
-    # these payloads are STORED — re-reading them is a scan, not a
-    # re-synthesis — so steady-state timings measure the DECODE pass and
-    # first_run pays the one-time corpus build (the minhash signature
-    # pattern, SCALE.md principle 7).
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    feats = extract_bmp_features(media)
+    feats = extract_bmp_features(_media_corpus(spark, sf_dir, encode))
     return feats.select(
         "media_id",
         "width",
@@ -1817,43 +1747,22 @@ def image_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one Arrow-batched mapInPandas pass with NO shuffle of pixel
     data; only the 6-column feature rows move. A 100 TB thumbnail job
     is exactly this plan with a sink instead of the feature rollup."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
+    import numpy as np
 
     from dataflowjavasdk_spark.functions.multimodal import (
         encode_bmp,
         extract_resized_features,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(decode_fanout(spark, sf_dir))
-    )
+    def encode(doc_id: int, n_chars: int) -> bytes:
+        w, h = 2 * (1 + doc_id % 8), 2 * (1 + n_chars % 6)
+        img = np.zeros((h, w, 3), np.uint8)
+        img[..., 0] = doc_id % 64 + np.arange(w)[None, :] + 2 * np.arange(h)[:, None]
+        img[..., 1] = n_chars % 256
+        img[..., 2] = (doc_id + n_chars) % 256
+        return encode_bmp(img)
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w, h = 2 * (1 + doc_id % 8), 2 * (1 + n_chars % 6)
-                r0 = doc_id % 64
-                img = np.zeros((h, w, 3), np.uint8)
-                img[..., 0] = (
-                    r0 + np.arange(w)[None, :] + 2 * np.arange(h)[:, None]
-                )
-                img[..., 1] = n_chars % 256
-                img[..., 2] = (doc_id + n_chars) % 256
-                payloads.append(encode_bmp(img))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    return extract_resized_features(media, factor=2)
+    return extract_resized_features(_media_corpus(spark, sf_dir, encode), factor=2)
 
 
 @query(
@@ -1879,48 +1788,21 @@ def png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced to channel means the DuckDB twin states in closed form. Any
     chunk-offset, inflate, or unfilter defect shifts a mean and breaks
     the value hash."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
+    import numpy as np
 
     from dataflowjavasdk_spark.functions.multimodal import (
         encode_png,
         extract_png_features,
     )
 
-    # decode-parallelism fan-out before the Python stage (see
-    # jpeg_image_features): the tiny 2-column relation shuffles, the
-    # synthesized payloads never do
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(decode_fanout(spark, sf_dir))
-    )
+    def encode(doc_id: int, n_chars: int) -> bytes:
+        img = np.zeros((1 + doc_id % 7, 1 + n_chars % 9, 3), dtype=np.uint8)
+        img[..., 0] = (doc_id * 3) % 256
+        img[..., 1] = (n_chars * 5) % 256
+        img[..., 2] = (doc_id + 7 * n_chars) % 256
+        return encode_png(img)
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = 1 + int(n_chars) % 9
-                h = 1 + int(doc_id) % 7
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                img[..., 0] = (int(doc_id) * 3) % 256
-                img[..., 1] = (int(n_chars) * 5) % 256
-                img[..., 2] = (int(doc_id) + 7 * int(n_chars)) % 256
-                payloads.append(encode_png(img))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    # Pin the synthesized corpus (lazy localCheckpoint): in production
-    # these payloads are STORED — re-reading them is a scan, not a
-    # re-synthesis — so steady-state timings measure the DECODE pass and
-    # first_run pays the one-time corpus build (the minhash signature
-    # pattern, SCALE.md principle 7).
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    return extract_png_features(media)
+    return extract_png_features(_media_corpus(spark, sf_dir, encode))
 
 
 @query(
@@ -1971,61 +1853,38 @@ def jpeg_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage live in tests/test_multimodal.py (hand-built MCU vectors
     against an independent double-loop IDCT; truncated/bad-marker
     payloads)."""
-    from collections.abc import Iterator as _Iterator
+    import numpy as np
 
-    import pandas as _pd
-
+    from dataflowjavasdk_spark.functions.jpeg import encode_jpeg
     from dataflowjavasdk_spark.functions.multimodal import extract_jpeg_features
+
+    def encode(doc_id: int, n_chars: int) -> bytes:
+        w, h = 1 + n_chars % 21, 1 + doc_id % 19
+        base = doc_id % 128
+        luma = np.zeros((h, w), dtype=np.uint8)
+        for by in range(-(-h // 8)):
+            for bx in range(-(-w // 8)):
+                luma[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                    base + 17 * bx + 29 * by
+                )
+        if doc_id % 2:
+            return encode_jpeg(luma)
+        img = np.zeros((h, w, 3), dtype=np.uint8)
+        img[..., 0] = luma
+        img[..., 1] = n_chars % 256
+        img[..., 2] = (doc_id + n_chars) % 256
+        return encode_jpeg(img, subsample=True)
 
     # Decode parallelism must not depend on the INPUT file layout: the
     # fixture is one small parquet (one task), which would serialize
-    # 5,000 codec round-trips behind a single Python worker. Repartition
-    # the 2-column metadata relation (16 bytes/row — the payload doesn't
-    # exist yet) so the Python stage fans out across every core; at
-    # 100 TB stored payloads arrive pre-partitioned by the scan and this
-    # exchange is dwarfed by the decode it parallelizes.
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(decode_fanout(spark, sf_dir, rows_per_task=512))
+    # 5,000 codec round-trips behind a single Python worker. The corpus
+    # repartitions the 2-column metadata relation (16 bytes/row — the
+    # payload doesn't exist yet) so the Python stage fans out across
+    # every core; at 100 TB stored payloads arrive pre-partitioned by the
+    # scan and this exchange is dwarfed by the decode it parallelizes.
+    feats = extract_jpeg_features(
+        _media_corpus(spark, sf_dir, encode, rows_per_task=512)
     )
-
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import numpy as np
-
-        from dataflowjavasdk_spark.functions.jpeg import encode_jpeg
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                w, h = 1 + n_chars % 21, 1 + doc_id % 19
-                base = doc_id % 128
-                luma = np.zeros((h, w), dtype=np.uint8)
-                for by in range(-(-h // 8)):
-                    for bx in range(-(-w // 8)):
-                        luma[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            base + 17 * bx + 29 * by
-                        )
-                if doc_id % 2 == 0:
-                    img = np.zeros((h, w, 3), dtype=np.uint8)
-                    img[..., 0] = luma
-                    img[..., 1] = n_chars % 256
-                    img[..., 2] = (doc_id + n_chars) % 256
-                    payloads.append(encode_jpeg(img, subsample=True))
-                else:
-                    payloads.append(encode_jpeg(luma))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    # Pin the synthesized corpus (lazy localCheckpoint): in production
-    # these payloads are STORED — re-reading them is a scan, not a
-    # re-synthesis — so steady-state timings measure the DECODE pass and
-    # first_run pays the one-time corpus build (the minhash signature
-    # pattern, SCALE.md principle 7).
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    feats = extract_jpeg_features(media)
     return feats.select(
         "media_id",
         "width",
@@ -2155,48 +2014,21 @@ def mjpeg_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     count). The sampled-frame mean luma is integer-exact in closed form:
     base + 6*(ceil(n/3) - 1). Any container-walk, frame-boundary,
     sampling-order, or JPEG defect shifts the count or the mean."""
-    from collections.abc import Iterator as _Iterator
+    import numpy as np
 
-    import pandas as _pd
-
+    from dataflowjavasdk_spark.functions.jpeg import encode_jpeg
     from dataflowjavasdk_spark.functions.multimodal import extract_mjpeg_features
+    from dataflowjavasdk_spark.functions.video import encode_avi_mjpeg
 
-    # decode-parallelism fan-out before the Python stage (see
-    # jpeg_image_features)
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(decode_fanout(spark, sf_dir, rows_per_task=512))
-    )
+    def encode(doc_id: int, n_chars: int) -> bytes:
+        w, h = 8 * (1 + n_chars % 3), 8 * (1 + doc_id % 2)
+        frames = [
+            encode_jpeg(np.full((h, w), doc_id % 200 + 4 * f, np.uint8))
+            for f in range(1 + doc_id % 12)
+        ]
+        return encode_avi_mjpeg(frames, w, h)
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import numpy as np
-
-        from dataflowjavasdk_spark.functions.jpeg import encode_jpeg
-        from dataflowjavasdk_spark.functions.video import encode_avi_mjpeg
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                n = 1 + doc_id % 12
-                w, h = 8 * (1 + n_chars % 3), 8 * (1 + doc_id % 2)
-                base = doc_id % 200
-                frames = [
-                    encode_jpeg(np.full((h, w), base + 4 * f, np.uint8))
-                    for f in range(n)
-                ]
-                payloads.append(encode_avi_mjpeg(frames, w, h))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    # Pin the synthesized corpus (lazy localCheckpoint): in production
-    # these payloads are STORED — re-reading them is a scan, not a
-    # re-synthesis — so steady-state timings measure the DECODE pass and
-    # first_run pays the one-time corpus build (the minhash signature
-    # pattern, SCALE.md principle 7).
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
+    media = _media_corpus(spark, sf_dir, encode, rows_per_task=512)
     return extract_mjpeg_features(media, every_nth=3)
 
 
@@ -2234,50 +2066,25 @@ def gif_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk, palette, or compositing defect shifts a mean or the frame
     count. Rejection coverage (interlace, local palettes, truncated or
     overrunning LZW streams) lives in tests/test_multimodal.py."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
+    import numpy as np
 
     from dataflowjavasdk_spark.functions.multimodal import extract_gif_features
+    from dataflowjavasdk_spark.functions.video import encode_gif
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(decode_fanout(spark, sf_dir))
-    )
+    def encode(doc_id: int, n_chars: int) -> bytes:
+        h, w = 1 + doc_id % 8, 1 + n_chars % 10
+        pal = [
+            (
+                (doc_id * (i + 1)) % 256,
+                (n_chars * (i + 2)) % 256,
+                ((doc_id + n_chars) * (i + 3)) % 256,
+            )
+            for i in range(4)
+        ]
+        frames = [np.full((h, w), f % 4, np.uint8) for f in range(1 + n_chars % 5)]
+        return encode_gif(frames, pal)
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import numpy as np
-
-        from dataflowjavasdk_spark.functions.video import encode_gif
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                n = 1 + n_chars % 5
-                w, h = 1 + n_chars % 10, 1 + doc_id % 8
-                pal = [
-                    (
-                        (doc_id * (i + 1)) % 256,
-                        (n_chars * (i + 2)) % 256,
-                        ((doc_id + n_chars) * (i + 3)) % 256,
-                    )
-                    for i in range(4)
-                ]
-                frames = [np.full((h, w), f % 4, np.uint8) for f in range(n)]
-                payloads.append(encode_gif(frames, pal))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    # Pin the synthesized corpus (lazy localCheckpoint): in production
-    # these payloads are STORED — re-reading them is a scan, not a
-    # re-synthesis — so steady-state timings measure the DECODE pass and
-    # first_run pays the one-time corpus build (the minhash signature
-    # pattern, SCALE.md principle 7).
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    feats = extract_gif_features(media)
+    feats = extract_gif_features(_media_corpus(spark, sf_dir, encode))
     return feats.select(
         "media_id",
         "n_frames",
@@ -2354,84 +2161,48 @@ def _mixed_media_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     BMP (negative biHeight) / non-canonical WAV (LIST before fmt) by
     doc_id%6, header fields derived from (doc_id, n_chars) so oracles
     can state them in closed form."""
-    from collections.abc import Iterator as _Iterator
+    import struct
 
-    import pandas as _pd
+    import numpy as np
 
-    from dataflowjavasdk_spark.functions.multimodal import encode_png
-
-    # same decode-parallelism rationale as jpeg_image_features: fan the
-    # 2-column metadata out before the Python synth stage
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(decode_fanout(spark, sf_dir))
+    from dataflowjavasdk_spark.functions.jpeg import encode_jpeg
+    from dataflowjavasdk_spark.functions.multimodal import (
+        encode_bmp,
+        encode_png,
+        encode_wav,
     )
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import io
-        import struct
-        import wave
-
-        import numpy as np
-
-        from dataflowjavasdk_spark.functions.jpeg import encode_jpeg
-
-        from dataflowjavasdk_spark.functions.multimodal import encode_bmp
-
-        def bmp_bytes(w: int, h: int, top_down: bool) -> bytes:
-            return encode_bmp(np.zeros((h, w, 3), np.uint8), top_down=top_down)
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                kind = doc_id % 6
-                if kind == 0:
-                    img = np.zeros((1 + doc_id % 7, 1 + n_chars % 9, 3), np.uint8)
-                    payloads.append(encode_png(img))
-                elif kind in (1, 4):
-                    payloads.append(
-                        bmp_bytes(1 + n_chars % 16, 1 + doc_id % 12, kind == 4)
-                    )
-                elif kind == 2:
-                    rate, nch = 8000 + 100 * (doc_id % 5), 1 + doc_id % 2
-                    buf = io.BytesIO()
-                    with wave.open(buf, "wb") as wv:
-                        wv.setnchannels(nch)
-                        wv.setsampwidth(2)
-                        wv.setframerate(rate)
-                        wv.writeframes(b"\x00\x00" * (8 * nch))
-                    payloads.append(buf.getvalue())
-                elif kind == 3:
-                    img = np.full(
-                        (1 + doc_id % 7, 1 + n_chars % 9), 60, np.uint8
-                    )
-                    payloads.append(encode_jpeg(img))
-                else:  # kind == 5: RIFF/WAVE with LIST before fmt
-                    fmt = struct.pack(
-                        "<HHIIHH", 1, 2, 44100, 44100 * 4, 4, 16
-                    )
-                    payloads.append(
-                        b"RIFF"
-                        + struct.pack("<I", 4 + 12 + 24 + 8)
-                        + b"WAVE"
-                        + b"LIST"
-                        + struct.pack("<I", 4)
-                        + b"INFO"
-                        + b"fmt "
-                        + struct.pack("<I", 16)
-                        + fmt
-                        + b"data"
-                        + struct.pack("<I", 0)
-                    )
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def encode(doc_id: int, n_chars: int) -> bytes:
+        kind = doc_id % 6
+        if kind == 0:
+            return encode_png(np.zeros((1 + doc_id % 7, 1 + n_chars % 9, 3), np.uint8))
+        if kind in (1, 4):
+            img = np.zeros((1 + doc_id % 12, 1 + n_chars % 16, 3), np.uint8)
+            return encode_bmp(img, top_down=kind == 4)
+        if kind == 2:
+            pcm = np.zeros((8, 1 + doc_id % 2), "<i2")
+            return encode_wav(pcm, 8000 + 100 * (doc_id % 5))
+        if kind == 3:
+            return encode_jpeg(np.full((1 + doc_id % 7, 1 + n_chars % 9), 60, np.uint8))
+        # kind == 5: RIFF/WAVE with LIST before fmt
+        fmt = struct.pack("<HHIIHH", 1, 2, 44100, 44100 * 4, 4, 16)
+        return (
+            b"RIFF"
+            + struct.pack("<I", 4 + 12 + 24 + 8)
+            + b"WAVE"
+            + b"LIST"
+            + struct.pack("<I", 4)
+            + b"INFO"
+            + b"fmt "
+            + struct.pack("<I", 16)
+            + fmt
+            + b"data"
+            + struct.pack("<I", 0)
+        )
 
     # pinned like the other media corpora: the mixed corpus is consumed
-    # by two queries and simulates stored payloads
-    return docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
+    # by four queries and simulates stored payloads
+    return _media_corpus(spark, sf_dir, encode)
 
 
 @query(
@@ -2720,43 +2491,22 @@ def image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, payloads never shuffle), group/join on the 16-byte hash pair
     — the exact-dedup shape; near-dup (small hamming distance) extends
     it with the simhash pigeonhole banding over the same halves."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
+    import numpy as np
 
     from dataflowjavasdk_spark.functions.multimodal import (
         encode_bmp,
         extract_image_ahash,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .repartition(decode_fanout(spark, sf_dir))
-    )
+    def encode(doc_id: int, n_chars: int) -> bytes:
+        a, b = 1 + doc_id % 3, 1 + n_chars % 3
+        img = np.zeros((16, 16, 3), np.uint8)
+        img[..., 0] = (
+            doc_id % 64 + a * np.arange(16)[None, :] + b * np.arange(16)[:, None]
+        )
+        return encode_bmp(img)
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                a, b = 1 + doc_id % 3, 1 + n_chars % 3
-                r0 = doc_id % 64
-                img = np.zeros((16, 16, 3), np.uint8)
-                img[..., 0] = (
-                    r0
-                    + a * np.arange(16)[None, :]
-                    + b * np.arange(16)[:, None]
-                )
-                payloads.append(encode_bmp(img))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    hashes = extract_image_ahash(media)
+    hashes = extract_image_ahash(_media_corpus(spark, sf_dir, encode))
     return hashes.groupBy("hash_hi", "hash_lo").agg(
         F.count(F.lit(1)).alias("n_images"),
         F.min("media_id").alias("min_media_id"),
@@ -2850,43 +2600,22 @@ def video_keyframe_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     container-walk, JPEG-decode, lag-ordering, or threshold defect
     shifts an integer. At 100 TB: payloads never shuffle; the windowed
     relation is 3 scalars per frame, partitioned by clip."""
-    from collections.abc import Iterator as _Iterator
+    import numpy as np
 
-    import pandas as _pd
-
+    from dataflowjavasdk_spark.functions.jpeg import encode_jpeg
     from dataflowjavasdk_spark.functions.multimodal import (
         extract_video_frame_lumas,
     )
+    from dataflowjavasdk_spark.functions.video import encode_avi_mjpeg
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(decode_fanout(spark, sf_dir))
-    )
+    def encode(doc_id: int) -> bytes:
+        frames = []
+        for j in range(1 + doc_id % 4):
+            luma = np.full((16, 16), 16 + 40 * j, dtype=np.uint8)
+            frames.extend([encode_jpeg(luma)] * (1 + doc_id % 3))
+        return encode_avi_mjpeg(frames, 16, 16)
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import numpy as np
-
-        from dataflowjavasdk_spark.functions.jpeg import encode_jpeg
-        from dataflowjavasdk_spark.functions.video import encode_avi_mjpeg
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n_scenes = 1 + doc_id % 4
-                per_scene = 1 + doc_id % 3
-                frames = []
-                for j in range(n_scenes):
-                    luma = np.full((16, 16), 16 + 40 * j, dtype=np.uint8)
-                    frames.extend([encode_jpeg(luma)] * per_scene)
-                payloads.append(encode_avi_mjpeg(frames, 16, 16))
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
-    lumas = extract_video_frame_lumas(media)
+    lumas = extract_video_frame_lumas(_media_corpus(spark, sf_dir, encode, ("doc_id",)))
     w = W.partitionBy("media_id").orderBy("frame_idx")
     flagged = lumas.withColumn(
         "prev", F.lag("mean_luma").over(w)
@@ -2934,51 +2663,24 @@ def audio_silence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     every output column is closed-form. A framing, gating, lag-order, or
     island-numbering defect shifts an integer. At 100 TB: payloads stay
     in the decode task; the windowed relation is 3 scalars per frame."""
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as _pd
+    import numpy as np
 
     from dataflowjavasdk_spark.functions.multimodal import (
+        encode_wav,
         extract_audio_frame_rms,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(decode_fanout(spark, sf_dir))
-    )
+    def encode(doc_id: int) -> bytes:
+        burst = np.zeros(160 * (1 + doc_id % 3), dtype="<i2")
+        burst[::2], burst[1::2] = 1000, -1000
+        silent = np.zeros(160, dtype="<i2")
+        sig = np.concatenate(
+            [np.concatenate([silent, burst]) for _ in range(1 + doc_id % 4)]
+            + [silent]
+        )
+        return encode_wav(sig, 8000)
 
-    def synth(batches: _Iterator[_pd.DataFrame]) -> _Iterator[_pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n_bursts = 1 + doc_id % 4
-                burst_len = 1 + doc_id % 3
-                burst = np.zeros(160 * burst_len, dtype="<i2")
-                burst[::2], burst[1::2] = 1000, -1000
-                silent = np.zeros(160, dtype="<i2")
-                sig = np.concatenate(
-                    [np.concatenate([silent, burst]) for _ in range(n_bursts)]
-                    + [silent]
-                )
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wv:
-                    wv.setnchannels(1)
-                    wv.setsampwidth(2)
-                    wv.setframerate(8000)
-                    wv.writeframes(sig.tobytes())
-                payloads.append(buf.getvalue())
-            yield _pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(
-        synth, schema="media_id long, payload binary"
-    ).localCheckpoint(eager=False)
+    media = _media_corpus(spark, sf_dir, encode, ("doc_id",))
     rms_rows = extract_audio_frame_rms(media)
     w = W.partitionBy("media_id").orderBy("frame_idx")
     flagged = (

@@ -191,11 +191,5 @@ def _load_all() -> None:
         "retrieval",
         "analytics",
     ):
-        try:
-            importlib.import_module(f"dataflowjavasdk_spark.queries.{mod}")
-        except ModuleNotFoundError as exc:
-            # Allow partially built trees during development, but only for
-            # our own missing submodules.
-            if f"queries.{mod}" not in str(exc):
-                raise
+        importlib.import_module(f"dataflowjavasdk_spark.queries.{mod}")
     _LOADED = True

@@ -14,24 +14,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from dataflowjavasdk_spark.functions import similarity as S
-from dataflowjavasdk_spark.queries.examples import _sql_l2sq
+from dataflowjavasdk_spark.queries.examples import _sql_cosine, _sql_l2sq
 from dataflowjavasdk_spark.queries.registry import query
 from dataflowjavasdk_spark.sources.tables import load_table
-
-_SQL_DOT = """
-  list_reduce(
-    list_prepend(0.0::DOUBLE,
-      list_transform(list_zip({a}, {b}),
-                     p -> p[1]::DOUBLE * p[2]::DOUBLE)),
-    (x, y) -> x + y)
-"""
-
-
-def _sql_cosine(a: str, b: str) -> str:
-    dot = _SQL_DOT.format(a=a, b=b)
-    na = _SQL_DOT.format(a=a, b=a)
-    nb = _SQL_DOT.format(a=b, b=b)
-    return f"({dot}) / sqrt(({na}) * ({nb}))"
 
 
 def _sql_bucket(v: str, planes: int = 8) -> str:

@@ -107,6 +107,25 @@ def test_baseline_rows_cover_live_headliners():
         assert name in bench.HEADLINE, f"{name} dropped from bench.HEADLINE"
 
 
+def test_durable_payload_is_keyed_on_cpus(monkeypatch):
+    """A full-core run writes BENCH.json; a control run at fewer cores
+    writes BENCH_c{N}.json and leaves the full run's artifact alone."""
+    import bench
+
+    nproc = len(os.sched_getaffinity(0))
+    for cpus in (None, "", "*", str(nproc)):
+        if cpus is None:
+            monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        assert bench.durable_path() == os.path.join(REPO, "BENCH.json"), cpus
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(nproc + 4))
+    assert bench.durable_path() == os.path.join(REPO, f"BENCH_c{nproc + 4}.json")
+    assert bench.durable_path("8") == os.path.join(
+        REPO, "BENCH.json" if nproc == 8 else "BENCH_c8.json"
+    )
+
+
 def test_load_rejects_parsed_null_snapshot(tmp_path):
     """A driver wrapper with parsed: null (BENCH_r03.json's committed
     shape) must raise a clear ValueError, not a KeyError traceback."""

@@ -245,15 +245,31 @@ def test_bmp_decoder_top_down_rows():
 
 def test_extractors_tolerate_empty_batches(spark):
     """A zero-row input partition must still match the declared schema
-    (pd.DataFrame([]) has no columns; the extractors pass them
-    explicitly)."""
+    (pd.DataFrame([]) has no columns). The zero-row frame lives in the
+    one payload runner, so this covers every caller: each public
+    extract_*, the dead-letter wrapper and the curation core."""
     from dataflowjavasdk_spark.functions import multimodal as M
 
     empty = spark.createDataFrame([], "media_id long, payload binary").repartition(4)
-    assert M.extract_audio_features(empty).collect() == []
-    assert M.extract_bmp_features(empty).collect() == []
-    assert M.extract_image_features(empty).collect() == []
-    assert M.extract_png_features(empty).collect() == []
+    names = sorted(
+        n
+        for n in dir(M)
+        if n.startswith("extract_") and n != "extract_features_deadletter"
+    )
+    assert len(names) == 13, names
+    outs = {n: getattr(M, n)(empty) for n in names}
+    outs["extract_features_deadletter"] = M.extract_features_deadletter(
+        empty, M.image_features_payload, "width int, phash long"
+    )
+    routed = spark.createDataFrame(
+        [], "media_id long, payload binary, media_type string"
+    ).repartition(4)
+    outs["curate_media_features"] = M.curate_media_features(routed)
+    for name, out in outs.items():
+        assert out.collect() == [], name
+    assert outs["extract_features_deadletter"].columns == [
+        "media_id", "width", "phash", "error"
+    ]
 
 
 def _png_from_raw(w, h, ctype, raw):
@@ -283,6 +299,33 @@ def test_png_roundtrip_all_color_types():
     for shape in ((6, 5), (4, 3, 3), (2, 7, 4)):
         img = rng.integers(0, 256, shape, dtype=np.uint8)
         assert (M.decode_png(M.encode_png(img)) == img).all(), shape
+
+
+def test_encode_wav_matches_stdlib_writer_for_any_dtype_order():
+    """encode_wav writes the bytes the stdlib wave writer does from
+    native-order samples, mono or interleaved stereo, whatever byte
+    order the input dtype declares — and decode_wav reads them back."""
+    import io
+    import wave
+
+    import numpy as np
+
+    from dataflowjavasdk_spark.functions import multimodal as M
+
+    pcm = np.array([[1, -2], [300, -32768], [32767, 0]], dtype="=i2")
+    for samples in (pcm[:, 0], pcm):
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as wv:
+            wv.setnchannels(1 if samples.ndim == 1 else 2)
+            wv.setsampwidth(2)
+            wv.setframerate(8000)
+            wv.writeframes(samples.tobytes())
+        for order in ("<", ">"):
+            got = M.encode_wav(samples.astype(samples.dtype.newbyteorder(order)), 8000)
+            assert got == buf.getvalue(), (samples.ndim, order)
+        rate, nch, back = M.decode_wav(got)
+        assert (rate, nch) == (8000, 1 if samples.ndim == 1 else 2)
+        assert (back * 32768 == samples.reshape(len(samples), -1)).all()
 
 
 def test_png_unfilters_sub_up_average_paeth():
