@@ -1,27 +1,31 @@
-"""Crash-safe shard discovery shared by the file-based readers.
+"""How a container file is committed and discovered — the reference's
+FileBasedSink / FileBasedSource split (historical sdk/io/FileBasedSink.java,
+FileBasedSource.java). Avro, TFRecord and WARC supply only their codec.
 
-The file sinks in this package commit via the temp-then-rename protocol
-(write into ``<dest>/_temporary/``, atomic rename after all tasks
-succeed; the streaming sinks commit each micro-batch into
-``<dest>/batch=<id>/`` and mark completion with a sibling ``_SUCCESS``
-file). A reader that recursively globs ``**/*.<ext>`` would otherwise
-see two classes of crash leftovers (ADVICE round 7):
-
-- shards under a ``_temporary/`` component, left behind when a write
-  fails after some tasks already renamed their per-task temps;
-- shards in an uncommitted ``batch=<id>/`` directory whose ``_SUCCESS``
-  marker was never written (the micro-batch died mid-write and will be
-  replayed after restart).
-
-Reading either silently includes partial or soon-to-be-duplicated data,
-breaking the sinks' exactly-once claim. ``committed_shards`` is the
-single discovery path that excludes both.
+- :func:`write_shards` (batch sink): each non-empty partition encodes one
+  shard into ``<dest>/_temporary/`` under an attempt-unique
+  ``.inprogress`` name; the driver commits the manifest by atomic rename
+  and drops the temp dir with whatever failed attempts left in it.
+- :func:`write_stream_shards` (streaming sink): each micro-batch commits
+  into ``<dest>/batch=<id>/`` and a ``_SUCCESS`` marker written last is
+  the commit point — the idempotent-sink half of Structured Streaming's
+  exactly-once design.
+- :func:`committed_shards` is the single discovery path. It excludes the
+  two kinds of crash leftover a recursive ``**/*.<ext>`` glob would see:
+  shards under ``_temporary/`` (a write failed after some tasks renamed
+  their temps) and shards in a ``batch=<id>/`` dir without ``_SUCCESS``
+  (the micro-batch died and will be replayed).
+- :func:`shard_files` / :func:`stream_files` load committed files /
+  drop-dir arrivals through ``binaryFile``, one row per whole file, and
+  :func:`decode_rows` runs a per-row ``decode(*cols) -> frame | None``
+  over them in one ``mapInPandas`` pass.
 """
 
 from __future__ import annotations
 
 import glob as _glob
 import os
+import shutil
 
 
 def committed_shards(path: str, ext: str) -> list[str]:
@@ -81,12 +85,129 @@ def committed_shards(path: str, ext: str) -> list[str]:
 def claim_stream_sink_root(path: str) -> None:
     """Mark ``path`` as a streaming-sink destination (idempotent).
 
-    Called by the streaming file sinks BEFORE any micro-batch content
-    is written, so even a first-batch crash leaves the claim in place
-    and ``committed_shards`` stays strict about per-batch markers —
+    Called by the streaming sink BEFORE any micro-batch content is
+    written, so even a first-batch crash leaves the claim in place and
+    ``committed_shards`` stays strict about per-batch markers —
     including destinations bootstrapped by a native batch write whose
     root ``_SUCCESS`` would otherwise look like a Hive layout.
     """
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, "_STREAM_SINK"), "a"):
         pass
+
+
+def write_shards(df, path: str, suffix: str, encode) -> int:
+    """Batch sink: each non-empty partition of ``df`` passes its rows (an
+    iterator of column → value dicts) to ``encode(records) -> bytes`` and
+    commits the result as shard ``part-{pid:05d}<suffix>`` of ``path``.
+    Returns the number of shards committed."""
+    import pandas as pd
+    from pyspark import TaskContext
+
+    tmp = os.path.join(path, "_temporary")
+    os.makedirs(tmp, exist_ok=True)
+
+    def write_task(batches):
+        n = 0
+
+        def records():
+            nonlocal n
+            for pdf in batches:
+                for rec in pdf.to_dict("records"):
+                    n += 1
+                    yield rec
+
+        blob = encode(records())
+        if not n:
+            return
+        ctx = TaskContext.get()
+        shard = os.path.join(tmp, f"part-{ctx.partitionId():05d}{suffix}")
+        # attempt-unique temp name: a retried/speculative attempt must not
+        # write the same .inprogress path as the original attempt (risk of
+        # interleaved bytes); the atomic rename to the pid-based name lets
+        # the last successful attempt win.
+        inprogress = f"{shard}.{ctx.taskAttemptId()}.inprogress"
+        with open(inprogress, "wb") as fh:
+            fh.write(blob)
+        os.rename(inprogress, shard)
+        yield pd.DataFrame({"shard": [shard]})
+
+    manifest = df.mapInPandas(write_task, schema="shard string").collect()
+    for row in manifest:
+        os.replace(row["shard"], os.path.join(path, os.path.basename(row["shard"])))
+    # finalize: orphaned .inprogress files and shards of failed or
+    # speculative attempts die with the temp dir
+    shutil.rmtree(tmp, ignore_errors=True)
+    return len(manifest)
+
+
+def write_stream_shards(stream_df, path: str, checkpoint: str, write):
+    """Streaming sink: ``write(batch_df, dest)`` commits each micro-batch
+    into ``<path>/batch=<id>/``, then the ``_SUCCESS`` marker. A replay
+    that finds the marker skips the batch; one that finds an unmarked dir
+    clears it first, or a replay producing fewer partitions would leave
+    the dead attempt's higher-numbered shards beside the new ones.
+    Returns a DataStreamWriter; the caller picks the trigger and starts it.
+    """
+
+    def write_batch(batch_df, batch_id: int) -> None:
+        claim_stream_sink_root(path)  # BEFORE content — crash-order-safe
+        dest = os.path.join(path, f"batch={batch_id}")
+        marker = os.path.join(dest, "_SUCCESS")
+        if os.path.exists(marker):
+            return  # replay after restart — already committed
+        if os.path.isdir(dest):
+            shutil.rmtree(dest)  # uncommitted attempt — clear and rewrite
+        os.makedirs(dest)
+        write(batch_df, dest)
+        with open(marker, "w"):
+            pass
+
+    return stream_df.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint
+    )
+
+
+def shard_files(spark, path: str, ext: str, *cols):
+    """The committed ``*.<ext>`` shards under ``path`` (dir or glob) as a
+    ``binaryFile`` relation projected to ``cols``, one row per file."""
+    paths = committed_shards(path, ext)
+    if not paths:
+        raise FileNotFoundError(f"no {ext} files at {path}")
+    return (
+        spark.read.format("binaryFile")
+        .load(paths if len(paths) > 1 else paths[0])
+        .select(*cols)
+    )
+
+
+def stream_files(spark, path: str, glob: str, max_files_per_trigger, *cols):
+    """Unbounded twin of :func:`shard_files`: files matching ``glob``
+    dropped into ``path`` become micro-batches, at most
+    ``max_files_per_trigger`` files each (``None``: no limit)."""
+    # binaryFile's schema is fixed but streaming sources still demand it
+    # be declared up front.
+    reader = (
+        spark.readStream.format("binaryFile")
+        .schema("path string, modificationTime timestamp, length long, content binary")
+        .option("pathGlobFilter", glob)
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.load(path).select(*cols)
+
+
+def decode_rows(df, decode, schema):
+    """Per-row decode runner: ``decode(*row)`` over every row of ``df``
+    (its columns in order) returns a pandas frame in ``schema`` or
+    ``None`` for a row that yields nothing."""
+    cols = df.columns
+
+    def run(batches):
+        for pdf in batches:
+            for row in zip(*(pdf[c] for c in cols)):
+                out = decode(*row)
+                if out is not None:
+                    yield out
+
+    return df.mapInPandas(run, schema=schema)

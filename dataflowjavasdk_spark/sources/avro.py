@@ -11,16 +11,18 @@ union-index prefixes, count-delimited array blocks).
 
 Spark integration is Spark-first:
 
-- **Read**: files are discovered and parallelized via the ``binaryFile``
-  datasource (one task per file — the reference's splitIntoBundles initial
-  split; block-level dynamic splitting is the same accepted gap as
-  splitAtFraction, SURVEY.md §4.1), decoded in Arrow-batched
-  ``mapInPandas``; the Spark schema is derived driver-side from the first
-  file's header only (no data read on the driver).
-- **Write**: each partition encodes and writes one shard to a temp
-  directory (``_temporary/``), then the driver commits by atomic rename —
-  exactly FileBasedSink's temp/rename finalize protocol (historical
-  sdk/io/FileBasedSink.java).
+- **Read**: the shard reader (sources/_shards.py) discovers the
+  committed files and loads them through the ``binaryFile`` datasource
+  (one task per file — the reference's splitIntoBundles initial split;
+  ``read_avro_split`` cuts block-level ranges instead, while dynamic
+  splitting is the same accepted gap as splitAtFraction, SURVEY.md
+  §4.1); its per-row runner decodes each container in Arrow-batched
+  ``mapInPandas``. The Spark schema is derived driver-side from the
+  first file's header only (no data read on the driver).
+- **Write**: the shard sink (sources/_shards.py) owns FileBasedSink's
+  temp/rename finalize (historical sdk/io/FileBasedSink.java); this
+  module supplies only the per-partition codec — row conversion plus
+  ``write_container`` — and the empty-input container commit.
 
 Type mapping (both directions):
   boolean↔boolean, int↔int, long↔long, float↔float, double↔double,
@@ -40,7 +42,7 @@ import os
 import struct
 import uuid
 import zlib
-from typing import Any, Iterator
+from typing import Any
 
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
@@ -222,24 +224,29 @@ def read_header(raw: bytes) -> tuple[dict, str, bytes, int]:
     return schema, codec, sync, buf.tell()
 
 
-def read_container(raw: bytes) -> tuple[dict, list[dict]]:
-    """Decode one OCF → (schema, records)."""
-    schema, codec, sync, offset = read_header(raw)
-    buf = io.BytesIO(raw)
-    buf.seek(offset)
-    records: list[dict] = []
-    while buf.tell() < len(raw):
-        n = _zigzag_decode(buf)
-        size = _zigzag_decode(buf)
-        block = buf.read(size)
+def _decode_blocks(fh, end: int, schema: Any, codec: str, sync: bytes) -> list:
+    """Decode every sync-delimited block that starts at or after ``fh``'s
+    position and before offset ``end``."""
+    records: list = []
+    while fh.tell() < end:
+        n = _zigzag_decode(fh)
+        block = fh.read(_zigzag_decode(fh))
         if codec == "deflate":
             block = zlib.decompress(block, wbits=-15)
         bbuf = io.BytesIO(block)
         for _ in range(n):
             records.append(_decode_value(schema, bbuf))
-        if buf.read(SYNC_SIZE) != sync:
-            raise ValueError("sync marker mismatch (corrupt block)")
-    return schema, records
+        if fh.read(SYNC_SIZE) != sync:
+            raise ValueError(f"sync marker mismatch at byte {fh.tell()} (corrupt block)")
+    return records
+
+
+def read_container(raw: bytes) -> tuple[dict, list[dict]]:
+    """Decode one OCF → (schema, records)."""
+    schema, codec, sync, offset = read_header(raw)
+    buf = io.BytesIO(raw)
+    buf.seek(offset)
+    return schema, _decode_blocks(buf, len(raw), schema, codec, sync)
 
 
 # --- Spark type mapping ----------------------------------------------------
@@ -458,143 +465,70 @@ def records_to_pdf(records, sschema):
     return pd.DataFrame(rows, columns=[f.name for f in sschema.fields])
 
 
-def read_avro(spark, path: str):
-    """AvroIO.Read: distributed decode of .avro container files under
-    `path` (dir or glob). One task per file via binaryFile; the schema
-    comes from the first file's header (driver reads the header bytes
-    only)."""
-    from pyspark.sql import functions as F
-
-    from ._shards import committed_shards
-
-    paths = committed_shards(path, "avro")
-    if not paths:
-        raise FileNotFoundError(f"no avro files at {path}")
-    with open(paths[0], "rb") as fh:
+def spark_schema_at(path: str):
+    """Spark schema of the Avro container file at ``path``, from its
+    header only (the driver reads no data blocks)."""
+    with open(path, "rb") as fh:
         head = fh.read(1 << 20)
     avro_schema, _, _, _ = read_header(head)
-    sschema = spark_schema_of(avro_schema)
+    return spark_schema_of(avro_schema)
 
-    files = (
-        spark.read.format("binaryFile")
-        .load(paths if len(paths) > 1 else paths[0])
-        .select("content")
+
+def read_avro(spark, path: str):
+    """AvroIO.Read: distributed decode of .avro container files under
+    `path` (dir or glob). One task per file via the shard reader; the
+    schema comes from the first file's header (driver reads the header
+    bytes only)."""
+    from ._shards import committed_shards, decode_rows, shard_files
+
+    files = shard_files(spark, path, "avro", "content")  # raises if none
+    sschema = spark_schema_at(committed_shards(path, "avro")[0])
+    return decode_rows(
+        files,
+        lambda raw: records_to_pdf(read_container(bytes(raw))[1], sschema),
+        sschema,
     )
-
-    def decode(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            for raw in pdf["content"]:
-                _, records = read_container(bytes(raw))
-                out = records_to_pdf(records, sschema)
-                if out is not None:
-                    yield out
-
-    return files.mapInPandas(decode, schema=sschema)
 
 
 def write_avro(df, path: str, codec: str = "null") -> int:
-    """AvroIO.Write with FileBasedSink's temp/rename commit: every
-    partition encodes one ``part-{pid:05d}.avro`` shard into
-    ``<path>/_temporary/``, the driver finalizes by atomic rename.
-    Returns the number of shards written. Empty partitions write no shard
-    (matching the reference's sharding behavior)."""
-    import pandas as pd
-    from pyspark import TaskContext
+    """AvroIO.Write through the shard sink (FileBasedSink's temp/rename
+    commit): every non-empty partition encodes one ``part-{pid:05d}.avro``
+    container. Returns the number of shards written (at least 1)."""
+    from ._shards import write_shards
 
     sschema = df.schema
     avro_schema = avro_schema_of(sschema)
-    tmp = os.path.join(path, "_temporary")
-    os.makedirs(tmp, exist_ok=True)
 
-    def encode(batches: Iterator) -> Iterator:
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                rows.append(
-                    {
-                        f.name: _to_py(rec[f.name], f.dataType)
-                        for f in sschema.fields
-                    }
-                )
-        if not rows:
-            return
-        blob = write_container(rows, avro_schema, codec=codec)
-        shard = os.path.join(tmp, f"part-{pid:05d}.avro")
-        with open(shard + ".inprogress", "wb") as fh:
-            fh.write(blob)
-        os.rename(shard + ".inprogress", shard)
-        yield pd.DataFrame({"shard": [shard], "n": [len(rows)]})
+    def encode(records) -> bytes:
+        rows = [
+            {f.name: _to_py(rec[f.name], f.dataType) for f in sschema.fields}
+            for rec in records
+        ]
+        return write_container(rows, avro_schema, codec=codec)
 
-    manifest = df.mapInPandas(encode, schema="shard string, n long").collect()
-    for row in manifest:
-        final = os.path.join(path, os.path.basename(row["shard"]))
-        os.replace(row["shard"], final)
-    if not manifest:
+    n = write_shards(df, path, ".avro", encode)
+    if not n:
         # Empty input still commits a schema-bearing empty container, so
         # the output is always readable (the reference's Write produces at
         # least one shard for the same reason).
         with open(os.path.join(path, "part-00000.avro"), "wb") as fh:
             fh.write(write_container([], avro_schema, codec=codec))
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)  # abandoned speculative shards
-    return max(len(manifest), 1)
+    return max(n, 1)
 
 
 def write_stream_avro(stream_df, path: str, checkpoint: str, codec: str = "null"):
     """AvroIO.Write for unbounded input (historical sdk/io/AvroIO.java
     write + FileBasedSink's streaming finalize): each micro-batch commits
-    its shards under ``<path>/batch=<id>/`` guarded by a _SUCCESS marker —
-    a replayed batch after restart sees the marker and skips, so the sink
-    is exactly-once at file granularity (marker write is the atomic
-    commit point, the same idempotent-foreachBatch pattern as the
-    engine's per-window destination tables).
+    its shards under ``<path>/batch=<id>/`` guarded by a _SUCCESS marker,
+    through the shared streaming sink (sources/_shards.py).
 
     Returns a DataStreamWriter; caller picks the trigger/start.
     """
+    from ._shards import write_stream_shards
 
-    def write_batch(batch_df, batch_id: int) -> None:
-        from ._shards import claim_stream_sink_root
-
-        claim_stream_sink_root(path)  # BEFORE content — crash-order-safe
-        dest = os.path.join(path, f"batch={batch_id}")
-        marker = os.path.join(dest, "_SUCCESS")
-        if os.path.exists(marker):
-            return  # replay after restart — already committed
-        if os.path.isdir(dest):
-            # Uncommitted attempt died between shard rename and marker
-            # write: clear it, or a replay producing fewer partitions
-            # leaves the earlier attempt's higher-numbered part files
-            # alongside the new ones — duplicate rows in a "committed" dir.
-            import shutil
-
-            shutil.rmtree(dest)
-        os.makedirs(dest, exist_ok=True)
-        write_avro(batch_df, dest, codec=codec)
-        with open(marker, "w"):
-            pass
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+    return write_stream_shards(
+        stream_df, path, checkpoint, lambda df, dest: write_avro(df, dest, codec=codec)
     )
-
-
-def _read_varint_from(fh) -> int:
-    """Zig-zag varint read directly from a file handle."""
-    shift = 0
-    acc = 0
-    while True:
-        byte = fh.read(1)
-        if not byte:
-            raise EOFError("truncated varint")
-        b = byte[0]
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1)
 
 
 def decode_range(
@@ -606,7 +540,6 @@ def decode_range(
     boundary lies in [lo, hi); the first boundary at/after `lo` is found
     by scanning for the 16-byte sync marker (a block may extend past `hi`
     and is still fully read by its owner)."""
-    records: list[dict] = []
     with open(path, "rb") as fh:
         if lo <= data_offset:
             boundary = data_offset
@@ -617,27 +550,12 @@ def decode_range(
             window = fh.read((hi - lo) + 2 * SYNC_SIZE)
             idx = window.find(sync)
             if idx == -1:
-                return records  # no block starts in this split
+                return []  # no block starts in this split
             boundary = max(lo - SYNC_SIZE, 0) + idx + SYNC_SIZE
             if boundary < lo or boundary >= hi:
-                return records
+                return []
         fh.seek(boundary)
-        while boundary < hi:
-            try:
-                n = _read_varint_from(fh)
-            except EOFError:
-                break  # end of file
-            size = _read_varint_from(fh)
-            block = fh.read(size)
-            if codec == "deflate":
-                block = zlib.decompress(block, wbits=-15)
-            bbuf = io.BytesIO(block)
-            for _ in range(n):
-                records.append(_decode_value(schema, bbuf))
-            if fh.read(SYNC_SIZE) != sync:
-                raise ValueError(f"sync marker mismatch at {fh.tell()} in {path}")
-            boundary = fh.tell()
-    return records
+        return _decode_blocks(fh, hi, schema, codec, sync)
 
 
 def read_avro_split(spark, path: str, split_bytes: int = 128 << 20):
@@ -649,7 +567,7 @@ def read_avro_split(spark, path: str, split_bytes: int = 128 << 20):
     across the cluster instead of becoming one straggler task. Dynamic
     re-splitting (splitAtFraction) remains the documented gap; AQE
     balances at stage boundaries."""
-    from ._shards import committed_shards
+    from ._shards import committed_shards, decode_rows
 
     paths = committed_shards(path, "avro")
     if not paths:
@@ -679,16 +597,11 @@ def read_avro_split(spark, path: str, split_bytes: int = 128 << 20):
         "sync binary, data_offset long",
     ).repartition(max(len(ranges), 1))
 
-    def decode(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                recs = decode_range(
-                    row.path, int(row.lo), int(row.hi),
-                    json.loads(row.schema), row.codec, bytes(row.sync),
-                    int(row.data_offset),
-                )
-                out = records_to_pdf(recs, sschema)
-                if out is not None:
-                    yield out
+    def decode(p, lo, hi, schema, codec, sync, data_offset):
+        recs = decode_range(
+            p, int(lo), int(hi), json.loads(schema), codec, bytes(sync),
+            int(data_offset),
+        )
+        return records_to_pdf(recs, sschema)
 
-    return range_df.mapInPandas(decode, schema=sschema)
+    return decode_rows(range_df, decode, sschema)

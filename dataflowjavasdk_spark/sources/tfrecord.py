@@ -18,13 +18,16 @@ Everything here is implemented from the public specs:
   emits map entries in sorted-key order so shard bytes are
   deterministic; the decoder accepts any field order and both packed
   and unpacked repeated scalars.
-- `write_tfrecord(df, path)`: distributed sharded writer with the
-  FileBasedSink temp/rename commit (one ``part-NNNNN.tfrecord`` per
-  non-empty partition; `_temporary/` removed after the driver commit).
-- `read_tfrecord(spark, path)`: `binaryFile` datasource for file-level
-  parallelism, then one Arrow-batched mapInPandas pass walking the
-  framing (both CRCs verified per record — a flipped bit raises
-  ValueError, never a silent wrong row).
+- `write_tfrecord(df, path)`: the per-partition codec (column coercion,
+  `encode_example`, `frame_record`) handed to the shard sink in
+  sources/_shards.py, which owns the FileBasedSink temp/rename commit
+  (one ``part-NNNNN.tfrecord`` per non-empty partition).
+  `write_stream_tfrecord` is the same codec behind the shared
+  ``batch=<id>/_SUCCESS`` streaming sink.
+- `read_tfrecord(spark, path)`: the shard reader discovers committed
+  shards (`binaryFile`, file-level parallelism); its per-row runner
+  walks each file's framing with `decode_shard` (both CRCs verified per
+  record — a flipped bit raises ValueError, never a silent wrong row).
 - `parse_examples(df, feature_spec)`: the `tf.io.parse_example` analog —
   decodes the Example payload column into typed Spark columns.
 
@@ -35,17 +38,11 @@ deterministically). Writes are embarrassingly parallel, one shard per
 partition, payload bytes never shuffle. CRC-32C runs slice-by-8
 table-driven (8 bytes per Python-loop iteration) inside the Arrow batch
 pass.
-
-Reference lineage: the historical SDK's TextIO/AvroIO sharded-sink
-contract [H: sdk/io/FileBasedSink.java] — temp dir, per-bundle shard,
-driver finalize — applied to the record format trainers actually read.
 """
 
 from __future__ import annotations
 
-import glob as _glob
 import os
-import shutil
 import struct
 from collections.abc import Iterator
 
@@ -349,18 +346,19 @@ def decode_example(blob: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 
+TFRECORD_SCHEMA = "shard string, record_index long, example binary"
+
+
 def write_tfrecord(df, path: str) -> int:
     """Write ``df`` as TFRecord shards of tf.train.Example records, one
-    ``part-{pid:05d}.tfrecord`` per non-empty partition, FileBasedSink
-    temp/rename commit. Column-type mapping: string → BytesList (utf-8),
-    binary → BytesList, integral → Int64List, float/double → FloatList,
-    array<of those> → the multi-valued list. Returns shard count."""
-    import pandas as pd
-    from pyspark import TaskContext
+    ``part-{pid:05d}.tfrecord`` per non-empty partition, through the
+    shard sink's temp/rename commit. Column-type mapping: string →
+    BytesList (utf-8), binary → BytesList, integral → Int64List,
+    float/double → FloatList, array<of those> → the multi-valued list.
+    Returns shard count."""
+    from ._shards import write_shards
 
     cols = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-    tmp = os.path.join(path, "_temporary")
-    os.makedirs(tmp, exist_ok=True)
 
     def _coerce(v, dtype: str):
         # Arrow→pandas surfaces nullable-int/float nulls as NaN floats
@@ -382,113 +380,55 @@ def write_tfrecord(df, path: str) -> int:
             return [bytes(x) for x in vals]
         raise ValueError(f"unsupported TFRecord column type: {dtype}")
 
-    def encode(batches: Iterator) -> Iterator:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        buf = bytearray()
-        n = 0
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                ex = encode_example(
-                    {name: _coerce(rec[name], dt) for name, dt in cols}
-                )
-                buf += frame_record(ex)
-                n += 1
-        if not n:
-            return
-        shard = os.path.join(tmp, f"part-{pid:05d}.tfrecord")
-        # attempt-unique temp name: a retried/speculative attempt must not
-        # write the same .inprogress path as the original attempt (risk of
-        # interleaved bytes); the atomic rename to the pid-based name lets
-        # the last successful attempt win.
-        inprogress = f"{shard}.{ctx.taskAttemptId()}.inprogress"
-        with open(inprogress, "wb") as fh:
-            fh.write(bytes(buf))
-        os.rename(inprogress, shard)
-        yield pd.DataFrame({"shard": [shard], "n": [n]})
+    def encode(records) -> bytes:
+        return b"".join(
+            frame_record(encode_example({n: _coerce(rec[n], dt) for n, dt in cols}))
+            for rec in records
+        )
 
-    manifest = df.mapInPandas(encode, schema="shard string, n long").collect()
-    for row in manifest:
-        final = os.path.join(path, os.path.basename(row["shard"]))
-        os.replace(row["shard"], final)
-    # finalize like a FileBasedSink: orphaned .inprogress files from
-    # failed/retried tasks die with the temp dir (the warc.py advice fix,
-    # applied here from the start)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return len(manifest)
+    return write_shards(df, path, ".tfrecord", encode)
 
 
 def write_stream_tfrecord(stream_df, path: str, checkpoint: str):
-    """TFRecordIO.Write for unbounded input (round 7 — streaming twin of
+    """TFRecordIO.Write for unbounded input — streaming twin of
     `write_tfrecord`, completing the trainer-egress loop whose read side
-    is streaming/core.read_stream_tfrecord): each micro-batch commits its
-    shards under ``<path>/batch=<id>/`` guarded by a _SUCCESS marker.
-    A replayed batch after restart sees the marker and skips — exactly-
-    once at file granularity, the marker write being the atomic commit
-    point (the same idempotent-foreachBatch pattern as the Avro/WARC
-    streaming sinks, historical sdk/io/TFRecordIO-style Write +
-    FileBasedSink streaming finalize). An uncommitted attempt's directory
-    (died between shard rename and marker) is cleared before the replay
-    rewrites it, so a replay producing fewer partitions can't leave the
-    earlier attempt's higher-numbered shards behind.
+    is streaming/core.read_stream_tfrecord: each micro-batch commits its
+    shards under ``<path>/batch=<id>/`` guarded by a _SUCCESS marker,
+    through the shared streaming sink (sources/_shards.py).
 
     Returns a DataStreamWriter; caller picks the trigger/start.
     """
+    from ._shards import write_stream_shards
 
-    def write_batch(batch_df, batch_id: int) -> None:
-        from ._shards import claim_stream_sink_root
+    return write_stream_shards(stream_df, path, checkpoint, write_tfrecord)
 
-        claim_stream_sink_root(path)  # BEFORE content — crash-order-safe
-        dest = os.path.join(path, f"batch={batch_id}")
-        marker = os.path.join(dest, "_SUCCESS")
-        if os.path.exists(marker):
-            return  # replay after restart — already committed
-        if os.path.isdir(dest):
-            shutil.rmtree(dest)  # uncommitted attempt — clear and rewrite
-        os.makedirs(dest, exist_ok=True)
-        write_tfrecord(batch_df, dest)
-        with open(marker, "w"):
-            pass
 
-    return stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
+def decode_shard(path: str, raw: bytes):
+    """One TFRecord file → its records as a frame in ``TFRECORD_SCHEMA``
+    (``None`` for an empty file); the shard reader's per-row decode."""
+    import pandas as pd
+
+    recs = list(iter_records(bytes(raw)))
+    if not recs:
+        return None
+    return pd.DataFrame(
+        {
+            "shard": [os.path.basename(path)] * len(recs),
+            "record_index": range(len(recs)),
+            "example": recs,
+        }
     )
 
 
 def read_tfrecord(spark, path: str):
-    """Distributed TFRecord read: one task per shard via binaryFile, one
-    Arrow-batched pass walking the framing (CRC-verified). Returns
-    ``(shard string, record_index long, example binary)`` — feed to
-    `parse_examples` for typed columns."""
-    from ._shards import committed_shards
+    """Distributed TFRecord read: one task per shard via the shard
+    reader, one Arrow-batched pass walking the framing (CRC-verified).
+    Returns ``(shard string, record_index long, example binary)`` — feed
+    to `parse_examples` for typed columns."""
+    from ._shards import decode_rows, shard_files
 
-    paths = committed_shards(path, "tfrecord")
-    if not paths:
-        raise FileNotFoundError(f"no tfrecord files at {path}")
-    files = (
-        spark.read.format("binaryFile")
-        .load(paths if len(paths) > 1 else paths[0])
-        .select("path", "content")
-    )
-
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            for p, raw in zip(pdf["path"], pdf["content"]):
-                recs = list(iter_records(bytes(raw)))
-                if recs:
-                    yield pd.DataFrame(
-                        {
-                            "shard": [os.path.basename(p)] * len(recs),
-                            "record_index": range(len(recs)),
-                            "example": recs,
-                        }
-                    )
-
-    return files.mapInPandas(
-        decode, schema="shard string, record_index long, example binary"
-    )
+    files = shard_files(spark, path, "tfrecord", "path", "content")
+    return decode_rows(files, decode_shard, TFRECORD_SCHEMA)
 
 
 def parse_examples(df, feature_spec: dict, example_col: str = "example"):

@@ -5,16 +5,19 @@ style): a WARC file is a sequence of records — `request`, `response`,
 `metadata` — each with WARC headers, an HTTP block, and a payload. This
 module implements, from the public spec:
 
-- `write_warc(df, path)`: distributed sharded writer with the
-  FileBasedSink temp/rename commit (one `part-NNNNN.warc.gz` per
-  non-empty partition). Records are written as PER-RECORD GZIP MEMBERS —
-  the layout real crawls use, because member boundaries give random
-  access into a petabyte archive without a splittable codec.
-- `read_warc(spark, path)`: Spark-native reader — `binaryFile`
-  datasource for file-level parallelism, then one Arrow-batched
-  mapInPandas pass parsing records (multi-member gzip handled
-  transparently), keeping only `WARC-Type: response` records and
-  splitting the HTTP block into status / content-type / body.
+- `write_warc(df, path)`: the per-partition codec handed to the shard
+  sink in sources/_shards.py, which owns the FileBasedSink temp/rename
+  commit (one `part-NNNNN-<write id>.warc.gz` per non-empty partition).
+  Records are written as PER-RECORD GZIP MEMBERS — the layout real
+  crawls use, because member boundaries give random access into a
+  petabyte archive without a splittable codec.
+- `read_warc(spark, path)`: the shard reader — committed-shard
+  discovery (crash leftovers excluded, committed streaming ``batch=``
+  dirs included) and a `binaryFile` scan for file-level parallelism —
+  then `decode_shard` per file in one Arrow-batched mapInPandas pass
+  (multi-member gzip handled transparently), keeping only
+  `WARC-Type: response` records and splitting the HTTP block into
+  status / content-type / body.
 - `extract_html_text(html)`: REAL HTML text extraction via the stdlib
   `html.parser` state machine — script/style subtrees dropped, character
   references resolved, tag boundaries become spaces, whitespace
@@ -32,9 +35,7 @@ from __future__ import annotations
 
 import gzip
 import io
-import os
 import re
-import shutil
 from collections.abc import Iterator
 from html.parser import HTMLParser
 
@@ -42,6 +43,7 @@ WARC_SCHEMA = (
     "url string, warc_date string, status int, content_type string, "
     "html string"
 )
+_WARC_COLS = ["url", "warc_date", "status", "content_type", "html"]
 
 
 def build_warc_record(
@@ -135,92 +137,57 @@ def parse_warc(blob: bytes) -> list[dict]:
 
 
 def write_warc(df, path: str, with_requests: bool = True) -> int:
-    """Distributed WARC sink (FileBasedSink temp/rename commit): each
-    non-empty partition writes one `part-NNNNN.warc.gz` shard whose
-    records are independent gzip members (the random-access layout).
-    Input columns: url, warc_date, status, content_type, html. Returns
-    the number of shards. `with_requests` interleaves a request record
-    before each response, as real crawls do (the reader filters)."""
+    """Distributed WARC sink through the shard sink's temp/rename
+    commit: each non-empty partition writes one
+    `part-NNNNN-<write id>.warc.gz` shard whose records are independent
+    gzip members (the random-access layout). Input columns: url,
+    warc_date, status, content_type, html. Returns the number of shards.
+    `with_requests` interleaves a request record before each response,
+    as real crawls do (the reader filters)."""
     import uuid
 
-    import pandas as pd
-    from pyspark import TaskContext
+    from ._shards import write_shards
 
-    tmp = os.path.join(path, "_temporary")
-    os.makedirs(tmp, exist_ok=True)
     # Unique write id per sink invocation (the FileBasedSink convention):
     # appending a second crawl segment to the same directory must create
     # NEW files, never overwrite part-00000 of an earlier write — file
     # sources track seen paths, so an overwrite would be silently skipped.
     write_id = uuid.uuid4().hex[:8]
 
-    def encode(batches: Iterator) -> Iterator:
-        pid = TaskContext.get().partitionId()
-        buf = io.BytesIO()
-        count = 0
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                if with_requests:
-                    buf.write(
-                        gzip.compress(
-                            build_warc_record(
-                                rec["url"], "", rec["warc_date"],
-                                warc_type="request",
-                            )
-                        )
-                    )
-                buf.write(
-                    gzip.compress(
-                        build_warc_record(
-                            rec["url"],
-                            rec["html"],
-                            rec["warc_date"],
-                            status=int(rec["status"]),
-                            content_type=rec["content_type"],
-                        )
-                    )
-                )
-                count += 1
-        if not count:
-            return
-        shard = os.path.join(tmp, f"part-{pid:05d}-{write_id}.warc.gz")
-        with open(shard + ".inprogress", "wb") as fh:
-            fh.write(buf.getvalue())
-        os.rename(shard + ".inprogress", shard)
-        yield pd.DataFrame({"shard": [shard], "n": [count]})
-
-    manifest = df.mapInPandas(encode, schema="shard string, n long").collect()
-    for row in manifest:
-        os.replace(
-            row["shard"], os.path.join(path, os.path.basename(row["shard"]))
+    def members(rec):
+        if with_requests:
+            yield build_warc_record(
+                rec["url"], "", rec["warc_date"], warc_type="request"
+            )
+        yield build_warc_record(
+            rec["url"], rec["html"], rec["warc_date"],
+            status=int(rec["status"]), content_type=rec["content_type"],
         )
-    # FileBasedSink finalize: drop the staging dir so failed/retried task
-    # attempts can't accumulate orphaned .inprogress files across appends
-    # (read_warc globs only top-level *.warc.gz, so this is hygiene, not
-    # correctness).
-    shutil.rmtree(tmp, ignore_errors=True)
-    return len(manifest)
+
+    def encode(records) -> bytes:
+        return b"".join(gzip.compress(m) for rec in records for m in members(rec))
+
+    return write_shards(df, path, f"-{write_id}.warc.gz", encode)
+
+
+def decode_shard(raw: bytes):
+    """One WARC file → its response records as a frame in
+    ``WARC_SCHEMA`` (``None`` when it has none); the shard reader's
+    per-row decode."""
+    import pandas as pd
+
+    rows = parse_warc(bytes(raw))
+    return pd.DataFrame(rows, columns=_WARC_COLS) if rows else None
 
 
 def read_warc(spark, path: str):
-    """Spark-native WARC reader: binaryFile scan (one task per file — a
-    crawl's parallelism unit) + one mapInPandas parse pass emitting
-    response records only."""
-    import pandas as pd
+    """Spark-native WARC reader: the shard reader's committed-file scan
+    (one task per file — a crawl's parallelism unit) + one mapInPandas
+    parse pass emitting response records only."""
+    from ._shards import decode_rows, shard_files
 
-    files = spark.read.format("binaryFile").load(
-        os.path.join(path, "*.warc.gz")
-    ).select("content")
-
-    def parse(batches: Iterator) -> Iterator:
-        cols = ["url", "warc_date", "status", "content_type", "html"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for blob in pdf["content"]:
-                rows.extend(parse_warc(bytes(blob)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(parse, schema=WARC_SCHEMA)
+    files = shard_files(spark, path, "warc.gz", "content")
+    return decode_rows(files, decode_shard, WARC_SCHEMA)
 
 
 class _TextExtractor(HTMLParser):

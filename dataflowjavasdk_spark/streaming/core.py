@@ -87,63 +87,30 @@ def read_stream_avro(
 ) -> DataFrame:
     """Unbounded AvroIO source — the streaming twin of sources/avro.py
     read_avro (historical sdk/io/AvroIO.Read on an unbounded file
-    pattern). Files dropped into `path` become micro-batches via the
-    binaryFile streaming source (one whole container file per row — the
-    splitIntoBundles unit); the pure-Python OCF codec decodes each file
-    inside mapInPandas, so the plan is source → Arrow-batched decode,
-    exactly the batch read's shape.
+    pattern): files dropped into `path` become micro-batches of whole
+    container files (the splitIntoBundles unit), decoded by the same
+    per-file codec in one Arrow-batched pass — the batch read's plan.
 
     `spark_schema` (a StructType) is required when the drop-dir may start
     empty (streaming sources need a schema before data arrives); if
-    omitted, it is inferred from the header of one existing .avro file.
-    State/watermark semantics downstream are source-agnostic — this
-    closes the Avro leg of the PubsubIO-from-files pattern (VERDICT r3
-    "What's missing" #4)."""
-    from dataflowjavasdk_spark.sources.avro import (
-        read_container,
-        read_header,
-        records_to_pdf,
-        spark_schema_of,
-    )
+    omitted, it comes from the header of the first committed .avro shard
+    (never a ``_temporary/`` or uncommitted one). Downstream state and
+    watermark semantics are source-agnostic."""
+    from dataflowjavasdk_spark.sources import _shards, avro
 
     if spark_schema is None:
-        import glob as _glob
-
-        candidates = sorted(
-            _glob.glob(os.path.join(path, "**", "*.avro"), recursive=True)
-        )
-        if not candidates:
+        shards = _shards.committed_shards(path, "avro")
+        if not shards:
             raise FileNotFoundError(
                 f"no .avro files under {path} to infer a schema from; pass "
                 "spark_schema= for an initially-empty drop-dir"
             )
-        with open(candidates[0], "rb") as fh:
-            head = fh.read(1 << 20)
-        avro_schema, _, _, _ = read_header(head)
-        spark_schema = spark_schema_of(avro_schema)
-
-    # binaryFile's schema is fixed but streaming sources still demand it
-    # be declared up front.
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long, content binary"
-        )
-        .option("pathGlobFilter", "*.avro")
+        spark_schema = avro.spark_schema_at(shards[0])
+    return _shards.decode_rows(
+        _shards.stream_files(spark, path, "*.avro", max_files_per_trigger, "content"),
+        lambda raw: avro.records_to_pdf(avro.read_container(bytes(raw))[1], spark_schema),
+        spark_schema,
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path).select("content")
-
-    def decode(batches):
-        for pdf in batches:
-            for raw in pdf["content"]:
-                _, records = read_container(bytes(raw))
-                out = records_to_pdf(records, spark_schema)
-                if out is not None:
-                    yield out
-
-    return files.mapInPandas(decode, schema=spark_schema)
 
 
 def read_stream_media(
@@ -154,115 +121,54 @@ def read_stream_media(
 ) -> DataFrame:
     """Unbounded media drop-dir — the streaming ingest leg of the
     multimodal curation flagship: each file landed in `path` is ONE
-    opaque payload row (binaryFile source; media_id recovered from the
-    filename's digits, the PubsubIO idLabel analog). Downstream is the
-    exact batch topology: sniff_media_meta (pure JVM header sniff) →
+    opaque payload row (media_id recovered from the filename's digits,
+    the PubsubIO idLabel analog). Downstream is the exact batch
+    topology: sniff_media_meta (pure JVM header sniff) →
     curate_media_features (route → decode → gate) → update-mode
     aggregation; blobs never shuffle — a micro-batch decodes its own
     files at scan parallelism and only feature rows leave Python."""
-    from pyspark.sql import functions as F
+    from dataflowjavasdk_spark.sources._shards import stream_files
 
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long, content binary"
-        )
-        .option("pathGlobFilter", glob)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path).select(
-        F.regexp_extract(
-            F.element_at(F.split(F.col("path"), "/"), -1), r"(\d+)", 1
-        )
-        .cast("long")
-        .alias("media_id"),
-        F.col("content").alias("payload"),
+    media_id = F.regexp_extract(
+        F.element_at(F.split(F.col("path"), "/"), -1), r"(\d+)", 1
+    ).cast("long")
+    return stream_files(
+        spark, path, glob, max_files_per_trigger,
+        media_id.alias("media_id"), F.col("content").alias("payload"),
     )
 
 
 def read_stream_warc(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = 1
 ) -> DataFrame:
-    """Unbounded WARC source — streaming twin of sources/warc.read_warc
-    (round 5): crawl segments dropped into `path` become micro-batches
-    via the binaryFile streaming source (one whole .warc.gz per row — a
-    crawl's parallelism unit), parsed to response records by the same
-    record-framing code as the batch reader. This is the live-crawl
-    ingestion shape: segments land, each micro-batch parses its files
-    once and the pipeline persists columnar; everything downstream
-    (watermarks on fetch time, dedup, windowed aggregation) is
-    source-agnostic."""
-    from dataflowjavasdk_spark.sources.warc import WARC_SCHEMA, parse_warc
+    """Unbounded WARC source — streaming twin of sources/warc.read_warc:
+    crawl segments dropped into `path` become micro-batches (one whole
+    .warc.gz per row — a crawl's parallelism unit), parsed to response
+    records by the batch reader's `decode_shard`. The live-crawl
+    ingestion shape; everything downstream is source-agnostic."""
+    from dataflowjavasdk_spark.sources import _shards, warc
 
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc.gz")
+    files = _shards.stream_files(
+        spark, path, "*.warc.gz", max_files_per_trigger, "content"
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path).select("content")
-
-    def decode(batches):
-        import pandas as pd
-
-        cols = ["url", "warc_date", "status", "content_type", "html"]
-        for pdf in batches:
-            for raw in pdf["content"]:
-                rows = parse_warc(bytes(raw))
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(decode, schema=WARC_SCHEMA)
+    return _shards.decode_rows(files, warc.decode_shard, warc.WARC_SCHEMA)
 
 
 def read_stream_tfrecord(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = 1
 ) -> DataFrame:
     """Unbounded TFRecord source — streaming twin of
-    sources/tfrecord.read_tfrecord (round 6): training shards dropped
-    into `path` become micro-batches via the binaryFile streaming source
-    (one whole .tfrecord per row — the shard is the parallelism unit
-    data loaders use too), walked by the same CRC-verified framing code
-    as the batch reader. The continuous-training ingestion shape: a
-    curation job publishes shards, the trainer-side validator streams
-    them as they land."""
-    from dataflowjavasdk_spark.sources.tfrecord import iter_records
+    sources/tfrecord.read_tfrecord: training shards dropped into `path`
+    become micro-batches (one whole .tfrecord per row — the unit data
+    loaders shard by too), walked by the batch reader's CRC-verified
+    `decode_shard`. The continuous-training ingestion shape: a curation
+    job publishes shards, a trainer-side validator streams them."""
+    from dataflowjavasdk_spark.sources import _shards, tfrecord
 
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, length long, content binary"
-        )
-        .option("pathGlobFilter", "*.tfrecord")
+    files = _shards.stream_files(
+        spark, path, "*.tfrecord", max_files_per_trigger, "path", "content"
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path).select("path", "content")
-
-    def decode(batches):
-        import os as _os
-
-        import pandas as pd
-
-        for pdf in batches:
-            for p, raw in zip(pdf["path"], pdf["content"]):
-                recs = list(iter_records(bytes(raw)))
-                if recs:
-                    yield pd.DataFrame(
-                        {
-                            "shard": [_os.path.basename(p)] * len(recs),
-                            "record_index": range(len(recs)),
-                            "example": recs,
-                        }
-                    )
-
-    return files.mapInPandas(
-        decode, schema="shard string, record_index long, example binary"
-    )
+    return _shards.decode_rows(files, tfrecord.decode_shard, tfrecord.TFRECORD_SCHEMA)
 
 
 def streaming_curation_capstone(

@@ -292,20 +292,41 @@ def test_streaming_avro_sink_exactly_once(spark, tmp_path_factory):
     assert sorted(r["x"] for r in read_avro(spark, out_dir).collect()) == list(range(50))
 
 
+def _tfrecord_sink_ops():
+    from dataflowjavasdk_spark.sources import tfrecord as TF
+
+    def read_x(spark, path):
+        return [r["x"] for r in TF.parse_examples(
+            TF.read_tfrecord(spark, path), {"x": "bigint"}
+        ).collect()]
+
+    return TF.write_tfrecord, TF.write_stream_tfrecord, read_x
+
+
+def _avro_sink_ops():
+    def read_x(spark, path):
+        return [r["x"] for r in A.read_avro(spark, path).collect()]
+
+    return A.write_avro, A.write_stream_avro, read_x
+
+
+@pytest.mark.parametrize("sink_ops", [_avro_sink_ops, _tfrecord_sink_ops],
+                         ids=["avro", "tfrecord"])
 def test_streaming_avro_sink_replay_replaces_uncommitted_attempt(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, sink_ops
 ):
-    """Crash-window recovery: if a process dies AFTER write_avro renamed
-    shards into batch=<id>/ but BEFORE the _SUCCESS marker, the replay
-    must fully replace the orphaned attempt — a replay producing fewer
-    partitions must not leave the earlier attempt's higher-numbered part
-    files contributing duplicate rows to a "committed" dir."""
+    """Crash-window recovery: if a process dies AFTER the batch writer
+    renamed shards into batch=<id>/ but BEFORE the _SUCCESS marker, the
+    replay must fully replace the orphaned attempt — a replay producing
+    fewer partitions must not leave the earlier attempt's higher-numbered
+    part files contributing duplicate rows to a "committed" dir. Both
+    streaming sinks share the one batch=<id>/_SUCCESS body."""
     import shutil
 
-    from dataflowjavasdk_spark.sources.avro import read_avro, write_stream_avro
     from dataflowjavasdk_spark.streaming.core import read_stream_dropdir
 
-    root = str(tmp_path_factory.mktemp("avro_crash"))
+    write, write_stream, read_x = sink_ops()
+    root = str(tmp_path_factory.mktemp("sink_crash"))
     in_dir, out_dir, ckpt = (os.path.join(root, d) for d in ("in", "out", "ckpt"))
     os.makedirs(in_dir)
     src = spark.range(50).withColumnRenamed("id", "x")
@@ -320,15 +341,13 @@ def test_streaming_avro_sink_replay_replaces_uncommitted_attempt(
     # marker absent.
     dest = os.path.join(out_dir, "batch=0")
     os.makedirs(dest)
-    from dataflowjavasdk_spark.sources.avro import write_avro
-
-    write_avro(spark.range(7).withColumnRenamed("id", "x").repartition(3), dest)
+    write(spark.range(7).withColumnRenamed("id", "x").repartition(3), dest)
     assert not os.path.exists(os.path.join(dest, "_SUCCESS"))
     stale = sorted(os.listdir(dest))
     assert len(stale) >= 3
 
     q = (
-        write_stream_avro(read_stream_dropdir(spark, in_dir, "x long"), out_dir, ckpt)
+        write_stream(read_stream_dropdir(spark, in_dir, "x long"), out_dir, ckpt)
         .trigger(availableNow=True)
         .start()
     )
@@ -336,7 +355,7 @@ def test_streaming_avro_sink_replay_replaces_uncommitted_attempt(
 
     # the orphaned shards are gone; exactly the replayed rows survive
     assert os.path.exists(os.path.join(dest, "_SUCCESS"))
-    assert sorted(r["x"] for r in read_avro(spark, out_dir).collect()) == list(range(50))
+    assert sorted(read_x(spark, out_dir)) == list(range(50))
 
 
 def test_block_level_split_read_exact(spark, tmp_path_factory):

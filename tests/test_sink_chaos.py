@@ -161,15 +161,47 @@ def test_torn_shard_would_fail_loudly_not_silently():
 
 
 def test_warc_reader_structurally_blind_to_temp_dir(tmp_path):
-    """read_warc globs only top-level *.warc.gz — a crashed write's
-    _temporary/ subdirectory is invisible by construction. Pin the
-    layout assumption the reader relies on."""
-    import glob
+    """read_warc discovers files through committed_shards like its
+    siblings — a crashed write's _temporary/ subdirectory is invisible.
+    Pin the discovery result the reader relies on."""
     import gzip
 
     root = tmp_path / "warc_out"
     (root / "_temporary").mkdir(parents=True)
     (root / "part-00000.warc.gz").write_bytes(gzip.compress(b"WARC/1.0\r\n"))
     (root / "_temporary" / "part-00001.warc.gz").write_bytes(b"torn")
-    seen = glob.glob(str(root / "*.warc.gz"))
+    seen = committed_shards(str(root), "warc.gz")
     assert [os.path.basename(p) for p in seen] == ["part-00000.warc.gz"]
+
+
+def test_shard_protocol_lives_only_in_shards_module():
+    """The commit and discovery protocol has one home: outside
+    sources/_shards.py no module opens a binaryFile scan, joins a
+    ``_temporary`` staging path or writes a ``_SUCCESS`` marker, so
+    every container format shares the same sink and reader."""
+    import re
+
+    import dataflowjavasdk_spark
+
+    patterns = {
+        "binaryFile scan": re.compile(r'format\(\s*"binaryFile"\s*\)'),
+        "_temporary join": re.compile(r'os\.path\.join\([^)]*"_temporary"'),
+        "_SUCCESS marker": re.compile(r'os\.path\.join\([^)]*"_SUCCESS"'),
+    }
+    pkg = os.path.dirname(dataflowjavasdk_spark.__file__)
+    home = os.path.join(pkg, "sources", "_shards.py")
+    sites: dict[str, list[str]] = {name: [] for name in patterns}
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            if not f.endswith(".py") or p == home:
+                continue
+            with open(p, encoding="utf-8") as fh:
+                for lineno, line in enumerate(fh, 1):
+                    for name, pat in patterns.items():
+                        if pat.search(line):
+                            sites[name].append(f"{os.path.relpath(p, pkg)}:{lineno}")
+    assert sites == {name: [] for name in patterns}
+    with open(home, encoding="utf-8") as fh:
+        text = fh.read()
+    assert all(pat.search(text) for pat in patterns.values())

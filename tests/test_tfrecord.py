@@ -192,38 +192,62 @@ def test_spark_read_rejects_corrupt_shard(spark, tmp_path):
         read_tfrecord(spark, d).collect()
 
 
-def test_read_excludes_crash_leftovers(spark, tmp_path):
+def _tfrecord_write_ids(spark, ids, dest):
+    write_tfrecord(spark.createDataFrame([(i,) for i in ids], "id long"), dest)
+
+
+def _tfrecord_read_ids(spark, root):
+    rows = parse_examples(read_tfrecord(spark, root), {"id": "bigint"}).collect()
+    return sorted(r["id"] for r in rows)
+
+
+def _warc_write_ids(spark, ids, dest):
+    from dataflowjavasdk_spark.sources.warc import WARC_SCHEMA, write_warc
+
+    pages = [(f"https://c.example/{i}", "2024-01-01T00:00:00Z", 200, "text/html",
+              f"<p>{i}</p>") for i in ids]
+    write_warc(spark.createDataFrame(pages, WARC_SCHEMA), dest)
+
+
+def _warc_read_ids(spark, root):
+    from dataflowjavasdk_spark.sources.warc import read_warc
+
+    return sorted(int(r["url"].rsplit("/", 1)[1]) for r in read_warc(spark, root).collect())
+
+
+@pytest.mark.parametrize(
+    "write_ids,read_ids",
+    [(_tfrecord_write_ids, _tfrecord_read_ids), (_warc_write_ids, _warc_read_ids)],
+    ids=["tfrecord", "warc"],
+)
+def test_read_excludes_crash_leftovers(spark, tmp_path, write_ids, read_ids):
     """ADVICE r7: a read after a crashed write must not see shards under
     _temporary/ (batch sink died after partial per-task renames) or in a
     batch=N/ directory missing its _SUCCESS marker (streaming micro-batch
-    died mid-write; it will be replayed). Only committed data may appear."""
+    died mid-write; it will be replayed). Only committed data may appear.
+    Every reader goes through the same committed-shard discovery."""
     import os
     import shutil
 
     d = str(tmp_path / "root")
-    committed = spark.createDataFrame([(1,), (2,)], "id long")
     os.makedirs(os.path.join(d, "batch=0"))
-    write_tfrecord(committed, os.path.join(d, "batch=0"))
+    write_ids(spark, [1, 2], os.path.join(d, "batch=0"))
     open(os.path.join(d, "batch=0", "_SUCCESS"), "w").close()
 
     # crash leftover 1: uncommitted micro-batch (no _SUCCESS)
     os.makedirs(os.path.join(d, "batch=1"))
-    write_tfrecord(spark.createDataFrame([(99,)], "id long"), os.path.join(d, "batch=1"))
+    write_ids(spark, [99], os.path.join(d, "batch=1"))
 
     # crash leftover 2: stale _temporary with an already-renamed shard
     tmpdir = os.path.join(d, "_temporary")
     os.makedirs(os.path.join(d, "scratch"))
-    write_tfrecord(spark.createDataFrame([(77,)], "id long"), os.path.join(d, "scratch"))
+    write_ids(spark, [77], os.path.join(d, "scratch"))
     os.makedirs(tmpdir)
     for f in os.listdir(os.path.join(d, "scratch")):
         shutil.move(os.path.join(d, "scratch", f), tmpdir)
     shutil.rmtree(os.path.join(d, "scratch"))
 
-    ids = sorted(
-        r["id"]
-        for r in parse_examples(read_tfrecord(spark, d), {"id": "bigint"}).collect()
-    )
-    assert ids == [1, 2]
+    assert read_ids(spark, d) == [1, 2]
 
 
 def test_committed_shards_unit(tmp_path):
