@@ -68,6 +68,9 @@ class _MaxParam(AccumulatorParam):
         return max(a, b)
 
 
+_TAG = "__cogbk_tag"
+
+
 def co_group_by_key(
     dfs: dict[str, DataFrame],
     keys: Sequence[str],
@@ -79,25 +82,27 @@ def co_group_by_key(
     """CoGroupByKey (historical sdk/transforms/join/CoGroupByKey.java):
     N keyed collections → per key, a tuple of iterables (CoGbkResult).
 
-    Two-input case uses Spark's native cogroup (one co-partitioned shuffle,
-    Arrow batches per side). N>2 is the reference's own plan — union every
-    input with its TupleTag (UnionCoder.java's tagged-union encoding), one
-    shuffle on the key, then split each group back into N per-tag frames
+    One plan for any number of inputs, the reference's own: the first
+    input rides one side of Spark's native cogroup; every other input is
+    unioned onto the other side with its TupleTag (UnionCoder.java's
+    tagged-union encoding, built by ``_tag_union``); one applyInArrow
+    call per key splits the tagged side back into per-tag frames
     (KeyedPCollectionTuple.apply(CoGroupByKey) + per-key CoGbkResult).
-    Inputs absent for a key yield an EMPTY frame, never a missing entry.
+    Inputs absent for a key yield an EMPTY frame with the input's
+    dtypes, never a missing entry.
 
-    Scale note: both paths shuffle each input exactly once on the key and
-    buffer only one key's rows per input in the Arrow batch — the same
+    Scale note: each input shuffles exactly once on the key and only one
+    key's rows per input are buffered in the Arrow batch — the same
     footprint as the reference's per-key iterable buffers. Prefer
     pre-aggregation (see queries/relational.py cogroup_customer_orders)
     when the per-key fn is itself a reduction.
 
     `fn(key_tuple, {name: pandas_df})` → pandas DataFrame rows to emit.
     Each per-tag frame carries that input's full columns (keys included)
-    in its original column order, matching the 2-input native path.
+    in its original column order, converted by pyarrow's ``to_pandas``.
 
     Hot-key guard (VERDICT r7 #3, default-on since r9 per VERDICT r8 #4):
-    unlike the reference's shuffle-backed lazy iterables, applyInPandas
+    unlike the reference's shuffle-backed lazy iterables, this runner
     MATERIALIZES each key's full frame — a skewed key at 100× scale is
     an executor OOM, silent until it isn't. ``max_group_rows`` now
     DEFAULTS to 4M rows (override via env
@@ -117,185 +122,42 @@ def co_group_by_key(
     fail-fast GUARD itself (a closure over a plain int) stays default-on
     at zero cost.
     """
+    import pyarrow as pa
+
     names = list(dfs)
     key_list = list(keys)
-    some_df = dfs[names[0]]
+    first = dfs[names[0]]
     max_seen = (
-        some_df.sparkSession.sparkContext.accumulator(0, _MaxParam())
+        first.sparkSession.sparkContext.accumulator(0, _MaxParam())
         if track_max_group
         else None
     )
+    tagged, layouts = _tag_union(list(dfs.values()), key_list, start=1)
+    if tagged is None:  # one input: an empty tagged side keeps one plan
+        tagged = first.select(*key_list, F.lit(0).alias(_TAG)).limit(0)
+    out_arrow_schema = _arrow_schema_of(first.sparkSession, schema)
 
-    def _guard(n_rows: int, key: tuple) -> None:
+    def apply(key: tuple, first_t: pa.Table, tagged_t: pa.Table) -> pa.Table:
+        import pyarrow.compute as pc
+
+        key = tuple(k.as_py() if hasattr(k, "as_py") else k for k in key)
+        n_rows = first_t.num_rows + tagged_t.num_rows
         if max_seen is not None:
             max_seen.add(n_rows)
         if max_group_rows is not None and n_rows > max_group_rows:
             raise ValueError(
                 f"co_group_by_key: key {key!r} has {n_rows} rows "
-                f"(> max_group_rows={max_group_rows}); applyInPandas "
+                f"(> max_group_rows={max_group_rows}); co_group_by_key "
                 "materializes the whole group per key — use "
                 "co_group_by_key_stream for hot keys, or raise "
                 "SPARK_GRAFT_COGBK_MAX_GROUP_ROWS / pass "
                 "max_group_rows=None to accept the memory risk"
             )
-
-    if len(names) == 2:
-        a, b = dfs[names[0]], dfs[names[1]]
-
-        def apply2(key: tuple, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            _guard(len(left) + len(right), key)
-            return fn(key, {names[0]: left, names[1]: right})
-
-        out2 = (
-            a.groupBy(*key_list)
-            .cogroup(b.groupBy(*key_list))
-            .applyInPandas(apply2, schema=schema)
-        )
-        out2.cogbk_max_group_rows = max_seen
-        return out2
-
-    col_orders = [list(dfs[n].columns) for n in names]
-    value_orders = [[c for c in cols if c not in key_list] for cols in col_orders]
-
-    # Round 11 (VERDICT r10 #4): when every input PAST THE FIRST has
-    # positionally IDENTICAL value types (the nation/customer/supplier
-    # shape — N-1 fact inputs sharing one value layout), route through
-    # Spark's native cogroup instead of the N-way tagged union: the
-    # first input rides its own co-grouped side and the fact inputs
-    # share ONE set of value columns plus a tag, so nothing is
-    # null-padded across tags. The tagged-union path ships every row
-    # with N-1 absent inputs' columns (validity bitmaps are cheap but
-    # not free, and the union widens with N); the shared-column side
-    # ships exactly one value set. Interleaved A/B on the nation CoGBK
-    # headliner: 389 -> 314 ms warm at 32c (1.24x), same at 8c. The
-    # per-key fn still receives per-tag frames split ARROW-side before
-    # pandas conversion — the int64-exactness discipline is unchanged
-    # (pinned by test with >2^53 values null in one tag only).
-    fact_value_types = [
-        tuple(
-            str(f.dataType)
-            for f in dfs[n].schema.fields
-            if f.name not in key_list
-        )
-        for n in names[1:]
-    ]
-    if len(set(fact_value_types)) == 1:
-        return _cogbk_shared_fact_side(
-            dfs, names, key_list, col_orders, value_orders, fn, schema,
-            _guard, max_seen,
-        )
-
-    # Flat null-padded value columns, NOT per-row structs: Arrow validity
-    # bitmaps make absent tags near-free on the wire, and splitting a
-    # group back into per-tag frames is a vectorized column selection
-    # (the struct form cost a per-row dict materialization — measured
-    # 2x+ of the whole query at sf0.1, round 8). The split runs through
-    # applyInARROW, not applyInPandas: the null padding other tags
-    # introduce would force a whole-group int64→float64 pandas
-    # conversion (silently corrupting values above 2^53 — the 64-bit
-    # hash ids this engine lives on); filtering each tag's rows
-    # Arrow-side first keeps its own columns null-free, so to_pandas
-    # yields exact int64 per tag.
-    tagged = []
-    for i, name in enumerate(names):
-        df = dfs[name]
-        tagged.append(
-            df.select(
-                *key_list,
-                F.lit(i).alias("__cogbk_tag"),
-                *[F.col(c).alias(f"__v{i}_{c}") for c in value_orders[i]],
-            )
-        )
-    unioned = tagged[0]
-    for t in tagged[1:]:
-        unioned = unioned.unionByName(t, allowMissingColumns=True)
-    out_arrow_schema = _arrow_schema_of(unioned.sparkSession, schema)
-
-    import pyarrow as pa
-
-    def apply_n(key: tuple, table: pa.Table) -> pa.Table:
-        import pyarrow.compute as pc
-
-        key = tuple(k.as_py() if hasattr(k, "as_py") else k for k in key)
-        _guard(table.num_rows, key)
-        tags = table.column("__cogbk_tag")
-        frames: dict[str, pd.DataFrame] = {}
-        for i, name in enumerate(names):
-            sub = table.filter(pc.equal(tags, i))
-            vals = (
-                sub.select([f"__v{i}_{c}" for c in value_orders[i]])
-                .rename_columns(value_orders[i])
-                .to_pandas()
-            )
-            for k_idx, k in enumerate(key_list):
-                vals[k] = [key[k_idx]] * len(vals)
-            frames[name] = vals.reindex(columns=col_orders[i])
-        out = fn(key, frames)
-        if out is None or not len(out):
-            return out_arrow_schema.empty_table()
-        return pa.Table.from_pandas(
-            out, schema=out_arrow_schema, preserve_index=False
-        )
-
-    out_n = unioned.groupBy(*key_list).applyInArrow(apply_n, schema=schema)
-    out_n.cogbk_max_group_rows = max_seen
-    return out_n
-
-
-def _cogbk_shared_fact_side(
-    dfs, names, key_list, col_orders, value_orders, fn, schema, guard, max_seen
-):
-    """N-way CoGBK via native cogroup when inputs[1:] share one value
-    layout (see the dispatch comment in co_group_by_key): first input on
-    its own co-grouped side, fact inputs unioned onto ONE set of
-    positionally-renamed value columns plus a tag — no cross-tag null
-    padding. applyInARROW, not applyInPandas: each tag's rows are
-    filtered Arrow-side before pandas conversion, so a tag whose int64
-    column is null-free stays exact int64 even when another tag holds
-    nulls in the shared column (the same discipline as the tagged-union
-    path; pinned by test with >2^53 values)."""
-    import pyarrow as pa
-
-    first = dfs[names[0]]
-    out_arrow_schema = _arrow_schema_of(first.sparkSession, schema)
-    generic = [f"__fv{j}" for j in range(len(value_orders[1]))]
-    tagged = []
-    for i, name in enumerate(names[1:], start=1):
-        df = dfs[name]
-        tagged.append(
-            df.select(
-                *key_list,
-                F.lit(i).alias("__cogbk_tag"),
-                *[
-                    F.col(c).alias(g)
-                    for c, g in zip(value_orders[i], generic)
-                ],
-            )
-        )
-    facts = tagged[0]
-    for t in tagged[1:]:
-        facts = facts.unionByName(t)
-    first_cols = col_orders[0]
-
-    def apply2(key: tuple, first_t: pa.Table, facts_t: pa.Table) -> pa.Table:
-        import pyarrow.compute as pc
-
-        key = tuple(k.as_py() if hasattr(k, "as_py") else k for k in key)
-        guard(first_t.num_rows + facts_t.num_rows, key)
-        frames: dict[str, pd.DataFrame] = {
-            names[0]: first_t.to_pandas().reindex(columns=first_cols)
-        }
-        tags = facts_t.column("__cogbk_tag")
+        frames = {names[0]: first_t.to_pandas()}
+        tags = tagged_t.column(_TAG)
         for i, name in enumerate(names[1:], start=1):
-            sub = facts_t.filter(pc.equal(tags, i))
-            vals = (
-                sub.select(generic)
-                .rename_columns(value_orders[i])
-                .to_pandas()
-            )
-            for k_idx, k in enumerate(key_list):
-                vals[k] = [key[k_idx]] * len(vals)
-            frames[name] = vals.reindex(columns=col_orders[i])
+            rows = tagged_t.filter(pc.equal(tags, i))
+            frames[name] = _tag_frame(rows, layouts[i])
         out = fn(key, frames)
         if out is None or not len(out):
             return out_arrow_schema.empty_table()
@@ -303,13 +165,68 @@ def _cogbk_shared_fact_side(
             out, schema=out_arrow_schema, preserve_index=False
         )
 
-    out2 = (
+    out_df = (
         first.groupBy(*key_list)
-        .cogroup(facts.groupBy(*key_list))
-        .applyInArrow(apply2, schema=schema)
+        .cogroup(tagged.groupBy(*key_list))
+        .applyInArrow(apply, schema=schema)
     )
-    out2.cogbk_max_group_rows = max_seen
-    return out2
+    out_df.cogbk_max_group_rows = max_seen
+    return out_df
+
+
+def _tag_union(inputs: list[DataFrame], key_list: list[str], start: int = 0):
+    """Union ``inputs[start:]`` tagged with their position (UnionCoder's
+    tagged union) → (union DataFrame or None, per-input layouts).
+
+    Value columns ride flat SLOT columns named by (position, Spark type):
+    the j-th value column of type T travels as ``__v{j}_{T}``, so inputs
+    that share a value layout share columns (the nation/customer/supplier
+    shape ships one value set, nothing padded) and only differing layouts
+    get null padding — Arrow validity bitmaps make that near-free on the
+    wire. Flat columns, NOT per-row structs: splitting a group back into
+    per-tag frames is then a vectorized column selection (the struct form
+    cost a per-row dict materialization — measured 2x+ of the whole
+    query at sf0.1, round 8).
+
+    A layout is (original column order, source column per original
+    column: the key itself or the value's slot) — what ``_tag_frame``
+    needs to rebuild an input's frame from its rows of the union.
+    """
+    layouts, parts = [], []
+    for i, df in enumerate(inputs):
+        src = {
+            f.name: f"__v{j}_{f.dataType.simpleString()}"
+            for j, f in enumerate(
+                f for f in df.schema.fields if f.name not in key_list
+            )
+        }
+        layouts.append((list(df.columns), [src.get(c, c) for c in df.columns]))
+        if i >= start:
+            parts.append(
+                df.select(
+                    *key_list,
+                    F.lit(i).alias(_TAG),
+                    *[F.col(c).alias(s) for c, s in src.items()],
+                )
+            )
+    union = None
+    for part in parts:
+        union = part if union is None else union.unionByName(
+            part, allowMissingColumns=True
+        )
+    return union, layouts
+
+
+def _tag_frame(rows, layout) -> pd.DataFrame:
+    """One tag's Arrow rows → its pandas frame in the input's original
+    column order, keys included. The rows must hold only that tag: other
+    tags' null padding is gone before conversion, so int64 columns stay
+    exact int64 (a whole-group conversion would upcast them to float64,
+    silently corrupting values above 2^53 — the 64-bit hash ids this
+    engine lives on). An absent tag converts its zero rows, so empty
+    frames keep the input's dtypes."""
+    cols, src = layout
+    return rows.select(src).rename_columns(cols).to_pandas()
 
 
 def _arrow_schema_of(spark, schema):
@@ -349,40 +266,23 @@ def co_group_by_key_stream(
     co_group_by_key, whose groupBy treats nulls as one group, if null
     keys are meaningful).
 
-    Plan: tagged union (flat null-padded columns — Arrow validity
-    bitmaps make absent tags near-free) → repartition(keys) →
-    sortWithinPartitions(keys, tag) → ONE mapInArrow pass walking the
-    sorted stream. Exactly one shuffle per input, same as the
-    applyInPandas path; the partition sort is Spark's
-    UnsafeExternalSorter, which spills to disk — nothing key-sized is
-    ever resident. Arrow (not pandas) is the walk substrate for the
-    same reason as the N-way split: per-tag slices convert to pandas
-    AFTER the other tags' null padding is gone, so int64 columns stay
-    exact int64.
+    Plan: the same tagged union as ``co_group_by_key`` (``_tag_union``,
+    every input tagged) → repartition(keys) → sortWithinPartitions(keys,
+    tag) → ONE mapInArrow pass walking the sorted stream. Exactly one
+    shuffle per input, same as the materializing runner; the partition
+    sort is Spark's UnsafeExternalSorter, which spills to disk — nothing
+    key-sized is ever resident. Per-tag frames come from the same
+    ``_tag_frame`` split, so int64 columns stay exact int64 and empty
+    frames keep the input's dtypes.
     """
     import pyarrow as pa
 
     names = list(dfs)
     key_list = list(keys)
     last = len(names) - 1
-    col_orders = [list(dfs[n].columns) for n in names]
-    value_orders = [[c for c in cols if c not in key_list] for cols in col_orders]
-
-    tagged = []
-    for i, name in enumerate(names):
-        df = dfs[name]
-        tagged.append(
-            df.select(
-                *key_list,
-                F.lit(i).alias("__cogbk_tag"),
-                *[F.col(c).alias(f"__v{i}_{c}") for c in value_orders[i]],
-            )
-        )
-    unioned = tagged[0]
-    for t in tagged[1:]:
-        unioned = unioned.unionByName(t, allowMissingColumns=True)
+    unioned, layouts = _tag_union(list(dfs.values()), key_list)
     shuffled = unioned.repartition(*[F.col(k) for k in key_list]).sortWithinPartitions(
-        *key_list, "__cogbk_tag"
+        *key_list, _TAG
     )
     out_arrow_schema = _arrow_schema_of(unioned.sparkSession, schema)
 
@@ -399,36 +299,22 @@ def co_group_by_key_stream(
             n = rb.num_rows
             if not n:
                 continue
-            kt = rb.select(key_list + ["__cogbk_tag"]).to_pandas()
+            kt = rb.select(key_list + [_TAG]).to_pandas()
             marks = np.zeros(n, dtype=bool)
             marks[0] = True
-            for col in key_list + ["__cogbk_tag"]:
+            for col in key_list + [_TAG]:
                 a = kt[col].to_numpy()  # null-free → exact int64/object
                 marks[1:] |= a[1:] != a[:-1]
             bounds = np.flatnonzero(marks).tolist() + [n]
             for s, e in zip(bounds, bounds[1:]):
                 key = tuple(kt[k].iloc[s] for k in key_list)
-                yield key, int(kt["__cogbk_tag"].iloc[s]), rb.slice(s, e - s)
-
-    def _frame(i: int, chunks: list, key: tuple) -> pd.DataFrame:
-        cols = [f"__v{i}_{c}" for c in value_orders[i]]
-        if chunks:
-            out = (
-                pa.Table.from_batches([ch.select(cols) for ch in chunks])
-                .rename_columns(value_orders[i])
-                .to_pandas()
-            )
-        else:
-            out = pd.DataFrame(columns=value_orders[i])
-        for k_idx, k in enumerate(key_list):
-            out[k] = [key[k_idx]] * len(out)
-        return out.reindex(columns=col_orders[i])
+                yield key, int(kt[_TAG].iloc[s]), rb.slice(s, e - s)
 
     def part(batches):
         runs = _runs(batches)
         pending = next(runs, None)
         while pending is not None:
-            key = pending[0]
+            key, rb_schema = pending[0], pending[2].schema
             buffered: list[list] = [[] for _ in names]
             while (
                 pending is not None and pending[0] == key and pending[1] < last
@@ -444,16 +330,21 @@ def co_group_by_key_stream(
                     and state["pending"][0] == key
                     and state["pending"][1] == last
                 ):
-                    yield _frame(last, [state["pending"][2]], key)
+                    chunk = pa.Table.from_batches([state["pending"][2]])
+                    yield _tag_frame(chunk, layouts[last])
                     state["pending"] = next(runs, None)
 
             groups: dict = {
-                names[i]: _frame(i, buffered[i], key) for i in range(last)
+                names[i]: _tag_frame(
+                    pa.Table.from_batches(buffered[i], schema=rb_schema),
+                    layouts[i],
+                )
+                for i in range(last)
             }
             groups[names[last]] = last_chunks()
             out = fn(key, groups)
             # Drain what the fn left unread by advancing the cursor
-            # directly — no _frame construction for data nobody reads.
+            # directly — no frame construction for data nobody reads.
             # The generator is suspended and never resumed, so the
             # external advance is safe; a chunk yielded but not yet
             # advanced past is still at state["pending"] and gets

@@ -85,6 +85,7 @@ def audit(df: DataFrame) -> PlanAudit:
                 "FlatMapGroupsInArrow",
                 "FlatMapGroupsInPandas",
                 "FlatMapCoGroupsInPandas",
+                "FlatMapCoGroupsInArrow",
             )
         ),
     )

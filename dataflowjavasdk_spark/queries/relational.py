@@ -330,11 +330,13 @@ def cogroup_nation_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFr
     the last §2.3 partial): KeyedPCollectionTuple.of(n).and(c).and(s)
     .apply(CoGroupByKey) + a DoFn over the CoGbkResult's three tagged
     iterables (historical sdk/transforms/join/CoGroupByKey.java,
-    KeyedPCollectionTuple.java). Plan: union-with-tag → ONE shuffle on the
-    key → applyInArrow splits each group into per-tag frames (per-tag
-    Arrow filter BEFORE pandas conversion keeps int64 exact) — the
-    reference's own tagged-union strategy (UnionCoder.java), so each input
-    shuffles exactly once and only one key's rows are buffered at a time.
+    KeyedPCollectionTuple.java). Plan: nation on one side of a native
+    cogroup, customer + supplier union-with-tag on the other (sharing one
+    value slot, as their layouts match) → ONE shuffle per input on the key
+    → applyInArrow splits each group into per-tag frames (per-tag Arrow
+    filter BEFORE pandas conversion keeps int64 exact) — the reference's
+    own tagged-union strategy (UnionCoder.java), so each input shuffles
+    exactly once and only one key's rows are buffered at a time.
 
     Per-nation: the nation row's name read FROM the nation iterable (the
     CoGbkResult access pattern), plus counts and exact-cents acctbal sums
@@ -428,16 +430,16 @@ def cogbk_sorted_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference CoGbkResult's buffer-all-but-one / stream-the-last design
     (historical sdk/transforms/join/CoGbkResult.java). A hot nationkey
     at 100× costs one Arrow batch of executor memory instead of the
-    whole group — the skew failure mode the applyInPandas path guards
+    whole group — the skew failure mode the materializing runner guards
     against with max_group_rows (tests/test_join_flatten_sort.py pins
     the chunk bound; SCALE.md §custom-fn-CoGBK).
 
-    Plan: tagged flat union → ONE repartition on the key →
-    sortWithinPartitions(key, tag) (UnsafeExternalSorter: spills) →
-    single mapInArrow pass (per-tag slices convert to pandas after the
+    Plan: the materializing runner's tagged union (every input tagged)
+    → ONE repartition on the key → sortWithinPartitions(key, tag)
+    (UnsafeExternalSorter: spills) → single mapInArrow pass through the
+    same per-tag split (each tag's slice converts to pandas after the
     other tags' null padding is gone — int64 stays exact). Exactly one
-    shuffle per input, same
-    exchange count as the materializing twin."""
+    shuffle per input, same exchange count as the materializing twin."""
     import pandas as pd
 
     from dataflowjavasdk_spark.operators.join import co_group_by_key_stream

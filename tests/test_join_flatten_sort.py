@@ -434,7 +434,7 @@ def test_cogbk_max_group_rows_guard(spark):
     )
     with pytest.raises(Exception, match="co_group_by_key_stream"):
         df.collect()
-    # and the N-way (union-tag) path enforces the same bound
+    # and a 3-input cogroup enforces the same bound
     c = spark.createDataFrame([(1, 3)], "k int, x int")
     df3 = join.co_group_by_key(
         {"a": a, "b": b, "c": c}, ["k"], fn, "k int", max_group_rows=10
@@ -505,18 +505,27 @@ def test_cogbk_max_group_metric(spark):
 
 
 def test_cogbk_preserves_int64_beyond_2_53(spark):
-    """The tagged-union paths must hand fn EXACT int64 values even when
+    """Both runners must hand fn EXACT int64 values even when
     other tags' null padding shares the wire (round-8 regression: a
     pandas-side split saw nulls in the union and degraded bigint
     columns to float64, corrupting 64-bit hash ids above 2^53; the
     Arrow-side split filters per tag BEFORE converting, keeping its own
     columns null-free and int64)."""
     big = 2**53 + 1
-    a = spark.createDataFrame([(1, big)], "k int, v long")
+    a = spark.createDataFrame([(1, big), (2, 5)], "k int, v long")
     b = spark.createDataFrame([(1, 7)], "k int, w long")
-    c = spark.createDataFrame([(1, 8)], "k int, x long")
+    c = spark.createDataFrame([(1, 8), (2, 6)], "k int, x long")
+
+    def absent_b(groups) -> bool:
+        # key 2 is absent from b: both runners hand fn an EMPTY frame
+        # that keeps b's dtypes, not an object-dtype placeholder
+        w = groups["b"]["w"]
+        assert str(w.dtype) == "int64", f"absent-key frame dtype {w.dtype}"
+        return not len(w)
 
     def fn(key, groups):
+        if absent_b(groups):
+            return None
         s = groups["a"]["v"]
         assert str(s.dtype) == "int64", f"degraded dtype {s.dtype}"
         return pd.DataFrame([{"k": int(key[0]), "v": int(s.iloc[0])}])
@@ -527,6 +536,8 @@ def test_cogbk_preserves_int64_beyond_2_53(spark):
     assert got[0]["v"] == big
 
     def fn_stream(key, groups):
+        if absent_b(groups):
+            return None
         s = groups["a"]["v"]
         assert str(s.dtype) == "int64", f"degraded dtype {s.dtype}"
         total = 0
@@ -569,47 +580,86 @@ def test_cogbk_stream_distinguishes_adjacent_int64_keys(spark):
     assert rows == {k0: (1, 10), k1: (1, 20)}, rows
 
 
-def test_cogbk_shared_fact_side_native_cogroup(spark, sides):
-    """Round 11 (VERDICT r10 #4): when every input past the first shares
-    one positional value layout, co_group_by_key routes through native
-    cogroup (first input on its own side, facts on shared columns + tag)
-    — same CoGbkResult contract: named frames, original column order,
-    keys included, EMPTY frames for absent keys."""
+_THIRD_INPUT = {
+    # tv double differs from rv int: the third input rides its own slot
+    "three_mixed_layouts": ([("a", 1.5), ("e", 5.5)], "k string, tv double"),
+    # tv int == rv int: r and t share one value slot, nothing padded
+    "three_shared_layout": ([("a", 7), ("e", 9)], "k string, tv int"),
+}
+
+
+@pytest.mark.parametrize(
+    "case", ["two_inputs", "three_mixed_layouts", "three_shared_layout"]
+)
+def test_cogbk_plans_one_native_cogroup(spark, sides, case):
+    """co_group_by_key plans ONE native cogroup for every input count
+    and value layout (first input on its own side, the rest tagged onto
+    the other) — same CoGbkResult contract: named frames, original
+    column order, keys included, EMPTY frames for absent keys."""
     left, right = sides
-    p = Pipeline(spark)
-    third = p.create([("a", 7), ("e", 9)], "k string, tv int")  # int == rv
+    dfs = {"l": left.df, "r": right.df}
+    if case in _THIRD_INPUT:
+        dfs["t"] = Pipeline(spark).create(*_THIRD_INPUT[case]).df
+    value_col = {"l": "lv", "r": "rv", "t": "tv"}
+    names = set(dfs)
 
     def fn(key, groups):
-        assert list(groups["l"].columns) == ["k", "lv"]
-        assert list(groups["r"].columns) == ["k", "rv"]
-        assert list(groups["t"].columns) == ["k", "tv"]
-        return pd.DataFrame(
-            [{"k": key[0], "n_l": len(groups["l"]), "sum_r": int(groups["r"]["rv"].sum()),
-              "sum_t": int(groups["t"]["tv"].sum())}]
-        )
+        assert set(groups) == names
+        row = {"k": key[0]}
+        for name, g in groups.items():
+            assert list(g.columns) == ["k", value_col[name]]
+            row[f"n_{name}"] = len(g)
+            row[f"s_{name}"] = float(g[value_col[name]].sum())
+        return pd.DataFrame([row])
 
     out = join.co_group_by_key(
-        {"l": left.df, "r": right.df, "t": third.df},
+        dfs,
         ["k"],
         fn,
-        "k string, n_l long, sum_r long, sum_t long",
+        "k string, " + ", ".join(f"n_{n} long, s_{n} double" for n in dfs),
     )
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
-    assert "FlatMapCoGroupsIn" in plan, plan  # native cogroup chosen
-    assert rows(out) == [
-        ("a", 1, 10, 7),
-        ("b", 1, 20, 0),
-        ("c", 1, 0, 0),
-        ("d", 0, 40, 0),
-        ("e", 0, 0, 9),
-    ]
+    assert "FlatMapCoGroupsInArrow" in plan, plan
+    inputs = {n: [tuple(r) for r in df.collect()] for n, df in dfs.items()}
+    expect = []
+    for k in sorted({r[0] for rs in inputs.values() for r in rs}):
+        row = [k]
+        for rs in inputs.values():
+            vals = [v for kk, v in rs if kk == k]
+            row += [len(vals), float(sum(vals))]
+        expect.append(tuple(row))
+    assert rows(out) == expect
+
+
+def test_cogbk_single_input_both_runners(spark):
+    """One-input CoGroupByKey gives one group per key from both runners
+    (the materializing one cogroups against an empty tagged side)."""
+    a = spark.createDataFrame([(1, 10), (1, 11), (2, 20)], "k int, v long")
+    schema = "k int, n long, s long"
+
+    def fn(key, groups):
+        g = groups["a"]
+        return pd.DataFrame([{"k": int(key[0]), "n": len(g), "s": int(g["v"].sum())}])
+
+    def fn_stream(key, groups):
+        return fn(key, {"a": pd.concat(list(groups["a"]))})
+
+    for out in (
+        join.co_group_by_key({"a": a}, ["k"], fn, schema),
+        join.co_group_by_key_stream({"a": a}, ["k"], fn_stream, schema),
+    ):
+        assert {r["k"]: (r["n"], r["s"]) for r in out.collect()} == {
+            1: (2, 21),
+            2: (1, 20),
+        }
 
 
 def test_cogbk_shared_fact_side_int64_exactness(spark):
-    """The shared-column native path must keep a tag's int64 values
-    EXACT even when another tag holds nulls in the shared column (the
+    """Inputs sharing a value layout share one slot column; a tag's
+    int64 values must stay EXACT even when another tag holds nulls in
+    that shared column (the
     whole-frame pandas conversion would upcast to float64 and corrupt
     values above 2^53 — the hazard the Arrow-side per-tag split
     exists for)."""

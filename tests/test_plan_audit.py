@@ -93,10 +93,11 @@ def test_relational_queries_stay_jvm_side(spark):
         # mapInPandas; the windowed cut/segment logic itself is pure JVM
         "video_keyframe_detect",
         "audio_silence_segments",
-        # round 8: the custom-fn CoGBK contract ships per-key iterables
-        # to Python by definition (applyInArrow group split / mapInArrow
-        # sorted-stream runner — counted since the audit learned the
-        # Arrow node names); media egress = decode + Example codec
+        # the custom-fn CoGBK contract ships per-key iterables to Python
+        # by definition: one native cogroup + applyInArrow per key
+        # (FlatMapCoGroupsInArrow) for the materializing runner, one
+        # mapInArrow pass (MapInArrow) for the sorted-stream runner;
+        # media egress = decode + Example codec
         "cogroup_nation_customer_supplier",
         "cogbk_sorted_stream",
         "media_egress_pipeline",
@@ -106,6 +107,14 @@ def test_relational_queries_stay_jvm_side(spark):
             continue
         p = _plan(spark, name)
         assert p.python_evals == 0, f"{name} has Python in the plan"
+
+
+def test_cogbk_plan_counts_its_python_stage(spark):
+    # the allow-list above is only as good as the counter: a CoGBK plan's
+    # per-key Python stage must register as a Python evaluation
+    p = _plan(spark, "cogroup_nation_customer_supplier")
+    assert "FlatMapCoGroupsInArrow" in p.text
+    assert p.python_evals >= 1
 
 
 def test_q7_broadcasts_all_dims_twice_joined_nation(spark):
