@@ -7,6 +7,10 @@ Scale design (the whole point of these at 100 TB):
 - Cosine: per-row left-fold expressions (bit-identical to DuckDB's
   list_reduce, verified); brute-force top-k is a broadcast cross join of
   the (small) query set against the corpus — no shuffle of the corpus.
+- Vector-search kit (end of module): IVF cell assignment (`ivf_cells`),
+  the broadcast top-k scorer (`top_k`), the LSH tables (`lsh_tables`,
+  `lsh_topk`) and the PQ/ADC chain (`pq_topk`, `ivfpq_topk`), each
+  written once; every ANN query and the recall ladder compose them.
 - SimHash: vectorized Pandas UDF (numpy bit ops over Arrow batches) —
   the documented Python-unavoidable path.
 """
@@ -14,12 +18,14 @@ Scale design (the whole point of these at 100 TB):
 from __future__ import annotations
 
 import hashlib
-from functools import lru_cache
+import operator
+from functools import lru_cache, reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from dataflowjavasdk_spark.functions.text import md5_long, tokens
 
@@ -385,3 +391,235 @@ def random_hyperplane_bucket(vec: Column, planes: int = 8, dim: int = 64) -> Col
         # unrolled in the same plane order as the old aggregate-over-bits
         bucket = bucket * 2 + F.when(plane_dot >= 0, F.lit(1)).otherwise(F.lit(0))
     return bucket
+
+
+# --- Vector-search kit -----------------------------------------------------
+#
+# The ANN queries over `embeddings` (vec_id, embedding) are compositions
+# of four blocks, each written once here: IVF cell assignment
+# (`ivf_cells`), the broadcast top-k scorer (`top_k`), the LSH tables
+# (`lsh_tables` + `lsh_topk`) and the PQ/ADC chain (`pq_topk`, with
+# `ivfpq_topk` composing it over IVF residuals). Every distance is a
+# left fold above, so each block's DuckDB oracle twin reproduces it bit
+# for bit; every rank carries a deterministic id tiebreak.
+
+IVF_CELLS = 8  # coarse codebook: the first 8 vectors seed the cells
+LSH_TABLES = ((8, None), (16, 256))  # (planes, bucket modulus) per table
+PQ_M, PQ_SUB = 4, 16  # PQ: 4 subspaces of 16 dims
+
+
+def not_self() -> Column:
+    """The scorer's default candidate predicate: a query is never its own
+    neighbour."""
+    return F.col("vec_id") != F.col("query_id")
+
+
+def query_set(vecs: DataFrame, pred: Column, *extra) -> DataFrame:
+    """The broadcast side of a search: rows of `vecs` matching `pred` as
+    (query_id, qv, *extra)."""
+    return vecs.filter(pred).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"), *extra
+    )
+
+
+def _top_rows(scored: DataFrame, k: int, by: Column, neighbor: str) -> DataFrame:
+    """The per-query row_number cut: rank by `by`, ties to the lower
+    neighbour id, keep rk <= k."""
+    w = W.partitionBy("query_id").orderBy(by, F.col(neighbor))
+    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
+def top_k(
+    corpus: DataFrame,
+    queries: DataFrame,
+    score: Column,
+    k: int,
+    on: Column | None = None,
+    name: str = "cosine",
+    neighbor: str = "neighbor_id",
+    carry: tuple = (),
+) -> DataFrame:
+    """Top-k by `score` DESC per query: the corpus joins the broadcast
+    query set on `on` (default `not_self()`), each candidate pair is
+    scored as column `name`, and the (score DESC, neighbour) row_number
+    cut keeps rk <= k. Output (query_id, neighbor, *carry, name, rk).
+    The corpus streams through the scorer map-side; only the query set
+    is broadcast."""
+    scored = corpus.join(F.broadcast(queries), not_self() if on is None else on).select(
+        "query_id", F.col("vec_id").alias(neighbor), *carry, score.alias(name)
+    )
+    return _top_rows(scored, k, F.col(name).desc(), neighbor)
+
+
+def ivf_cells(vecs: DataFrame, *extra) -> DataFrame:
+    """IVF cell assignment: every vector scored against the IVF_CELLS
+    centroids (vec_id < IVF_CELLS seed the codebook, which broadcasts) as
+    (vec_id, embedding, cell, ccos, *extra, crk), crk the rank by
+    (ccos DESC, cell). `extra` may name the centroid `cv`. Unfiltered:
+    callers pin it, take crk = 1 (the assignment) or probe
+    crk <= nprobe."""
+    cent = vecs.filter(F.col("vec_id") < IVF_CELLS).select(
+        F.col("vec_id").alias("cell"), F.col("embedding").alias("cv")
+    )
+    cw = W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cell"))
+    return (
+        vecs.crossJoin(F.broadcast(cent))
+        .select(
+            "vec_id",
+            "embedding",
+            "cell",
+            cosine(F.col("embedding"), F.col("cv")).alias("ccos"),
+            *extra,
+        )
+        .withColumn("crk", F.row_number().over(cw))
+    )
+
+
+def lsh_tables(vecs: DataFrame, tables: int = len(LSH_TABLES)) -> DataFrame:
+    """`vecs` plus one sign-random-projection bucket column per LSH table
+    (b0, b1, ...; see LSH_TABLES). Build once and probe it with
+    `lsh_topk` for any table count."""
+    for t, (planes, mod) in enumerate(LSH_TABLES[:tables]):
+        b = random_hyperplane_bucket(F.col("embedding"), planes=planes, dim=64)
+        vecs = vecs.withColumn(f"b{t}", b if mod is None else b % mod)
+    return vecs
+
+
+def lsh_topk(tabled: DataFrame, is_query: Column, k: int, tables: int) -> DataFrame:
+    """LSH top-k by cosine: a corpus vector is a candidate when it shares
+    a bucket with the query in any of the first `tables` tables of
+    `tabled` (OR-amplification). Each table is one equi-join against the
+    broadcast query set (never a non-equi OR join); overlapping tables
+    are unioned and deduplicated. Output (query_id, neighbor_id, cosine,
+    rk)."""
+    qb = query_set(tabled, is_query, *[F.col(f"b{t}").alias(f"qb{t}") for t in range(tables)])
+    cands = reduce(
+        DataFrame.unionByName,
+        [
+            tabled.join(F.broadcast(qb), (F.col(f"b{t}") == F.col(f"qb{t}")) & not_self())
+            .select("query_id", F.col("vec_id").alias("neighbor_id"), "qv", "embedding")
+            for t in range(tables)
+        ],
+    )
+    if tables > 1:
+        cands = cands.distinct()
+    scored = cands.select(
+        "query_id", "neighbor_id", cosine(F.col("qv"), F.col("embedding")).alias("cosine")
+    )
+    return _top_rows(scored, k, F.col("cosine").desc(), "neighbor_id")
+
+
+def _subspaces(df: DataFrame, vec: str, out: str, *ids) -> DataFrame:
+    """One row per (ids, m): the m-th PQ_SUB-dim slice of `vec` as `out`."""
+    s = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(m).cast("long").alias("m"),
+                    F.slice(vec, m * PQ_SUB + 1, PQ_SUB).alias(out),
+                )
+                for m in range(PQ_M)
+            ]
+        )
+    )
+    return df.select(*ids, s.alias("s")).select("*", "s.*").drop("s")
+
+
+def pq_topk(
+    vecs: DataFrame,
+    base: DataFrame,
+    codebook: DataFrame,
+    code: Column | str,
+    is_query: Column,
+    k: int,
+    vec: str = "embedding",
+    keys: tuple = (),
+    pin_table: bool = False,
+) -> DataFrame:
+    """Product-quantization top-k with asymmetric distance computation
+    and exact re-rank. `base` (vec_id, *keys, vec) is split into PQ_M
+    subspaces; each sub-vector gets the nearest codebook sub-vector
+    (rows of `codebook`, numbered by `code`; ties to the lower code) and
+    the codes pivot to one wide (vec_id, *keys, c0..c3) row. Queries
+    (`is_query` rows of `base`) get a (PQ_M x codes) squared-L2 distance
+    table; a candidate's ADC distance is its four table lookups summed
+    left to right, joined on equal `keys` (IVFPQ searches the query's
+    own cell). The ADC top k (adc_dist ASC, neighbor_id) is re-ranked
+    against the exact full-vector distance from `vecs`. Output
+    (query_id, neighbor_id, adc_dist, exact_dist, rk).
+
+    `pin_table` pins the distance table: the four ADC joins each read it,
+    so an unpinned `base` would re-derive its scan per join."""
+    cb = _subspaces(codebook, vec, "cv", code)
+    sub = _subspaces(base, vec, "sv", "vec_id", *keys)
+    kw = W.partitionBy("vec_id", "m").orderBy(F.col("d").asc(), F.col("code"))
+    codes = (
+        sub.join(F.broadcast(cb), "m")
+        .select("vec_id", *keys, "m", "code", l2sq(F.col("sv"), F.col("cv")).alias("d"))
+        .withColumn("krk", F.row_number().over(kw))
+        .filter(F.col("krk") == 1)
+    )
+    wide = codes.groupBy("vec_id", *keys).agg(
+        *[F.max(F.when(F.col("m") == m, F.col("code"))).alias(f"c{m}") for m in range(PQ_M)]
+    )
+    dtab = (
+        sub.filter(is_query)
+        .withColumnRenamed("vec_id", "query_id")
+        .join(F.broadcast(cb), "m")
+        .select("query_id", *keys, "m", "code", l2sq(F.col("sv"), F.col("cv")).alias("d"))
+    )
+    if pin_table:
+        dtab = dtab.localCheckpoint(eager=False)
+    adc = wide
+    for m in range(PQ_M):
+        first = m == 0
+        dm = dtab.filter(F.col("m") == m).select(
+            "query_id",
+            *(keys if first else ()),
+            F.col("code").alias(f"c{m}"),
+            F.col("d").alias(f"d{m}"),
+        )
+        adc = adc.join(F.broadcast(dm), [f"c{m}", *keys] if first else ["query_id", f"c{m}"])
+    adc = adc.filter(not_self()).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        reduce(operator.add, [F.col(f"d{m}") for m in range(PQ_M)]).alias("adc_dist"),
+    )
+    top = _top_rows(adc, k, F.col("adc_dist").asc(), "neighbor_id")
+    qv = vecs.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    nv = vecs.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"))
+    return (
+        top.join(F.broadcast(qv), "query_id")
+        .join(nv, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            "adc_dist",
+            l2sq(F.col("qv"), F.col("nv")).alias("exact_dist"),
+            "rk",
+        )
+    )
+
+
+def ivfpq_topk(vecs: DataFrame, is_query: Column, k: int) -> DataFrame:
+    """IVFPQ: each vector's residual against its IVF cell centroid
+    (`ivf_cells`, crk = 1; pinned, every PQ stage reads it) is product-
+    quantized with a residual codebook seeded from vectors 20-23 (seeds
+    0-3 are cell centroids, whose residuals are zero), and queries search
+    only their own cell (nprobe = 1). Output as `pq_topk`."""
+    assigned = (
+        ivf_cells(vecs, "cv")
+        .filter(F.col("crk") == 1)
+        .select(
+            "vec_id",
+            "cell",
+            F.zip_with(
+                "embedding", "cv", lambda x, y: x.cast("double") - y.cast("double")
+            ).alias("res"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    codebook = assigned.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 24)).select(
+        (F.col("vec_id") - 20).alias("code"), "res"
+    )
+    return pq_topk(vecs, assigned, codebook, "code", is_query, k, vec="res", keys=("cell",))

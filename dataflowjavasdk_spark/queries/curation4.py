@@ -216,22 +216,8 @@ def rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     free. Document text joins AFTER the top-k cut — only survivors'
     payloads move."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    scored = emb.join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    top = scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= 20
-    )
+    q = S.query_set(emb, F.col("vec_id") < 5)
+    top = S.top_k(emb, q, S.cosine(F.col("qv"), F.col("embedding")), 20)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", F.size(tokens("text")).alias("n_tokens")
     )

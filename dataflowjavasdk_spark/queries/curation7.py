@@ -93,8 +93,8 @@ def semantic_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-correct Spark shape:
 
     1. ASSIGN each document's embedding to its nearest of 8 fixed
-       centroids (the IVF convention shared with kmeans_ivf_refined /
-       semdedup_prune) — constant centroid relation broadcasts, the
+       centroids (the vector-search kit's `ivf_cells`,
+       functions/similarity.py) — constant centroid relation broadcasts, the
        corpus streams map-side, the bit-identical left-fold cosine ranks
        with vec_id tiebreaks.
     2. ORDER within each (cell, shard) by centroid affinity (ccos DESC,
@@ -114,18 +114,8 @@ def semantic_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell, shard) that BOTH window functions and the final aggregation
     reuse; everything else is whole-stage codegen, python_evals=0."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("cv")
-    )
-    cw = W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cell"))
     asg = (
-        emb.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "cell",
-            S.cosine(F.col("embedding"), F.col("cv")).alias("ccos"),
-        )
-        .withColumn("crk", F.row_number().over(cw))
+        S.ivf_cells(emb)
         .filter(F.col("crk") == 1)
         .select(
             "vec_id", "cell", "ccos", (F.col("vec_id") % _N_SHARDS).alias("shard")

@@ -231,36 +231,21 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only wide ops are the per-vector argmax window and the final
     per-query top-k — both over bounded inputs. nprobe>1 = relax crk<=n."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
-    )
-    scored_cent = emb.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "embedding",
-        "centroid_id",
-        S.cosine(F.col("embedding"), F.col("cv")).alias("ccos"),
-    )
-    cw = W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("centroid_id"))
     cells = (
-        scored_cent.withColumn("crk", F.row_number().over(cw))
+        S.ivf_cells(emb)
         .filter(F.col("crk") == 1)
-        .select("vec_id", "embedding", F.col("centroid_id").alias("cell"))
+        .select("vec_id", "embedding", "cell")
     )
-    q = cells.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 10)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("cell").alias("qcell"),
+    q = S.query_set(
+        cells, (F.col("vec_id") >= 5) & (F.col("vec_id") < 10), F.col("cell").alias("qcell")
     )
-    scored = cells.join(
-        F.broadcast(q),
-        (F.col("cell") == F.col("qcell")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
+    return S.top_k(
+        cells,
+        q,
+        S.cosine(F.col("qv"), F.col("embedding")),
+        5,
+        on=(F.col("cell") == F.col("qcell")) & S.not_self(),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
 
 
 _SQL_L2SQ = """
@@ -370,89 +355,20 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate rows). The full-precision embedding column is read ONLY
     for the 25 re-ranked pairs."""
     emb = load_table(spark, sf_dir, "embeddings")
-    M, K, SUB = 4, 4, 16
-
-    def subspaces(df: DataFrame, id_out: str, vec_out: str) -> DataFrame:
-        return df.select(
-            F.col("vec_id").alias(id_out),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).cast("long").alias("m"),
-                            F.slice("embedding", m * SUB + 1, SUB).alias(vec_out),
-                        )
-                        for m in range(M)
-                    ]
-                )
-            ).alias("s"),
-        ).select(id_out, "s.m", f"s.{vec_out}")
-
-    cb = subspaces(emb.filter(F.col("vec_id") < K), "centroid_id", "cv")
-    sub = subspaces(emb, "vec_id", "sv")
-    assigned = sub.join(F.broadcast(cb), "m").select(
-        "vec_id", "m", "centroid_id", S.l2sq(F.col("sv"), F.col("cv")).alias("d")
-    )
-    cw = W.partitionBy("vec_id", "m").orderBy(F.col("d").asc(), F.col("centroid_id"))
-    codes = (
-        assigned.withColumn("crk", F.row_number().over(cw))
-        .filter(F.col("crk") == 1)
-        .select("vec_id", "m", F.col("centroid_id").alias("code"))
-    )
-    wide = codes.groupBy("vec_id").agg(
-        *[
-            F.max(F.when(F.col("m") == m, F.col("code"))).alias(f"c{m}")
-            for m in range(M)
-        ]
-    )
     # Pin the distance table (queries x M x K rows, constant-size): the
-    # four per-subspace ADC joins below each reference it, and without
-    # the pin Spark re-derives it per branch — 4 extra pruned scan pairs
-    # of the embeddings relation (the scan-discipline audit caught 12
-    # refs vs the allowance of 4). Pinning the TABLE, not the corpus,
-    # is the 100 TB shape: it is the broadcast-sized artifact.
-    dtab = (
-        sub.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
-        .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id", "m", "centroid_id",
-            S.l2sq(F.col("sv"), F.col("cv")).alias("d"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    adc = wide
-    for m in range(M):
-        dm = dtab.filter(F.col("m") == m).select(
-            "query_id",
-            F.col("centroid_id").alias(f"c{m}"),
-            F.col("d").alias(f"d{m}"),
-        )
-        on = [f"c{m}"] if m == 0 else ["query_id", f"c{m}"]
-        adc = adc.join(F.broadcast(dm), on)
-    adc = adc.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (
-            F.col("d0") + F.col("d1") + F.col("d2") + F.col("d3")
-        ).alias("adc_dist"),
-    )
-    rw = W.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
-    top = adc.withColumn("rk", F.row_number().over(rw)).filter(F.col("rk") <= 5)
-    qv = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    nv = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv")
-    )
-    return (
-        top.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_dist",
-            S.l2sq(F.col("qv"), F.col("nv")).alias("exact_dist"),
-            "rk",
-        )
+    # four per-subspace ADC joins each reference it, and without the pin
+    # Spark re-derives it per branch — 4 extra pruned scan pairs of the
+    # embeddings relation (the scan-discipline audit caught 12 refs vs
+    # the allowance of 4). Pinning the TABLE, not the corpus, is the
+    # 100 TB shape: it is the broadcast-sized artifact.
+    return S.pq_topk(
+        emb,
+        base=emb,
+        codebook=emb.filter(F.col("vec_id") < 4),
+        code=F.col("vec_id").alias("code"),
+        is_query=(F.col("vec_id") >= 10) & (F.col("vec_id") < 15),
+        k=5,
+        pin_table=True,
     )
 
 
@@ -721,7 +637,7 @@ def json_deadletter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.rk <= 5
     """,
 )
-def ivfpq_adc_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+def ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ (round 5) — the FAISS-style composition that completes the
     similarity-search ladder (brute-force → LSH → IVF → IVF+multiprobe →
     k-means-refined → PQ → IVFPQ): a coarse quantizer assigns every
@@ -744,125 +660,7 @@ def ivfpq_adc_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     rows (the IVF pruning), ADC is table lookups, and the full-precision
     embedding column is read only for the 25 re-ranked pairs."""
     emb = load_table(spark, sf_dir, "embeddings")
-    M, K, SUB = 4, 4, 16
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("cv")
-    )
-    cw = W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cell"))
-    assigned = (
-        emb.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "cell",
-            "cv",
-            S.cosine(F.col("embedding"), F.col("cv")).alias("ccos"),
-        )
-        .withColumn("crk", F.row_number().over(cw))
-        .filter(F.col("crk") == 1)
-        .select(
-            "vec_id",
-            "cell",
-            F.zip_with(
-                "embedding", "cv", lambda x, y: x.cast("double") - y.cast("double")
-            ).alias("res"),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-    def res_subspaces(df: DataFrame, id_cols: list, vec_out: str) -> DataFrame:
-        return df.select(
-            *id_cols,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).cast("long").alias("m"),
-                            F.slice("res", m * SUB + 1, SUB).alias(vec_out),
-                        )
-                        for m in range(M)
-                    ]
-                )
-            ).alias("s"),
-        ).select(*id_cols, "s.m", f"s.{vec_out}")
-
-    pq_cb = res_subspaces(
-        assigned.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 24)).select(
-            (F.col("vec_id") - 20).alias("code"), "res"
-        ),
-        ["code"],
-        "cv",
-    )
-    sub = res_subspaces(assigned, ["vec_id", "cell"], "sv")
-    krk = W.partitionBy("vec_id", "m").orderBy(F.col("d").asc(), F.col("code"))
-    codes = (
-        sub.join(F.broadcast(pq_cb), "m")
-        .select(
-            "vec_id", "cell", "m", "code",
-            S.l2sq(F.col("sv"), F.col("cv")).alias("d"),
-        )
-        .withColumn("krk", F.row_number().over(krk))
-        .filter(F.col("krk") == 1)
-    )
-    wide = codes.groupBy("vec_id", "cell").agg(
-        *[
-            F.max(F.when(F.col("m") == m, F.col("code"))).alias(f"c{m}")
-            for m in range(M)
-        ]
-    )
-    dtab = (
-        sub.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cell").alias("qcell"),
-            "m",
-            "sv",
-        )
-        .join(F.broadcast(pq_cb), "m")
-        .select(
-            "query_id", "qcell", "m", "code",
-            S.l2sq(F.col("sv"), F.col("cv")).alias("d"),
-        )
-    )
-    adc = wide
-    for m in range(M):
-        dm = dtab.filter(F.col("m") == m).select(
-            "query_id",
-            *(["qcell"] if m == 0 else []),
-            F.col("code").alias(f"c{m}"),
-            F.col("d").alias(f"d{m}"),
-        )
-        if m == 0:
-            adc = adc.join(
-                F.broadcast(dm),
-                (adc["c0"] == dm["c0"]) & (adc["cell"] == dm["qcell"]),
-            ).drop(dm["c0"])
-        else:
-            adc = adc.join(F.broadcast(dm), ["query_id", f"c{m}"])
-    adc = adc.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (F.col("d0") + F.col("d1") + F.col("d2") + F.col("d3")).alias("adc_dist"),
-    )
-    rw = W.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    top = adc.withColumn("rk", F.row_number().over(rw)).filter(F.col("rk") <= k)
-    qv = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    nv = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv")
-    )
-    return (
-        top.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_dist",
-            S.l2sq(F.col("qv"), F.col("nv")).alias("exact_dist"),
-            "rk",
-        )
-    )
+    return S.ivfpq_topk(emb, (F.col("vec_id") >= 10) & (F.col("vec_id") < 15), 5)
 
 
 @query(
@@ -989,38 +787,20 @@ def ivf_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets from distinct cells are disjoint, so no dedup step is needed.
     Fully SQL-oracled like the single-probe variant."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
+    assigned = S.ivf_cells(emb)
+    cells = assigned.filter(F.col("crk") == 1).select("vec_id", "embedding", "cell")
+    probes = S.query_set(
+        assigned,
+        (F.col("crk") <= 2) & (F.col("vec_id") >= 5) & (F.col("vec_id") < 10),
+        F.col("cell").alias("qcell"),
     )
-    scored_cent = emb.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "embedding",
-        "centroid_id",
-        S.cosine(F.col("embedding"), F.col("cv")).alias("ccos"),
+    return S.top_k(
+        cells,
+        probes,
+        S.cosine(F.col("qv"), F.col("embedding")),
+        5,
+        on=(F.col("cell") == F.col("qcell")) & S.not_self(),
     )
-    cw = W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("centroid_id"))
-    assigned = scored_cent.withColumn("crk", F.row_number().over(cw))
-    cells = assigned.filter(F.col("crk") == 1).select(
-        "vec_id", "embedding", F.col("centroid_id").alias("cell")
-    )
-    probes = assigned.filter(
-        (F.col("crk") <= 2) & (F.col("vec_id") >= 5) & (F.col("vec_id") < 10)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("centroid_id").alias("cell"),
-    )
-    scored = (
-        cells.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
 
 
 @query(

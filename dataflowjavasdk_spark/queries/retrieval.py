@@ -121,22 +121,10 @@ def _dense_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataflowjavasdk_spark.functions import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    dq = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    scored = emb.join(
-        F.broadcast(dq), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("doc_id"),
-        S.cosine(F.col("qv"), F.col("embedding")).alias("s"),
-    )
-    wd = W.partitionBy("query_id").orderBy(F.col("s").desc(), "doc_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(wd))
-        .filter(F.col("rk") <= _BM25_K)
-        .select("query_id", "doc_id", "rk")
-    )
+    dq = S.query_set(emb, F.col("vec_id") < 3)
+    return S.top_k(
+        emb, dq, S.cosine(F.col("qv"), F.col("embedding")), _BM25_K, name="s", neighbor="doc_id"
+    ).select("query_id", "doc_id", "rk")
 
 
 def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,30 +336,22 @@ def embedding_compression_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice("embedding", 1, 16).alias("v16"),
         codes.alias("q8"),
     ).localCheckpoint(eager=False)
-    in_q = (F.col("vec_id") >= 10) & (F.col("vec_id") < 15)
-    qs = reps.filter(in_q).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
+    from dataflowjavasdk_spark.functions import similarity as S
+
+    qs = S.query_set(
+        reps,
+        (F.col("vec_id") >= 10) & (F.col("vec_id") < 15),
         F.col("v32").alias("qv32"),
         F.col("v16").alias("qv16"),
         F.col("q8").alias("qq8"),
     )
 
     def topk(score_col) -> DataFrame:
-        scored = reps.join(
-            F.broadcast(qs), F.col("vec_id") != F.col("query_id")
-        ).select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), score_col.alias("s")
-        )
-        w = W.partitionBy("query_id").orderBy(F.col("s").desc(), "neighbor_id")
         return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 10)
+            S.top_k(reps, qs, score_col, 10, name="s")
             .select("query_id", "neighbor_id")
             .localCheckpoint(eager=False)
         )
-
-    from dataflowjavasdk_spark.functions import similarity as S
 
     full_top = topk(S.cosine(F.col("qv"), F.col("embedding")))
     d32_top = topk(S.cosine(F.col("qv32"), F.col("v32")))

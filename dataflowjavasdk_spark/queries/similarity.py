@@ -59,19 +59,8 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     window row_number over the scored (small) side. At 100 TB you shard
     the query set and keep the corpus scan single-pass."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    scored = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+    q = S.query_set(emb, F.col("vec_id") < 5)
+    return S.top_k(emb, q, S.cosine(F.col("qv"), F.col("embedding")), 5)
 
 
 @query(
@@ -107,27 +96,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is additionally unit-tested (tests/test_dedup_similarity.py).
     At scale: multiple hash tables (OR-amplification) raise recall; each
     is one more bucket column, same join shape."""
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "bucket", S.random_hyperplane_bucket(F.col("embedding"), planes=8, dim=64)
-    )
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("bucket").alias("qbucket"),
-    )
-    scored = (
-        emb.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+    tabled = S.lsh_tables(load_table(spark, sf_dir, "embeddings"), tables=1)
+    return S.lsh_topk(tabled, F.col("vec_id") < 5, 5, tables=1)
 
 
 @query(
@@ -231,35 +201,8 @@ def ann_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR never becomes a non-equi join) + distinct. Fully SQL-oracled (both
     plane families are md5-deterministic); recall ≥ the single-table
     query is additionally asserted in tests/test_dedup_similarity.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    tabled = emb.withColumn(
-        "b0", S.random_hyperplane_bucket(F.col("embedding"), planes=8, dim=64)
-    ).withColumn(
-        # a disjoint plane family: offset the plane index namespace
-        "b1",
-        S.random_hyperplane_bucket(F.col("embedding"), planes=16, dim=64) % 256,
-    )
-    q = tabled.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("b0").alias("qb0"),
-        F.col("b1").alias("qb1"),
-    )
-    def table_join(bucket_col: str, q_bucket: str):
-        return tabled.join(
-            F.broadcast(q),
-            (F.col(bucket_col) == F.col(q_bucket))
-            & (F.col("vec_id") != F.col("query_id")),
-        ).select("query_id", F.col("vec_id").alias("neighbor_id"), "qv", "embedding")
-
-    cands = table_join("b0", "qb0").unionByName(table_join("b1", "qb1")).distinct()
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+    tabled = S.lsh_tables(load_table(spark, sf_dir, "embeddings"))
+    return S.lsh_topk(tabled, F.col("vec_id") < 5, 5, tables=2)
 
 
 @query(
@@ -537,120 +480,31 @@ def ann_recall_report_k20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    from dataflowjavasdk_spark.queries.examples import ivfpq_adc_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
     in_queries = (F.col("vec_id") >= 10) & (F.col("vec_id") < 15)
+    cos = S.cosine(F.col("qv"), F.col("embedding"))
 
-    def top5(scored: DataFrame) -> DataFrame:
-        w = W.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("query_id", "neighbor_id")
-        )
-
-    q = emb.filter(in_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    q = S.query_set(emb, in_queries)
+    exact_top = (
+        S.top_k(emb, q, cos, k).select("query_id", "neighbor_id").localCheckpoint(eager=False)
     )
-    exact_top = top5(
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
-    ).localCheckpoint(eager=False)
-
-    # LSH single table + OR-amplified two-table (the ann_lsh_topk /
-    # ann_lsh_multitable constructions on the common query set)
-    tabled = emb.withColumn(
-        "b0", S.random_hyperplane_bucket(F.col("embedding"), planes=8, dim=64)
-    ).withColumn(
-        "b1",
-        S.random_hyperplane_bucket(F.col("embedding"), planes=16, dim=64) % 256,
-    )
-    qb = tabled.filter(in_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("b0").alias("qb0"),
-        F.col("b1").alias("qb1"),
-    )
-    lsh_top = top5(
-        tabled.join(
-            F.broadcast(qb),
-            (F.col("b0") == F.col("qb0")) & (F.col("vec_id") != F.col("query_id")),
-        ).select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
-    )
-
-    def table_join(bucket_col: str, q_bucket: str) -> DataFrame:
-        return tabled.join(
-            F.broadcast(qb),
-            (F.col(bucket_col) == F.col(q_bucket))
-            & (F.col("vec_id") != F.col("query_id")),
-        ).select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), "qv", "embedding"
-        )
-
-    mt_top = top5(
-        table_join("b0", "qb0")
-        .unionByName(table_join("b1", "qb1"))
-        .distinct()
-        .select(
-            "query_id",
-            "neighbor_id",
-            S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-        )
-    )
-
-    # IVF single- and multi-probe on the common query set. cell_rk is
-    # pinned: cells + both probe sets reference it.
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("cv")
-    )
-    cw = W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cell"))
-    cell_rk = (
-        emb.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "cell",
-            S.cosine(F.col("embedding"), F.col("cv")).alias("ccos"),
-        )
-        .withColumn("crk", F.row_number().over(cw))
-        .localCheckpoint(eager=False)
-    )
+    tabled = S.lsh_tables(emb)  # both legs probe the same two tables
+    # cell_rk is pinned: cells + both probe sets reference it
+    cell_rk = S.ivf_cells(emb).localCheckpoint(eager=False)
     cells = cell_rk.filter(F.col("crk") == 1).select("vec_id", "embedding", "cell")
 
     def ivf_top(nprobe: int) -> DataFrame:
-        probes = cell_rk.filter((F.col("crk") <= nprobe) & in_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            "cell",
+        probes = S.query_set(
+            cell_rk, (F.col("crk") <= nprobe) & in_queries, F.col("cell").alias("qcell")
         )
-        return top5(
-            cells.join(F.broadcast(probes), "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-            )
-        )
-
-    pq_top = ivfpq_adc_topk(spark, sf_dir, k=k).select("query_id", "neighbor_id")
+        return S.top_k(cells, probes, cos, k, on=(F.col("cell") == F.col("qcell")) & S.not_self())
 
     ladder = [
-        ("lsh", lsh_top),
-        ("lsh_multitable", mt_top),
+        ("lsh", S.lsh_topk(tabled, in_queries, k, tables=1)),
+        ("lsh_multitable", S.lsh_topk(tabled, in_queries, k, tables=2)),
         ("ivf", ivf_top(1)),
         ("ivf_multiprobe", ivf_top(2)),
-        ("ivfpq", pq_top),
+        ("ivfpq", S.ivfpq_topk(emb, in_queries, k)),
     ]
     exact_g = exact_top.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
     # Pin the 5-row query-id spine: each of the five variant reports
@@ -659,7 +513,7 @@ def _ann_recall(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     qids = q.select("query_id").localCheckpoint(eager=False)
     out = None
     for name, top in ladder:
-        top = top.localCheckpoint(eager=False)
+        top = top.select("query_id", "neighbor_id").localCheckpoint(eager=False)
         ann_g = top.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_ann"))
         hits = (
             top.join(exact_top, ["query_id", "neighbor_id"])
@@ -735,10 +589,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine is the bit-identical JVM fold, so the threshold and priority
     comparisons can never disagree cross-engine."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("cv")
-    )
-    cw = W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cell"))
     # Round 11 (guide §4.2 / §1.2 per-task work): carry each member's
     # squared norm through the pin so the pairwise dominance predicate
     # evaluates ONE 64-element fold per pair (the dot) instead of three
@@ -746,15 +596,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the precomputed values is the identical IEEE sequence the inline
     # cosine performed, so every pair's cosine is bit-identical.
     members = (
-        emb.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "cell",
-            S.cosine(F.col("embedding"), F.col("cv")).alias("ccos"),
-            S.norm2(F.col("embedding")).alias("nrm"),
-        )
-        .withColumn("crk", F.row_number().over(cw))
+        S.ivf_cells(emb, S.norm2(F.col("embedding")).alias("nrm"))
         .filter(F.col("crk") == 1)
         .drop("crk")
         .localCheckpoint(eager=False)
@@ -828,24 +670,14 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive can never be mined as negatives — the standard
     false-negative guard."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("label").alias("qlabel"),
-    )
-    scored = emb.join(
-        F.broadcast(q), F.col("label") != F.col("qlabel")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neg_label"),
-        S.cosine(F.col("qv"), F.col("embedding")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= 5
+    q = S.query_set(emb, F.col("vec_id") < 5, F.col("label").alias("qlabel"))
+    return S.top_k(
+        emb,
+        q,
+        S.cosine(F.col("qv"), F.col("embedding")),
+        5,
+        on=F.col("label") != F.col("qlabel"),
+        carry=(F.col("label").alias("neg_label"),),
     )
 
 
@@ -905,9 +737,7 @@ def late_interaction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape (and its cost, ~n_sub^2 fused multiply-adds per pair) is the
     same."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
+    q = S.query_set(emb, F.col("vec_id") < 5)
 
     def sl(col, m):
         return F.slice(col, m * 16 + 1, 16)
@@ -918,16 +748,4 @@ def late_interaction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for mq in range(4)
         )
 
-    scored = emb.join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        li_score(F.col("qv"), F.col("embedding")).alias("li_score"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("li_score").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= 5
-    )
+    return S.top_k(emb, q, li_score(F.col("qv"), F.col("embedding")), 5, name="li_score")

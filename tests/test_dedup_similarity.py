@@ -921,3 +921,89 @@ def test_minhash_signature_matches_sql_twin(spark):
         ).fetchone()[0]
         assert list(sig) == list(got[i]), f"doc {i}"
     assert list(got[2]) == [S.MINHASH_SENTINEL] * 16
+
+
+def test_vector_kit_breaks_exact_ties_by_id(spark):
+    """Exact ties in the vector-search kit resolve by id, whatever the
+    input order: two identical centroids assign to the lower cell, equal
+    scores rank the lower neighbor_id first, a query never retrieves
+    itself, and nprobe=2 probes exactly the query's two best cells."""
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),  # centroid 1 == centroid 0
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (2, [0.0, 1.0, 0.0, 0.0]),
+        (3, [0.0, 0.0, 1.0, 0.0]),
+        (4, [0.0, 0.0, 0.0, 1.0]),
+        (5, [-1.0, 0.0, 0.0, 0.0]),
+        (6, [0.0, -1.0, 0.0, 0.0]),
+        (7, [0.0, 0.0, -1.0, 0.0]),
+        (12, [1.0, 0.5, 0.0, 0.0]),  # 11, 10 and query 12 are one point
+        (11, [1.0, 0.5, 0.0, 0.0]),
+        (10, [1.0, 0.5, 0.0, 0.0]),
+        (21, [0.0, 0.1, 1.0, 0.0]),  # cell 3
+        (20, [0.0, 1.0, 0.1, 0.0]),  # cell 2
+        (22, [0.0, 0.0, 0.1, 1.0]),  # cell 4, outside the probe
+        (30, [0.0, 1.0, 0.9, 0.0]),  # query between cells 2 and 3
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cos = S.cosine(F.col("qv"), F.col("embedding"))
+
+    cell_rk = S.ivf_cells(emb).localCheckpoint()
+    ranks = {
+        (r["vec_id"], r["crk"]): r["cell"]
+        for r in cell_rk.filter(F.col("crk") <= 2).collect()
+    }
+    for v in (10, 11, 12):
+        assert (ranks[(v, 1)], ranks[(v, 2)]) == (0, 1)
+    assert (ranks[(30, 1)], ranks[(30, 2)]) == (2, 3)
+
+    # one job: brute-force top 3 of query 12, nprobe=2 search of query 30
+    cells = cell_rk.filter(F.col("crk") == 1).select("vec_id", "embedding", "cell")
+    probes = S.query_set(
+        cell_rk, (F.col("crk") <= 2) & (F.col("vec_id") == 30), F.col("cell").alias("qcell")
+    )
+    got = (
+        S.top_k(emb, S.query_set(emb, F.col("vec_id") == 12), cos, 3)
+        .unionByName(
+            S.top_k(cells, probes, cos, 100, on=(F.col("cell") == F.col("qcell")) & S.not_self())
+        )
+        .collect()
+    )
+    top = sorted((r for r in got if r["query_id"] == 12), key=lambda r: r["rk"])
+    assert [(r["neighbor_id"], r["rk"]) for r in top] == [(10, 1), (11, 2), (0, 3)]
+    assert top[0]["cosine"] == top[1]["cosine"]
+    assert {r["neighbor_id"] for r in got if r["query_id"] == 30} == {2, 3, 20, 21}
+
+
+def test_vector_search_blocks_live_only_in_the_kit():
+    """The IVF centroid-cosine assignment and the PQ subspace explode have
+    one home, the vector-search kit in functions/similarity.py: no query
+    module builds either by hand."""
+    import os
+    import re
+
+    import dataflowjavasdk_spark
+
+    patterns = {
+        "IVF centroid cosine": re.compile(
+            r'(?<![\w.])(?:S\.)?cosine\(\s*F\.col\("embedding"\),\s*F\.col\("cv"\)\s*\)'
+        ),
+        "PQ subspace explode": re.compile(
+            r"F\.explode\(\s*F\.array\(\s*\*\[\s*F\.struct\(\s*F\.lit\(m\)"
+        ),
+    }
+    pkg = os.path.dirname(dataflowjavasdk_spark.__file__)
+    qdir = os.path.join(pkg, "queries")
+    sites: dict[str, list[str]] = {name: [] for name in patterns}
+    for f in sorted(os.listdir(qdir)):
+        if not f.endswith(".py"):
+            continue
+        with open(os.path.join(qdir, f), encoding="utf-8") as fh:
+            text = fh.read()
+        for name, pat in patterns.items():
+            for m in pat.finditer(text):
+                sites[name].append(f"queries/{f}:{text.count(chr(10), 0, m.start()) + 1}")
+    assert sites == {name: [] for name in patterns}
+    with open(os.path.join(pkg, "functions", "similarity.py"), encoding="utf-8") as fh:
+        kit = fh.read()
+    assert all(pat.search(kit) for pat in patterns.values())

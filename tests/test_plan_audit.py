@@ -263,7 +263,7 @@ def test_no_cartesian_products_anywhere(spark):
         "hybrid_rrf_fusion",            # composes both shapes above
         "retrieval_label_precision",    # composes all three retrieval legs
         "semantic_context_pack",        # 8-row centroid broadcast (the
-                                        # kmeans_ivf_refined convention)
+                                        # vector-search kit's ivf_cells)
         "unimax_budget_allocation",     # 1-row budget + 1-row level
                                         # singleton broadcasts
         "source_unigram_divergence",    # #sources-row profile self-join
