@@ -8,6 +8,7 @@ Structured Streaming plans. No custom runner, scheduler, shuffle, or IR —
 Catalyst + Tungsten are the optimizer and execution engine (SURVEY.md §3-4).
 """
 
+from dataflowjavasdk_spark import _zipcache  # noqa: F401  (first: see its docstring)
 from dataflowjavasdk_spark.session import get_spark, configure_session
 from dataflowjavasdk_spark.sources.tables import load_table, load_tables, TABLE_NAMES
 

@@ -118,10 +118,12 @@ def decode_fanout(spark: SparkSession, sf_dir: str, name: str = "documents",
     constant tuned for one deployment). The old fan-out was a flat
     ``defaultParallelism`` (32 locally): at small inputs that is dozens of
     near-empty Python tasks whose fixed Arrow round-trip cost dominates
-    the stage (measured sf0.1: a trivial 32-task mapInPandas costs
-    ~0.6 s wall on this host while the actual 5k-row decode work is
-    ~0.2 s); at large inputs it UNDER-splits (32 tasks for 500k+ rows
-    pins one long wave per core with no AQE/straggler granularity).
+    the stage (a trivial 32-task mapInPandas over 5k rows costs ~0.55 s
+    warm on local[4] while the actual 5k-row decode work is ~0.2 s; it
+    was 2.0-2.4 s while every Python task re-read its import-path
+    archives, see `_zipcache.py`); at large inputs it UNDER-splits (32
+    tasks for 500k+ rows pins one long wave per core with no
+    AQE/straggler granularity).
 
     Sizing: pick ``rows_per_task`` ≈ 0.2 s of decode work per task —
     enough to amortize the per-task Python round trip, small enough to
