@@ -4,7 +4,13 @@ The reference's stateful DoFn surface — `@StateId` ValueState / BagState /
 CombiningState, `@TimerId` event-time timers, scoped per key — recreated on
 Structured Streaming's stateful operator (`applyInPandasWithState`, the
 GroupState kernel): all named state cells serialize into one JSON state
-blob, and the single event-time timer maps to EventTimeTimeout.
+blob, and the single event-time timer maps to EventTimeTimeout. The
+handle also shows the key's input watermark (`watermark_ms`), which
+event-time logic needs to tell on-time data from late.
+
+This is the engine's one call of the stateful operator: both trigger
+kernels (streaming/triggers.py) are per-key DoFns run by
+`stateful_par_do`, holding each key's open window cells in one value.
 
 Usage (the Beam idiom, vectorized):
 
@@ -36,13 +42,20 @@ class KeyedState:
 
     value/set → ValueState; bag/bag_add → BagState (append-only list);
     set_timer/timer_fired → a single event-time @TimerId (Beam allows many;
-    one per key covers the window/GC patterns — register the earliest)."""
+    one per key covers the window/GC patterns — register the earliest);
+    watermark_ms → the input watermark (epoch ms) the step runs at: rows
+    at or behind it were dropped before the step."""
 
-    def __init__(self, cells: dict, timer_fired: bool):
+    def __init__(self, cells: dict, timer_fired: bool, watermark_ms: int):
         self._cells = cells
         self.timer_fired = timer_fired
+        self._watermark_ms = watermark_ms
         self._timer_ms: int | None = None
         self.removed = False
+
+    @property
+    def watermark_ms(self) -> int:
+        return self._watermark_ms
 
     def value(self, name: str, default=None):
         return self._cells.get("v:" + name, default)
@@ -93,7 +106,7 @@ def stateful_par_do(
         pending = cells.pop("t:pending", None)
         if fired:
             pending = None  # the timer is spent
-        st = KeyedState(cells, timer_fired=fired)
+        st = KeyedState(cells, fired, group_state.getCurrentWatermarkMs())
         batches = [p for p in pdfs if len(p)]
         rows = pd.concat(batches) if batches else pd.DataFrame()
         out = fn(key, rows, st)
@@ -105,9 +118,7 @@ def stateful_par_do(
                 st._cells["t:pending"] = timer
             group_state.update((json.dumps(st._cells),))
             if timer is not None:
-                group_state.setTimeoutTimestamp(
-                    max(timer, group_state.getCurrentWatermarkMs() + 1)
-                )
+                group_state.setTimeoutTimestamp(max(timer, st.watermark_ms + 1))
         if out is not None and len(out):
             yield out
 

@@ -1,4 +1,4 @@
-"""Trigger kernel: the Beam trigger grammar on applyInPandasWithState.
+"""Trigger kernel: the Beam trigger grammar as per-key stateful DoFns.
 
 This is the engine's one genuinely custom component (SURVEY.md §4.2, §7.2):
 the reference implements it as ~1k LoC of runner machinery (historical
@@ -18,18 +18,23 @@ Model implemented per (key, window):
   (identical to the reference's lateness contract)
 
 One pane state machine, `fire_panes`, runs this lifecycle for one window
-cell per step; the two window front-ends call it:
-- `triggered_window_aggregate` (fixed and sliding windows): one stateful
-  shuffle on (key, window); per micro-batch each key-group gets its new
-  rows (Arrow batches) + its GroupState, a tuple converted to and from
-  the cell;
-- `triggered_session_aggregate` (merging windows): one shuffle on the
-  key; the key's open sessions live in one JSON state value and are
-  merged with the new elements' proto-sessions before each step.
-Event-time timeouts fire when the watermark passes window end (on-time
-pane) and window end + lateness (cleanup). Scale: state is per window
-and bounded by lateness GC — the same bound Windmill enforces; swap the
-state store to RocksDB for large key spaces (session.py note).
+cell per step. Both window front-ends are per-key stateful DoFns on
+`stateful_par_do` (streaming/state.py): one shuffle on the key, and the
+key's open window cells live in one cell list in its state. Each
+micro-batch, a key's new rows become proto-cells that merge into the open
+cells, and `fire_panes` runs on each cell with new elements or a due
+wake-up. The front-ends differ only where Beam's non-merging and merging
+WindowFns differ:
+- `triggered_window_aggregate` (fixed and sliding windows): a row's
+  window comes from `F.window`, and a proto-cell joins the open cell of
+  the same window;
+- `triggered_session_aggregate` (merging windows): each element is a
+  proto-session [ts, ts + gap), and overlapping sessions merge.
+Event-time timers fire when the watermark passes window end (on-time
+pane) and window end + lateness (cleanup). Scale: state rows are keys
+with open cells, and each cell is bounded by lateness GC — the same
+bound Windmill enforces; swap the state store to RocksDB for large key
+spaces (session.py note).
 
 Semantic deviations (documented, SURVEY.md §7.2):
 - processing-time triggers evaluate at micro-batch boundaries, not
@@ -42,21 +47,23 @@ Semantic deviations (documented, SURVEY.md §7.2):
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 from time import time as _now
 from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataflowjavasdk_spark.streaming.core import duration_ms
+from dataflowjavasdk_spark.streaming.state import KeyedState, stateful_par_do
 
 # --------------------------------------------------------------------------
-# Trigger grammar (static config objects; per-key dynamic state is a JSON
-# dict living inside the group state, keyed by the trigger's tree path)
+# Trigger grammar (static config objects; per-window dynamic state is a
+# JSON dict living inside the window's cell, keyed by the trigger's tree path)
 # --------------------------------------------------------------------------
 
 
@@ -254,19 +261,6 @@ class AfterWatermark(Trigger):
 ACCUMULATING = "accumulating"
 DISCARDING = "discarding"
 
-_STATE_SCHEMA = (
-    "acc_count long, acc_sum double, pane_count long, pane_sum double, "
-    "pane_index long, on_time_fired boolean, dyn string, "
-    # OutputTimeFn accumulators (epoch ms; -1 = unset): min/max input ts
-    # over all accumulated elements and over the current pane only.
-    "acc_min_ts long, acc_max_ts long, pane_min_ts long, pane_max_ts long"
-)
-# _STATE_SCHEMA's fields, in order, as window-cell keys (see new_cell)
-_STATE_FIELDS = (
-    "acc_n", "acc_sum", "pane_n", "pane_sum", "pane_idx", "on_time_fired",
-    "dyn", "acc_min", "acc_max", "pane_min", "pane_max",
-)
-
 # OutputTimeFn policies (historical sdk/transforms/windowing/OutputTimeFn.java)
 OUTPUT_END_OF_WINDOW = "end_of_window"
 OUTPUT_EARLIEST = "earliest"
@@ -407,17 +401,24 @@ def fire_panes(cell: dict, new_n: int, watermark_ms: int, now_ms: int,
                 # there is new data since the last firing.
                 emit("LATE", is_last=True)
             return Fired(panes, None, None)
-    # Wake when the true watermark passes the window end, then at the GC
-    # horizon end + lateness; on Spark's clock (true − lateness) those are
-    # end − lateness and end, both past Spark's current watermark.
-    return Fired(panes, cell, end if cell["on_time_fired"] else end - lateness)
+    return Fired(panes, cell, _wake_ms(cell, lateness))
 
 
-def _pane_setup(df: DataFrame, keys: list[str], ts_col: str, trigger: AfterWatermark,
-                accumulation: str, allowed_lateness: str, watermark_delay: str,
-                output_time: str | None, closing_behavior: str):
+def _wake_ms(cell: dict, lateness_ms: int) -> int:
+    """When a cell with no new elements next has something to do. Wake
+    when the true watermark passes the window end, then at the GC horizon
+    end + lateness; on Spark's clock (true − lateness) those are
+    end − lateness and end. For a cell `fire_panes` just advanced, both
+    are past Spark's current watermark."""
+    return cell["end"] if cell["on_time_fired"] else cell["end"] - lateness_ms
+
+
+def _pane_setup(df: DataFrame, keys: list[str], trigger: AfterWatermark, accumulation: str,
+                allowed_lateness: str, watermark_delay: str, output_time: str | None,
+                closing_behavior: str):
     """The prologue both kernels share: validate the options and return the
-    watermarked input, the output schema and the pane config."""
+    output schema, the pane config and the watermark delay to declare to
+    Spark."""
     if output_time not in (None, OUTPUT_END_OF_WINDOW, OUTPUT_EARLIEST, OUTPUT_LATEST):
         raise ValueError(f"unknown output_time {output_time!r}")
     if closing_behavior not in (CLOSING_FIRE_IF_NON_EMPTY, CLOSING_FIRE_ALWAYS):
@@ -437,14 +438,96 @@ def _pane_setup(df: DataFrame, keys: list[str], ts_col: str, trigger: AfterWater
     # Beam's drop rule); the kernels convert back via
     #   true_wm = spark_wm + lateness
     # for all pane timing decisions.
-    spark_delay_ms = duration_ms(watermark_delay) + lateness_ms
-    watermarked = df.withWatermark(ts_col, f"{spark_delay_ms} milliseconds")
+    spark_delay = f"{duration_ms(watermark_delay) + lateness_ms} milliseconds"
     cfg = PaneConfig(trigger, accumulation, lateness_ms, output_time, closing_behavior)
-    return watermarked, out_schema, cfg
+    return out_schema, cfg, spark_delay
 
 
-def _ms(ts) -> int:
-    return int(pd.Timestamp(ts).timestamp() * 1000)
+def _epoch_ms(col: pd.Series) -> np.ndarray:
+    """A timestamp column as integer epoch milliseconds."""
+    return col.to_numpy().astype("datetime64[ms]").astype(np.int64)
+
+
+def _same_window(m: dict, c: dict) -> bool:
+    return (m["start"], m["end"]) == (c["start"], c["end"])
+
+
+def _overlaps(m: dict, c: dict) -> bool:
+    return c["start"] < m["end"]
+
+
+def _advance(key: tuple, protos: list[dict], state: KeyedState, cfg: PaneConfig,
+             keys: list[str], merges: Callable[[dict, dict], bool]) -> pd.DataFrame | None:
+    """One key's step, shared by both kernels: Beam's ReduceFnRunner over
+    the key's open windows, kept as one cell list in `state`.
+
+    The batch's proto-cells (each holding only new elements) join the open
+    cells in (start, end) order, and a cell folds into the one before it
+    wherever `merges(before, cell)` holds. A cell with new elements, or
+    whose wake-up is due (strictly below Spark's watermark, the stateful
+    operator's timeout rule), runs `fire_panes`; any other cell has
+    nothing to do and is kept as is. The surviving cells stay in state
+    and the key's timer is the earliest of their wake-ups."""
+    spark_wm = state.watermark_ms
+    watermark_ms = spark_wm + cfg.lateness_ms  # Beam-true
+    now_ms = int(_now() * 1000)
+    cells = [(c, 0) for c in state.value("cells", [])] + [(p, p["acc_n"]) for p in protos]
+    cells.sort(key=lambda cn: (cn[0]["start"], cn[0]["end"]))
+    merged: list[list] = []  # [cell, new elements in it]
+    for c, n in cells:
+        if merged and merges(merged[-1][0], c):
+            merge_cells(merged[-1][0], c)
+            merged[-1][1] += n
+        else:
+            merged.append([c, n])
+
+    out: list[dict] = []
+    keep: list[dict] = []
+    for c, n in merged:
+        if n or _wake_ms(c, cfg.lateness_ms) < spark_wm:
+            fired = fire_panes(c, n, watermark_ms, now_ms, cfg)
+            head = dict(zip(keys, key), window_start=pd.Timestamp(c["start"], unit="ms"),
+                        window_end=pd.Timestamp(c["end"], unit="ms"))
+            out += [{**head, **p} for p in fired.panes]
+            c = fired.cell
+        if c is not None:  # still open, or refinable within lateness
+            keep.append(c)
+
+    if keep:
+        state.set("cells", keep)
+        state.set_timer(min(_wake_ms(c, cfg.lateness_ms) for c in keep))
+    else:
+        state.clear_all()
+    return pd.DataFrame(out) if out else None
+
+
+def window_step(key: tuple, rows: pd.DataFrame, state: KeyedState, *, cfg: PaneConfig,
+                keys: list[str], ts_col: str) -> pd.DataFrame | None:
+    """`triggered_window_aggregate`'s per-key step. Each row carries its
+    window (one row per window under sliding assignment); the new rows of
+    one window form one proto-cell, which joins that window's open cell."""
+    protos = []
+    if len(rows):
+        start, end, ts = (_epoch_ms(rows[c]) for c in ("window_start", "window_end", ts_col))
+        v = rows["__v__"].to_numpy(dtype="float64")
+        order = np.argsort(start, kind="stable")
+        for w in np.split(order, np.flatnonzero(np.diff(start[order])) + 1):
+            protos.append(new_cell(int(start[w[0]]), int(end[w[0]]), len(w), float(v[w].sum()),
+                                   int(ts[w].min()), int(ts[w].max())))
+    return _advance(key, protos, state, cfg, keys, _same_window)
+
+
+def session_step(key: tuple, rows: pd.DataFrame, state: KeyedState, *, cfg: PaneConfig,
+                 keys: list[str], ts_col: str, gap_ms: int) -> pd.DataFrame | None:
+    """`triggered_session_aggregate`'s per-key step. Each new element is a
+    proto-session [ts, ts + gap), and overlapping sessions merge (Beam's
+    Sessions, a merging WindowFn)."""
+    protos = []
+    if len(rows):
+        ts = _epoch_ms(rows[ts_col]).tolist()
+        v = rows["__v__"].to_numpy(dtype="float64").tolist()
+        protos = [new_cell(t, t + gap_ms, 1, x, t, t) for t, x in zip(ts, v)]
+    return _advance(key, protos, state, cfg, keys, _overlaps)
 
 
 def triggered_window_aggregate(
@@ -478,82 +561,33 @@ def triggered_window_aggregate(
     the pane's contents (all accumulated elements under ACCUMULATING,
     only the new ones under DISCARDING) — the reference's
     OutputTimeFn.outputAtEarliest/LatestInputTimestamp.
-    """
-    watermarked, out_schema, cfg = _pane_setup(
-        df, keys, ts_col, trigger, accumulation, allowed_lateness,
-        watermark_delay, output_time, closing_behavior,
-    )
-    lateness_ms = cfg.lateness_ms
 
+    Scale: one shuffle on the key; the key's state holds one cell per
+    open window, and a window's cell is dropped at end + lateness.
+    """
+    out_schema, cfg, spark_delay = _pane_setup(
+        df, keys, trigger, accumulation, allowed_lateness, watermark_delay,
+        output_time, closing_behavior,
+    )
     # Window assignment: fixed (default) or sliding when window_period is
     # given (SlidingWindows.of(size).every(period)). Sliding uses Spark's
-    # native multi-assign — the Expand is map-side and pipelined; each
-    # (key, window) then owns an independent trigger-kernel state cell,
-    # exactly Beam's per-window pane semantics over overlapping windows.
+    # native multi-assign, a map-side Expand pipelined before the shuffle;
+    # each of the key's windows then owns its own cell, exactly Beam's
+    # per-window pane semantics over overlapping windows.
     window_expr = (
         F.window(ts_col, window_size)
         if window_period is None
         else F.window(ts_col, window_size, window_period)
     )
-    windowed = (
-        watermarked
-        .withColumn("__w__", window_expr)
-        .select(
-            *keys,
-            F.col("__w__.start").alias("window_start"),
-            F.col("__w__.end").alias("window_end"),
-            F.col(value_col).alias("__v__"),
-            # keep the watermarked event-time column in the projection:
-            # extracting window fields drops the watermark tag, and the
-            # stateful operator requires a watermarked column to allow
-            # EventTimeTimeout.
-            F.col(ts_col),
-        )
+    windowed = df.withColumn("__w__", window_expr).select(
+        *keys,
+        F.col("__w__.start").alias("window_start"),
+        F.col("__w__.end").alias("window_end"),
+        F.col(value_col).alias("__v__"),
+        F.col(ts_col),
     )
-
-    def process(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        *user_key, w_start, w_end = key
-        start_ms, end_ms = _ms(w_start), _ms(w_end)
-        watermark_ms = state.getCurrentWatermarkMs() + lateness_ms  # Beam-true
-
-        new_n, new_sum = 0, 0.0
-        new_min, new_max = -1, -1
-        for pdf in pdfs:
-            if len(pdf):
-                new_n += len(pdf)
-                new_sum += float(pdf["__v__"].sum())
-                lo, hi = _ms(pdf[ts_col].min()), _ms(pdf[ts_col].max())
-                new_min = lo if new_min < 0 else min(new_min, lo)
-                new_max = max(new_max, hi)
-
-        # GC horizon: stragglers beyond window_end + lateness are dropped —
-        # do not resurrect state the cleanup timeout already removed.
-        if watermark_ms >= end_ms + lateness_ms and not state.exists:
-            return
-
-        cell = new_cell(start_ms, end_ms)
-        if state.exists:
-            cell.update(zip(_STATE_FIELDS, state.get))
-            cell["dyn"] = json.loads(cell["dyn"])
-        merge_cells(cell, new_cell(start_ms, end_ms, new_n, new_sum, new_min, new_max))
-        fired = fire_panes(cell, new_n, watermark_ms, int(_now() * 1000), cfg)
-        if fired.cell is None:
-            state.remove()
-        else:
-            c = dict(fired.cell, dyn=json.dumps(fired.cell["dyn"]))
-            state.update(tuple(c[f] for f in _STATE_FIELDS))
-            state.setTimeoutTimestamp(fired.timeout_ms)
-        if fired.panes:
-            head = dict(zip(keys, user_key), window_start=w_start, window_end=w_end)
-            yield pd.DataFrame([{**head, **p} for p in fired.panes])
-
-    return windowed.groupBy(*keys, "window_start", "window_end").applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="EventTimeTimeout",
-    )
+    step = partial(window_step, cfg=cfg, keys=keys, ts_col=ts_col)
+    return stateful_par_do(windowed, keys, step, out_schema, ts_col, spark_delay)
 
 
 def triggered_session_aggregate(
@@ -592,66 +626,12 @@ def triggered_session_aggregate(
     session's CURRENT end (end − 1 ms) at firing time, and
     EARLIEST/LATEST merge across fused sessions (onMerge takes min/max).
     """
-    gap_ms = duration_ms(gap)
-    watermarked, out_schema, cfg = _pane_setup(
-        df, keys, ts_col, trigger, accumulation, allowed_lateness,
-        watermark_delay, output_time, closing_behavior,
+    out_schema, cfg, spark_delay = _pane_setup(
+        df, keys, trigger, accumulation, allowed_lateness, watermark_delay,
+        output_time, closing_behavior,
     )
-    windowed = watermarked.select(*keys, F.col(value_col).alias("__v__"), F.col(ts_col))
-
-    def process(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        watermark_ms = state.getCurrentWatermarkMs() + cfg.lateness_ms  # Beam-true
-        now_ms = int(_now() * 1000)
-
-        # 1. the open sessions, each with no new elements, plus one
-        # proto-session per new element (Spark's watermark already culled
-        # rows beyond the lateness horizon)
-        cells = [(s, 0) for s in (json.loads(state.get[0])["sessions"] if state.exists else [])]
-        for pdf in pdfs:
-            for ts_v, v in zip(pdf[ts_col], pdf["__v__"]):
-                t_ms = int(pd.Timestamp(ts_v).value // 1_000_000)
-                cells.append((new_cell(t_ms, t_ms + gap_ms, 1, float(v), t_ms, t_ms), 1))
-
-        # 2. merge: sort all intervals, union overlapping ones
-        cells.sort(key=lambda c: (c[0]["start"], c[0]["end"]))
-        sessions: list[dict] = []
-        fresh: list[int] = []  # new elements per merged session
-        for s, n in cells:
-            if sessions and s["start"] < sessions[-1]["end"]:
-                merge_cells(sessions[-1], s)
-                fresh[-1] += n
-            else:
-                sessions.append(s)
-                fresh.append(n)
-
-        # 3. run the pane lifecycle per session
-        rows: list[dict] = []
-        keep: list[dict] = []
-        timeouts: list[int] = []
-        for s, n in zip(sessions, fresh):
-            fired = fire_panes(s, n, watermark_ms, now_ms, cfg)
-            if fired.panes:
-                head = dict(zip(keys, key), window_start=pd.Timestamp(s["start"], unit="ms"),
-                            window_end=pd.Timestamp(s["end"], unit="ms"))
-                rows += [{**head, **p} for p in fired.panes]
-            if fired.cell is not None:  # still refinable within lateness
-                keep.append(fired.cell)
-                timeouts.append(fired.timeout_ms)
-
-        # 4. persist / GC / wake-up
-        if keep:
-            state.update((json.dumps({"sessions": keep}),))
-            state.setTimeoutTimestamp(min(timeouts))
-        elif state.exists:
-            state.remove()
-
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return windowed.groupBy(*keys).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType="sessions string",
-        outputMode="update",
-        timeoutConf="EventTimeTimeout",
+    step = partial(session_step, cfg=cfg, keys=keys, ts_col=ts_col, gap_ms=duration_ms(gap))
+    return stateful_par_do(
+        df.select(*keys, F.col(value_col).alias("__v__"), F.col(ts_col)),
+        keys, step, out_schema, ts_col, spark_delay,
     )
