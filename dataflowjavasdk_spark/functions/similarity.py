@@ -373,24 +373,19 @@ def random_hyperplane_bucket(vec: Column, planes: int = 8, dim: int = 64) -> Col
     md5 in SQL). Cosine-similar vectors land in the same bucket with
     high probability.
 
-    The weight matrix is embedded as array<double> literals
-    (_plane_matrix): same values, same zip_with/fold evaluation order as
-    the original expression form — bit-identity pinned by
-    tests/test_dedup_similarity.py against the md5-expression reference
-    on the full fixture corpus."""
-    mat = _plane_matrix(planes, dim)
-    bucket: Column = F.lit(0)
-    for p in range(planes):
-        w = F.array(*[F.lit(x) for x in mat[p]])
-        plane_dot = F.aggregate(
-            F.zip_with(vec, w, lambda x, wv: x.cast("double") * wv),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        # binary fold: bucket = Σ bit_p · 2^p expressed as acc*2 + bit,
-        # unrolled in the same plane order as the old aggregate-over-bits
-        bucket = bucket * 2 + F.when(plane_dot >= 0, F.lit(1)).otherwise(F.lit(0))
-    return bucket
+    The matrix (_plane_matrix) is one parsed array<array<double>> literal
+    (`repr(x) + "D"` round-trips every double; ~180 py4j commands, where
+    a Column per component sent 3-7k) folded as acc * 2 + bit, each bit
+    the `dot` of the md5-expression form — bit-identity pinned by
+    tests/test_dedup_similarity.py on the full fixture corpus."""
+    rows = ", ".join(
+        "array(" + ", ".join(repr(x) + "D" for x in row) + ")" for row in _plane_matrix(planes, dim)
+    )
+    return F.aggregate(
+        F.expr(f"array({rows})"),
+        F.lit(0),
+        lambda acc, w: acc * 2 + F.when(dot(vec, w) >= 0, 1).otherwise(0),
+    )
 
 
 # --- Vector-search kit -----------------------------------------------------
@@ -477,8 +472,8 @@ def ivf_cells(vecs: DataFrame, *extra) -> DataFrame:
 
 def lsh_tables(vecs: DataFrame, tables: int = len(LSH_TABLES)) -> DataFrame:
     """`vecs` plus one sign-random-projection bucket column per LSH table
-    (b0, b1, ...; see LSH_TABLES). Build once and probe it with
-    `lsh_topk` for any table count."""
+    (b0, b1, ...; see LSH_TABLES), each one matrix literal and one fold
+    (<400 py4j commands for both). Probe it with `lsh_topk`."""
     for t, (planes, mod) in enumerate(LSH_TABLES[:tables]):
         b = random_hyperplane_bucket(F.col("embedding"), planes=planes, dim=64)
         vecs = vecs.withColumn(f"b{t}", b if mod is None else b % mod)
@@ -509,15 +504,22 @@ def lsh_topk(tabled: DataFrame, is_query: Column, k: int, tables: int) -> DataFr
     return _top_rows(scored, k, F.col("cosine").desc(), "neighbor_id")
 
 
+def residual(vec: Column | str, centroid: Column | str) -> Column:
+    """`vec` minus `centroid`, component by component, in double."""
+    return F.zip_with(vec, centroid, lambda x, y: x.cast("double") - y.cast("double"))
+
+
+def pq_slice(vec: Column | str, m: int | Column) -> Column:
+    """The m-th PQ_SUB-dim subspace of `vec`."""
+    return F.slice(vec, m * PQ_SUB + 1, PQ_SUB)
+
+
 def _subspaces(df: DataFrame, vec: str, out: str, *ids) -> DataFrame:
     """One row per (ids, m): the m-th PQ_SUB-dim slice of `vec` as `out`."""
     s = F.explode(
         F.array(
             *[
-                F.struct(
-                    F.lit(m).cast("long").alias("m"),
-                    F.slice(vec, m * PQ_SUB + 1, PQ_SUB).alias(out),
-                )
+                F.struct(F.lit(m).cast("long").alias("m"), pq_slice(vec, m).alias(out))
                 for m in range(PQ_M)
             ]
         )
@@ -613,9 +615,7 @@ def ivfpq_topk(vecs: DataFrame, is_query: Column, k: int) -> DataFrame:
         .select(
             "vec_id",
             "cell",
-            F.zip_with(
-                "embedding", "cv", lambda x, y: x.cast("double") - y.cast("double")
-            ).alias("res"),
+            residual("embedding", "cv").alias("res"),
         )
         .localCheckpoint(eager=False)
     )

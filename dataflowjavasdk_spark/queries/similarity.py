@@ -9,7 +9,7 @@ top-k ranks match exactly without tolerance hacks.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -449,12 +449,13 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval value-hash oracles with no float output; n_ann < 5 is the
     candidate-starvation signal per variant.
 
-    Scale shape: ground truth and every variant cost one corpus scan per
-    query batch with the request-sized query set broadcast (the audited
-    cosine_topk_bruteforce shape); each variant's 25-row top-5 relation
-    is pinned before the report joins, so the scoring pipelines run once
-    (the scan-discipline rule). Production recall tracking is this query
-    on a nightly sample."""
+    Scale shape: one corpus pass builds per-vector features (LSH
+    buckets, two nearest IVF cells, IVFPQ distances); the request-sized
+    query set broadcasts against it once (the cosine_topk_bruteforce
+    shape) to score every pair; the ranking windows share one exchange
+    and the one pin keeps only pairs inside some top-k, so a re-run is
+    one aggregate. Production recall tracking is this query on a nightly
+    sample."""
     return _ann_recall(spark, sf_dir, k=5)
 
 
@@ -479,63 +480,87 @@ def ann_recall_report_k20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall(spark, sf_dir, k=20)
 
 
+# Candidate predicate per variant over a _recall_pairs pair (query
+# columns q-prefixed); `exact` is the brute-force ground truth.
+_FLAGS = {
+    "exact": "TRUE",
+    "lsh": "b0 = qb0",
+    "lsh_multitable": "b0 = qb0 OR b1 = qb1",
+    "ivf": "cell = qcell",
+    "ivf_multiprobe": "cell IN (qcell, qcell2)",
+    "ivfpq": "cell = qcell AND adc IS NOT NULL",
+}
+_LADDER = list(_FLAGS)[1:]
+
+
+def _recall_pairs(emb: DataFrame, in_queries: Column) -> DataFrame:
+    """The recall ladder's scored candidate table: one row per (query_id,
+    neighbor_id) pair, self pairs included, with the exact `cos`, the
+    IVFPQ `adc` and one _FLAGS column per variant (self excluded)."""
+    # per vector: LSH buckets, assigned (crk = 1) and second IVF cell,
+    # and the IVFPQ residual against the assigned centroid
+    cells = S.ivf_cells(emb, "cv").filter("crk <= 2").groupBy("vec_id").agg(
+        F.min_by("cell", "crk").alias("cell"),
+        F.max_by("cell", "crk").alias("cell2"),
+        F.min_by(S.residual("embedding", "cv"), "crk").alias("res"),
+    )
+    feats = S.lsh_tables(emb).join(cells, "vec_id", "left")
+    # pqd[m][i]: squared L2 from residual subspace m to codebook entry i
+    # (vectors 20-23 in vec_id order)
+    cb = feats.filter("vec_id BETWEEN 20 AND 23").agg(
+        F.sort_array(F.collect_list(F.struct("vec_id", "res"))).alias("cb")
+    )
+    pqd = F.transform(
+        F.sequence(F.lit(0), F.lit(S.PQ_M - 1)),
+        lambda m: F.transform("cb", lambda e: S.l2sq(S.pq_slice("res", m), S.pq_slice(e.res, m))),
+    )
+    feats = feats.crossJoin(F.broadcast(cb)).withColumn("pqd", pqd)
+    qcols = [F.col(c).alias("q" + c) for c in ("b0", "b1", "cell", "cell2", "pqd")]
+    pairs = feats.crossJoin(F.broadcast(S.query_set(feats, in_queries, *qcols)))
+    # ADC: per subspace, the query's distance to the neighbour's code (its
+    # first minimum: ties to the lower code), summed left to right, all as
+    # pq_topk computes it
+    code = lambda qd, d: F.element_at(qd, F.array_position(d, F.array_min(d)).cast("int"))
+    adc = F.aggregate(F.zip_with("qpqd", "pqd", code), F.lit(0.0), lambda a, d: a + d)
+    return pairs.withColumn("adc", adc).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        S.cosine(F.col("qv"), F.col("embedding")).alias("cos"),
+        "adc",
+        *[F.expr(f"vec_id <> query_id AND ({p})").alias(v) for v, p in _FLAGS.items()],
+    )
+
+
 def _ann_recall(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    in_queries = (F.col("vec_id") >= 10) & (F.col("vec_id") < 15)
-    cos = S.cosine(F.col("qv"), F.col("embedding"))
-
-    q = S.query_set(emb, in_queries)
-    exact_top = (
-        S.top_k(emb, q, cos, k).select("query_id", "neighbor_id").localCheckpoint(eager=False)
-    )
-    tabled = S.lsh_tables(emb)  # both legs probe the same two tables
-    # cell_rk is pinned: cells + both probe sets reference it
-    cell_rk = S.ivf_cells(emb).localCheckpoint(eager=False)
-    cells = cell_rk.filter(F.col("crk") == 1).select("vec_id", "embedding", "cell")
-
-    def ivf_top(nprobe: int) -> DataFrame:
-        probes = S.query_set(
-            cell_rk, (F.col("crk") <= nprobe) & in_queries, F.col("cell").alias("qcell")
-        )
-        return S.top_k(cells, probes, cos, k, on=(F.col("cell") == F.col("qcell")) & S.not_self())
-
-    ladder = [
-        ("lsh", S.lsh_topk(tabled, in_queries, k, tables=1)),
-        ("lsh_multitable", S.lsh_topk(tabled, in_queries, k, tables=2)),
-        ("ivf", ivf_top(1)),
-        ("ivf_multiprobe", ivf_top(2)),
-        ("ivfpq", S.ivfpq_topk(emb, in_queries, k)),
+    pairs = _recall_pairs(emb, F.col("vec_id").between(10, 14))
+    # A variant's rank is the running count of its candidates in its own
+    # order, cos DESC or (IVFPQ) adc ASC, ties to the lower neighbour;
+    # both orders share one query_id exchange.
+    upto = W.partitionBy("query_id").rowsBetween(W.unboundedPreceding, W.currentRow)
+    by_cos = upto.orderBy(F.col("cos").desc(), "neighbor_id")
+    by_adc = upto.orderBy(F.col("adc").asc(), "neighbor_id")
+    top = [
+        (F.col(v) & (F.count_if(v).over(by_adc if v == "ivfpq" else by_cos) <= k)).alias(v)
+        for v in _FLAGS
     ]
-    exact_g = exact_top.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    # Pin the 5-row query-id spine: each of the five variant reports
-    # left-joins it three times, and unpinned Catalyst re-derives the
-    # (pruned, but counted) embeddings scan 15x (scan-discipline rule).
-    qids = q.select("query_id").localCheckpoint(eager=False)
-    out = None
-    for name, top in ladder:
-        top = top.select("query_id", "neighbor_id").localCheckpoint(eager=False)
-        ann_g = top.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_ann"))
-        hits = (
-            top.join(exact_top, ["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
+    # the one pin: the pairs inside some top k, and the self pairs that
+    # keep every query's rows
+    ranked = (
+        pairs.select("query_id", "neighbor_id", *top)
+        .filter(" OR ".join(("neighbor_id = query_id", *_FLAGS)))
+        .localCheckpoint(eager=False)
+    )
+    return (
+        ranked.unpivot(["query_id", "exact"], _LADDER, "variant", "ann")
+        .groupBy("variant", "query_id")
+        .agg(
+            F.count_if("exact").alias("n_exact"),
+            F.count_if("ann").alias("n_ann"),
+            F.count_if(F.col("ann") & F.col("exact")).alias("n_hits"),
         )
-        rep = (
-            qids
-            .join(exact_g, "query_id", "left")
-            .join(ann_g, "query_id", "left")
-            .join(hits, "query_id", "left")
-            .select(
-                F.lit(name).alias("variant"),
-                "query_id",
-                F.coalesce("n_exact", F.lit(0)).alias("n_exact"),
-                F.coalesce("n_ann", F.lit(0)).alias("n_ann"),
-                F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-                (F.coalesce("n_hits", F.lit(0)) * (100 // k)).alias("recall_pct"),
-            )
-        )
-        out = rep if out is None else out.unionByName(rep)
-    return out
+        .withColumn("recall_pct", F.col("n_hits") * (100 // k))
+    )
 
 
 @query(

@@ -372,6 +372,88 @@ def test_recall_ladder_second_operating_point(spark):
         assert r.n_hits <= min(r.n_ann, r.n_exact)
 
 
+# py4j commands one ladder build may send: about 1.5x the 2,762 that a
+# first build of the one-table ladder sends (the five-pipeline ladder sent
+# 17,169).
+_LADDER_BUILD_COMMANDS = 4150
+
+
+@pytest.mark.parametrize("name", ["ann_recall_report", "ann_recall_report_k20"])
+def test_recall_ladder_build_budget(spark, monkeypatch, name):
+    """The ladder scores one candidate table: its build pins at most once
+    and sends a bounded number of py4j commands (counted as
+    tools/py4j_calls.py counts them)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from tools.py4j_calls import commands_sent
+
+    pins = []
+    pin = DataFrame.localCheckpoint
+    monkeypatch.setattr(
+        DataFrame, "localCheckpoint", lambda df, *a, **kw: pins.append(df) or pin(df, *a, **kw)
+    )
+    with commands_sent() as sent:
+        get(name).fn(spark, SMOKE_SF)
+    assert len(pins) <= 1
+    assert sent() <= _LADDER_BUILD_COMMANDS
+
+
+def test_lsh_tables_build_is_small(spark):
+    """Each bucket column is one parsed plane-matrix literal and one fold,
+    not a Column per plane component (the unrolled form sent ~9,700
+    commands for the two tables)."""
+    from dataflowjavasdk_spark.sources.tables import load_table
+    from tools.py4j_calls import commands_sent
+
+    emb = load_table(spark, SMOKE_SF, "embeddings")
+    with commands_sent() as sent:
+        S.lsh_tables(emb)
+    assert sent() <= 500
+
+
+def test_recall_ladder_adc_matches_ivfpq_topk(spark):
+    """The ladder's ADC (four lookups into the query's distance array)
+    equals, with no tolerance, the adc_dist ivfpq_topk computes through
+    its four table joins, for every pair ivfpq_topk returns; each such
+    pair is an IVFPQ candidate of the ladder."""
+    from dataflowjavasdk_spark.queries.similarity import _recall_pairs
+    from dataflowjavasdk_spark.sources.tables import load_table
+
+    emb = load_table(spark, SMOKE_SF, "embeddings")
+    in_queries = (F.col("vec_id") >= 10) & (F.col("vec_id") < 15)
+    ref = S.ivfpq_topk(emb, in_queries, 20).select("query_id", "neighbor_id", "adc_dist")
+    got = _recall_pairs(emb, in_queries).select("query_id", "neighbor_id", "adc", "ivfpq")
+    rows = ref.join(got, ["query_id", "neighbor_id"], "left").collect()
+    assert len({r.query_id for r in rows}) == 5
+    for r in rows:
+        assert r.ivfpq is True and r.adc == r.adc_dist, r
+
+
+@pytest.mark.parametrize(
+    "keep",
+    ["vec_id >= 8", "vec_id NOT BETWEEN 20 AND 23", "vec_id < 12", "vec_id = 10"],
+    ids=["no_ivf_seeds", "no_pq_codebook", "two_queries", "lone_query"],
+)
+def test_recall_ladder_matches_oracle_on_degenerate_corpora(spark, tmp_path, keep):
+    """Corpora the ladder must not lose rows on: without IVF seed vectors
+    (no cells, so IVF and IVFPQ find nothing), without the PQ codebook
+    vectors, with only two of the five query ids present, and a lone
+    query vector (no neighbour at all: its rows come from its self pair).
+    The Spark rows must equal the DuckDB oracle's."""
+    import duckdb
+
+    path = str(tmp_path / "embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM read_parquet('{SMOKE_SF}/embeddings.parquet') WHERE {keep}) "
+        f"TO '{path}' (FORMAT PARQUET)"
+    )
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    q = get("ann_recall_report")
+    got = sorted(tuple(r) for r in q.fn(spark, str(tmp_path)).collect())
+    assert got == sorted(con.execute(q.oracle).fetchall())
+
+
 def test_multitable_lsh_recall_at_least_single_table(spark):
     """OR-amplification property: two hash tables can only widen the
     candidate set, so top-5 recall vs brute force is >= the single table's."""

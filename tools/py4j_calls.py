@@ -17,34 +17,35 @@ DIR defaults to $SPARK_GRAFT_SF_DIR (the bench.py convention).
 from __future__ import annotations
 
 import argparse
+import contextlib
 import os
 import sys
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
 
-_SENT = [0]
 
-
-def _count_commands() -> None:
+@contextlib.contextmanager
+def commands_sent():
+    """Count the py4j commands the driver sends inside the block (memory
+    releases excluded); yields a callable returning the count so far."""
     from py4j import clientserver
     from py4j import protocol
 
     send = clientserver.ClientServerConnection.send_command
     release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    sent = [0]
 
     def counted(self, command):
         if not command.startswith(release):
-            _SENT[0] += 1
+            sent[0] += 1
         return send(self, command)
 
     clientserver.ClientServerConnection.send_command = counted
-
-
-def _build_count(fn, spark, sf_dir: str) -> int:
-    before = _SENT[0]
-    fn(spark, sf_dir)
-    return _SENT[0] - before
+    try:
+        yield lambda: sent[0]
+    finally:
+        clientserver.ClientServerConnection.send_command = send
 
 
 def main() -> None:
@@ -63,15 +64,16 @@ def main() -> None:
     missing = [n for n in args.names if n not in qs]
     if missing:
         ap.error(f"unknown queries: {', '.join(missing)}")
-    _count_commands()
     print(f"{'query':<32} {'first':>7} {'warm':>7}")
     total = [0, 0]
     for name in args.names:
-        first = _build_count(qs[name], spark, args.sf_dir)
-        warm = _build_count(qs[name], spark, args.sf_dir)
-        total[0] += first
-        total[1] += warm
-        print(f"{name:<32} {first:>7} {warm:>7}", flush=True)
+        counts = []
+        for _ in range(2):
+            with commands_sent() as sent:
+                qs[name](spark, args.sf_dir)
+            counts.append(sent())
+        total = [t + c for t, c in zip(total, counts)]
+        print(f"{name:<32} {counts[0]:>7} {counts[1]:>7}", flush=True)
     print(f"{'total':<32} {total[0]:>7} {total[1]:>7}")
 
 
