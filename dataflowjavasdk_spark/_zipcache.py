@@ -16,6 +16,14 @@ missing archive goes through the stdlib method as before. The first call
 per archive reads it, so the signature is recorded against a directory
 read after the stat was taken. The package imports this module first,
 so every Python worker that unpickles an engine function installs it.
+
+Under `session.get_spark` the wrap is installed before the fork: the
+engine's worker daemon (`_daemon.py`) imports the package and runs one
+`invalidate_caches()` first, so every worker inherits the wrap and the
+recorded signatures, and its first task re-reads no archive either.
+Workers forked by another daemon (a session the engine did not start)
+install it when they first unpickle an engine function, from their
+second task on.
 """
 
 from __future__ import annotations

@@ -10,6 +10,9 @@ properties that matter at scale:
 - small sides broadcast (BroadcastHashJoin), no accidental sort-merge
 - shuffle count (Exchange) didn't silently regress
 - Python stays out of hot paths (no BatchEvalPython rows)
+- no stage chains two Python evaluators: each would hold its own Python
+  worker in every task and move every row across the Arrow boundary
+  again (`python_chains`)
 """
 
 from __future__ import annotations
@@ -20,6 +23,67 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+
+
+# Operators that run Python: each one holds a Python worker per task.
+PYTHON_EVALS = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    # Arrow-native and grouped Python stages (review-caught
+    # blind spot: the mapInArrow/applyInArrow CoGBK rewrite
+    # made its Python invisible to this counter)
+    "MapInArrow",
+    "FlatMapGroupsInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "FlatMapCoGroupsInArrow",
+)
+
+# Operators whose child runs in another stage (or, for a cached
+# relation, another job).
+_STAGE_BOUNDARIES = {
+    "Exchange", "BroadcastExchange", "ReusedExchange", "ShuffleQueryStage",
+    "BroadcastQueryStage", "TableCacheQueryStage", "InMemoryRelation",
+}
+
+
+def _tree(text: str) -> list[tuple[int, str]]:
+    """The operator tree at the head of a formatted explain, as
+    (depth, "Name (id)") in pre-order. A child line is indented three
+    characters per level and starts with ``+-`` or ``:-``."""
+    body = text.split("== Physical Plan ==", 1)[-1].strip("\n").split("\n\n", 1)[0]
+    nodes = []
+    for line in body.splitlines():
+        m = re.match(r"^([ :]*)[+:]- (.*)$", line)
+        depth, node = (len(m.group(1)) // 3 + 1, m.group(2)) if m else (0, line)
+        nodes.append((depth, node.strip()))
+    return nodes
+
+
+def python_chains(text: str) -> list[str]:
+    """Python evaluators that feed another one inside the same stage, as
+    "Upper (id) <- Lower (id)": the formatted plan tree is walked down
+    from each evaluator until an exchange or a cached relation."""
+    nodes = _tree(text)
+    chains = []
+    for i, (depth, node) in enumerate(nodes):
+        if node.split(" ", 1)[0] not in PYTHON_EVALS:
+            continue
+        cut = None  # depth of a stage boundary whose subtree is skipped
+        for d, below in nodes[i + 1:]:
+            if d <= depth:
+                break
+            if cut is not None and d > cut:
+                continue
+            cut = None
+            name = below.split(" ", 1)[0]
+            if name in _STAGE_BOUNDARIES:
+                cut = d
+            elif name in PYTHON_EVALS:
+                chains.append(f"{node} <- {below}")
+                cut = d  # report each chain link once
+    return chains
 
 
 @dataclass
@@ -33,6 +97,7 @@ class PlanAudit:
     exchanges: int = 0
     wholestage_codegen: int = 0
     python_evals: int = 0
+    python_chains: list[str] = field(default_factory=list)
 
     def pushes(self, fragment: str) -> bool:
         """True if some scan's PushedFilters mentions `fragment`."""
@@ -72,20 +137,6 @@ def audit(df: DataFrame) -> PlanAudit:
             len(set(re.findall(r"codegen id : (\d+)", text)))
             or text.count("WholeStageCodegen")
         ),
-        python_evals=sum(
-            names.count(n)
-            for n in (
-                "BatchEvalPython",
-                "ArrowEvalPython",
-                "MapInPandas",
-                # Arrow-native and grouped Python stages (review-caught
-                # blind spot: the mapInArrow/applyInArrow CoGBK rewrite
-                # made its Python invisible to this counter)
-                "MapInArrow",
-                "FlatMapGroupsInArrow",
-                "FlatMapGroupsInPandas",
-                "FlatMapCoGroupsInPandas",
-                "FlatMapCoGroupsInArrow",
-            )
-        ),
+        python_evals=sum(names.count(n) for n in PYTHON_EVALS),
+        python_chains=python_chains(text),
     )

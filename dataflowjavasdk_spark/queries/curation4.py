@@ -417,7 +417,6 @@ def trainer_egress_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     per shard. The manifest aggregate reuses the shard partitioning."""
 
     from dataflowjavasdk_spark.sources.tfrecord import (
-        parse_examples,
         read_tfrecord,
         write_tfrecord,
     )
@@ -442,8 +441,9 @@ def trainer_egress_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = scratch_dir("trainer_egress_")
     write_tfrecord(packed.repartition(4), d)
-    back = parse_examples(
-        read_tfrecord(spark, d),
+    back = read_tfrecord(
+        spark,
+        d,
         {
             "doc_id": "bigint",
             "shard": "bigint",

@@ -1711,11 +1711,7 @@ def warc_ingest_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as _pd
 
-    from dataflowjavasdk_spark.sources.warc import (
-        read_warc,
-        with_extracted_text,
-        write_warc,
-    )
+    from dataflowjavasdk_spark.sources.warc import read_warc, write_warc
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
@@ -1750,7 +1746,7 @@ def warc_ingest_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = scratch_dir("warc_rt_")
     write_warc(pages, d, with_requests=True)
-    back = with_extracted_text(read_warc(spark, d))
+    back = read_warc(spark, d, extract_text=True)
     return (
         back.select(
             F.regexp_extract(
@@ -2193,7 +2189,6 @@ def media_egress_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dataflowjavasdk_spark.session import scratch_dir
     from dataflowjavasdk_spark.sources.tfrecord import (
-        parse_examples,
         read_tfrecord,
         write_tfrecord,
     )
@@ -2209,8 +2204,9 @@ def media_egress_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = scratch_dir("media_egress_")
     write_tfrecord(records.repartition(4), d)
-    back = parse_examples(
-        read_tfrecord(spark, d),
+    back = read_tfrecord(
+        spark,
+        d,
         {"media_id": "bigint", "media_type": "string", "units": "bigint"},
     )
     return back.groupBy("media_type").agg(
@@ -2322,7 +2318,6 @@ def tfrecord_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism is per shard exactly as data loaders consume them."""
 
     from dataflowjavasdk_spark.sources.tfrecord import (
-        parse_examples,
         read_tfrecord,
         write_tfrecord,
     )
@@ -2336,8 +2331,9 @@ def tfrecord_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = scratch_dir("tfrecord_rt_")
     write_tfrecord(docs.repartition(4), d)
-    back = parse_examples(
-        read_tfrecord(spark, d),
+    back = read_tfrecord(
+        spark,
+        d,
         {
             "doc_id": "bigint",
             "neg_id": "bigint",
@@ -2462,6 +2458,9 @@ def audio_silence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _media_corpus(spark, sf_dir, encode, ("doc_id",))
     rms_rows = extract_audio_frame_rms(media)
+    # n_frames rides along as a window count over the clip partition, so
+    # one decode pass and one media_id exchange feed every column (a
+    # separate per-clip count branch decoded every WAV a second time).
     w = W.partitionBy("media_id").orderBy("frame_idx")
     flagged = (
         rms_rows.withColumn("active", F.col("rms") > 1e-9)
@@ -2476,29 +2475,21 @@ def audio_silence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 w.rowsBetween(W.unboundedPreceding, W.currentRow)
             ),
         )
-    )
-    per_clip_frames = flagged.groupBy("media_id").agg(
-        F.count(F.lit(1)).alias("n_frames")
+        .withColumn("n_frames", F.count(F.lit(1)).over(W.partitionBy("media_id")))
     )
     segments = (
         flagged.filter("active")
         .groupBy("media_id", "seg_id")
         .agg(
+            F.max("n_frames").alias("n_frames"),
             F.count(F.lit(1)).alias("seg_len"),
             F.min("frame_idx").alias("seg_start"),
         )
     )
-    per_clip_segs = segments.groupBy("media_id").agg(
+    return segments.groupBy("media_id").agg(
+        F.max("n_frames").alias("n_frames"),
         F.count(F.lit(1)).alias("n_segments"),
         F.sum("seg_len").alias("active_frames"),
         F.max("seg_len").alias("longest_segment"),
         F.min("seg_start").cast("int").alias("first_active_frame"),
-    )
-    return per_clip_frames.join(per_clip_segs, "media_id").select(
-        "media_id",
-        "n_frames",
-        "n_segments",
-        "active_frames",
-        "longest_segment",
-        "first_active_frame",
     )

@@ -166,6 +166,26 @@ def _sweep_dead_scratch_roots() -> None:
             pass  # pid alive under another uid — leave it
 
 
+# The Python worker daemon: PySpark's fork server with the Arrow stack and
+# the engine imported before the first fork (see _daemon.py). A static
+# conf, so only get_spark() sets it; a session the engine is handed keeps
+# the daemon it was started with.
+_DAEMON_MODULE = "dataflowjavasdk_spark._daemon"
+
+
+def _workers_import_engine() -> bool:
+    """True when a Python worker started by this process's JVM finds the
+    engine package: its parent directory is the working directory (which
+    ``python -m`` puts first on the path), on PYTHONPATH (which the JVM
+    passes on to its workers) or a site-packages directory."""
+    import site
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+             *site.getsitepackages(), site.getusersitepackages()]
+    return any(p and os.path.abspath(p) == root for p in paths)
+
+
 def get_spark(
     app_name: str = "dataflowjavasdk-spark",
     master: str | None = None,
@@ -205,6 +225,8 @@ def get_spark(
         # bucketed-table bytes into /tmp).
         .config("spark.sql.warehouse.dir", _default_warehouse_dir())
     )
+    if _workers_import_engine():
+        builder = builder.config("spark.python.daemon.module", _DAEMON_MODULE)
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)
     for key, value in (extra_confs or {}).items():

@@ -24,12 +24,15 @@ Everything here is implemented from the public specs:
   (one ``part-NNNNN.tfrecord`` per non-empty partition).
   `write_stream_tfrecord` is the same codec behind the shared
   ``batch=<id>/_SUCCESS`` streaming sink.
-- `read_tfrecord(spark, path)`: the shard reader discovers committed
-  shards (`binaryFile`, file-level parallelism); its per-row runner
-  walks each file's framing with `decode_shard` (both CRCs verified per
-  record — a flipped bit raises ValueError, never a silent wrong row).
+- `read_tfrecord(spark, path[, feature_spec])`: the shard reader
+  discovers committed shards (`binaryFile`, file-level parallelism); its
+  per-row runner walks each file's framing with `decode_shard` (both
+  CRCs verified per record — a flipped bit raises ValueError, never a
+  silent wrong row). Given a feature spec, the same pass also parses
+  each record into typed columns.
 - `parse_examples(df, feature_spec)`: the `tf.io.parse_example` analog —
-  decodes the Example payload column into typed Spark columns.
+  decodes an Example payload column into typed Spark columns. It and the
+  parsing read share one per-blob parser, `example_parser`.
 
 Scale shape: TFRecord is not splittable (no sync markers), so read
 parallelism is per FILE — exactly how trainers shard input (thousands of
@@ -420,51 +423,74 @@ def decode_shard(path: str, raw: bytes):
     )
 
 
-def read_tfrecord(spark, path: str):
-    """Distributed TFRecord read: one task per shard via the shard
-    reader, one Arrow-batched pass walking the framing (CRC-verified).
-    Returns ``(shard string, record_index long, example binary)`` — feed
-    to `parse_examples` for typed columns."""
-    from ._shards import decode_rows, shard_files
-
-    files = shard_files(spark, path, "tfrecord", "path", "content")
-    return decode_rows(files, decode_shard, TFRECORD_SCHEMA)
-
-
-def parse_examples(df, feature_spec: dict, example_col: str = "example"):
-    """`tf.io.parse_example` analog: decode the Example payload column
-    into typed Spark columns. ``feature_spec`` maps feature name → Spark
+def example_parser(feature_spec: dict):
+    """The one per-blob Example parser behind `parse_examples` and
+    ``read_tfrecord(..., feature_spec)``: returns ``(schema, parse)``,
+    where ``parse(blobs)`` turns an iterable of tf.train.Example payloads
+    into a pandas frame with one typed column per feature and ``schema``
+    is that frame's Spark DDL. ``feature_spec`` maps feature name → Spark
     type string (``bigint``/``double``/``string``/``binary`` for
     single-valued; ``array<bigint>``/``array<float>``/... for
     multi-valued). Single-valued specs take the list head (null when the
     feature is absent/empty)."""
     names = list(feature_spec)
-
-    def to_schema(dtype: str) -> str:
-        return "double" if dtype == "float" else dtype
-
-    out_schema = ", ".join(
-        f"`{n}` {to_schema(t)}" for n, t in feature_spec.items()
+    schema = ", ".join(
+        f"`{n}` {'double' if t == 'float' else t}" for n, t in feature_spec.items()
     )
 
-    def parse(batches: Iterator) -> Iterator:
+    def cell(spec: str, vals: list):
+        if spec.startswith("array<"):
+            return vals
+        if spec == "string":
+            return vals[0].decode("utf-8") if vals else None
+        return vals[0] if vals else None
+
+    def parse(blobs):
         import pandas as pd
 
-        for pdf in batches:
-            cols: dict[str, list] = {n: [] for n in names}
-            for blob in pdf[example_col]:
-                ex = decode_example(bytes(blob))
-                for n in names:
-                    spec = feature_spec[n]
-                    vals = ex.get(n, [])
-                    if spec.startswith("array<"):
-                        cols[n].append(vals)
-                    elif spec in ("string",):
-                        cols[n].append(
-                            vals[0].decode("utf-8") if vals else None
-                        )
-                    else:
-                        cols[n].append(vals[0] if vals else None)
-            yield pd.DataFrame(cols)
+        cols: dict[str, list] = {n: [] for n in names}
+        for blob in blobs:
+            ex = decode_example(bytes(blob))
+            for n in names:
+                cols[n].append(cell(feature_spec[n], ex.get(n, [])))
+        return pd.DataFrame(cols)
 
-    return df.mapInPandas(parse, schema=out_schema)
+    return schema, parse
+
+
+def read_tfrecord(spark, path: str, feature_spec: dict | None = None):
+    """Distributed TFRecord read: one task per shard via the shard
+    reader, one Arrow-batched pass walking the framing (CRC-verified).
+    Returns ``(shard string, record_index long, example binary)``, or,
+    given ``feature_spec`` (see `example_parser`), the parsed feature
+    columns straight from the same pass: the result equals
+    ``parse_examples(read_tfrecord(spark, path), feature_spec)`` without
+    a second Python evaluator in the stage, so each read task holds one
+    Python worker and every record crosses the Arrow boundary once."""
+    from ._shards import decode_rows, shard_files
+
+    files = shard_files(spark, path, "tfrecord", "path", "content")
+    if feature_spec is None:
+        return decode_rows(files, decode_shard, TFRECORD_SCHEMA)
+    schema, parse = example_parser(feature_spec)
+
+    def decode(_shard_path: str, raw: bytes):
+        recs = list(iter_records(bytes(raw)))
+        return parse(recs) if recs else None
+
+    return decode_rows(files, decode, schema)
+
+
+def parse_examples(df, feature_spec: dict, example_col: str = "example"):
+    """`tf.io.parse_example` analog: decode the Example payload column
+    ``example_col`` of any relation into typed Spark columns (see
+    `example_parser` for ``feature_spec``). To parse what
+    `read_tfrecord` reads, pass it the spec instead: that parses in the
+    read's own pass."""
+    schema, parse = example_parser(feature_spec)
+
+    def run(batches: Iterator) -> Iterator:
+        for pdf in batches:
+            yield parse(pdf[example_col])
+
+    return df.mapInPandas(run, schema=schema)

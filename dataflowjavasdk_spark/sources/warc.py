@@ -17,7 +17,8 @@ module implements, from the public spec:
   then `decode_shard` per file in one Arrow-batched mapInPandas pass
   (multi-member gzip handled transparently), keeping only
   `WARC-Type: response` records and splitting the HTTP block into
-  status / content-type / body.
+  status / content-type / body. `extract_text=True` runs the text
+  extraction below in that same pass.
 - `extract_html_text(html)`: REAL HTML text extraction via the stdlib
   `html.parser` state machine — script/style subtrees dropped, character
   references resolved, tag boundaries become spaces, whitespace
@@ -180,14 +181,26 @@ def decode_shard(raw: bytes):
     return pd.DataFrame(rows, columns=_WARC_COLS) if rows else None
 
 
-def read_warc(spark, path: str):
+def read_warc(spark, path: str, extract_text: bool = False):
     """Spark-native WARC reader: the shard reader's committed-file scan
     (one task per file — a crawl's parallelism unit) + one mapInPandas
-    parse pass emitting response records only."""
+    parse pass emitting response records only. With ``extract_text``
+    the same pass appends ``text`` = `extract_html_text` of each page:
+    ``with_extracted_text(read_warc(spark, path))`` without a second
+    Python evaluator in the stage."""
     from ._shards import decode_rows, shard_files
 
     files = shard_files(spark, path, "warc.gz", "content")
-    return decode_rows(files, decode_shard, WARC_SCHEMA)
+    if not extract_text:
+        return decode_rows(files, decode_shard, WARC_SCHEMA)
+
+    def decode(raw: bytes):
+        pdf = decode_shard(raw)
+        if pdf is not None:
+            pdf["text"] = [extract_html_text(h) for h in pdf["html"]]
+        return pdf
+
+    return decode_rows(files, decode, WARC_SCHEMA + ", text string")
 
 
 class _TextExtractor(HTMLParser):

@@ -116,7 +116,7 @@ def stateful_par_do(
             timer = st._timer_ms if st._timer_ms is not None else pending
             if timer is not None:
                 st._cells["t:pending"] = timer
-            group_state.update((json.dumps(st._cells),))
+            group_state.update((json.dumps(st._cells, separators=(",", ":")),))
             if timer is not None:
                 group_state.setTimeoutTimestamp(max(timer, st.watermark_ms + 1))
         if out is not None and len(out):

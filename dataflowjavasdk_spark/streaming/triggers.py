@@ -20,7 +20,8 @@ Model implemented per (key, window):
 One pane state machine, `fire_panes`, runs this lifecycle for one window
 cell per step. Both window front-ends are per-key stateful DoFns on
 `stateful_par_do` (streaming/state.py): one shuffle on the key, and the
-key's open window cells live in one cell list in its state. Each
+key's open window cells live in one cell list in its state, each cell a
+positional list in `_CELL_FIELDS` order. Each
 micro-batch, a key's new rows become proto-cells that merge into the open
 cells, and `fire_panes` runs on each cell with new elements or a due
 wake-up. The front-ends differ only where Beam's non-merging and merging
@@ -296,6 +297,12 @@ class Fired(NamedTuple):
     timeout_ms: int | None  # next wake-up on Spark's (delayed) watermark clock
 
 
+# A cell's fields in the order a key's state stores them: each open cell
+# is one positional list there, not a dict that spells out every name.
+_CELL_FIELDS = ("start", "end", "acc_n", "acc_sum", "pane_n", "pane_sum", "pane_idx",
+                "on_time_fired", "dyn", "acc_min", "acc_max", "pane_min", "pane_max")
+
+
 def new_cell(start_ms: int, end_ms: int, n: int = 0, total: float = 0.0,
              lo: int = -1, hi: int = -1) -> dict:
     """A window cell [start_ms, end_ms) holding `n` unfired elements that
@@ -471,7 +478,10 @@ def _advance(key: tuple, protos: list[dict], state: KeyedState, cfg: PaneConfig,
     spark_wm = state.watermark_ms
     watermark_ms = spark_wm + cfg.lateness_ms  # Beam-true
     now_ms = int(_now() * 1000)
-    cells = [(c, 0) for c in state.value("cells", [])] + [(p, p["acc_n"]) for p in protos]
+    # a checkpoint written before the positional layout holds dict cells
+    cells = [(c if isinstance(c, dict) else dict(zip(_CELL_FIELDS, c)), 0)
+             for c in state.value("cells", [])]
+    cells += [(p, p["acc_n"]) for p in protos]
     cells.sort(key=lambda cn: (cn[0]["start"], cn[0]["end"]))
     merged: list[list] = []  # [cell, new elements in it]
     for c, n in cells:
@@ -494,7 +504,7 @@ def _advance(key: tuple, protos: list[dict], state: KeyedState, cfg: PaneConfig,
             keep.append(c)
 
     if keep:
-        state.set("cells", keep)
+        state.set("cells", [[c[f] for f in _CELL_FIELDS] for c in keep])
         state.set_timer(min(_wake_ms(c, cfg.lateness_ms) for c in keep))
     else:
         state.clear_all()

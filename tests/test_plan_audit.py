@@ -109,6 +109,60 @@ def test_relational_queries_stay_jvm_side(spark):
         assert p.python_evals == 0, f"{name} has Python in the plan"
 
 
+# Registered queries allowed to chain two Python evaluators in one stage,
+# each with its reason. Empty: every query reads, decodes and parses in
+# one Python pass per stage.
+_PYTHON_CHAINS_OK: dict[str, str] = {}
+
+
+def test_python_chain_detection_on_known_plans():
+    """`python_chains` follows a Python evaluator down its own stage
+    only: an exchange or broadcast ends the walk, and two branches of
+    one stage (a union, a join's probe side) are not a chain."""
+    from dataflowjavasdk_spark.plans.audit import python_chains
+
+    chained = """== Physical Plan ==
+AdaptiveSparkPlan (6)
++- HashAggregate (5)
+   +- Exchange (4)
+      +- MapInPandas (3)
+         +- MapInPandas (2)
+            +- Scan binaryFile  (1)
+"""
+    assert python_chains(chained) == ["MapInPandas (3) <- MapInPandas (2)"]
+    split = """== Physical Plan ==
+AdaptiveSparkPlan (12)
++- BroadcastHashJoin Inner BuildLeft (11)
+   :- BroadcastExchange (4)
+   :  +- MapInArrow (3)
+   :     +- Scan ExistingRDD (1)
+   +- Union (10)
+      :- ArrowEvalPython (7)
+      :  +- Exchange (6)
+      :     +- MapInPandas (5)
+      :        +- Scan ExistingRDD (2)
+      +- MapInPandas (9)
+         +- Scan ExistingRDD (8)
+"""
+    assert python_chains(split) == []
+
+
+def test_no_stage_chains_two_python_evaluators(spark):
+    """Every Python evaluator in a task holds a Python worker, and each
+    one moves its input rows across the Arrow boundary again: two
+    evaluators chained without an exchange between them (a decode
+    feeding a parse) double both. Every registered query at SMOKE_SF
+    runs at most one Python evaluator per stage path."""
+    from dataflowjavasdk_spark.queries.registry import all_queries
+
+    chained = {}
+    for name in all_queries():
+        p = _plan(spark, name)
+        if p.python_chains and name not in _PYTHON_CHAINS_OK:
+            chained[name] = p.python_chains
+    assert not chained, chained
+
+
 def test_cogbk_plan_counts_its_python_stage(spark):
     # the allow-list above is only as good as the counter: a CoGBK plan's
     # per-key Python stage must register as a Python evaluation

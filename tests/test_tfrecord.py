@@ -157,6 +157,32 @@ def test_spark_write_read_roundtrip(spark, tmp_path):
     assert rows[1]["tags"] == [1, 2] and rows[2]["tags"] == [] and rows[3]["tags"] == [7]
 
 
+def test_parsing_read_equals_read_then_parse(spark, tmp_path):
+    """`read_tfrecord(spark, path, spec)` is `parse_examples` over the
+    plain read, in the read's own Python pass: same columns, types and
+    rows, absent features null, an empty shard contributing nothing."""
+    from dataflowjavasdk_spark.plans import audit
+
+    d = tmp_path / "tfr_fused"
+    df = spark.createDataFrame(
+        [(i, f"n{i}" if i % 3 else None, i / 4 if i % 2 else None, list(range(i % 3)))
+         for i in range(10)],
+        "id long, name string, score double, tags array<bigint>",
+    )
+    write_tfrecord(df.repartition(3), str(d))
+    (d / "part-empty.tfrecord").write_bytes(b"")
+    spec = {"id": "bigint", "name": "string", "score": "float", "tags": "array<bigint>",
+            "missing": "bigint"}
+    fused = read_tfrecord(spark, str(d), spec)
+    assert audit(fused).python_evals == 1
+    two_pass = parse_examples(read_tfrecord(spark, str(d)), spec)
+    assert fused.schema == two_pass.schema
+    rows = sorted(fused.collect())
+    assert rows == sorted(two_pass.collect())
+    assert [r.id for r in rows] == list(range(10))
+    assert rows[3].name is None and rows[3].score == 0.75 and rows[3].missing is None
+
+
 def test_spark_roundtrip_null_long_and_double(spark, tmp_path):
     """Arrow→pandas surfaces nullable-bigint nulls as NaN floats; _coerce
     must treat them as the documented absent-feature null (ADVICE r6) —

@@ -38,6 +38,7 @@ from dataflowjavasdk_spark.streaming.triggers import (
     OrFinally,
     PaneConfig,
     Repeatedly,
+    _CELL_FIELDS,
     fire_panes,
     merge_cells,
     new_cell,
@@ -216,3 +217,30 @@ def test_session_step_closes_gap_merged_sessions():
                        for k, ws, we, _, _, n, total, *_ in last), (i, cfg)
         if cfg.closing_behavior == CLOSING_FIRE_ALWAYS:
             assert set(closed) == set(want), (i, cfg)
+
+
+def test_steps_resume_state_written_with_dict_cells():
+    """State checkpointed before cells were stored positionally holds each
+    cell as a dict of its fields; both steps resume it as the same cells."""
+    rng = np.random.default_rng(14)
+
+    def as_dicts(step):
+        def run(key, rows, st):
+            st.set("cells", [dict(zip(_CELL_FIELDS, c)) for c in st.value("cells", [])])
+            return step(key, rows, st)
+        return run
+
+    for i in range(10):
+        cfg = random_config(rng)
+        delay_ms = int(rng.choice([0, 10, 60])) * S
+        gap_ms = int(rng.choice([5, 20, 60])) * S
+        for step, assign in (
+            (partial(window_step, cfg=cfg, keys=["key"], ts_col="ts"), fixed(30 * S)),
+            (partial(session_step, cfg=cfg, keys=["key"], ts_col="ts", gap_ms=gap_ms),
+             lambda t: [(t, t + gap_ms)]),
+        ):
+            batches = random_stream(rng, assign, delay_ms)
+            want = sorted(map(_key, simulate(step, batches, delay_ms + cfg.lateness_ms)), key=repr)
+            got = sorted(map(_key, simulate(as_dicts(step), batches, delay_ms + cfg.lateness_ms)),
+                         key=repr)
+            assert got == want and want, (i, cfg)

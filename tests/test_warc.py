@@ -100,6 +100,34 @@ def test_spark_write_read_roundtrip(spark, tmp_path):
     assert r.text == "doc 7 & more"
 
 
+def test_extracting_read_equals_read_then_extract(spark, tmp_path):
+    """`read_warc(..., extract_text=True)` is `with_extracted_text` over
+    the plain read, in the read's own Python pass; a shard holding only
+    request records contributes nothing to either."""
+    from dataflowjavasdk_spark.plans import audit
+
+    rows = [
+        (f"https://x.example/{i}", "2024-01-01T00:00:00Z", 200 + i % 2,
+         "text/html", f"<p>page {i}</p><script>x={i}</script>&eacute;")
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "url string, warc_date string, status int, content_type string, "
+        "html string",
+    ).repartition(3)
+    d = tmp_path / "warc_fused"
+    write_warc(df, str(d), with_requests=True)
+    (d / "requests-only.warc.gz").write_bytes(gzip.compress(
+        build_warc_record("https://x.example/r", "", warc_type="request")))
+    fused = read_warc(spark, str(d), extract_text=True)
+    assert audit(fused).python_evals == 1
+    two_pass = with_extracted_text(read_warc(spark, str(d)))
+    assert fused.columns == two_pass.columns
+    assert sorted(fused.collect()) == sorted(two_pass.collect())
+    assert len(fused.collect()) == 12
+
+
 def test_write_skips_empty_partitions(spark, tmp_path):
     df = spark.createDataFrame(
         [("https://e.example/1", "2024-01-01T00:00:00Z", 200, "text/html",
