@@ -10,11 +10,9 @@ CoGBK; we add explicit broadcast for dimension-sized sides.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Sequence
 
 import pandas as pd
-from pyspark import AccumulatorParam
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,131 +50,154 @@ class Join:
         return left.join(right, on, "left_anti")
 
 
-DEFAULT_MAX_GROUP_ROWS = int(
-    os.environ.get("SPARK_GRAFT_COGBK_MAX_GROUP_ROWS", 4_000_000)
-)
-
-
-class _MaxParam(AccumulatorParam):
-    """Max-merge accumulator: idempotent under task re-execution, so
-    speculative/retried tasks can't corrupt the metric (unlike sums)."""
-
-    def zero(self, value):
-        return value
-
-    def addInPlace(self, a, b):
-        return max(a, b)
-
+MAX_BUFFERED_ROWS = 4_000_000
+"""Per key, the most rows one buffered (non-last) input may hold before
+``co_group_by_key`` fails fast: only the last input streams, so a hot
+key on any other input is held whole in executor memory."""
 
 _TAG = "__cogbk_tag"
+_NAN = float("nan")
 
 
 def co_group_by_key(
     dfs: dict[str, DataFrame],
     keys: Sequence[str],
-    fn: Callable[[tuple, dict[str, pd.DataFrame]], pd.DataFrame],
+    fn: Callable[[tuple, dict], pd.DataFrame | None],
     schema,
-    max_group_rows: int | None = DEFAULT_MAX_GROUP_ROWS,
-    track_max_group: bool = False,
 ) -> DataFrame:
     """CoGroupByKey (historical sdk/transforms/join/CoGroupByKey.java):
     N keyed collections → per key, a tuple of iterables (CoGbkResult).
 
-    One plan for any number of inputs, the reference's own: the first
-    input rides one side of Spark's native cogroup; every other input is
-    unioned onto the other side with its TupleTag (UnionCoder.java's
-    tagged-union encoding, built by ``_tag_union``); one applyInArrow
-    call per key splits the tagged side back into per-tag frames
-    (KeyedPCollectionTuple.apply(CoGroupByKey) + per-key CoGbkResult).
-    Inputs absent for a key yield an EMPTY frame with the input's
-    dtypes, never a missing entry.
+    ``fn(key_tuple, groups)`` → pandas rows to emit (or None). Like the
+    reference's CoGbkResult, which buffers every tag except one and
+    streams the last straight off the shuffle (CoGbkResult.java: the
+    "unread tail" of the final iterable is never held), ``groups[name]``
+    is a pandas frame for every input but the last, and an iterator of
+    pandas frames, one Arrow batch of that key's rows each, for the
+    last. Put the unbounded side last: a skewed key then costs one batch
+    of memory. The iterator is single-pass and must be consumed within
+    the call (itertools.groupby discipline); unread chunks are skipped.
+    Each frame carries its input's columns (keys included) in their
+    original order; an input absent for a key gives an EMPTY frame with
+    the input's dtypes (no chunks, for the last input). A buffered input
+    holding more than ``MAX_BUFFERED_ROWS`` rows for one key fails fast.
 
-    Scale note: each input shuffles exactly once on the key and only one
-    key's rows per input are buffered in the Arrow batch — the same
-    footprint as the reference's per-key iterable buffers. Prefer
-    pre-aggregation (see queries/relational.py cogroup_customer_orders)
-    when the per-key fn is itself a reduction.
-
-    `fn(key_tuple, {name: pandas_df})` → pandas DataFrame rows to emit.
-    Each per-tag frame carries that input's full columns (keys included)
-    in its original column order, converted by pyarrow's ``to_pandas``.
-
-    Hot-key guard (VERDICT r7 #3, default-on since r9 per VERDICT r8 #4):
-    unlike the reference's shuffle-backed lazy iterables, this runner
-    MATERIALIZES each key's full frame — a skewed key at 100× scale is
-    an executor OOM, silent until it isn't. ``max_group_rows`` now
-    DEFAULTS to 4M rows (override via env
-    ``SPARK_GRAFT_COGBK_MAX_GROUP_ROWS`` or the kwarg; ``None`` disables)
-    and fails fast with an error naming ``co_group_by_key_stream``, the
-    spill-safe twin that keeps per-key memory at one Arrow batch.
-
-    Metric (``track_max_group=True``): the returned DataFrame carries a
-    ``cogbk_max_group_rows`` max-merge accumulator attribute — after any
-    action, ``df.cogbk_max_group_rows.value`` is the largest group
-    materialized (idempotent max, safe under task retries; df.observe
-    can't see group size without an extra per-key count shuffle). OPT-IN
-    because the accumulator's per-task plumbing is not free: measured
-    +40% on the N-way nation CoGBK at sf0.1 (585 vs 420 ms same-host
-    A/B) — the cost is the per-task accumulator channel, independent of
-    how often .add fires, so it cannot be threshold-gated away. The
-    fail-fast GUARD itself (a closure over a plain int) stays default-on
-    at zero cost.
+    Plan: every input tagged into one union (UnionCoder.java's tagged
+    union, ``_tag_union``) → repartition(keys) → sortWithinPartitions(
+    keys, tag) → ONE mapInArrow pass walking the sorted stream. Each
+    input shuffles exactly once; the partition sort is Spark's
+    UnsafeExternalSorter, which spills, so nothing key-sized is resident
+    but the buffered tags. Null keys form one group, as do NaN keys, as
+    in a groupBy.
     """
     import pyarrow as pa
 
     names = list(dfs)
     key_list = list(keys)
-    first = dfs[names[0]]
-    max_seen = (
-        first.sparkSession.sparkContext.accumulator(0, _MaxParam())
-        if track_max_group
-        else None
+    last = len(names) - 1
+    max_rows = MAX_BUFFERED_ROWS  # fixed when the plan is built
+    unioned, layouts = _tag_union(list(dfs.values()), key_list)
+    shuffled = unioned.repartition(*[F.col(k) for k in key_list]).sortWithinPartitions(
+        *key_list, _TAG
     )
-    tagged, layouts = _tag_union(list(dfs.values()), key_list, start=1)
-    if tagged is None:  # one input: an empty tagged side keeps one plan
-        tagged = first.select(*key_list, F.lit(0).alias(_TAG)).limit(0)
-    out_arrow_schema = _arrow_schema_of(first.sparkSession, schema)
+    out_arrow_schema = _arrow_schema_of(unioned.sparkSession, schema)
 
-    def apply(key: tuple, first_t: pa.Table, tagged_t: pa.Table) -> pa.Table:
+    def _runs(batches):
+        """Split sorted Arrow batches into (key_tuple, tag, rb-slice)
+        runs. Boundaries come from adjacent key/tag values compared in
+        Arrow (null-aware: two adjacent nulls are one run, a null next to
+        a value is a boundary; two adjacent NaNs are one run, as in a
+        groupBy) and keys are read as Python values — never through
+        pandas, whose float64 upcast of nullable int64 would merge
+        adjacent 64-bit keys above 2^53 and split a null key. A NaN key
+        is the one ``_NAN`` object, so key tuples holding it compare
+        equal (tuple equality checks identity first)."""
+        import numpy as np
         import pyarrow.compute as pc
 
-        key = tuple(k.as_py() if hasattr(k, "as_py") else k for k in key)
-        n_rows = first_t.num_rows + tagged_t.num_rows
-        if max_seen is not None:
-            max_seen.add(n_rows)
-        if max_group_rows is not None and n_rows > max_group_rows:
-            raise ValueError(
-                f"co_group_by_key: key {key!r} has {n_rows} rows "
-                f"(> max_group_rows={max_group_rows}); co_group_by_key "
-                "materializes the whole group per key — use "
-                "co_group_by_key_stream for hot keys, or raise "
-                "SPARK_GRAFT_COGBK_MAX_GROUP_ROWS / pass "
-                "max_group_rows=None to accept the memory risk"
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
+                continue
+            marks = np.zeros(n, dtype=bool)
+            marks[0] = True
+            for col in key_list + [_TAG]:
+                a = rb.column(col)
+                prev, cur = a.slice(0, n - 1), a.slice(1)
+                differs = pc.coalesce(
+                    pc.not_equal(prev, cur),
+                    pc.not_equal(pc.is_null(prev), pc.is_null(cur)),
+                )
+                if pa.types.is_floating(a.type):
+                    both_nan = pc.and_(pc.is_nan(prev), pc.is_nan(cur))
+                    differs = pc.and_(differs, pc.invert(pc.fill_null(both_nan, False)))
+                marks[1:] |= differs.to_numpy(zero_copy_only=False)
+            starts = np.flatnonzero(marks)
+            firsts = rb.take(pa.array(starts))
+            key_rows = (
+                tuple(_NAN if v != v else v for v in row)
+                for row in zip(*(firsts.column(k).to_pylist() for k in key_list))
             )
-        frames = {names[0]: first_t.to_pandas()}
-        tags = tagged_t.column(_TAG)
-        for i, name in enumerate(names[1:], start=1):
-            rows = tagged_t.filter(pc.equal(tags, i))
-            frames[name] = _tag_frame(rows, layouts[i])
-        out = fn(key, frames)
-        if out is None or not len(out):
-            return out_arrow_schema.empty_table()
-        return pa.Table.from_pandas(
-            out, schema=out_arrow_schema, preserve_index=False
-        )
+            tags = firsts.column(_TAG).to_pylist()
+            bounds = starts.tolist() + [n]
+            for s, e, key, tag in zip(bounds, bounds[1:], key_rows, tags):
+                yield key, tag, rb.slice(s, e - s)
 
-    out_df = (
-        first.groupBy(*key_list)
-        .cogroup(tagged.groupBy(*key_list))
-        .applyInArrow(apply, schema=schema)
-    )
-    out_df.cogbk_max_group_rows = max_seen
-    return out_df
+    def part(batches):
+        runs = _runs(batches)
+        run = next(runs, None)
+        while run is not None:
+            key, rb_schema = run[0], run[2].schema
+            buffered: list[list] = [[] for _ in range(last)]
+            held = [0] * last
+            while run is not None and run[0] == key and run[1] < last:
+                tag, rb = run[1], run[2]
+                held[tag] += rb.num_rows
+                if held[tag] > max_rows:
+                    raise ValueError(
+                        f"co_group_by_key: key {key!r} has more than "
+                        f"{max_rows} rows in input {names[tag]!r}; only the "
+                        "last input streams, every other one is held per "
+                        "key — put the hot input last"
+                    )
+                buffered[tag].append(rb)
+                run = next(runs, None)
+            cursor = [run]
+
+            def last_chunks(key=key, cursor=cursor):
+                while (
+                    cursor[0] is not None
+                    and cursor[0][0] == key
+                    and cursor[0][1] == last
+                ):
+                    rb = cursor[0][2]
+                    cursor[0] = next(runs, None)
+                    yield _tag_frame(pa.Table.from_batches([rb]), layouts[last])
+
+            groups: dict = {
+                names[i]: _tag_frame(
+                    pa.Table.from_batches(buffered[i], schema=rb_schema),
+                    layouts[i],
+                )
+                for i in range(last)
+            }
+            groups[names[last]] = last_chunks()
+            out = fn(key, groups)
+            # skip what fn left unread: advance the cursor, build no frames
+            run = cursor[0]
+            while run is not None and run[0] == key and run[1] == last:
+                run = next(runs, None)
+            if out is not None and len(out):
+                yield pa.RecordBatch.from_pandas(
+                    out, schema=out_arrow_schema, preserve_index=False
+                )
+
+    return shuffled.mapInArrow(part, schema=schema)
 
 
-def _tag_union(inputs: list[DataFrame], key_list: list[str], start: int = 0):
-    """Union ``inputs[start:]`` tagged with their position (UnionCoder's
-    tagged union) → (union DataFrame or None, per-input layouts).
+def _tag_union(inputs: list[DataFrame], key_list: list[str]):
+    """Union ``inputs`` tagged with their position (UnionCoder's tagged
+    union) → (union DataFrame, per-input layouts).
 
     Value columns ride flat SLOT columns named by (position, Spark type):
     the j-th value column of type T travels as ``__v{j}_{T}``, so inputs
@@ -192,7 +213,7 @@ def _tag_union(inputs: list[DataFrame], key_list: list[str], start: int = 0):
     column: the key itself or the value's slot) — what ``_tag_frame``
     needs to rebuild an input's frame from its rows of the union.
     """
-    layouts, parts = [], []
+    layouts, union = [], None
     for i, df in enumerate(inputs):
         src = {
             f.name: f"__v{j}_{f.dataType.simpleString()}"
@@ -201,16 +222,11 @@ def _tag_union(inputs: list[DataFrame], key_list: list[str], start: int = 0):
             )
         }
         layouts.append((list(df.columns), [src.get(c, c) for c in df.columns]))
-        if i >= start:
-            parts.append(
-                df.select(
-                    *key_list,
-                    F.lit(i).alias(_TAG),
-                    *[F.col(c).alias(s) for c, s in src.items()],
-                )
-            )
-    union = None
-    for part in parts:
+        part = df.select(
+            *key_list,
+            F.lit(i).alias(_TAG),
+            *[F.col(c).alias(s) for c, s in src.items()],
+        )
         union = part if union is None else union.unionByName(
             part, allowMissingColumns=True
         )
@@ -237,131 +253,6 @@ def _arrow_schema_of(spark, schema):
 
     st = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
     return to_arrow_schema(st)
-
-
-def co_group_by_key_stream(
-    dfs: dict[str, DataFrame],
-    keys: Sequence[str],
-    fn: Callable[[tuple, dict], pd.DataFrame | None],
-    schema,
-) -> DataFrame:
-    """Spill-safe custom-fn CoGroupByKey for HOT KEYS (VERDICT r7 #3).
-
-    Same contract as ``co_group_by_key`` except the LAST input arrives
-    as an ITERATOR of pandas chunks (one Arrow batch's worth of that
-    key's rows each) instead of one materialized frame; earlier inputs
-    arrive materialized. This mirrors the reference's own CoGbkResult,
-    which buffers every tag except one in memory and streams the last
-    tag straight off the shuffle (historical sdk/transforms/join/
-    CoGbkResult.java: the "unread tail" of the final iterable is never
-    held) — so put the unbounded side last and a skewed key costs one
-    batch of memory, not one executor.
-
-    fn(key_tuple, groups) where groups[name] is a pd.DataFrame for all
-    but the last input and an Iterator[pd.DataFrame] for the last; the
-    iterator is single-pass and must be consumed within the call
-    (itertools.groupby discipline). Unconsumed chunks are drained.
-    Keys must be non-null: run boundaries compare key VALUES, and
-    NaN != NaN would split a null key's group (use the materializing
-    co_group_by_key, whose groupBy treats nulls as one group, if null
-    keys are meaningful).
-
-    Plan: the same tagged union as ``co_group_by_key`` (``_tag_union``,
-    every input tagged) → repartition(keys) → sortWithinPartitions(keys,
-    tag) → ONE mapInArrow pass walking the sorted stream. Exactly one
-    shuffle per input, same as the materializing runner; the partition
-    sort is Spark's UnsafeExternalSorter, which spills to disk — nothing
-    key-sized is ever resident. Per-tag frames come from the same
-    ``_tag_frame`` split, so int64 columns stay exact int64 and empty
-    frames keep the input's dtypes.
-    """
-    import pyarrow as pa
-
-    names = list(dfs)
-    key_list = list(keys)
-    last = len(names) - 1
-    unioned, layouts = _tag_union(list(dfs.values()), key_list)
-    shuffled = unioned.repartition(*[F.col(k) for k in key_list]).sortWithinPartitions(
-        *key_list, _TAG
-    )
-    out_arrow_schema = _arrow_schema_of(unioned.sparkSession, schema)
-
-    def _runs(batches):
-        """Split sorted Arrow batches into (key_tuple, tag, rb-slice)
-        runs. Boundary detection compares ADJACENT POSITIONS of the raw
-        key/tag numpy arrays (a[1:] != a[:-1]) — never pandas shift(),
-        whose NaN insertion upcasts int64 keys to float64 and silently
-        MERGES adjacent 64-bit keys that collide as doubles (>2^53,
-        exactly the hash-id domain this engine keys on)."""
-        import numpy as np
-
-        for rb in batches:
-            n = rb.num_rows
-            if not n:
-                continue
-            kt = rb.select(key_list + [_TAG]).to_pandas()
-            marks = np.zeros(n, dtype=bool)
-            marks[0] = True
-            for col in key_list + [_TAG]:
-                a = kt[col].to_numpy()  # null-free → exact int64/object
-                marks[1:] |= a[1:] != a[:-1]
-            bounds = np.flatnonzero(marks).tolist() + [n]
-            for s, e in zip(bounds, bounds[1:]):
-                key = tuple(kt[k].iloc[s] for k in key_list)
-                yield key, int(kt[_TAG].iloc[s]), rb.slice(s, e - s)
-
-    def part(batches):
-        runs = _runs(batches)
-        pending = next(runs, None)
-        while pending is not None:
-            key, rb_schema = pending[0], pending[2].schema
-            buffered: list[list] = [[] for _ in names]
-            while (
-                pending is not None and pending[0] == key and pending[1] < last
-            ):
-                buffered[pending[1]].append(pending[2])
-                pending = next(runs, None)
-
-            state = {"pending": pending}
-
-            def last_chunks(key=key, state=state):
-                while (
-                    state["pending"] is not None
-                    and state["pending"][0] == key
-                    and state["pending"][1] == last
-                ):
-                    chunk = pa.Table.from_batches([state["pending"][2]])
-                    yield _tag_frame(chunk, layouts[last])
-                    state["pending"] = next(runs, None)
-
-            groups: dict = {
-                names[i]: _tag_frame(
-                    pa.Table.from_batches(buffered[i], schema=rb_schema),
-                    layouts[i],
-                )
-                for i in range(last)
-            }
-            groups[names[last]] = last_chunks()
-            out = fn(key, groups)
-            # Drain what the fn left unread by advancing the cursor
-            # directly — no frame construction for data nobody reads.
-            # The generator is suspended and never resumed, so the
-            # external advance is safe; a chunk yielded but not yet
-            # advanced past is still at state["pending"] and gets
-            # skipped here too.
-            while (
-                state["pending"] is not None
-                and state["pending"][0] == key
-                and state["pending"][1] == last
-            ):
-                state["pending"] = next(runs, None)
-            pending = state["pending"]
-            if out is not None and len(out):
-                yield pa.RecordBatch.from_pandas(
-                    out, schema=out_arrow_schema, preserve_index=False
-                )
-
-    return shuffled.mapInArrow(part, schema=schema)
 
 
 def co_group_arrays(dfs: dict[str, DataFrame], keys: Sequence[str]) -> DataFrame:

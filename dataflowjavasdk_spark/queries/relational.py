@@ -38,7 +38,7 @@ def _cents(series) -> int:
     0.01, ROUND_HALF_UP) fold — NOT for 3+-decimal data, where the
     repr-based Decimal path and float scaling can disagree on exact
     .5-cent ties (1.005 * 100 is 100.4999…, a hair below the tie).
-    Shared by both custom-fn CoGBK queries below."""
+    Used by the per-nation CoGBK fold below."""
     import numpy as np
 
     scaled = series.to_numpy(dtype="float64") * 100.0
@@ -304,6 +304,57 @@ def cogroup_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _per_nation_cogbk(spark: SparkSession, sf_dir: str, facts: list[str]) -> DataFrame:
+    """The per-nation fold both custom-fn CoGBK headliners run: nation,
+    then the two fact sides in ``facts`` order, through
+    ``co_group_by_key`` — the last fact side streams in Arrow-batch
+    chunks, nation and the other fact side arrive buffered. Per nation:
+    the nation row's name read FROM the nation iterable (the CoGbkResult
+    access pattern), plus the row count and exact-cents acctbal sum of
+    each fact side (``n_{side}s``, ``{side}_acctbal``, in ``facts``
+    order); an absent side is an empty iterable, not a null. Cents fold
+    as integers, so the sums are order-independent and match the
+    oracle's DECIMAL(18,2) sum. A key only on a fact side emits nothing:
+    the oracle LEFT JOINs from nation."""
+    import pandas as pd
+
+    from dataflowjavasdk_spark.operators.join import co_group_by_key
+
+    sides = {
+        "nation": load_table(spark, sf_dir, "nation").select(
+            F.col("n_nationkey").alias("nationkey"), "n_name"
+        )
+    }
+    for side in facts:
+        p = side[0]
+        sides[side] = load_table(spark, sf_dir, side).select(
+            F.col(f"{p}_nationkey").alias("nationkey"), f"{p}_acctbal"
+        )
+
+    def per_nation(key: tuple, groups: dict) -> pd.DataFrame | None:
+        nat = groups["nation"]
+        if not len(nat):
+            return None
+        row = {"n_nationkey": key[0], "n_name": nat["n_name"].iloc[0]}
+        for side in facts:
+            g = groups[side]
+            n = cents = 0
+            for chunk in [g] if isinstance(g, pd.DataFrame) else g:
+                n += len(chunk)
+                cents += _cents(chunk[f"{side[0]}_acctbal"])
+            row[f"n_{side}s"] = n
+            row[f"{side}_acctbal"] = cents / 100.0
+        return pd.DataFrame([row])
+
+    return co_group_by_key(
+        sides,
+        ["nationkey"],
+        per_nation,
+        "n_nationkey int, n_name string, "
+        + ", ".join(f"n_{s}s bigint, {s}_acctbal double" for s in facts),
+    )
+
+
 @query(
     "cogroup_nation_customer_supplier",
     oracle="""
@@ -330,19 +381,11 @@ def cogroup_nation_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFr
     the last §2.3 partial): KeyedPCollectionTuple.of(n).and(c).and(s)
     .apply(CoGroupByKey) + a DoFn over the CoGbkResult's three tagged
     iterables (historical sdk/transforms/join/CoGroupByKey.java,
-    KeyedPCollectionTuple.java). Plan: nation on one side of a native
-    cogroup, customer + supplier union-with-tag on the other (sharing one
-    value slot, as their layouts match) → ONE shuffle per input on the key
-    → applyInArrow splits each group into per-tag frames (per-tag Arrow
-    filter BEFORE pandas conversion keeps int64 exact) — the reference's
-    own tagged-union strategy (UnionCoder.java), so each input shuffles
-    exactly once and only one key's rows are buffered at a time.
-
-    Per-nation: the nation row's name read FROM the nation iterable (the
-    CoGbkResult access pattern), plus counts and exact-cents acctbal sums
-    over the customer and supplier iterables; absent sides are empty
-    iterables, not nulls. Sums accumulate as Decimal cents so the result
-    is order-independent and matches the oracle's DECIMAL(18,2) sum.
+    KeyedPCollectionTuple.java), through ``_per_nation_cogbk``: nation
+    and customer arrive buffered, SUPPLIER streams last. Plan: the three
+    inputs tagged into one union (customer and supplier share one value
+    slot, as their layouts match) → ONE shuffle per input on the key →
+    sortWithinPartitions(key, tag) → one mapInArrow pass.
 
     Cost note (measured, sf0.1 warm): Arrow-transfer-bound — the
     per-key iterables ARE shipped to Python, which is the operator's
@@ -351,52 +394,7 @@ def cogroup_nation_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFr
     pre-aggregation (cogroup_customer_orders, ~20 ms): this query
     deliberately exercises the custom-fn boundary itself.
     """
-    import pandas as pd
-
-    from dataflowjavasdk_spark.operators.join import co_group_by_key
-
-    na = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("nationkey"), "n_name"
-    )
-    cu = load_table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey"), "c_acctbal"
-    )
-    su = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey"), "s_acctbal"
-    )
-
-    def cents_sum(series) -> float:
-        # Vectorized exact-cents fold (VERDICT r7 #4) — shared _cents,
-        # see its 2-decimal contract.
-        return _cents(series) / 100.0
-
-    def per_nation(key: tuple, groups: dict[str, pd.DataFrame]) -> pd.DataFrame:
-        nat = groups["nation"]
-        if not len(nat):  # key only in a fact side: oracle LEFT JOINs from nation
-            return pd.DataFrame(
-                columns=["n_nationkey", "n_name", "n_customers",
-                         "customer_acctbal", "n_suppliers", "supplier_acctbal"]
-            )
-        return pd.DataFrame(
-            [
-                {
-                    "n_nationkey": int(key[0]),
-                    "n_name": nat["n_name"].iloc[0],
-                    "n_customers": len(groups["customer"]),
-                    "customer_acctbal": cents_sum(groups["customer"]["c_acctbal"]),
-                    "n_suppliers": len(groups["supplier"]),
-                    "supplier_acctbal": cents_sum(groups["supplier"]["s_acctbal"]),
-                }
-            ]
-        )
-
-    return co_group_by_key(
-        {"nation": na, "customer": cu, "supplier": su},
-        ["nationkey"],
-        per_nation,
-        "n_nationkey int, n_name string, n_customers bigint, "
-        "customer_acctbal double, n_suppliers bigint, supplier_acctbal double",
-    )
+    return _per_nation_cogbk(spark, sf_dir, ["customer", "supplier"])
 
 
 @query(
@@ -421,70 +419,18 @@ def cogroup_nation_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFr
     """,
 )
 def cogbk_sorted_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPILL-SAFE custom-fn CoGroupByKey (round 8 — VERDICT r7 #3): the
-    same three-input per-nation reduction as
-    cogroup_nation_customer_supplier, but through
-    co_group_by_key_stream's sorted-iterator runner: nation + supplier
-    arrive materialized (the small tags), CUSTOMER — the unbounded side
-    — streams through as bounded Arrow-batch chunks, mirroring the
-    reference CoGbkResult's buffer-all-but-one / stream-the-last design
+    """The same three-input per-nation fold as
+    cogroup_nation_customer_supplier (``_per_nation_cogbk``) with the
+    UNBOUNDED side last: nation + supplier arrive buffered, CUSTOMER
+    streams through as Arrow-batch chunks, mirroring the reference
+    CoGbkResult's buffer-all-but-one / stream-the-last design
     (historical sdk/transforms/join/CoGbkResult.java). A hot nationkey
     at 100× costs one Arrow batch of executor memory instead of the
-    whole group — the skew failure mode the materializing runner guards
-    against with max_group_rows (tests/test_join_flatten_sort.py pins
-    the chunk bound; SCALE.md §custom-fn-CoGBK).
-
-    Plan: the materializing runner's tagged union (every input tagged)
-    → ONE repartition on the key → sortWithinPartitions(key, tag)
-    (UnsafeExternalSorter: spills) → single mapInArrow pass through the
-    same per-tag split (each tag's slice converts to pandas after the
-    other tags' null padding is gone — int64 stays exact). Exactly one
-    shuffle per input, same exchange count as the materializing twin."""
-    import pandas as pd
-
-    from dataflowjavasdk_spark.operators.join import co_group_by_key_stream
-
-    na = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("nationkey"), "n_name"
-    )
-    su = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey"), "s_acctbal"
-    )
-    cu = load_table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey"), "c_acctbal"
-    )
-
-    chunk_cents = _cents  # shared exact-cents fold (2-decimal contract)
-
-    def per_nation(key: tuple, groups: dict) -> pd.DataFrame:
-        nat, sup = groups["nation"], groups["supplier"]
-        n_cust = 0
-        cust_cents = 0
-        for chunk in groups["customer"]:  # streamed: one Arrow batch each
-            n_cust += len(chunk)
-            cust_cents += chunk_cents(chunk["c_acctbal"])
-        if not len(nat):  # key only on a fact side: oracle LEFT JOINs
-            return None
-        return pd.DataFrame(
-            [
-                {
-                    "n_nationkey": int(key[0]),
-                    "n_name": nat["n_name"].iloc[0],
-                    "n_suppliers": len(sup),
-                    "supplier_acctbal": chunk_cents(sup["s_acctbal"]) / 100.0,
-                    "n_customers": n_cust,
-                    "customer_acctbal": cust_cents / 100.0,
-                }
-            ]
-        )
-
-    return co_group_by_key_stream(
-        {"nation": na, "supplier": su, "customer": cu},
-        ["nationkey"],
-        per_nation,
-        "n_nationkey int, n_name string, n_suppliers bigint, "
-        "supplier_acctbal double, n_customers bigint, customer_acctbal double",
-    )
+    whole group (tests/test_join_flatten_sort.py pins the chunk bound;
+    SCALE.md §custom-fn-CoGBK). Same plan: one shuffle per input, the
+    partition sort (UnsafeExternalSorter: spills), one mapInArrow
+    pass."""
+    return _per_nation_cogbk(spark, sf_dir, ["supplier", "customer"])
 
 
 @query(

@@ -60,7 +60,6 @@ _SLOW_TESTS = {
     ("test_streaming.py", "test_stream_stream_left_outer_null_after_watermark"),  # 31s
     ("test_streaming.py", "test_stream_stream_right_outer_null_after_watermark"),  # 31s
     ("test_streaming.py", "test_streaming_three_way_windowed_cogroup"),  # 30s
-    ("test_properties.py", "test_cogbk_stream_matches_materializing_path"),  # 27s
     ("test_trigger_kernel.py", "test_closing_behavior_fire_always_emits_final_pane"),  # 26s
     ("test_dedup_similarity.py", "test_connected_components_long_path_converges"),  # 26s
     ("test_trigger_kernel.py", "test_after_each_advances_through_subtriggers"),  # 25s

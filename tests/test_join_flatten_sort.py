@@ -24,6 +24,11 @@ def rows(df):
     return sorted(tuple(r) for r in (df.collect() if hasattr(df, "collect") else df))
 
 
+def n_rows(chunks) -> int:
+    """Row count of a CoGBK group's last input, which streams as chunks."""
+    return sum(len(c) for c in chunks)
+
+
 def test_join_matrix(sides):
     left, right = sides
     assert join.Join.inner(left.df, right.df, "k").count() == 2
@@ -43,7 +48,7 @@ def test_co_group_by_key_two_inputs(sides):
                 {
                     "k": key[0],
                     "n_left": len(groups["l"]),
-                    "n_right": len(groups["r"]),
+                    "n_right": n_rows(groups["r"]),
                 }
             ]
         )
@@ -56,8 +61,9 @@ def test_co_group_by_key_two_inputs(sides):
 
 def test_co_group_by_key_three_inputs_custom_fn(spark, sides):
     """N-way CoGroupByKey with a custom fn (round 7): the CoGbkResult
-    contract — per key, one named frame per input, EMPTY (not missing)
-    where an input lacks the key, original column order, keys included."""
+    contract — per key, one named frame per buffered input, EMPTY (not
+    missing) where an input lacks the key, and the last input as chunks;
+    original column order, keys included."""
     left, right = sides
     p = Pipeline(spark)
     third = p.create([("a", 1.5), ("e", 5.5)], "k string, tv double")
@@ -65,14 +71,17 @@ def test_co_group_by_key_three_inputs_custom_fn(spark, sides):
     def fn(key, groups):
         assert set(groups) == {"l", "r", "t"}
         assert list(groups["l"].columns) == ["k", "lv"]
-        assert list(groups["t"].columns) == ["k", "tv"]
+        sum_t = 0.0
+        for chunk in groups["t"]:
+            assert list(chunk.columns) == ["k", "tv"]
+            sum_t += float(chunk["tv"].sum())
         return pd.DataFrame(
             [
                 {
                     "k": key[0],
                     "n_l": len(groups["l"]),
                     "n_r": len(groups["r"]),
-                    "sum_t": float(groups["t"]["tv"].sum()),
+                    "sum_t": sum_t,
                 }
             ]
         )
@@ -100,7 +109,7 @@ def test_co_group_by_key_key_only_input(spark, sides):
 
     def fn(key, groups):
         return pd.DataFrame(
-            [{"k": key[0], "n_marks": len(groups["m"]), "n_l": len(groups["l"]),
+            [{"k": key[0], "n_marks": n_rows(groups["m"]), "n_l": len(groups["l"]),
               "n_r": len(groups["r"])}]
         )
 
@@ -127,7 +136,7 @@ def test_co_group_by_key_nway_agrees_with_arrays(spark, sides):
     def fn(key, groups):
         return pd.DataFrame(
             [{"k": key[0], "n_l": len(groups["l"]), "n_r": len(groups["r"]),
-              "n_t": len(groups["t"])}]
+              "n_t": n_rows(groups["t"])}]
         )
 
     via_fn = {
@@ -309,8 +318,9 @@ def test_salted_join_rejects_outer_modes(spark):
 
 
 def test_cogbk_stream_matches_materialized(spark):
-    """co_group_by_key_stream must produce the same per-key results as
-    the materializing path: buffered small sides + streamed last side."""
+    """Buffered small sides + streamed last side: per key, the chunks of
+    the last input add up to exactly the rows a materialized group holds,
+    and the buffered frames are whole."""
     na = spark.createDataFrame(
         [(1, "A"), (2, "B"), (3, "C")], "k int, name string"
     )
@@ -342,7 +352,7 @@ def test_cogbk_stream_matches_materialized(spark):
             ]
         )
 
-    out = join.co_group_by_key_stream(
+    out = join.co_group_by_key(
         {"nation": na, "cust": cu, "events": ev},
         ["k"],
         fn,
@@ -386,7 +396,7 @@ def test_cogbk_stream_hot_key_is_chunked(spark):
                 ]
             )
 
-        out = join.co_group_by_key_stream(
+        out = join.co_group_by_key(
             {"dim": dim, "big": big},
             ["k"],
             fn,
@@ -414,98 +424,36 @@ def test_cogbk_stream_drains_unconsumed(spark):
             [{"k": int(key[0]), "name": groups["dim"]["name"].iloc[0]}]
         )
 
-    out = join.co_group_by_key_stream(
+    out = join.co_group_by_key(
         {"dim": dim, "big": big}, ["k"], fn, "k int, name string"
     ).collect()
     assert sorted((r["k"], r["name"]) for r in out) == [(1, "a"), (2, "b")]
 
 
-def test_cogbk_max_group_rows_guard(spark):
-    """The materializing path's hot-key guard fails fast with a pointer
-    to the streaming variant instead of OOMing silently at scale."""
+def test_cogbk_max_group_rows_guard(spark, monkeypatch):
+    """Only the last input streams, so a hot key on a buffered input is
+    held whole: past the module bound (4M rows, no knob) the runner fails
+    fast, naming the fix, instead of OOMing silently at scale. The bound
+    is shrunk here rather than building a 4M-row group; the same hot key
+    on the streamed last input passes."""
     a = spark.createDataFrame([(1, 1)] * 100, "k int, v int")
     b = spark.createDataFrame([(1, 2)], "k int, w int")
-
-    def fn(key, groups):
-        return pd.DataFrame([{"k": int(key[0])}])
-
-    df = join.co_group_by_key(
-        {"a": a, "b": b}, ["k"], fn, "k int", max_group_rows=10
-    )
-    with pytest.raises(Exception, match="co_group_by_key_stream"):
-        df.collect()
-    # and a 3-input cogroup enforces the same bound
     c = spark.createDataFrame([(1, 3)], "k int, x int")
-    df3 = join.co_group_by_key(
-        {"a": a, "b": b, "c": c}, ["k"], fn, "k int", max_group_rows=10
-    )
-    with pytest.raises(Exception, match="co_group_by_key_stream"):
-        df3.collect()
-
-
-def test_cogbk_guard_is_default_on(spark, monkeypatch):
-    """VERDICT r8 #4: the guard must be opt-OUT. With no kwarg at all,
-    the default bound (4M rows, env-overridable) is active — a forgotten
-    kwarg can no longer OOM silently at 100x. Simulated by shrinking the
-    module default rather than building a 4M-row group."""
-    a = spark.createDataFrame([(1, 1)] * 100, "k int, v int")
-    b = spark.createDataFrame([(1, 2)], "k int, w int")
 
     def fn(key, groups):
         return pd.DataFrame([{"k": int(key[0])}])
 
-    assert join.DEFAULT_MAX_GROUP_ROWS == 4_000_000  # documented default
-    monkeypatch.setattr(join, "DEFAULT_MAX_GROUP_ROWS", 10)
-    # kwarg omitted entirely — the default must enforce
-    sig_default = join.co_group_by_key.__defaults__
-    monkeypatch.setattr(
-        join.co_group_by_key, "__defaults__", (10, False), raising=False
-    )
-    try:
-        df = join.co_group_by_key({"a": a, "b": b}, ["k"], fn, "k int")
-        with pytest.raises(Exception, match="co_group_by_key_stream"):
+    assert join.MAX_BUFFERED_ROWS == 4_000_000
+    monkeypatch.setattr(join, "MAX_BUFFERED_ROWS", 10)
+    for dfs in ({"a": a, "b": b}, {"a": a, "b": b, "c": c}):
+        df = join.co_group_by_key(dfs, ["k"], fn, "k int")
+        with pytest.raises(Exception, match="put the hot input last"):
             df.collect()
-    finally:
-        join.co_group_by_key.__defaults__ = sig_default
-    # explicit opt-out still works
-    df_off = join.co_group_by_key(
-        {"a": a, "b": b}, ["k"], fn, "k int", max_group_rows=None
-    )
-    assert df_off.count() == 1
-
-
-def test_cogbk_max_group_metric(spark):
-    """With track_max_group=True the returned DataFrame carries a
-    max-merge accumulator recording the largest materialized group —
-    skew becomes observable on demand (OPT-IN: the per-task accumulator
-    channel measured +40% on the N-way CoGBK at sf0.1, so the default
-    path must not pay it; the fail-fast guard itself stays default-on)."""
-    a = spark.createDataFrame([(1, 1)] * 37 + [(2, 1)] * 5, "k int, v int")
-    b = spark.createDataFrame([(1, 2), (2, 2)], "k int, w int")
-
-    def fn(key, groups):
-        return pd.DataFrame([{"k": int(key[0])}])
-
-    df = join.co_group_by_key(
-        {"a": a, "b": b}, ["k"], fn, "k int", track_max_group=True
-    )
-    df.collect()
-    assert df.cogbk_max_group_rows.value == 38  # 37 + 1 for key 1
-    # N-way path reports too
-    c = spark.createDataFrame([(1, 3)], "k int, x int")
-    df3 = join.co_group_by_key(
-        {"a": a, "b": b, "c": c}, ["k"], fn, "k int", track_max_group=True
-    )
-    df3.collect()
-    assert df3.cogbk_max_group_rows.value == 39
-    # default path: no accumulator attached (and none created)
-    df_off = join.co_group_by_key({"a": a, "b": b}, ["k"], fn, "k int")
-    df_off.collect()
-    assert df_off.cogbk_max_group_rows is None
+    assert join.co_group_by_key({"b": b, "a": a}, ["k"], fn, "k int").count() == 1
 
 
 def test_cogbk_preserves_int64_beyond_2_53(spark):
-    """Both runners must hand fn EXACT int64 values even when
+    """co_group_by_key must hand fn EXACT int64 values even when
     other tags' null padding shares the wire (round-8 regression: a
     pandas-side split saw nulls in the union and degraded bigint
     columns to float64, corrupting 64-bit hash ids above 2^53; the
@@ -516,39 +464,25 @@ def test_cogbk_preserves_int64_beyond_2_53(spark):
     b = spark.createDataFrame([(1, 7)], "k int, w long")
     c = spark.createDataFrame([(1, 8), (2, 6)], "k int, x long")
 
-    def absent_b(groups) -> bool:
-        # key 2 is absent from b: both runners hand fn an EMPTY frame
-        # that keeps b's dtypes, not an object-dtype placeholder
+    def fn(key, groups):
+        # key 2 is absent from b: fn gets an EMPTY frame that keeps b's
+        # dtypes, not an object-dtype placeholder
         w = groups["b"]["w"]
         assert str(w.dtype) == "int64", f"absent-key frame dtype {w.dtype}"
-        return not len(w)
-
-    def fn(key, groups):
-        if absent_b(groups):
-            return None
-        s = groups["a"]["v"]
-        assert str(s.dtype) == "int64", f"degraded dtype {s.dtype}"
-        return pd.DataFrame([{"k": int(key[0]), "v": int(s.iloc[0])}])
-
-    got = join.co_group_by_key(
-        {"a": a, "b": b, "c": c}, ["k"], fn, "k int, v long"
-    ).collect()
-    assert got[0]["v"] == big
-
-    def fn_stream(key, groups):
-        if absent_b(groups):
+        if not len(w):
             return None
         s = groups["a"]["v"]
         assert str(s.dtype) == "int64", f"degraded dtype {s.dtype}"
         total = 0
         for chunk in groups["c"]:
+            assert str(chunk["x"].dtype) == "int64", chunk["x"].dtype
             total += int(chunk["x"].sum())
         return pd.DataFrame([{"k": int(key[0]), "v": int(s.iloc[0]), "t": total}])
 
-    got2 = join.co_group_by_key_stream(
-        {"a": a, "b": b, "c": c}, ["k"], fn_stream, "k int, v long, t long"
+    got = join.co_group_by_key(
+        {"a": a, "b": b, "c": c}, ["k"], fn, "k int, v long, t long"
     ).collect()
-    assert got2[0]["v"] == big and got2[0]["t"] == 8
+    assert len(got) == 1 and got[0]["v"] == big and got[0]["t"] == 8
 
 
 def test_cogbk_stream_distinguishes_adjacent_int64_keys(spark):
@@ -573,7 +507,7 @@ def test_cogbk_stream_distinguishes_adjacent_int64_keys(spark):
 
     rows = {
         r["k"]: (r["n_a"], r["s_b"])
-        for r in join.co_group_by_key_stream(
+        for r in join.co_group_by_key(
             {"a": a, "b": b}, ["k"], fn, "k long, n_a long, s_b long"
         ).collect()
     }
@@ -589,27 +523,31 @@ _THIRD_INPUT = {
 
 
 @pytest.mark.parametrize(
-    "case", ["two_inputs", "three_mixed_layouts", "three_shared_layout"]
+    "case", ["one_input", "two_inputs", "three_mixed_layouts", "three_shared_layout"]
 )
-def test_cogbk_plans_one_native_cogroup(spark, sides, case):
-    """co_group_by_key plans ONE native cogroup for every input count
-    and value layout (first input on its own side, the rest tagged onto
-    the other) — same CoGbkResult contract: named frames, original
-    column order, keys included, EMPTY frames for absent keys."""
+def test_cogbk_plans_one_sorted_stream(spark, sides, case):
+    """co_group_by_key plans ONE sorted stream for every input count and
+    value layout: every input tagged into one union, one hash exchange
+    on the key, one sort, one mapInArrow pass — no native cogroup. Same
+    CoGbkResult contract: named frames for buffered inputs and chunks
+    for the last, original column order, keys included, EMPTY for
+    absent keys."""
     left, right = sides
-    dfs = {"l": left.df, "r": right.df}
+    dfs = {"l": left.df} if case == "one_input" else {"l": left.df, "r": right.df}
     if case in _THIRD_INPUT:
         dfs["t"] = Pipeline(spark).create(*_THIRD_INPUT[case]).df
     value_col = {"l": "lv", "r": "rv", "t": "tv"}
-    names = set(dfs)
+    names = list(dfs)
 
     def fn(key, groups):
-        assert set(groups) == names
+        assert list(groups) == names
         row = {"k": key[0]}
         for name, g in groups.items():
-            assert list(g.columns) == ["k", value_col[name]]
-            row[f"n_{name}"] = len(g)
-            row[f"s_{name}"] = float(g[value_col[name]].sum())
+            chunks = list(g) if name == names[-1] else [g]
+            for chunk in chunks:
+                assert list(chunk.columns) == ["k", value_col[name]]
+            row[f"n_{name}"] = sum(len(c) for c in chunks)
+            row[f"s_{name}"] = float(sum(c[value_col[name]].sum() for c in chunks))
         return pd.DataFrame([row])
 
     out = join.co_group_by_key(
@@ -619,9 +557,12 @@ def test_cogbk_plans_one_native_cogroup(spark, sides, case):
         "k string, " + ", ".join(f"n_{n} long, s_{n} double" for n in dfs),
     )
     plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
+        out._jdf.queryExecution(), "simple"
     )
-    assert "FlatMapCoGroupsInArrow" in plan, plan
+    assert plan.count("Exchange hashpartitioning(k#") == 1, plan
+    assert plan.count("Sort [k#") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "FlatMapCoGroupsInArrow" not in plan, plan
     inputs = {n: [tuple(r) for r in df.collect()] for n, df in dfs.items()}
     expect = []
     for k in sorted({r[0] for rs in inputs.values() for r in rs}):
@@ -633,27 +574,20 @@ def test_cogbk_plans_one_native_cogroup(spark, sides, case):
     assert rows(out) == expect
 
 
-def test_cogbk_single_input_both_runners(spark):
-    """One-input CoGroupByKey gives one group per key from both runners
-    (the materializing one cogroups against an empty tagged side)."""
+def test_cogbk_single_input(spark):
+    """One-input CoGroupByKey gives one group per key; the only input is
+    the last one, so it streams as chunks."""
     a = spark.createDataFrame([(1, 10), (1, 11), (2, 20)], "k int, v long")
-    schema = "k int, n long, s long"
 
     def fn(key, groups):
-        g = groups["a"]
+        g = pd.concat(list(groups["a"]))
         return pd.DataFrame([{"k": int(key[0]), "n": len(g), "s": int(g["v"].sum())}])
 
-    def fn_stream(key, groups):
-        return fn(key, {"a": pd.concat(list(groups["a"]))})
-
-    for out in (
-        join.co_group_by_key({"a": a}, ["k"], fn, schema),
-        join.co_group_by_key_stream({"a": a}, ["k"], fn_stream, schema),
-    ):
-        assert {r["k"]: (r["n"], r["s"]) for r in out.collect()} == {
-            1: (2, 21),
-            2: (1, 20),
-        }
+    out = join.co_group_by_key({"a": a}, ["k"], fn, "k int, n long, s long")
+    assert {r["k"]: (r["n"], r["s"]) for r in out.collect()} == {
+        1: (2, 21),
+        2: (1, 20),
+    }
 
 
 def test_cogbk_shared_fact_side_int64_exactness(spark):
@@ -671,10 +605,8 @@ def test_cogbk_shared_fact_side_int64_exactness(spark):
     )
     exact_ints = p.create([("a", big)], "k string, v long")
 
-    seen: dict[str, object] = {}
-
     def fn(key, groups):
-        v = groups["exact"]["v"]
+        v = pd.concat(list(groups["exact"]))["v"]  # last input: chunks
         return pd.DataFrame(
             [{"k": key[0], "got": int(v.iloc[0]), "dtype_ok": str(v.dtype) == "int64",
               "n_null_side": len(groups["nulls"])}]
@@ -690,3 +622,55 @@ def test_cogbk_shared_fact_side_int64_exactness(spark):
     assert r["got"] == big
     assert r["dtype_ok"] is True
     assert r["n_null_side"] == 2
+
+
+def test_cogbk_null_key_is_one_group(spark):
+    """A null key is ONE group across buffered and streamed inputs, as in
+    a groupBy, and the 64-bit key sorted next to it stays exact: run
+    boundaries and key values are read in Arrow, never through pandas'
+    float64 upcast (which splits NaN runs and rounds 2^53+1)."""
+    big = 2**53 + 1
+    a = spark.createDataFrame([(None, 1), (None, 2), (big, 3)], "k long, v long")
+    b = spark.createDataFrame([(None, 10), (big, 20)], "k long, v long")
+    c = spark.createDataFrame(
+        [(None, 100), (None, 200), (big, 400)], "k long, v long"
+    )
+
+    def fn(key, groups):
+        chunks = list(groups["c"])
+        return pd.DataFrame(
+            [{"k": key[0], "n_a": len(groups["a"]), "n_b": len(groups["b"]),
+              "n_c": sum(len(ch) for ch in chunks),
+              "s_c": int(sum(ch["v"].sum() for ch in chunks))}]
+        )
+
+    got = join.co_group_by_key(
+        {"a": a, "b": b, "c": c},
+        ["k"],
+        fn,
+        "k long, n_a long, n_b long, n_c long, s_c long",
+    ).collect()
+    assert len(got) == 2, got  # a split null run would emit a row per run
+    assert {r["k"]: tuple(r)[1:] for r in got} == {
+        None: (2, 1, 2, 300),
+        big: (1, 1, 1, 400),
+    }
+
+
+def test_cogbk_nan_key_is_one_group(spark):
+    """NaN keys group together, as in a groupBy, although NaN != NaN:
+    one group across the buffered and the streamed input."""
+    nan = float("nan")
+    a = spark.createDataFrame([(nan, 1), (1.0, 2)], "k double, v long")
+    b = spark.createDataFrame([(nan, 10), (nan, 11), (1.0, 20)], "k double, v long")
+
+    def fn(key, groups):
+        return pd.DataFrame(
+            [{"is_nan": key[0] != key[0], "n_a": len(groups["a"]),
+              "n_b": n_rows(groups["b"])}]
+        )
+
+    got = join.co_group_by_key(
+        {"a": a, "b": b}, ["k"], fn, "is_nan boolean, n_a long, n_b long"
+    ).collect()
+    assert sorted(tuple(r) for r in got) == [(False, 1, 1), (True, 1, 2)]

@@ -94,10 +94,8 @@ def test_relational_queries_stay_jvm_side(spark):
         "video_keyframe_detect",
         "audio_silence_segments",
         # the custom-fn CoGBK contract ships per-key iterables to Python
-        # by definition: one native cogroup + applyInArrow per key
-        # (FlatMapCoGroupsInArrow) for the materializing runner, one
-        # mapInArrow pass (MapInArrow) for the sorted-stream runner;
-        # media egress = decode + Example codec
+        # by definition: one mapInArrow pass (MapInArrow) over the
+        # key-sorted tagged union; media egress = decode + Example codec
         "cogroup_nation_customer_supplier",
         "cogbk_sorted_stream",
         "media_egress_pipeline",
@@ -167,7 +165,8 @@ def test_cogbk_plan_counts_its_python_stage(spark):
     # the allow-list above is only as good as the counter: a CoGBK plan's
     # per-key Python stage must register as a Python evaluation
     p = _plan(spark, "cogroup_nation_customer_supplier")
-    assert "FlatMapCoGroupsInArrow" in p.text
+    assert "MapInArrow" in p.text
+    assert "FlatMapCoGroupsInArrow" not in p.text
     assert p.python_evals >= 1
 
 
