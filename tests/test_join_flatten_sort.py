@@ -4,6 +4,8 @@ contrib/sorter SortValuesTest)."""
 
 from __future__ import annotations
 
+import inspect
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -430,12 +432,33 @@ def test_cogbk_stream_drains_unconsumed(spark):
     assert sorted((r["k"], r["name"]) for r in out) == [(1, "a"), (2, "b")]
 
 
+def test_cogbk_guard_is_default_on(spark, monkeypatch):
+    """The hot-key guard on buffered inputs is always on: the runner takes
+    no knob to turn it off, and its bound is the module constant (4M rows).
+    Simulated by shrinking the constant rather than building a 4M-row
+    group; with two inputs the buffered hot key fails fast, naming the
+    fix."""
+    a = spark.createDataFrame([(1, 1)] * 100, "k int, v int")
+    b = spark.createDataFrame([(1, 2)], "k int, w int")
+
+    def fn(key, groups):
+        return pd.DataFrame([{"k": int(key[0])}])
+
+    assert join.MAX_BUFFERED_ROWS == 4_000_000
+    assert list(inspect.signature(join.co_group_by_key).parameters) == [
+        "dfs", "keys", "fn", "schema"
+    ]
+    monkeypatch.setattr(join, "MAX_BUFFERED_ROWS", 10)
+    df = join.co_group_by_key({"a": a, "b": b}, ["k"], fn, "k int")
+    with pytest.raises(Exception, match="put the hot input last"):
+        df.collect()
+
+
 def test_cogbk_max_group_rows_guard(spark, monkeypatch):
     """Only the last input streams, so a hot key on a buffered input is
-    held whole: past the module bound (4M rows, no knob) the runner fails
-    fast, naming the fix, instead of OOMing silently at scale. The bound
-    is shrunk here rather than building a 4M-row group; the same hot key
-    on the streamed last input passes."""
+    held whole: past the module bound the runner fails fast instead of
+    OOMing silently at scale, wherever the buffered hot input sits; the
+    same hot key on the streamed last input passes."""
     a = spark.createDataFrame([(1, 1)] * 100, "k int, v int")
     b = spark.createDataFrame([(1, 2)], "k int, w int")
     c = spark.createDataFrame([(1, 3)], "k int, x int")
@@ -443,13 +466,16 @@ def test_cogbk_max_group_rows_guard(spark, monkeypatch):
     def fn(key, groups):
         return pd.DataFrame([{"k": int(key[0])}])
 
-    assert join.MAX_BUFFERED_ROWS == 4_000_000
     monkeypatch.setattr(join, "MAX_BUFFERED_ROWS", 10)
-    for dfs in ({"a": a, "b": b}, {"a": a, "b": b, "c": c}):
+    for dfs in ({"a": a, "b": b, "c": c}, {"b": b, "a": a, "c": c}):
         df = join.co_group_by_key(dfs, ["k"], fn, "k int")
         with pytest.raises(Exception, match="put the hot input last"):
             df.collect()
     assert join.co_group_by_key({"b": b, "a": a}, ["k"], fn, "k int").count() == 1
+    assert (
+        join.co_group_by_key({"b": b, "c": c, "a": a}, ["k"], fn, "k int").count()
+        == 1
+    )
 
 
 def test_cogbk_preserves_int64_beyond_2_53(spark):
