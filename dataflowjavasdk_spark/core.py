@@ -230,7 +230,8 @@ class PCollection:
                         out: str | None = None, out_type: str = "double",
                         output_time: str | None = None) -> "PCollection":
         """Combine.perKey — Column aggs (fast path, many at once) or a
-        custom CombineFn. Windowed inputs group per (window, key).
+        custom CombineFn (lifted: map-side partial accumulators, see
+        operators/combine.py). Windowed inputs group per (window, key).
 
         `output_time` (OutputTimeFn.{END_OF_WINDOW,EARLIEST,LATEST})
         attaches the emitted-pane timestamp as an `emit_ts` column:
@@ -260,17 +261,6 @@ class PCollection:
                 _combine.Combine.per_key(pc.df, [*keys, "window"], col, fn, out, out_type)
             )
         return self._with(_combine.Combine.per_key(self.df, keys, col, fn, out, out_type))
-
-    def combine_per_key_lifted(
-        self, keys: Sequence[str], fn: _combine.CombineFn, col: str,
-        out: str, out_type: str = "double",
-    ) -> "PCollection":
-        """Combine.perKey with combiner lifting: map-side partial
-        accumulators, shuffle carries (key, accumulator) only — use for
-        custom Python CombineFns on large inputs (operators/combine.py)."""
-        return self._with(
-            _combine.Combine.per_key_lifted(self.df, keys, col, fn, out, out_type)
-        )
 
     def combine_globally(self, fn: _combine.CombineFn, col: str, out: str, out_type: str = "double") -> "PCollection":
         return self._with(_combine.Combine.globally(self.df, col, fn, out, out_type))

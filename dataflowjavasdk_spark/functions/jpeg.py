@@ -270,15 +270,6 @@ def _huff_lut(table: dict[tuple[int, int], int]) -> list:
     return lut
 
 
-def _decode_symbol(r: _BitReader, lut: list) -> int:
-    entry = lut[r.peek16()]
-    if entry is None:
-        raise ValueError("invalid Huffman code in JPEG stream")
-    sym, length = entry
-    r.consume(length)
-    return sym
-
-
 def _extend(v: int, t: int) -> int:
     """T.81 F.12: map a t-bit magnitude value to its signed coefficient."""
     if t == 0:

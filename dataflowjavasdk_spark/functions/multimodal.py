@@ -389,17 +389,16 @@ def decode_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
     return rate, nch, _scale_pcm(raw, width).reshape(-1, nch)
 
 
-def decode_wav_batch(
-    payloads,
+def _decode_metas(
+    metas,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Batch WAV decode for the audio feature extractors (round 10,
-    guide §4.2: per-row numpy calls on ~500-sample clips spend more time
-    in call dispatch than in math). Headers are walked per payload
-    (inherently row-local, ~µs); the SAMPLE math — frombuffer, widen to
-    float64, scale, channel-fold — runs once per (width, n_channels)
-    GROUP over the group's concatenated bytes, so a homogeneous corpus
-    (the overwhelmingly common case) pays ONE numpy expression chain per
-    batch instead of one per clip.
+    """Decode one chunk's parsed clips (guide §4.2: per-row numpy calls
+    on ~500-sample clips spend more time in call dispatch than in math).
+    The SAMPLE math — frombuffer, widen to float64, scale, channel-fold —
+    runs once per (width, n_channels) GROUP over the group's
+    concatenated bytes, so a homogeneous corpus (the overwhelmingly
+    common case) pays ONE numpy expression chain per chunk instead of
+    one per clip.
 
     Returns (rates, n_channels, frame_counts, starts, mono): int64
     arrays per clip, plus the mono-folded float64 samples of all clips
@@ -407,17 +406,8 @@ def decode_wav_batch(
     frame_counts[i] its length). Mono folding is mean over the channel
     axis of the same (frames, nch) layout the per-row decoder returns,
     so values are bit-identical to decode_wav(...)[2].mean(axis=1).
-
-    The returned ``mono`` is a view into a pooled per-worker buffer
-    (_BufferPool) and is only valid until the NEXT decode_wav_batch /
-    iter_wav_chunks step in the same process — consume it within the
-    batch, as every extractor here does."""
-    return _decode_metas([_parse_wav(bytes(p)) for p in payloads])
-
-
-def _decode_metas(
-    metas,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    ``mono`` is a view into a pooled per-worker buffer (_BufferPool),
+    valid until the next chunk is decoded in the same process."""
     n_rows = len(metas)
     rates = np.fromiter((m[0] for m in metas), dtype=np.int64, count=n_rows)
     nchs = np.fromiter((m[1] for m in metas), dtype=np.int64, count=n_rows)
@@ -454,8 +444,6 @@ def _decode_metas(
             for i in idxs:
                 mono[starts[i] : starts[i] + lens[i]] = mono_g[pos : pos + lens[i]]
                 pos += lens[i]
-    if not n_rows:
-        mono = np.empty(0, dtype=np.float64)
     return rates, nchs, lens, starts, mono
 
 

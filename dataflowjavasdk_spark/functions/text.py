@@ -43,15 +43,6 @@ def tokens(col: str | Column, pattern: str = r"\s+") -> Column:
     return F.filter(F.split(c, pattern), lambda t: t != F.lit(""))
 
 
-def bpe_ish_tokens(col: str | Column) -> Column:
-    """BPE-ish sub-token split: word-internal transitions between letter
-    and digit runs also break (a cheap proxy for byte-pair segmentation
-    used for token-count estimation)."""
-    c = F.col(col) if isinstance(col, str) else col
-    pre = F.regexp_replace(c, r"(\d+)", r" $1 ")
-    return F.filter(F.split(pre, r"[\s\p{Punct}]+"), lambda t: t != F.lit(""))
-
-
 def token_count(col: str | Column) -> Column:
     """Token count (whitespace tokens)."""
     return F.size(tokens(col))

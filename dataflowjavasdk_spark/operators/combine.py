@@ -9,9 +9,10 @@ Execution notes:
 - Every per-key combine with a Column fast-path compiles to partial/final
   HashAggregate — Spark's built-in combiner lifting: map-side partial
   aggregation before the single shuffle.
-- Custom CombineFns run via applyInPandas (Arrow batches per key-group).
-  That path shuffles raw values — use it only when the aggregation is
-  genuinely not algebraic; otherwise supply `spark_agg`.
+- Custom CombineFns are lifted the same way in Python: map-side partial
+  accumulators per Arrow batch (mapInPandas), then one shuffle of
+  (key, pickled accumulator) rows and a per-key merge (applyInPandas).
+  Supply `spark_agg` when the aggregation has a Column form.
 - Hot keys: with_hot_key_fanout salts the key for a two-level aggregate —
   the reference's Combine.withHotKeyFanout (SURVEY.md §2.2).
 """
@@ -21,9 +22,11 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, FloatType, LongType, StructType
 from pyspark.sql.window import Window as W
 
 
@@ -40,14 +43,23 @@ def group_by_key(
     return df.groupBy(*keys).agg(F.collect_list(values_col).alias(out))
 
 
+def _hashable(v: Any) -> Any:
+    """A pandas group key for a struct (dict) or array value."""
+    if isinstance(v, dict):
+        return tuple(_hashable(x) for x in v.values())
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return tuple(_hashable(x) for x in v)
+    return v
+
+
 class CombineFn:
     """The 4-method combiner contract (historical sdk/transforms/Combine.java
     CombineFn: createAccumulator/addInput/mergeAccumulators/extractOutput).
 
     Subclasses may set `spark_agg: Callable[[str], Column]` to provide the
     Column fast-path; the Python methods then serve as the semantic spec
-    and the applyInPandas fallback (`add_inputs` is the vectorized
-    addInput over a pandas Series).
+    and the lifted Python plan (`add_inputs` is the vectorized addInput
+    over a pandas Series).
     """
 
     spark_agg: Callable[[str], Column] | None = None
@@ -80,52 +92,41 @@ class Combine:
         out: str,
         out_type: str = "double",
     ) -> DataFrame:
-        """Combine.perKey(fn). Column fast-path when available, else
-        vectorized applyInPandas (one partial per Arrow batch → merge —
-        mirrors the accumulator lifecycle, though Spark still shuffles the
-        raw values for this path)."""
+        """Combine.perKey(fn). The Column fast-path when the fn has one;
+        otherwise COMBINER LIFTING, the reference runner's plan for every
+        CombineFn (historical sdk/runners/worker
+        PartialGroupByKeyOperation): addInput runs map-side per Arrow
+        batch, so the shuffle carries one pickled accumulator per
+        (key, batch) instead of every raw value; mergeAccumulators +
+        extractOutput run reduce-side per key. It needs only what the
+        CombineFn contract already promises (merge-associativity).
+
+        Keys pandas cannot hold exactly cross both Python stages as text
+        and are cast back at the end: a long column holding a null
+        arrives as float64 (inexact past 2**53), and a float column's
+        null and NaN both arrive as NaN. Struct and array keys arrive as
+        dicts and arrays; the map side groups them by a hashable copy."""
         if fn.spark_agg is not None:
             return df.groupBy(*keys).agg(fn.spark_agg(col).alias(out))
-
-        key_fields = ", ".join(
-            f"{k} {dict(df.dtypes)[k]}" for k in keys
-        )
-        schema = f"{key_fields}, {out} {out_type}"
-
-        def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-            acc = fn.add_inputs(fn.create_accumulator(), pdf[col])
-            row = {k: pdf[k].iloc[0] for k in keys}
-            row[out] = fn.extract_output(fn.merge_accumulators([acc]))
-            return pd.DataFrame([row])
-
-        return df.groupBy(*keys).applyInPandas(apply, schema=schema)
-
-    @staticmethod
-    def per_key_lifted(
-        df: DataFrame,
-        keys: Sequence[str],
-        col: str,
-        fn: CombineFn,
-        out: str,
-        out_type: str = "double",
-    ) -> DataFrame:
-        """Combine.perKey with COMBINER LIFTING for custom Python fns — the
-        reference runner's signature optimization (historical
-        sdk/runners/worker PartialGroupByKeyOperation): addInput runs
-        map-side per Arrow batch, so the shuffle carries one pickled
-        accumulator per (key, batch) instead of every raw value;
-        mergeAccumulators + extractOutput run reduce-side per key.
-
-        At 100 TB this is the difference between shuffling the dataset and
-        shuffling #keys × #partitions small blobs. Requires only what the
-        CombineFn contract already promises (merge-associativity).
-        Asserted equivalent to the unlifted path in tests/test_combine.py;
-        the plan shape (MapInPandas BEFORE the exchange) is asserted too."""
         import pickle
 
         key_list = list(keys)
-        dtypes = dict(df.dtypes)
-        key_fields = ", ".join(f"{k} {dtypes[k]}" for k in key_list)
+        types = {f.name: f.dataType for f in df.schema.fields}
+        text = {
+            k for k in key_list if isinstance(types[k], (LongType, FloatType, DoubleType))
+        }
+        nested = {k for k in key_list if isinstance(types[k], (StructType, ArrayType))}
+
+        def key_col(k):
+            c = F.col(k)
+            if isinstance(types[k], (FloatType, DoubleType)):
+                # -0.0 and 0.0 are one group key, as in a groupBy
+                c = F.when(c == 0, F.lit(0).cast(types[k])).otherwise(c)
+            return (c.cast("string") if k in text else c).alias(k)
+
+        key_fields = ", ".join(
+            f"{k} {'string' if k in text else types[k].simpleString()}" for k in key_list
+        )
         partial_schema = f"{key_fields}, __acc__ binary"
         final_schema = f"{key_fields}, {out} {out_type}"
 
@@ -133,11 +134,14 @@ class Combine:
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                rows = []
-                for kv, grp in pdf.groupby(key_list, sort=False, dropna=False):
-                    kt = kv if isinstance(kv, tuple) else (kv,)
-                    acc = fn.add_inputs(fn.create_accumulator(), grp[col])
-                    rows.append((*kt, pickle.dumps(acc)))
+                by = [pdf[k].map(_hashable) if k in nested else pdf[k] for k in key_list]
+                rows = [
+                    (
+                        *(grp[k].iloc[0] for k in key_list),
+                        pickle.dumps(fn.add_inputs(fn.create_accumulator(), grp[col])),
+                    )
+                    for _, grp in pdf.groupby(by, sort=False, dropna=False)
+                ]
                 yield pd.DataFrame(rows, columns=[*key_list, "__acc__"])
 
         def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -146,8 +150,13 @@ class Combine:
             row[out] = fn.extract_output(fn.merge_accumulators(accs))
             return pd.DataFrame([row])
 
-        partial = df.select(*key_list, col).mapInPandas(partials, partial_schema)
-        return partial.groupBy(*key_list).applyInPandas(finalize, final_schema)
+        partial = df.select(*[key_col(k) for k in key_list], col).mapInPandas(
+            partials, partial_schema
+        )
+        combined = partial.groupBy(*key_list).applyInPandas(finalize, final_schema)
+        return combined.select(
+            *[F.col(k).cast(types[k]) if k in text else F.col(k) for k in key_list], out
+        )
 
     @staticmethod
     def globally(

@@ -188,9 +188,7 @@ def co_group_by_key(
             while run is not None and run[0] == key and run[1] == last:
                 run = next(runs, None)
             if out is not None and len(out):
-                yield pa.RecordBatch.from_pandas(
-                    out, schema=out_arrow_schema, preserve_index=False
-                )
+                yield _record_batch(out, out_arrow_schema)
 
     return shuffled.mapInArrow(part, schema=schema)
 
@@ -245,6 +243,23 @@ def _tag_frame(rows, layout) -> pd.DataFrame:
     return rows.select(src).rename_columns(cols).to_pandas()
 
 
+def _record_batch(out: pd.DataFrame, schema):
+    """``fn``'s pandas rows → one Arrow batch of ``schema``. Float
+    columns convert without pandas' null inference, so a NaN stays NaN
+    (``RecordBatch.from_pandas`` would make it null); None in an
+    object-dtype column is null either way. Every other column keeps
+    pandas semantics (NaN/NaT → null)."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(out[f.name], type=f.type, from_pandas=not pa.types.is_floating(f.type))
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
 def _arrow_schema_of(spark, schema):
     """Arrow schema for a Spark DDL string / StructType (driver-side —
     needs the active session's parser)."""
@@ -279,8 +294,19 @@ def co_group_arrays(dfs: dict[str, DataFrame], keys: Sequence[str]) -> DataFrame
             )
         )
     out = agged[0]
-    for nxt in agged[1:]:
-        out = out.join(nxt, key_list, "full")
+    for name, nxt in zip(names[1:], agged[1:]):
+        # null-safe (<=>): a null key is one group, as in a groupBy
+        right = nxt.select(*[F.col(k).alias(f"__r_{k}") for k in key_list], name)
+        joined = out.join(
+            right,
+            [F.col(k).eqNullSafe(F.col(f"__r_{k}")) for k in key_list],
+            "full",
+        )
+        out = joined.select(
+            *[F.coalesce(k, f"__r_{k}").alias(k) for k in key_list],
+            *[c for c in out.columns if c not in key_list],
+            name,
+        )
     # Missing tag for a key → empty iterable, not NULL (CoGbkResult contract).
     for name in names:
         out = out.withColumn(

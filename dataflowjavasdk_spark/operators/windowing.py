@@ -94,39 +94,6 @@ class Sessions(WindowFn):
     def group_expr(self, ts: Column) -> Column:
         return F.session_window(ts, self.gap)
 
-    def group_by_gaps_islands(self, df: DataFrame, keys: list[str], ts_col: str = "ts"):
-        """BATCH gaps-and-islands formulation of the same session merge
-        (VERDICT r8 #2): lag → new-session flag → running sum → group by
-        (keys, island id) — the classic SQL sessionization DuckDB runs its
-        oracle with, here as a [ts, ts+gap) instantiation of the shared
-        interval-merge stage. Returns a GroupedData-shaped wrapper whose
-        .agg() emits the identical `window` struct (start = min ts,
-        end = max ts + gap) as the native path, pinned row-identical by
-        tests/test_windowing_ops.py::test_sessions_gaps_islands_row_identity.
-
-        RACE OUTCOME (BASELINE.md round-9 table): measured interleaved at
-        sf0.1 (median of 7, shared session), native session_window is
-        261 ms vs 366 ms for this formulation — both plans are one
-        exchange + one sort, but Spark runs this one as two WindowExec
-        passes + hash-agg while MergingSessions folds the merge into the
-        aggregation itself. Native session_window therefore REMAINS the
-        batch default (group_expr); this path exists for consumers that
-        need PER-ELEMENT session ids before aggregating (assign-time
-        visibility the agg-time native merge cannot give) — take
-        `__wid` from the staged frame via _stage_intervals directly."""
-        if isinstance(self.gap, Column):
-            # session_window's dynamic-gap contract takes duration
-            # STRINGS per element ("10 minutes") — parse to
-            # CalendarIntervalType, the same type session_window uses;
-            # timestamp + calendar-interval addition is well-defined
-            gap = self.gap.cast("interval")
-        else:
-            gap = F.expr(f"INTERVAL {self.gap}")
-        ts = F.col(ts_col)
-        return _MergedWindowGroupedData(
-            _stage_intervals(df, list(keys), ts, ts + gap), list(keys)
-        )
-
 
 class IntervalMergingWindowFn(WindowFn):
     """Custom merging WindowFn (historical sdk/transforms/windowing/

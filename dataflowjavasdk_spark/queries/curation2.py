@@ -37,8 +37,8 @@ from dataflowjavasdk_spark.functions.text import md5_long
 from dataflowjavasdk_spark.queries.dedup import (
     _CORPUS_SQL,
     SHINGLE_DF_CAP,
-    _blocked_candidates,
     _candidate_pairs_sql,
+    _capped_blocking,
     _corpus,
     _jaccard_pairs_sql,
 )
@@ -178,7 +178,8 @@ def edit_distance_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = corpus.select(
         "doc_id", "text", S.shingles("text", _LEV_BLOCK_NGRAM).alias("grams")
     )
-    sh, cand = _blocked_candidates(sh)
+    sh, _, _, pairs = _capped_blocking(sh)
+    cand = pairs.select("id_a", "id_b")
     ta = sh.select(F.col("doc_id").alias("id_a"), F.col("text").alias("text_a"))
     tb = sh.select(F.col("doc_id").alias("id_b"), F.col("text").alias("text_b"))
     # Banded Levenshtein (round 10): rel <= T  ⟺  lev <= T·max_len  ⟺

@@ -57,80 +57,33 @@ _CORPUS_SQL = """
 SHINGLE_DF_CAP = 1000
 
 
-def _blocked_candidates(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """df-capped blocking stage: pin the shingled relation and emit
-    candidate id pairs (id_a < id_b) from the capped gram equi-join.
+def _capped_blocking(sh: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The df-capped gram blocking stage every exact near-dup verifier
+    shares. Returns (pinned sh, ex, gram_df, pairs):
 
-    ``sh`` (doc_id, grams, ...) is materialized once (lazy
-    localCheckpoint): it feeds the gram document-frequency, both sides of
-    the banded self-join, and the verify stage's per-doc lookups — five
-    references that Spark would otherwise recompute from the raw corpus
-    each (verified on the executed plan: the source scan repeated 18x in
-    near_dup_pairs_jaccard before this pin). The checkpointed relation is
-    the shingled corpus — the same order of size as the input, the
-    standard materialize-after-tokenize point in a real pipeline
-    (MEMORY_AND_DISK, spills cleanly). Returns (pinned sh, cand)."""
+    - ``sh`` (doc_id, grams, ...), materialized once (lazy
+      localCheckpoint): it feeds the gram document frequency, both sides
+      of the self-join and the verify stage's per-doc lookups — five
+      references that Spark would otherwise recompute from the raw corpus
+      each (verified on the executed plan: the source scan repeated 18x
+      in near_dup_pairs_jaccard before this pin). The checkpointed
+      relation is the shingled corpus — the same order of size as the
+      input, the standard materialize-after-tokenize point in a real
+      pipeline (MEMORY_AND_DISK, spills cleanly).
+    - ``ex`` (doc_id, gram): the map-side explode of the pinned sh, left
+      unpinned on purpose — checkpointing it would write a corpus-sized
+      relation.
+    - ``gram_df`` (gram, df) for every gram with df >= 2, pinned (round
+      10): one df pass feeds the kept-gram filter on BOTH self-join
+      sides (the broadcast side of a self-join cannot share the other
+      side's exchange) and any over-cap lookup; the pinned rows are the
+      shared-gram vocabulary, far smaller than one corpus gram pass.
+    - ``pairs`` (id_a, id_b, inter_kept): every doc pair (id_a < id_b)
+      sharing a kept gram (df in [2, cap]), with the number of kept grams
+      they share (grams must be distinct per doc; S.shingles guarantees
+      it)."""
     sh = sh.localCheckpoint(eager=False)
     ex = sh.select("doc_id", F.explode("grams").alias("gram"))
-    # Pin the capped gram list (round 10): BOTH self-join sides consume
-    # it through `kept`, and without the pin each side re-runs the full
-    # explode→shuffle→agg document-frequency pass over the corpus (the
-    # broadcast side of the self-join cannot share the other side's
-    # exchange). The pinned rows are the df-capped gram vocabulary —
-    # far smaller than one corpus gram pass at any scale. `ex` itself
-    # stays unpinned on purpose: it is a shuffle-free map-side explode
-    # of the already-pinned sh, while checkpointing it would write a
-    # corpus-sized relation.
-    gram_df = (
-        ex.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter((F.col("df") >= 2) & (F.col("df") <= SHINGLE_DF_CAP))
-        .select("gram")
-        .localCheckpoint(eager=False)
-    )
-    kept = ex.join(gram_df, "gram")
-    a, b = kept.alias("a"), kept.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.gram") == F.col("b.gram"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    return sh, cand
-
-
-def _capped_pair_profile(sh: DataFrame, doc_cols=None) -> DataFrame:
-    """Candidate pairs from the df-capped gram blocking with the EXACT
-    full-set intersection count — (id_a, id_b, n_a, n_b, inter) plus any
-    ``doc_cols`` ({name: Column over sh}) carried to both sides as
-    ``<name>_a`` / ``<name>_b``. Same candidate semantics as
-    _blocked_candidates; grams must be distinct per doc (S.shingles
-    guarantees it).
-
-    Round 10: the verify stage used to re-join every candidate pair to
-    BOTH docs' full gram arrays and run array_intersect per pair —
-    shipping corpus-scale arrays across two joins (measured 85% of the
-    Jaccard query's warm cost at sf0.1: 1.47M candidates x ~40-string
-    arrays per side). The intersection is instead read off the blocking
-    join itself: every gram two docs share has df >= 2 by definition, so
-    |A∩B| = (shared grams with df in [2, cap]: the groupBy-count of the
-    candidate enumeration — the same shuffle the old .distinct() paid)
-    + (shared grams with df > cap: counted from per-doc over-cap-gram
-    arrays, a stopword-vocabulary-bounded relation that is EMPTY unless
-    a gram tops the cap). The per-pair join now carries only
-    (n, hot, doc_cols) per side instead of the gram arrays, and the
-    per-pair array_intersect runs over the near-empty hot arrays.
-    Emitted pairs and inter counts are bit-identical to the
-    full-array verify (same integers)."""
-    doc_cols = doc_cols or {}
-    sh = sh.localCheckpoint(eager=False)
-    ex = sh.select("doc_id", F.explode("grams").alias("gram"))
-    # pinned: one df pass feeds the kept-gram filter on BOTH enumeration
-    # sides and the over-cap list (see _blocked_candidates on why the
-    # broadcast side of a self-join cannot reuse the other's exchange)
     gram_df = (
         ex.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -150,6 +103,31 @@ def _capped_pair_profile(sh: DataFrame, doc_cols=None) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("inter_kept"))
     )
+    return sh, ex, gram_df, pairs
+
+
+def _capped_pair_profile(sh: DataFrame, doc_cols=None) -> DataFrame:
+    """Candidate pairs from the df-capped gram blocking (_capped_blocking)
+    with the EXACT full-set intersection count — (id_a, id_b, n_a, n_b,
+    inter) plus any ``doc_cols`` ({name: Column over sh}) carried to both
+    sides as ``<name>_a`` / ``<name>_b``.
+
+    Round 10: the verify stage used to re-join every candidate pair to
+    BOTH docs' full gram arrays and run array_intersect per pair —
+    shipping corpus-scale arrays across two joins (measured 85% of the
+    Jaccard query's warm cost at sf0.1: 1.47M candidates x ~40-string
+    arrays per side). The intersection is instead read off the blocking
+    join itself: every gram two docs share has df >= 2 by definition, so
+    |A∩B| = (shared grams with df in [2, cap]: the blocking stage's
+    inter_kept) + (shared grams with df > cap: counted from per-doc
+    over-cap-gram arrays, a stopword-vocabulary-bounded relation that is
+    EMPTY unless a gram tops the cap). The per-pair join carries only
+    (n, hot, doc_cols) per side instead of the gram arrays, and the
+    per-pair array_intersect runs over the near-empty hot arrays.
+    Emitted pairs and inter counts are bit-identical to the
+    full-array verify (same integers)."""
+    doc_cols = doc_cols or {}
+    sh, ex, gram_df, pairs = _capped_blocking(sh)
     doc_hot = (
         ex.join(gram_df.filter(F.col("df") > SHINGLE_DF_CAP).select("gram"), "gram")
         .groupBy("doc_id")
@@ -489,7 +467,7 @@ def _dup_spans(kg: DataFrame, window: int) -> DataFrame:
     (doc_id, pos, gram): df-capped gram equi-join → diagonal runs →
     gaps-and-islands. Factored out of exact_dup_spans so the cap's
     fan-out bound is directly testable on crafted corpora (the
-    _blocked_candidates twin for the positional family)."""
+    _capped_blocking twin for the positional family)."""
     hot = (
         kg.groupBy("gram")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -1603,7 +1581,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cand.withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+            "hamming", S.hamming64(F.col("sh_a"), F.col("sh_b"))
         )
         .filter(F.col("hamming") <= 3)
         .select("id_a", "id_b", "hamming")

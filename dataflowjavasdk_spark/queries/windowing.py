@@ -157,16 +157,15 @@ def session_windows_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def session_ids_per_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PER-ELEMENT session ids (round 9) — the capability the batch
-    Sessions formulation race (VERDICT r8 #2, BASELINE.md round-9 table)
-    keeps the gaps-and-islands path alive FOR: native session_window
-    only yields windows at aggregation time, but a training pipeline
+    """PER-ELEMENT session ids (round 9): native session_window only
+    yields windows at aggregation time, but a training pipeline
     sessionizing click logs needs the session id ON EVERY EVENT (session
     features joined back to examples, intra-session ordering, session
-    splits for leakage-safe eval). The lag → flag → running-sum plan is
-    operators/windowing.py::_stage_intervals instantiated at [ts,
-    ts+gap) — the same staged frame Sessions.group_by_gaps_islands
-    aggregates, exposed per element.
+    splits for leakage-safe eval). The plan is its own lag → flag →
+    running sum: with one fixed gap every provisional interval is
+    [ts, ts+gap), so the running max end that a general interval merge
+    tracks (operators/windowing.py::_stage_intervals) is just
+    lag(ts) + gap.
 
     Determinism: (ts, event_id) breaks timestamp ties in BOTH engines'
     window order, so session_seq is total-order stable; output is all

@@ -132,14 +132,11 @@ def decode_fanout(spark: SparkSession, sf_dir: str, name: str = "documents",
     per payload) pass 512, because at small inputs a compute-heavy
     decoder otherwise lands on too few cores (measured sf0.1,
     interleaved medians: mjpeg_frame_sample 1.75 s warm at 3 tasks →
-    1.05 s at 10; 256 gives no further gain). Override via
-    ``SPARK_GRAFT_DECODE_ROWS_PER_TASK`` for payloads far off the
-    fixture's ~KB scale. The cap of 4x defaultParallelism bounds task
-    count by cluster size (on a real cluster defaultParallelism IS the
-    executor-core total, so the cap scales with the hardware)."""
-    rows_per_task = int(
-        os.environ.get("SPARK_GRAFT_DECODE_ROWS_PER_TASK", rows_per_task)
-    )
+    1.05 s at 10; 256 gives no further gain). A caller whose payloads
+    are far off the fixture's ~KB scale passes its own value. The cap of
+    4x defaultParallelism bounds task count by cluster size (on a real
+    cluster defaultParallelism IS the executor-core total, so the cap
+    scales with the hardware)."""
     rows = table_row_count(sf_dir, name)
     cores = spark.sparkContext.defaultParallelism
     return max(1, min(4 * cores, -(-rows // rows_per_task)))

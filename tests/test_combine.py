@@ -4,6 +4,8 @@ ApproximateUniqueTest, RemoveDuplicatesTest)."""
 
 from __future__ import annotations
 
+import datetime
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -136,33 +138,90 @@ def test_group_into_batches_bounded_and_lossless(spark):
     assert sum(1 for r in out if r["key"] == "a") == 3
 
 
-def test_combine_per_key_lifted_matches_unlifted(spark):
-    """Combiner lifting: same result as the raw-shuffle path on a larger
-    keyed input, and the plan shuffles AFTER the map-side partials
-    (MapInPandas precedes the exchange)."""
+def test_combine_per_key_custom_fn_lifts_before_shuffle(spark):
+    """A custom CombineFn runs the lifted plan: map-side partial
+    accumulators (MapInPandas) precede the one exchange, and the result
+    matches the Python reference on a larger keyed input."""
     data = [(i % 7, float(i)) for i in range(5000)]
     df = Pipeline(spark).create(data, "id long, v double").df.repartition(8)
-    lifted = combine.Combine.per_key_lifted(df, ["id"], "v", MeanFn(), "mean_v")
-    unlifted = combine.Combine.per_key(df, ["id"], "v", MeanFn(), "mean_v")
-    got = sorted(map(tuple, lifted.collect()))
-    assert got == sorted(map(tuple, unlifted.collect()))
+    out = combine.Combine.per_key(df, ["id"], "v", MeanFn(), "mean_v")
+    got = sorted(map(tuple, out.collect()))
     expect = {
         k: sum(v for i, v in data if i == k) / sum(1 for i, _ in data if i == k)
         for k in range(7)
     }
+    assert [k for k, _ in got] == list(range(7))
     for k, m in got:
         assert abs(m - expect[k]) < 1e-9
 
-    plan = lifted._jdf.queryExecution().executedPlan().toString()
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.index("MapInPandas") > plan.index("Exchange"), plan
     # (executedPlan prints top-down: the exchange CONSUMES MapInPandas
     # output, so MapInPandas appears below/after it in the string.)
 
 
-def test_combine_per_key_lifted_empty_and_single_key(spark):
+def test_combine_per_key_custom_fn_empty_and_single_key(spark):
     df = Pipeline(spark).create([(1, 2.0)], "id long, v double").df
-    out = combine.Combine.per_key_lifted(df, ["id"], "v", MeanFn(), "m")
+    out = combine.Combine.per_key(df, ["id"], "v", MeanFn(), "m")
     assert sorted(map(tuple, out.collect())) == [(1, 2.0)]
     empty = df.filter(F.col("v") > 100)
-    out2 = combine.Combine.per_key_lifted(empty, ["id"], "v", MeanFn(), "m")
+    out2 = combine.Combine.per_key(empty, ["id"], "v", MeanFn(), "m")
     assert out2.collect() == []
+
+
+def test_combine_per_key_custom_fn_keys_stay_exact(spark):
+    """Keys the map side's pandas frames cannot hold exactly still group
+    as a groupBy does: a long key above 2**53 beside a null one in the
+    same batch, and a null double key beside a NaN one (two groups);
+    a struct key groups too."""
+    big = 2**53 + 1
+    longs = Pipeline(spark).create(
+        [(big, 1.0), (big - 1, 3.0), (None, 5.0), (big, 2.0)], "k long, v double"
+    ).df.coalesce(1)
+    got = combine.Combine.per_key(longs, ["k"], "v", MeanFn(), "m").collect()
+    assert sorted(map(tuple, got), key=str) == sorted(
+        [(big, 1.5), (big - 1, 3.0), (None, 5.0)], key=str
+    )
+
+    nan = float("nan")
+    doubles = Pipeline(spark).create(
+        [(nan, 1.0), (None, 3.0), (nan, 2.0), (1.0, 7.0), (-0.0, 9.0), (0.0, 11.0)],
+        "k double, v double",
+    ).df.coalesce(1)
+    got = combine.Combine.per_key(doubles, ["k"], "v", MeanFn(), "m").collect()
+    by_key = {("nan" if k != k else k): m for k, m in map(tuple, got)}
+    assert len(got) == 4
+    assert by_key == {"nan": 1.5, None: 3.0, 1.0: 7.0, 0.0: 10.0}
+
+    structs = Pipeline(spark).create(
+        [(1, "a", 1.0), (1, "a", 3.0), (1, "b", 5.0)], "x long, y string, v double"
+    ).df.select(F.struct("x", "y").alias("s"), "v")
+    got = combine.Combine.per_key(structs, ["s"], "v", MeanFn(), "m").collect()
+    assert sorted((r["s"]["y"], r["m"]) for r in got) == [("a", 2.0), ("b", 5.0)]
+
+
+def test_windowed_custom_combine_fn(spark):
+    """FixedWindows + a custom CombineFn through the facade groups per
+    (key, window): the window struct is a group key of the lifted plan."""
+    from dataflowjavasdk_spark.operators.windowing import FixedWindows
+
+    data = [("a", s, float(s)) for s in (0, 5, 9, 12, 30)] + [("b", 3, 100.0)]
+    pc = (
+        Pipeline(spark)
+        .create(data, "key string, sec int, v double")
+        .with_timestamps(F.timestamp_seconds(F.col("sec")))
+        .window_into(FixedWindows("10 seconds"))
+        .combine_per_key(["key"], fn=MeanFn(), col="v", out="mean_v")
+    )
+    got = sorted(
+        (
+            r["key"],
+            int(r["window"]["start"].replace(tzinfo=datetime.timezone.utc).timestamp()),
+            r["mean_v"],
+        )
+        for r in pc.collect()
+    )
+    expect = {}
+    for k, s, v in data:
+        expect.setdefault((k, s - s % 10), []).append(v)
+    assert got == sorted((k, w, sum(vs) / len(vs)) for (k, w), vs in expect.items())

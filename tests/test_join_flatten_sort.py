@@ -700,3 +700,50 @@ def test_cogbk_nan_key_is_one_group(spark):
         {"a": a, "b": b}, ["k"], fn, "is_nan boolean, n_a long, n_b long"
     ).collect()
     assert sorted(tuple(r) for r in got) == [(False, 1, 1), (True, 1, 2)]
+
+
+@pytest.mark.parametrize("n_inputs", [2, 3])
+def test_co_group_arrays_null_key_is_one_row(spark, n_inputs):
+    """co_group_arrays makes a null key ONE row across inputs, as
+    co_group_by_key and a groupBy do: the outer joins match keys
+    null-safely and coalesce them."""
+    sides = {
+        "a": spark.createDataFrame([(None, 1), (1, 2)], "k long, v long"),
+        "b": spark.createDataFrame([(None, 10), (1, 20)], "k long, v long"),
+        "c": spark.createDataFrame([(None, 100), (2, 300)], "k long, v long"),
+    }
+    dfs = dict(list(sides.items())[:n_inputs])
+    got = {
+        r["k"]: tuple(sorted(x.v for x in r[name]) for name in dfs)
+        for r in join.co_group_arrays(dfs, ["k"]).collect()
+    }
+    expect = {
+        2: {None: ([1], [10]), 1: ([2], [20])},
+        3: {None: ([1], [10], [100]), 1: ([2], [20], []), 2: ([], [], [300])},
+    }[n_inputs]
+    assert got == expect
+    assert join.co_group_arrays(dfs, ["k"]).count() == len(expect)
+
+
+def test_cogbk_emitted_nan_stays_nan(spark):
+    """A NaN that fn emits in a float column stays NaN (a groupBy on the
+    same rows reports nan), while None in an object-dtype column stays
+    null."""
+    nan = float("nan")
+    a = spark.createDataFrame([(nan, 1), (1.0, 2)], "k double, v long")
+    b = spark.createDataFrame([(nan, 10), (1.0, 20)], "k double, v long")
+
+    def fn(key, groups):
+        n_b = n_rows(groups["b"])
+        return pd.DataFrame(
+            {"k": [key[0]], "tag": pd.Series([None], dtype=object), "n_b": [n_b]}
+        )
+
+    got = join.co_group_by_key(
+        {"a": a, "b": b}, ["k"], fn, "k double, tag string, n_b long"
+    ).collect()
+    assert len(got) == 2
+    assert {("nan" if r["k"] != r["k"] else r["k"]): (r["tag"], r["n_b"])
+            for r in got} == {1.0: (None, 1), "nan": (None, 1)}
+    counted = a.groupBy("k").count().collect()
+    assert sum(1 for r in counted if r["k"] is not None and r["k"] != r["k"]) == 1

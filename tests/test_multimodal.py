@@ -1226,8 +1226,8 @@ def test_wav_chunk_walker_rejects_non_pcm_and_truncated():
 
 
 def test_wav_batch_decode_matches_per_row_on_heterogeneous_corpus():
-    """decode_wav_batch groups clips by (width, n_channels) and runs the
-    sample math once per group over concatenated bytes; every clip's
+    """iter_wav_chunks groups a chunk's clips by (width, n_channels) and
+    runs the sample math once per group over concatenated bytes; every clip's
     mono fold must still be bit-identical to the per-row
     decode_wav(...)[2].mean(axis=1), including across a corpus that
     mixes widths, channel counts, rates, and frame counts (so groups
@@ -1242,8 +1242,14 @@ def test_wav_batch_decode_matches_per_row_on_heterogeneous_corpus():
         _segment_max,
         _segment_sums,
         decode_wav,
-        decode_wav_batch,
+        iter_wav_chunks,
     )
+
+    def one_chunk(payloads):
+        (chunk,) = iter_wav_chunks(payloads)
+        off, *decoded = chunk
+        assert off == 0
+        return decoded
 
     rng = np.random.default_rng(11)
     cases = [  # (width, nch, nframes, rate) — deliberately interleaved groups
@@ -1271,7 +1277,7 @@ def test_wav_batch_decode_matches_per_row_on_heterogeneous_corpus():
             w.writeframes(pcm.tobytes())
         payloads.append(buf.getvalue())
 
-    rates, nchs, lens, starts, mono = decode_wav_batch(payloads)
+    rates, nchs, lens, starts, mono = one_chunk(payloads)
     assert len(rates) == len(cases)
     assert starts[0] == 0 and np.all(np.diff(starts) == lens[:-1])
     per_row = [decode_wav(p) for p in payloads]
@@ -1303,16 +1309,15 @@ def test_wav_batch_decode_matches_per_row_on_heterogeneous_corpus():
         assert np.array_equal(fm[pos : pos + int(nf[i])], want)
         pos += int(nf[i])
 
-    # degenerate corpora: empty batch and a zero-frame clip
-    e_rates, e_nchs, e_lens, e_starts, e_mono = decode_wav_batch([])
-    assert len(e_rates) == 0 and e_mono.size == 0
+    # degenerate corpora: an empty batch yields no chunk; a zero-frame clip
+    assert list(iter_wav_chunks([])) == []
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(8000)
         w.writeframes(b"")
-    z_rates, _, z_lens, z_starts, z_mono = decode_wav_batch([buf.getvalue()])
+    z_rates, _, z_lens, z_starts, z_mono = one_chunk([buf.getvalue()])
     assert z_lens[0] == 0 and z_mono.size == 0
 
 
@@ -1331,7 +1336,7 @@ def test_wav_batch_pool_reuse_shrinking_batches():
         _gather_framed,
         _segment_sums,
         decode_wav,
-        decode_wav_batch,
+        iter_wav_chunks,
     )
 
     rng = np.random.default_rng(7)
@@ -1351,8 +1356,9 @@ def test_wav_batch_pool_reuse_shrinking_batches():
     big = [wav(500, None) for _ in range(40)]  # grows the pool
     small = [wav(170, 12345), wav(333, -2048)]  # then a shrunk batch
 
-    decode_wav_batch(big)  # fills pooled buffers with big-batch samples
-    rates, _, lens, starts, mono = decode_wav_batch(small)
+    for _ in iter_wav_chunks(big):  # fills pooled buffers with big-batch samples
+        pass
+    ((_, rates, _, lens, starts, mono),) = iter_wav_chunks(small)
     assert int(lens.sum()) == 170 + 333
     for i, p in enumerate(small):
         ref = decode_wav(p)[2].mean(axis=1)

@@ -199,8 +199,8 @@ def test_scratch_sweep_removes_dead_pid_roots(tmp_path, monkeypatch):
 def test_decode_fanout_scales_with_input(spark, monkeypatch):
     """decode_fanout derives the decode-stage partition count from the
     table's parquet row count: floor 1 at tiny inputs, ~rows/2048 in the
-    middle, capped at 4x defaultParallelism — and the rows-per-task knob
-    is env-overridable (round-10 scale-adaptive fan-out)."""
+    middle, capped at 4x defaultParallelism — and a caller's
+    rows_per_task sets the divisor (round-10 scale-adaptive fan-out)."""
     from dataflowjavasdk_spark.sources import tables as TB
 
     cores = spark.sparkContext.defaultParallelism
@@ -212,8 +212,7 @@ def test_decode_fanout_scales_with_input(spark, monkeypatch):
     assert TB.decode_fanout(spark, "tiny") == 1
     assert TB.decode_fanout(spark, "mid") == min(4 * cores, 10)
     assert TB.decode_fanout(spark, "huge") == 4 * cores
-    monkeypatch.setenv("SPARK_GRAFT_DECODE_ROWS_PER_TASK", "10240")
-    assert TB.decode_fanout(spark, "mid") == min(4 * cores, 2)
+    assert TB.decode_fanout(spark, "mid", rows_per_task=10240) == min(4 * cores, 2)
 
 
 def test_arrow_byte_cap_env_optin(monkeypatch):

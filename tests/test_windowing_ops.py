@@ -55,48 +55,48 @@ def test_sessions_merge_at_gbk(stamped):
     assert got == [(0, 22, 4), (30, 40, 1)]
 
 
-def test_sessions_gaps_islands_row_identity(spark):
-    """The gaps-and-islands batch formulation (VERDICT r8 #2 race — lost
-    to native session_window 366 vs 261 ms at sf0.1, kept for
-    per-element session-id consumers) must emit rows IDENTICAL to the
-    native merge, static and dynamic gap alike, on real fixture data."""
+def test_sessions_interval_merge_row_identity(spark):
+    """Sessions is the [ts, ts + gap) instance of the interval merge: an
+    IntervalMergingWindowFn assigning that interval, grouped through
+    group_by_window, must emit rows IDENTICAL to native session_window,
+    static and dynamic gap alike, on real fixture data."""
     from tests.conftest import SMOKE_SF
 
     from dataflowjavasdk_spark.sources.tables import load_table
 
     ev = load_table(spark, SMOKE_SF, "events").select("user_id", "ts")
 
-    # static gap
-    fn = windowing.Sessions("30 minutes")
-    native = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("window"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("user_id", "window.start", "window.end", "n")
-    )
-    gi = (
-        fn.group_by_gaps_islands(ev, ["user_id"])
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("user_id", "window.start", "window.end", "n")
-    )
-    assert sorted(map(tuple, native.collect())) == sorted(map(tuple, gi.collect()))
+    class GapIntervals(windowing.IntervalMergingWindowFn):
+        def __init__(self, gap):
+            self.gap = gap
+
+        def assign_interval(self, ts):
+            return ts, ts + self.gap
+
+    def both(session_gap, interval_gap):
+        native = (
+            ev.groupBy(F.session_window("ts", session_gap).alias("window"), "user_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select("user_id", "window.start", "window.end", "n")
+        )
+        merged = (
+            windowing.group_by_window(ev, GapIntervals(interval_gap), ["user_id"])
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select("user_id", "window.start", "window.end", "n")
+        )
+        return sorted(map(tuple, native.collect())), sorted(map(tuple, merged.collect()))
+
+    native, merged = both("30 minutes", F.expr("INTERVAL 30 MINUTES"))
+    assert native == merged and native
 
     # dynamic (per-element) gap: even user_ids get a tighter gap
-    # (duration STRINGS — session_window's dynamic-gap contract)
+    # (duration STRINGS — session_window's dynamic-gap contract; the
+    # interval form parses them to the same CalendarIntervalType)
     gap = F.when(F.col("user_id") % 2 == 0, F.lit("5 minutes")).otherwise(
         F.lit("30 minutes")
     )
-    fn_dyn = windowing.Sessions(gap)
-    native_d = (
-        ev.groupBy(F.session_window("ts", gap).alias("window"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("user_id", "window.start", "window.end", "n")
-    )
-    gi_d = (
-        fn_dyn.group_by_gaps_islands(ev, ["user_id"])
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("user_id", "window.start", "window.end", "n")
-    )
-    assert sorted(map(tuple, native_d.collect())) == sorted(map(tuple, gi_d.collect()))
+    native_d, merged_d = both(gap, gap.cast("interval"))
+    assert native_d == merged_d and native_d != native
 
 
 def test_global_window_plain_groupby(stamped):
